@@ -633,7 +633,9 @@ def scale_streaming_probe(spark) -> dict | None:
     ``MaterializedView`` (transform → parquet append) by foreachBatch —
     the raw→parsed MV cascade shape of the reference's Kafka pipeline
     (lecture_09.md:668-744). Trigger availableNow drains the backlog
-    and terminates; rows/s = rows / wall. Reported alongside the
+    and terminates; rows/s = rows landed / wall (the transform filters
+    out a seventh of the input). A failing probe prints its exception
+    to stderr and returns None. Reported alongside the
     reference's Kafka-engine envelope only qualitatively (the lectures
     publish no MV rows/s number). SPARK_GRAFT_SCALE_ROWS=0 skips."""
     import shutil
@@ -686,9 +688,10 @@ def scale_streaming_probe(spark) -> dict | None:
             "micro_batches": files,
             "rows_landed": landed,
             "wall_sec": round(wall, 4),
-            "rows_per_sec": int(n / wall),
+            "rows_per_sec": int(landed / wall),
         }
-    except Exception:
+    except Exception as exc:  # noqa: BLE001 — the probe is optional; say why it failed
+        print(f"scale_streaming_probe failed: {exc!r}", file=sys.stderr)
         return None
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -15,9 +15,11 @@ import json
 import os
 import re
 import shutil
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -94,6 +96,10 @@ class Engine:
         self._started_at: float = _time.time()  # system.asynchronous_metrics Uptime
         self._processes: dict[str, tuple[str, float]] = {}
         self._events: dict[str, int] = {}  # cumulative counters (system.events)
+        # the HTTP server's handler threads share one Engine
+        self._events_lock = threading.Lock()
+        # parquet-backed table → its files' schema at the last read
+        self._file_schemas: dict[str, StructType] = {}
         self._dict_sources: dict[str, tuple[str, list[str]]] = {}  # dict → (table, cols)
         self._dict_ddl: dict[str, str] = {}  # dict → original CREATE text
         self._view_ddl: dict[str, str] = {}  # plain view → its SELECT (SHOW CREATE)
@@ -173,8 +179,17 @@ class Engine:
         for name in names:
             self.register_table(TableDef(name=name, path=os.path.join(data_dir, f"{name}.parquet")))
 
-    def register_table(self, td: TableDef, df: DataFrame | None = None) -> None:
+    def register_table(
+        self, td: TableDef, df: DataFrame | None = None, appended: StructType | None = None
+    ) -> None:
         """Register a table: parquet-backed (``td.path``) or an explicit DataFrame.
+
+        ``appended`` is the schema of a block just appended to the
+        table's files. When it equals the files' schema from the last
+        read, the re-read reuses that schema instead of running a
+        footer-inference job. Partitioned tables and tables with cold
+        volumes always re-infer: a new partition value or tier can
+        change what inference returns.
 
         Also materializes the ``<name>__final`` view when the engine type
         has FINAL collapse semantics (lecture_07.md:465-481, 551-790).
@@ -184,10 +199,20 @@ class Engine:
         from otus_clickhouse_spark.io import read_table
 
         self.tables[td.name] = td
-        frame = df if df is not None else read_table(self.spark, td.path)
-        # tiered storage (lecture_14.md:233 TTL … TO VOLUME): rows moved
-        # to cold volumes are still part of the table — union them in
+        known = self._file_schemas.pop(td.name, None)
+        frame = df
         if df is None:
+            reuse = (
+                appended is not None
+                and known is not None
+                and not td.partition_by
+                and not td.settings.get("cold_volumes")
+                and _fields(known) == _fields(appended)
+            )
+            frame = read_table(self.spark, td.path, schema=known if reuse else None)
+            self._file_schemas[td.name] = frame.schema
+            # tiered storage (lecture_14.md:233 TTL … TO VOLUME): rows moved
+            # to cold volumes are still part of the table — union them in
             for cpath in td.settings.get("cold_volumes", {}).values():
                 if os.path.exists(cpath):
                     frame = frame.unionByName(read_table(self.spark, cpath))
@@ -818,7 +843,12 @@ class Engine:
         if dm:
             self._check_db_qualifier(dm.group(1), "DROP TABLE")
             name = dm.group(2)
-            if name not in self.tables and re.search(r"\bIF\s+EXISTS\b", s, re.IGNORECASE):
+            is_mv = any(mv.name == name for mvs in self._mvs.values() for mv in mvs)
+            if (
+                name not in self.tables
+                and not is_mv
+                and re.search(r"\bIF\s+EXISTS\b", s, re.IGNORECASE)
+            ):
                 return None  # DROP TABLE IF EXISTS on an absent table is a no-op
             return self.drop_table(name)
         fm = re.match(
@@ -1271,6 +1301,7 @@ class Engine:
             else:
                 self._mvs.pop(src, None)
         td = self.tables.pop(name, None)
+        self._file_schemas.pop(name, None)
         # an unregistered name may still have an orphaned managed dir
         # from an earlier engine over the same warehouse
         path = td.path if (td is not None and td.path) else os.path.join("spark-warehouse", name)
@@ -1864,7 +1895,8 @@ class Engine:
         )
 
     def _bump(self, event: str, n: int = 1) -> None:
-        self._events[event] = self._events.get(event, 0) + n
+        with self._events_lock:
+            self._events[event] = self._events.get(event, 0) + n
 
     def kill_query(self, query_id: str) -> bool:
         """``KILL QUERY WHERE query_id = '…'`` (M7; lecture_16.md:
@@ -1950,14 +1982,10 @@ class Engine:
         for col, expr in td.settings.get("materialized", {}).items():
             df = df.withColumn(col, F.expr(expr))
         block = df  # the inserted block, pre-partition-columns, for MV triggers
-        part_cols = []
-        for expr in td.partition_by:
-            if re.fullmatch(r"[A-Za-z_][\w]*", expr) and expr in df.columns:
-                part_cols.append(expr)
-            else:
-                gen = "_p_" + re.sub(r"[^\w]+", "_", expr).strip("_")
-                df = df.withColumn(gen, F.expr(expr))
-                part_cols.append(gen)
+        part_cols = partition_columns(td, df.columns)
+        for expr, col in zip(td.partition_by, part_cols):
+            if col != expr:
+                df = df.withColumn(col, F.expr(expr))
         if td.order_by:
             df = df.sortWithinPartitions(*[k for k in td.order_by if k in df.columns])
         # LZ4 block compression is ClickHouse's default codec
@@ -1993,7 +2021,8 @@ class Engine:
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(td.path)
-        self.register_table(td)  # refresh the view over the new file set
+        # refresh the view over the new file set
+        self.register_table(td, appended=df.schema if mode == "append" else None)
         # push the inserted block through attached MVs synchronously,
         # like ClickHouse's PushingToViews (lecture_13.md:160-166);
         # an MV inserting into its target re-triggers that table's MVs,
@@ -2350,58 +2379,62 @@ class Engine:
             # passes through the driver; together with the per-trigger
             # bound above, a deep backlog streams through in
             # block-sized, executor-resident batches.
-            # ADVICE r8: structured streaming delivers no-data batches
-            # to foreachBatch; a zero-partition frame writes a part-less
-            # parquet dir that the re-read dies on ('Unable to infer
-            # schema') — guard BEFORE the write.
-            if batch_df.isEmpty():
-                return
             pre = commit = None
             if epochs_dir:
                 commit = os.path.join(epochs_dir, f"{epoch}.commit")
                 pre = os.path.join(epochs_dir, f"{epoch}.pre")
                 if os.path.exists(commit):
                     return  # replay of a fully-committed epoch
-                targets = _landing_targets()
-                if os.path.exists(pre):
-                    # crash mid-epoch: roll back the partial appends
-                    with open(pre) as fh:
-                        snap = json.loads(fh.read())
-                    for tname, path in targets.items():
-                        keep = set(snap.get(tname, []))
-                        if not os.path.exists(path):
-                            continue
-                        for rel in _listing(path):
-                            if rel not in keep:
-                                os.remove(os.path.join(path, rel))
-                else:
-                    snap = {
-                        t: (_listing(p) if os.path.exists(p) else [])
-                        for t, p in targets.items()
-                    }
-                    tmp = pre + ".tmp"
-                    with open(tmp, "w") as fh:
-                        fh.write(json.dumps(snap))
-                    os.replace(tmp, pre)
             stage = f"{stage_root.rstrip('/')}/epoch_{epoch}"
             batch_df.write.mode("overwrite").parquet(stage)
-            block = self.spark.read.parquet(stage)
-            n = block.count()
-            if not brokers:
-                # stand-in offsets: contiguous per consumer (the window
-                # input is bounded by maxFilesPerTrigger × block size)
-                w = Window.orderBy(F.monotonically_increasing_id())
-                start = counter["offset"]
-                block = block.withColumn(
-                    "_offset", F.row_number().over(w).cast("long") + F.lit(start - 1)
+            try:
+                # the batch's own schema skips the inference job, and a
+                # no-data batch (ADVICE r8: structured streaming delivers
+                # them; a zero-partition frame stages a part-less dir)
+                # re-reads as zero rows instead of failing inference
+                block = self.spark.read.schema(batch_df.schema).parquet(stage)
+                n = block.count()
+                if n == 0:
+                    return  # before the pre-image: nothing lands, no marker
+                if epochs_dir:
+                    targets = _landing_targets()
+                    if os.path.exists(pre):
+                        # crash mid-epoch: roll back the partial appends
+                        with open(pre) as fh:
+                            snap = json.loads(fh.read())
+                        for tname, path in targets.items():
+                            keep = set(snap.get(tname, []))
+                            if not os.path.exists(path):
+                                continue
+                            for rel in _listing(path):
+                                if rel not in keep:
+                                    os.remove(os.path.join(path, rel))
+                    else:
+                        snap = {
+                            t: (_listing(p) if os.path.exists(p) else [])
+                            for t, p in targets.items()
+                        }
+                        tmp = pre + ".tmp"
+                        with open(tmp, "w") as fh:
+                            fh.write(json.dumps(snap))
+                        os.replace(tmp, pre)
+                if not brokers:
+                    # stand-in offsets: contiguous per consumer (the window
+                    # input is bounded by maxFilesPerTrigger × block size)
+                    w = Window.orderBy(F.monotonically_increasing_id())
+                    start = counter["offset"]
+                    block = block.withColumn(
+                        "_offset", F.row_number().over(w).cast("long") + F.lit(start - 1)
+                    )
+                    counter["offset"] = start + n
+                shaped = self._share_block(
+                    self._kafka_shape_block(block, schema), readers=len(mvs)
                 )
-                counter["offset"] = start + n
-            shaped = self._kafka_shape_block(block, schema).localCheckpoint(eager=True)
-            # the eager checkpoint pins the block executor-side; the
-            # staging files are no longer referenced
-            _stage_rm(stage)
-            for mv in mvs:
-                mv.process_block(shaped)
+                for mv in mvs:
+                    mv.process_block(shaped)
+            finally:
+                # the MVs have read the block (or their checkpoints of it)
+                _stage_rm(stage)
             if epochs_dir:
                 with open(commit, "w") as fh:
                     fh.write("")
@@ -2452,11 +2485,13 @@ class Engine:
             view = f"__mv_block_{_uuid.uuid4().hex[:8]}"
             block.createOrReplaceTempView(view)
             try:
-                return self.sql(
+                out = self.sql(
                     re.sub(rf"\bFROM\s+{source}\b", f"FROM {view}", select_sql, flags=re.IGNORECASE)
-                ).localCheckpoint(eager=True)
+                )
             finally:
+                # the analyzed plan has resolved the view already
                 self.spark.catalog.dropTempView(view)
+            return self._share_block(out, target=target)
 
         mv = MaterializedView(
             name=name, transform=transform,
@@ -2464,8 +2499,27 @@ class Engine:
         )
         self._mvs.setdefault(source, []).append(mv)
         if populate:
-            self.insert(target, self.sql(select_sql).localCheckpoint(eager=True))
+            self.insert(target, self._share_block(self.sql(select_sql), target=target))
         return mv
+
+    # engines that hold a landed block or route it on to another table
+    _FAN_OUT_ENGINES = ("Distributed", "Buffer", "Memory", "Set")
+
+    def _share_block(
+        self, df: DataFrame, target: str | None = None, readers: int = 1
+    ) -> DataFrame:
+        """The write path's materialization rule: checkpoint a block only
+        when more than one consumer reads it, since a lazy plan with a
+        single reader is evaluated once anyway. A block bound for
+        ``target`` is read again when the target fans out: it has its
+        own MVs or vector indexes, or its engine holds or re-routes the
+        block. ``readers`` counts the block's direct consumers."""
+        td = self.tables.get(target) if target else None
+        fans_out = td is not None and (
+            bool(self._mvs.get(target) or self.vector_indexes.get(target))
+            or td.engine in self._FAN_OUT_ENGINES
+        )
+        return df.localCheckpoint(eager=True) if fans_out or readers > 1 else df
 
     # ----------------------------------------------------------- dictionaries
     def create_dictionary(self, name: str, df: DataFrame, key: str) -> None:
@@ -2901,7 +2955,8 @@ class Engine:
     def system_events(self) -> DataFrame:
         """≈ system.events (lecture_20.md:296-478 monitoring): cumulative
         engine counters (Query/SelectQuery/InsertQuery/FailedSelectQuery)."""
-        rows = sorted(self._events.items())
+        with self._events_lock:
+            rows = sorted(self._events.items())
         return self.spark.createDataFrame(
             rows or [("", 0)], "event string, value long"
         ).where("event != ''")
@@ -3115,6 +3170,23 @@ def _split_statements(script: str) -> list[str]:
     if tail:
         out.append(tail)
     return out
+
+
+def partition_columns(td: TableDef, columns) -> list[str]:
+    """The on-disk partition column of each PARTITION BY expression: a
+    plain column of the block keeps its name, any other expression is
+    written as a generated ``_p_*`` column (Engine.insert)."""
+    return [
+        expr
+        if re.fullmatch(r"[A-Za-z_]\w*", expr) and expr in columns
+        else "_p_" + re.sub(r"[^\w]+", "_", expr).strip("_")
+        for expr in td.partition_by
+    ]
+
+
+def _fields(schema: StructType) -> list[tuple]:
+    """A schema's (name, type) list, nullability and metadata aside."""
+    return [(f.name, f.dataType) for f in schema.fields]
 
 
 def _enum_norm(td, fname: str, col):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _nanos_columns(path: str) -> list[str]:
@@ -22,15 +23,21 @@ def _nanos_columns(path: str) -> list[str]:
     return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet with TIMESTAMP(NANOS) columns normalized to µs."""
+def read_table(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
+    """spark.read.parquet with TIMESTAMP(NANOS) columns normalized to µs.
+
+    ``schema``, when given, is the files' schema as known from an earlier
+    read; it skips the footer-inference job. It is ignored for files with
+    nanosecond columns, whose on-disk type differs from the converted one.
+    """
     # timestamp semantics (date_trunc/window/unix_timestamp) follow the
     # session timezone; oracles + CH DateTime assume UTC — pin it so the
     # engine behaves identically under any host/cluster default
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     nanos = _nanos_columns(path)
     if not nanos:
-        return spark.read.parquet(path)
+        reader = spark.read.schema(schema) if schema is not None else spark.read
+        return reader.parquet(path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     for c in nanos:

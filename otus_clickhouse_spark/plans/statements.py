@@ -42,6 +42,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from otus_clickhouse_spark.engine import partition_columns
+
 _UPDATE_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+UPDATE\s+(.*?)\s+WHERE\s+(.*)$",
     re.IGNORECASE | re.DOTALL,
@@ -366,11 +368,9 @@ def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> No
 
 def _partition_column(td) -> str:
     """The physical partition column for DROP PARTITION: either the raw
-    column or the materialized ``_p_*`` expression key (Engine.insert)."""
-    expr = td.partition_by[0]
-    if re.fullmatch(r"[A-Za-z_][\w]*", expr):
-        return expr
-    return "_p_" + re.sub(r"[^\w]+", "_", expr).strip("_")
+    column or the materialized ``_p_*`` expression key (Engine.insert).
+    A plain identifier in PARTITION BY always names a table column."""
+    return partition_columns(td, td.partition_by)[0]
 
 
 def _detached_path(td, value) -> str:
@@ -725,14 +725,7 @@ def _try_route_inner(engine, s: str):
             for k in blooms:
                 if k in df.columns:
                     writer = writer.option(f"parquet.bloom.filter.enabled#{k}", "true")
-            part_cols = []
-            for expr in td.partition_by:
-                if re.fullmatch(r"\w+", expr) and expr in df.columns:
-                    part_cols.append(expr)
-                else:
-                    gen = "_p_" + re.sub(r"[^\w]+", "_", expr).strip("_")
-                    if gen in df.columns:
-                        part_cols.append(gen)
+            part_cols = [c for c in partition_columns(td, df.columns) if c in df.columns]
             if part_cols:
                 writer = writer.partitionBy(*part_cols)
             writer.parquet(tmp)
@@ -1088,7 +1081,10 @@ def _try_route_inner(engine, s: str):
 
         stats = None
         if td.path and os.path.exists(td.path):
-            stats = compact_table(engine.spark, td.path, td.order_by, ())
+            # keep the on-disk partition directories: compacted files
+            # written unpartitioned beside them vanish from the next read
+            pcols = tuple(partition_columns(td, engine.table(name).columns))
+            stats = compact_table(engine.spark, td.path, td.order_by, pcols)
             engine.register_table(td)
         return {"optimized": name, "compaction": stats}
 

@@ -8,7 +8,7 @@ into a single Spark job (or stays JVM-free) so the suite stays fast.
 import random
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -448,11 +448,23 @@ def test_budget_select_histogram_equals_cumsum_window(spark, rows, budget):
         max_size=40,
     ),
 )
+# source s0 here sums to 25/32 = 0.78125, an exact tie at 4 decimals
+@example(
+    rows=[(0, "s0")] * 5
+    + [(14, "s0"), (12, "s1"), (15, "s2"), (22, "s2"), (27, "s0"), (29, "s0")]
+)
 def test_dup_coverage_equals_python_reference(spark, rows):
     """dup_coverage's per-source micro ratio / heavy count / max bp must
     equal a brute-force Python shingle-df computation on random corpora
     (texts drawn from a tiny word pool so duplicate shingles occur)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from otus_clickhouse_spark.pipeline.dedup import dup_coverage
+
+    # Spark's round() is HALF_UP; Python's round() is half-to-even
+    def round_half_up(num, den, places):
+        q = Decimal(1).scaleb(-places)
+        return float((Decimal(num) / Decimal(den)).quantize(q, ROUND_HALF_UP))
 
     words = ["alpha", "beta", "gamma", "delta"]
     data = []
@@ -482,11 +494,11 @@ def test_dup_coverage_equals_python_reference(spark, rows):
         assert r.n_docs == len(items)
         assert r.n_heavy == sum(1 for n_sh, n_dup in items if 2 * n_dup >= n_sh)
         assert r.max_cov_bp == max(
-            int(round(n_dup * 10000.0 / n_sh)) for n_sh, n_dup in items
+            int(round_half_up(n_dup * 10000, n_sh, 0)) for n_sh, n_dup in items
         )
         tot_sh = sum(n for n, _ in items)
         tot_dup = sum(d for _, d in items)
-        assert float(r.dup_shingle_ratio) == round(tot_dup / tot_sh, 4)
+        assert float(r.dup_shingle_ratio) == round_half_up(tot_dup, tot_sh, 4)
 
 
 @settings(**HSET)

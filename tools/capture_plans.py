@@ -1,11 +1,12 @@
 """Capture .explain("formatted") for headline (or named) queries.
 
 Usage:
-    python tools/capture_plans.py <suffix> [query ...]
+    SPARK_GRAFT_PLANS_DIR=<dir> python tools/capture_plans.py <suffix> [query ...]
 
-Writes plans/r12/<query>_<suffix>.txt for each query (default: the
-bench HEADLINE set). Plans are captured against $SPARK_GRAFT_SF_DIR
-(default sf0.1) without executing the query.
+Writes plans/<dir>/<query>_<suffix>.txt for each query (default: the
+bench HEADLINE set); SPARK_GRAFT_PLANS_DIR is required, so a capture
+never lands in another round's directory. Plans are captured against
+$SPARK_GRAFT_SF_DIR (default sf0.1) without executing the query.
 """
 
 from __future__ import annotations
@@ -20,6 +21,9 @@ sys.path.insert(0, REPO)
 
 
 def main():
+    plans_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR")
+    if not plans_dir:
+        sys.exit("capture_plans: set SPARK_GRAFT_PLANS_DIR to the plans/ subdirectory to write")
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:]
 
@@ -33,7 +37,7 @@ def main():
     if not names:
         names = bench.HEADLINE
 
-    out_dir = os.path.join(REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r13"))
+    out_dir = os.path.join(REPO, "plans", plans_dir)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         try:
