@@ -25,6 +25,7 @@ import sys
 import time
 
 from otus_clickhouse_spark.formats import render
+from otus_clickhouse_spark.functions.lexer import split_statements
 
 _FMT_RE = re.compile(r"\s+FORMAT\s+(\w+)\s*$", re.IGNORECASE)
 _QUERYISH_RE = re.compile(r"^\s*(SELECT|WITH)\b", re.IGNORECASE)
@@ -97,37 +98,6 @@ def make_engine(data_dir: str | None):
     return engine
 
 
-def _split_statements(text: str) -> list[str]:
-    out, buf, depth = [], [], 0
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in "'\"`":
-            j = i + 1
-            while j < n and text[j] != c:
-                j += 2 if text[j] == "\\" else 1
-            buf.append(text[i : j + 1])
-            i = j + 1
-            continue
-        if c == "-" and text[i : i + 2] == "--":
-            j = text.find("\n", i)
-            i = n if j < 0 else j
-            continue
-        if c == ";" and depth == 0:
-            out.append("".join(buf))
-            buf = []
-        else:
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            buf.append(c)
-        i += 1
-    if "".join(buf).strip():
-        out.append("".join(buf))
-    return [s for s in (x.strip() for x in out) if s]
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="otus-clickhouse-spark")
     ap.add_argument("-q", "--query", help="statement(s) to run; default: stdin/REPL")
@@ -160,7 +130,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     def run_all(text: str) -> None:
-        for stmt in _split_statements(text):
+        for stmt in split_statements(text):
             try:
                 out = run_statement(engine, stmt, args.fmt)
                 if out:

@@ -21,10 +21,15 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
+from otus_clickhouse_spark.functions.lexer import (
+    LIT,
+    Masked,
+    call_args,
+    split_statements,
+    split_top,
+    strip_comments,
+    unquote,
+)
 
 @dataclass
 class TableDef:
@@ -269,7 +274,7 @@ class Engine:
             from otus_clickhouse_spark.plans.buffer import BufferTable
 
             args = td.settings.get("engine_args", [])
-            dest = (args[1] if len(args) > 1 else args[0]).strip("'\"")
+            dest = unquote(args[1] if len(args) > 1 else args[0])
             max_rows = int(args[6]) if len(args) > 6 else 65536
             buf = BufferTable(self, td.name, dest, max_rows=max_rows)
             self._buffers[td.name] = buf
@@ -304,7 +309,7 @@ class Engine:
             # streaming.mv.kafka_source / df.write.format("kafka")).
             sm = re.findall(r"kafka_(\w+)\s*=\s*'?([\w:,./-]+)'?", ddl)
             td.settings.update({f"kafka_{k}": v for k, v in sm})
-            pos = [a.strip().strip("'\"") for a in td.settings.get("engine_args", [])]
+            pos = [unquote(a) for a in td.settings.get("engine_args", [])]
             for key, val in zip(
                 ("kafka_broker_list", "kafka_topic_list", "kafka_group_name", "kafka_format"),
                 pos,
@@ -320,7 +325,7 @@ class Engine:
             from otus_clickhouse_spark.sources.readers import merge_tables
 
             args = td.settings.get("engine_args", [])
-            pattern = args[-1].strip("'\"")
+            pattern = unquote(args[-1])
             td.path = None
             candidates = [n for n in self.tables if n != td.name]
             merge_tables(self.spark, pattern, candidates).createOrReplaceTempView(td.name)
@@ -510,7 +515,7 @@ class Engine:
         """
         from pyspark.sql import functions as F
 
-        args = [a.strip("'\"") for a in td.settings.get("engine_args", [])]
+        args = [unquote(a) for a in td.settings.get("engine_args", [])]
         if len(args) < 3:
             raise ValueError("Distributed(cluster, database, table[, sharding_key])")
         cluster, _db, local = args[0], args[1], args[2]
@@ -634,16 +639,14 @@ class Engine:
         """Statement router (EP1 entry point): DDL → catalog ops,
         everything else → :meth:`run` (logged SELECT)."""
         s = text.strip().rstrip(";")
-        if "--" in s and not re.search(r"\bFORMAT\s+\w+\s*\n", s, re.IGNORECASE):
-            # `-- …` line comments break the statement-shape regexes
-            # (lecture_19/20 snippets end in trailing commentary); strip
-            # them with a single quote-tracking scan — a two-phase sub
-            # mis-lexes comments containing an unpaired quote. Inline
-            # FORMAT data blocks are never touched — data lines may
-            # legitimately contain `--`.
-            from otus_clickhouse_spark.functions.dialect import _strip_line_comments
-
-            s = _strip_line_comments(s).strip().rstrip(";")
+        if ("--" in s or "/*" in s) and not re.search(
+            r"\bFORMAT\s+\w+\s*\n", s, re.IGNORECASE
+        ):
+            # comments break the statement-shape regexes (lecture_19/20
+            # snippets end in trailing commentary). Inline FORMAT data
+            # blocks are never touched — data lines may legitimately
+            # contain `--`.
+            s = strip_comments(s).strip().rstrip(";")
         dbm = re.match(
             r"^\s*(CREATE|DROP)\s+DATABASE\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?(\w+)"
             r"(?:\s+ON\s+CLUSTER\s+'?\w+'?)?\s*(?:ENGINE\s*=\s*(\w+)\s*(?:\([^)]*\))?\s*)?$",
@@ -758,11 +761,9 @@ class Engine:
                 # CREATE TABLE d AS local ENGINE = Distributed(…) — the
                 # hw10.md:41-45 idiom: column config from the local table,
                 # storage proxied through the topology
-                from otus_clickhouse_spark.functions.ddl import _split_args
-
                 td = TableDef(name=name, engine="Distributed")
                 td.settings["engine_args"] = [
-                    a for a in _split_args(copym.group("eargs") or "", many=True) if a
+                    a for a in split_top(copym.group("eargs") or "") if a
                 ]
                 return self._register_distributed(td)
             # CREATE TABLE a AS b (schema copy, D2; lecture_16.md:230):
@@ -863,7 +864,7 @@ class Engine:
         if fm:
             db, name, collist, fmt, data = fm.groups()
             self._check_db_qualifier(db, "INSERT")
-            cols = [c.strip().strip("`") for c in collist.split(",")] if collist else None
+            cols = [unquote(c) for c in collist.split(",")] if collist else None
             if fmt.lower() == "values":
                 return self.insert(name, self._values_frame(name, "VALUES " + data, cols))
             return self.insert(name, self._format_frame(name, fmt, data, cols))
@@ -876,7 +877,7 @@ class Engine:
         if im:
             self._check_db_qualifier(im.group(1), "INSERT")
             name, collist, rest = im.group(2), im.group(3), im.group(4)
-            cols = [c.strip().strip("`") for c in collist.split(",")] if collist else None
+            cols = [unquote(c) for c in collist.split(",")] if collist else None
             if rest.upper().startswith(("SELECT", "WITH")):
                 sel = self.sql(rest, **params)
                 if cols:
@@ -964,19 +965,20 @@ class Engine:
         resolution error, never silently acting on the flat table.
         Inline FORMAT-data blocks are never rewritten (only the
         statement head before the data newline is scanned)."""
-        from otus_clickhouse_spark.functions.dialect import _sub_outside_quotes
-
-        alts = "|".join(re.escape(d) for d in sorted(self._databases))
         fm = re.search(r"\bFORMAT\s+\w+\s*\n", s, re.IGNORECASE)
         head, data = (s[: fm.end()], s[fm.end() :]) if fm else (s, "")
+        lits = Masked(head)
+        return lits.unmask(self._qualify_names(lits.text)) + data
+
+    def _qualify_names(self, head: str) -> str:
+        """:meth:`_strip_known_db_prefixes` on masked text."""
+        alts = "|".join(re.escape(d) for d in sorted(self._databases))
 
         def _qual(m: re.Match) -> str:
             db = m.group(1).lower()
             return m.group(2) if db == "default" else f"{db}__{m.group(2)}"
 
-        head = _sub_outside_quotes(
-            re.compile(rf"\b({alts})\.(\w+)", re.IGNORECASE), _qual, head
-        )
+        head = re.sub(rf"\b({alts})\.(\w+)", _qual, head, flags=re.IGNORECASE)
         cur = self.current_database
         if cur not in ("default", "information_schema", "system"):
             # the two built-ins hold no user tables — resolution stays flat
@@ -1016,14 +1018,12 @@ class Engine:
                         return m.group(0)  # boolean AND, not EXCHANGE's 2nd operand
                     return m.group(0)[: -len(m.group(2))] + f"{cur}__{m.group(2)}"
 
-                head = _sub_outside_quotes(
-                    re.compile(
-                        rf"\b(FROM|JOIN|INTO|TABLES?|TO|AND|EXISTS|DICTIONARY|VIEW)"
-                        rf"\s+({balts})\b(?![.\w])",
-                        re.IGNORECASE,
-                    ),
+                head = re.sub(
+                    rf"\b(FROM|JOIN|INTO|TABLES?|TO|AND|EXISTS|DICTIONARY|VIEW)"
+                    rf"\s+({balts})\b(?![.\w])",
                     _base,
                     head,
+                    flags=re.IGNORECASE,
                 )
                 # comma-separated FROM lists (`FROM movies, genres` — the
                 # old-style cross join): rewrite each member's table word;
@@ -1047,21 +1047,19 @@ class Engine:
                     return m.group(1) + ",".join(out)
 
                 _item = rf"\w+(?:\s+AS\s+\w+|\s+{_stop}\w+)?"
-                head = _sub_outside_quotes(
-                    re.compile(
-                        rf"(\bFROM\s+)({_item}(?:\s*,\s*{_item})+)",
-                        re.IGNORECASE,
-                    ),
+                head = re.sub(
+                    rf"(\bFROM\s+)({_item}(?:\s*,\s*{_item})+)",
                     _fromlist,
                     head,
+                    flags=re.IGNORECASE,
                 )
                 # `<base>.<col>` qualified column refs: the qualifier is
                 # the TABLE name (CH lets you qualify by table name under
                 # USE), so it mangles with it — the column part is never
                 # touched. Runs outside quotes; `db.table` forms were
                 # already consumed by the known-db pass above.
-                head = _sub_outside_quotes(
-                    re.compile(rf"(?<![\w.])({balts})\.(?=\w)"),
+                head = re.sub(
+                    rf"(?<![\w.])({balts})\.(?=\w)",
                     lambda m: f"{cur}__{m.group(1)}.",
                     head,
                 )
@@ -1093,7 +1091,7 @@ class Engine:
                 head,
                 flags=re.IGNORECASE,
             )
-        return head + data
+        return head
 
     def tables_in_database(self, db: str) -> list[str]:
         """Base table names registered under ``db`` (SHOW TABLES FROM /
@@ -1268,7 +1266,7 @@ class Engine:
         comment-aware), each routed through :meth:`execute`. Returns
         the per-statement results."""
         results = []
-        for stmt in _split_statements(script):
+        for stmt in split_statements(script):
             results.append(self.execute(stmt, **params))
         return results
 
@@ -1323,13 +1321,18 @@ class Engine:
         """
         from otus_clickhouse_spark.functions.dialect import translate
 
+        # every rewrite below and in translate() runs on masked text: a
+        # literal is one opaque placeholder and comments are gone; a
+        # rewrite that needs a literal's content reads lits.value()
+        lits = Masked(text)
+        text = lits.text
         if len(self._databases) > 1 or self.current_database != "default":
             # non-default namespaces exist: resolve db.table qualifiers
             # (and current-db unqualified names) to mangled flat names
             # before any rewrite looks at identifiers. Idempotent —
             # execute() may already have resolved.
-            text = self._strip_known_db_prefixes(text)
-        served = self.projections.try_rewrite_sql(text)
+            text = self._qualify_names(text)
+        served = self.projections.try_rewrite_sql(text, lits)
         if served is not None:
             return served
         if re.search(r"\bASOF\s+(LEFT\s+)?JOIN\b", text, re.IGNORECASE):
@@ -1352,7 +1355,7 @@ class Engine:
         # CH fans the read across cluster nodes — Spark's reader already
         # parallelizes over the executor pool, so the cluster arg drops
         text = re.sub(
-            r"\b(file|s3|url|hdfs)Cluster\s*\(\s*'?[\w.-]+'?\s*,\s*",
+            rf"\b(file|s3|url|hdfs)Cluster\s*\(\s*(?:[\w.-]+|{LIT})\s*,\s*",
             r"\1(",
             text,
             flags=re.IGNORECASE,
@@ -1361,7 +1364,7 @@ class Engine:
         # (lecture_03.md:358-366) — materialize as a temp view; the
         # scalar format() string function is untouched (FROM-anchored)
         fim = re.search(
-            r"\bFROM\s+(format\s*\(\s*(\w+)\s*,\s*('(?:[^']|'')*'|\$\$.*?\$\$)\s*\))",
+            rf"\bFROM\s+(format\s*\(\s*(\w+)\s*,\s*({LIT})\s*\))",
             text,
             re.IGNORECASE | re.DOTALL,
         )
@@ -1369,7 +1372,9 @@ class Engine:
             import uuid as _uuid
 
             view = f"__fmt_inline_{_uuid.uuid4().hex[:8]}"
-            self.format_inline_table(fim.group(2), fim.group(3)).createOrReplaceTempView(view)
+            self.format_inline_table(
+                fim.group(2), lits.unmask(fim.group(3))
+            ).createOrReplaceTempView(view)
             text = text[: fim.start(1)] + view + text[fim.end(1) :]
         fm = _FILE_FN_RE.search(text)
         if fm:
@@ -1378,7 +1383,7 @@ class Engine:
             # view. s3/gcs/hdfs are path-scheme concerns of the same reader.
             from otus_clickhouse_spark.sources.readers import file_table, url_table
 
-            fn, path, fmt, structure = fm.groups()
+            fn, path, fmt, structure = (g and lits.value(g) for g in fm.groups())
             reader = url_table if fn.lower() == "url" else file_table
             view = "__tf_" + re.sub(r"[^\w]+", "_", path)[-48:].strip("_")
             reader(
@@ -1390,7 +1395,6 @@ class Engine:
             # postgresql()/mysql()/jdbc() table functions in raw SQL
             # (S15/S16; hw19.md:44-48), positional or named-collection
             # (D14) form → JDBC reader view
-            from otus_clickhouse_spark.functions.ddl import _split_args
             from otus_clickhouse_spark.sources.readers import (
                 external_table,
                 resolve_external_conf,
@@ -1398,7 +1402,7 @@ class Engine:
 
             kind, rawargs = jm.group(1).lower(), jm.group(2)
             conf = resolve_external_conf(
-                kind, _split_args(rawargs, many=True), self._named_collections
+                kind, [lits.unmask(a) for a in split_top(rawargs)], self._named_collections
             )
             view = "__ext_" + re.sub(r"[^\w]+", "_", conf.get("table", "t"))[-40:].strip("_")
             external_table(self.spark, conf).createOrReplaceTempView(view)
@@ -1409,7 +1413,7 @@ class Engine:
             # lazily-generated rows — the query's LIMIT stops generation
             from otus_clickhouse_spark.sources.readers import generate_random
 
-            structure, seed = gm.group(1), gm.group(2)
+            structure, seed = lits.value(gm.group(1)), gm.group(2)
             view = "__genrand_" + re.sub(r"[^\w]+", "_", structure)[:40].strip("_")
             generate_random(
                 self.spark, structure, 10_000_000, int(seed) if seed else None
@@ -1422,8 +1426,8 @@ class Engine:
         # getMacro('name') (hw09.md:295-325): config-macro lookup — a
         # per-server constant, so it folds to a literal at translate time
         text = re.sub(
-            r"\bgetMacro\s*\(\s*'(\w+)'\s*\)",
-            lambda gm: "'" + self.macros.get(gm.group(1), "") + "'",
+            rf"\bgetMacro\s*\(\s*({LIT})\s*\)",
+            lambda gm: lits.quote(self.macros.get(lits.value(gm.group(1)), "")),
             text,
         )
         # system.* metadata tables in raw SQL (D8; lecture_16.md:60-98,
@@ -1461,17 +1465,17 @@ class Engine:
         # usage `select columns('key') from system.tables`): expand to the
         # FROM relation's matching column names at translate time
         while True:
-            colm = re.search(r"\bCOLUMNS\s*\(\s*'([^']+)'\s*\)", text, re.IGNORECASE)
+            colm = re.search(rf"\bCOLUMNS\s*\(\s*({LIT})\s*\)", text, re.IGNORECASE)
             if not colm:
                 break
-            fmm = re.search(r"\bFROM\s+`?(\w+)`?", text, re.IGNORECASE)
+            fmm = re.search(rf"\bFROM\s+(\w+|{LIT})", text, re.IGNORECASE)
             if not fmm:
                 raise ValueError("COLUMNS('re') needs a resolvable FROM table")
-            cols = self.spark.table(fmm.group(1)).columns
-            pat = re.compile(colm.group(1))
-            matched = [c for c in cols if pat.search(c)]
+            cols = self.spark.table(lits.value(fmm.group(1))).columns
+            regex = lits.value(colm.group(1))
+            matched = [c for c in cols if re.search(regex, c)]
             if not matched:
-                raise ValueError(f"COLUMNS({colm.group(1)!r}) matches no columns")
+                raise ValueError(f"COLUMNS({regex!r}) matches no columns")
             text = text[: colm.start()] + ", ".join(matched) + text[colm.end() :]
         mm = _MERGE_FN_RE.search(text)
         if mm:
@@ -1479,7 +1483,7 @@ class Engine:
             # → union view of matching registered tables + `_table` column
             from otus_clickhouse_spark.sources.readers import merge_tables
 
-            regex = mm.group(1)
+            regex = lits.value(mm.group(1))
             view = "__merge_" + re.sub(r"[^\w]+", "_", regex).strip("_")
             merge_tables(self.spark, regex).createOrReplaceTempView(view)
             text = text[: mm.start()] + f"FROM {view}" + text[mm.end() :]
@@ -1490,7 +1494,7 @@ class Engine:
             from otus_clickhouse_spark.operators.joins import paste_zip
 
             def rel(r: str) -> DataFrame:
-                return self.sql(r[1:-1]) if r.startswith("(") else self.table(r)
+                return self.sql(lits.unmask(r[1:-1])) if r.startswith("(") else self.table(r)
 
             view = f"__paste_{abs(hash(pm.group(0))) % 10**8}"
             paste_zip(rel(pm.group(1)), rel(pm.group(2))).createOrReplaceTempView(view)
@@ -1501,25 +1505,21 @@ class Engine:
             # LIMIT n BY cols [LIMIT m] — per-group top-n (ClickHouse
             # clause; same family as lecture_10's per-key dedup tricks).
             # Planned as one window shuffle partitioned by the BY keys.
-            from otus_clickhouse_spark.functions.dialect import _split_top_commas
-
             n_per = int(lb.group(1))
             tail_limit = int(lb.group(3)) if lb.group(3) else None
-            by_items = [s.strip() for s in _split_top_commas(lb.group(2))]
+            by_items = [lits.unmask(s) for s in split_top(lb.group(2))]
             om = None
             for cand in _ORDER_ITEMS_RE.finditer(text):
                 if not text[cand.end() : lb.start()].strip():
                     om = cand  # the ORDER BY directly before LIMIT n BY
-            order_items = (
-                [s.strip() for s in _split_top_commas(om.group(1))] if om else []
-            )
+            order_items = [lits.unmask(s) for s in split_top(om.group(1))] if om else []
             text = text[: om.start() if om else lb.start()]
             limit_by = (n_per, by_items, order_items, tail_limit)
         dicts = {n: d.key for n, d in self._dictionaries.items()}
         fill = _WITH_FILL_RE.search(text)
         if fill:
             text = text[: fill.start()] + f"ORDER BY {fill.group(1)}" + text[fill.end() :]
-        translated = translate(text, self.tables, dicts, self._sql_macros)
+        translated = translate(text, self.tables, dicts, self._sql_macros, lits)
         try:
             df = self.spark.sql(translated, args=params or None)
         except Exception as exc:
@@ -1534,14 +1534,12 @@ class Engine:
             col, _asc, lo, hi, step, interp_raw = fill.groups()
             interp = None
             if interp_raw is not None:
-                from otus_clickhouse_spark.functions.dialect import _split_top_commas
-
                 # INTERPOLATE (c [AS expr], …): no AS = carry previous value
                 interp = {}
-                for item in _split_top_commas(interp_raw):
-                    am = re.match(r"(?is)^\s*(\w+)(?:\s+AS\s+(.+))?$", item.strip())
+                for item in split_top(interp_raw):
+                    am = re.match(r"(?is)^(\w+)(?:\s+AS\s+(.+))?$", item)
                     if am:
-                        interp[am.group(1)] = am.group(2).strip() if am.group(2) else None
+                        interp[am.group(1)] = lits.unmask(am.group(2)) if am.group(2) else None
 
             def _val(tok):
                 if tok is None:
@@ -1553,7 +1551,7 @@ class Engine:
                 try:
                     return int(tok)
                 except ValueError:
-                    return float(tok) if re.fullmatch(r"-?\d+\.\d*", tok) else tok.strip("'\"")
+                    return float(tok) if re.fullmatch(r"-?\d+\.\d*", tok) else lits.value(tok)
 
             df = with_fill(
                 df, col, step=_val(step), start=_val(lo), stop=_val(hi), interpolate=interp
@@ -1592,39 +1590,25 @@ class Engine:
         import itertools
 
         msg = str(exc)
+        lits = Masked(translated)
+        masked = lits.text
         fixers = []
         if "UNEXPECTED_INPUT_TYPE" in msg and 'resolve "length(' in msg:
-            spots = [m.start() for m in re.finditer(r"\blength\(", translated)]
+            spots = [m.start() for m in re.finditer(r"\blength\(", masked)]
 
             def flip_len(txt: str, p: int) -> str:
                 return txt[:p] + "size(" + txt[p + len("length(") :]
 
             fixers.append((spots, flip_len))
         if "UNEXPECTED_INPUT_TYPE" in msg and 'resolve "element_at(' in msg:
-            spots = [m.start() for m in re.finditer(r"\belement_at\(", translated)]
+            spots = [m.start() for m in re.finditer(r"\belement_at\(", masked)]
 
             def flip_idx(txt: str, p: int) -> str:
                 # wrap element_at's SECOND argument in CAST(… AS INT)
-                depth, i, comma = 0, p + len("element_at("), -1
-                start_args = i
-                while i < len(txt):
-                    c = txt[i]
-                    if c == "(":
-                        depth += 1
-                    elif c == ")":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif c == "," and depth == 0:
-                        comma = i
-                    elif c in "'\"":
-                        nxt = txt.find(c, i + 1)
-                        i = nxt if nxt != -1 else len(txt) - 1
-                    i += 1
-                if comma == -1 or i >= len(txt):
+                args, end = call_args(txt, p + len("element_at"))
+                if len(args) != 2:
                     return txt
-                sub = txt[comma + 1 : i].strip()
-                return f"{txt[:comma]}, CAST({sub} AS INT){txt[i:]}"
+                return f"{txt[:p]}element_at({args[0]}, CAST({args[1]} AS INT)){txt[end:]}"
 
             fixers.append((spots, flip_idx))
         if not fixers:
@@ -1646,9 +1630,10 @@ class Engine:
                 if budget[0] <= 0:
                     raise exc
                 budget[0] -= 1
-                txt = translated
+                txt = masked
                 for i in sorted(combo, reverse=True):
                     txt = flip(txt, spots[i])
+                txt = lits.unmask(txt)
                 try:
                     return self.spark.sql(txt, args=params or None)
                 except Exception as e2:
@@ -1722,13 +1707,7 @@ class Engine:
         through file()/s3()."""
         import tempfile
 
-        raw = raw.strip()
-        if raw.startswith("$$") and raw.endswith("$$"):
-            data = raw[2:-2]
-        elif raw[:1] in "'\"" and raw[-1:] == raw[:1]:
-            data = raw[1:-1].replace(raw[0] * 2, raw[0])
-        else:
-            data = raw
+        data = unquote(raw)
         if fmt.lower() == "values":
             df = self.spark.sql(f"SELECT * FROM (VALUES {data})")
             return df.toDF(*[f"c{i + 1}" for i in range(len(df.columns))])
@@ -3047,8 +3026,6 @@ class Engine:
         return self.spark.createDataFrame(items, "name string, value string")
 
 
-_FINAL_RE = re.compile(r"\bFROM\s+([A-Za-z_][A-Za-z0-9_]*)\s+FINAL\b", re.IGNORECASE)
-
 _PASTE_REL = r"(\w+|\((?:[^()]|\([^()]*\))*\))"
 _PASTE_SQL_RE = re.compile(
     rf"\bFROM\s+{_PASTE_REL}\s+PASTE\s+JOIN\s+{_PASTE_REL}", re.IGNORECASE | re.DOTALL
@@ -3065,8 +3042,8 @@ _WITH_FILL_RE = re.compile(
 
 # file/s3/gcs/url/hdfs('path'[, 'format'[, 'structure']]) table functions
 _FILE_FN_RE = re.compile(
-    r"\bFROM\s+(file|s3|gcs|url|hdfs)\s*\(\s*'([^']+)'"
-    r"(?:\s*,\s*'([^']+)')?(?:\s*,\s*'([^']+)')?\s*\)",
+    rf"\bFROM\s+(file|s3|gcs|url|hdfs)\s*\(\s*({LIT})"
+    rf"(?:\s*,\s*({LIT}))?(?:\s*,\s*({LIT}))?\s*\)",
     re.IGNORECASE,
 )
 
@@ -3078,12 +3055,12 @@ _EXT_FN_RE = re.compile(
 
 # generateRandom('a UInt64, …'[, seed]) table function (lecture_08.md:232)
 _GENRAND_FN_RE = re.compile(
-    r"\bFROM\s+generateRandom\s*\(\s*'([^']+)'\s*(?:,\s*(\d+)\s*)?\)", re.IGNORECASE
+    rf"\bFROM\s+generateRandom\s*\(\s*({LIT})\s*(?:,\s*(\d+)\s*)?\)", re.IGNORECASE
 )
 
 # merge([currentDatabase()|'db',] 'regex') table function (lecture_09.md:645)
 _MERGE_FN_RE = re.compile(
-    r"\bFROM\s+merge\s*\(\s*(?:(?:currentDatabase\(\)|'\w+')\s*,\s*)?'([^']+)'\s*\)",
+    rf"\bFROM\s+merge\s*\(\s*(?:(?:currentDatabase\(\)|{LIT})\s*,\s*)?({LIT})\s*\)",
     re.IGNORECASE,
 )
 
@@ -3134,42 +3111,6 @@ def _apply_limit_by(
     if order_items:
         out = out.orderBy(*[_order_expr(o) for o in order_items])
     return out.limit(tail) if tail is not None else out
-
-
-def _split_statements(script: str) -> list[str]:
-    """Split a SQL script on top-level semicolons, skipping semicolons
-    inside quotes and stripping ``--`` line comments."""
-    out, buf = [], []
-    i, n = 0, len(script)
-    while i < n:
-        c = script[i]
-        if c in "'\"`":
-            j = i + 1
-            while j < n and script[j] != c:
-                j += 2 if script[j] == "\\" else 1
-            buf.append(script[i : j + 1])
-            i = j + 1
-            continue
-        if c == "-" and script[i : i + 2] == "--":
-            j = script.find("\n", i)
-            i = n if j < 0 else j
-            continue
-        if c == "/" and script[i : i + 2] == "/*":
-            j = script.find("*/", i)
-            i = n if j < 0 else j + 2
-            continue
-        if c == ";":
-            stmt = "".join(buf).strip()
-            if stmt:
-                out.append(stmt)
-            buf = []
-        else:
-            buf.append(c)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        out.append(tail)
-    return out
 
 
 def partition_columns(td: TableDef, columns) -> list[str]:

@@ -15,22 +15,6 @@ import json
 from datetime import date, datetime
 from decimal import Decimal
 
-OUTPUT_FORMATS = (
-    "Pretty",
-    "PrettyCompact",
-    "Vertical",
-    "CSV",
-    "CSVWithNames",
-    "TSV",
-    "TabSeparated",
-    "TSVWithNames",
-    "TabSeparatedWithNames",
-    "JSONEachRow",
-    "Values",
-    "Null",
-)
-
-
 def _cell(v) -> str:
     if v is None:
         return "\\N"

@@ -26,6 +26,7 @@ from __future__ import annotations
 import re
 
 from otus_clickhouse_spark.engine import TableDef
+from otus_clickhouse_spark.functions.lexer import LIT, Masked, split_top, strip_comments, unquote
 
 _SIMPLE_TYPES = {
     "string": "string",
@@ -100,16 +101,16 @@ def ch_type_to_spark(t: str) -> tuple[str, bool]:
         return f"array<{inner}>", False
     m = re.match(r"^Map\s*\((.*)\)$", t, re.IGNORECASE | re.DOTALL)
     if m:
-        k, v = _split_args(m.group(1))
+        k, v = split_top(m.group(1))
         return f"map<{ch_type_to_spark(k)[0]},{ch_type_to_spark(v)[0]}>", False
     m = re.match(r"^Tuple\s*\((.*)\)$", t, re.IGNORECASE | re.DOTALL)
     if m:
-        fields = [ch_type_to_spark(a)[0] for a in _split_args(m.group(1), many=True)]
+        fields = [ch_type_to_spark(a)[0] for a in split_top(m.group(1))]
         inner = ", ".join(f"_{i + 1}: {f}" for i, f in enumerate(fields))
         return f"struct<{inner}>", False
     m = _AGG_STATE_RE.match(t)
     if m:
-        parts = _split_args(m.group(2), many=True)
+        parts = split_top(m.group(2))
         fn = re.sub(r"If$", "", parts[0].strip())
         if not m.group(1):  # full AggregateFunction: typed state encoding
             if fn == "uniq":
@@ -128,32 +129,6 @@ def ch_type_to_spark(t: str) -> tuple[str, bool]:
     raise ValueError(f"unsupported ClickHouse type: {t!r}")
 
 
-def _split_args(s: str, many: bool = False) -> list[str]:
-    parts, depth, cur = [], 0, []
-    in_str = None  # quote char when inside a string literal
-    for ch in s:
-        if in_str:
-            cur.append(ch)
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in "'\"":
-            in_str = ch
-            cur.append(ch)
-            continue
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur).strip())
-    return parts if many else (parts if len(parts) > 1 else [parts[0], ""])[:2]
-
-
 # AggregateFunction(fn, T…) / SimpleAggregateFunction(fn, T) columns
 # (lectures/lecture_04.md:113-120, lecture_07.md:495-546). State
 # encodings per SURVEY.md §7 hard part 1:
@@ -170,7 +145,7 @@ _AGG_STATE_RE = re.compile(
 def agg_state_function(t: str) -> str | None:
     """Function name declared in an AggregateFunction column type."""
     m = _AGG_STATE_RE.match(t.strip())
-    return _split_args(m.group(2), many=True)[0].strip() if m else None
+    return split_top(m.group(2))[0] if m else None
 
 
 # Enum('CSH' = 1, …) / Enum8/Enum16, with or without explicit codes
@@ -189,11 +164,12 @@ def enum_mapping(t: str) -> dict[str, int] | None:
         )
         return enum_mapping(m2.group(1)) if m2 else None
     out: dict[str, int] = {}
-    for i, item in enumerate(_split_args(m.group(1), many=True), 1):
-        em = re.match(r"^\s*'([^']*)'\s*(?:=\s*(-?\d+)\s*)?$", item)
+    lits = Masked(m.group(1))
+    for i, item in enumerate(split_top(lits.text), 1):
+        em = re.match(rf"^({LIT})\s*(?:=\s*(-?\d+))?$", item)
         if not em:
-            raise ValueError(f"cannot parse enum member: {item!r}")
-        out[em.group(1)] = int(em.group(2)) if em.group(2) else i
+            raise ValueError(f"cannot parse enum member: {lits.unmask(item)!r}")
+        out[lits.value(em.group(1))] = int(em.group(2)) if em.group(2) else i
     return out
 
 
@@ -215,28 +191,6 @@ _COL_ATTR_RE = re.compile(
 )
 
 
-def strip_line_comments(sql: str) -> str:
-    """Remove `--` line comments outside string literals (hw DDL carries
-    inline column comments that would otherwise corrupt type parsing)."""
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in "'\"":
-            j = i + 1
-            while j < n and sql[j] != c:
-                j += 2 if sql[j] == "\\" else 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        if c == "-" and sql[i:i + 2] == "--":
-            j = sql.find("\n", i)
-            i = n if j < 0 else j
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
 def split_ttl_action(ttl: str) -> tuple[str, tuple[str, str] | None]:
     """Split a CH TTL clause into (expression, optional move action).
 
@@ -244,9 +198,11 @@ def split_ttl_action(ttl: str) -> tuple[str, tuple[str, str] | None]:
     moves expired rows to another storage-policy volume instead of
     deleting them; ``TO DISK`` is the single-disk form; an explicit
     trailing DELETE is the default action spelled out."""
-    m = re.search(r"\s+TO\s+(VOLUME|DISK)\s+'([\w.-]+)'\s*$", ttl, re.IGNORECASE)
+    lits = Masked(ttl)
+    m = re.search(rf"\s+TO\s+(VOLUME|DISK)\s+({LIT})\s*$", lits.text, re.IGNORECASE)
     if m:
-        return ttl[: m.start()].strip(), (m.group(1).lower(), m.group(2))
+        action = (m.group(1).lower(), lits.value(m.group(2)))
+        return lits.unmask(lits.text[: m.start()]).strip(), action
     return re.sub(r"\s+DELETE\s*$", "", ttl, flags=re.IGNORECASE).strip(), None
 
 
@@ -260,7 +216,7 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
     engine's view registration. Captured into ``TableDef.settings``
     under "defaults"/"materialized"/"aliases".
     """
-    ddl = strip_line_comments(ddl)
+    ddl = strip_comments(ddl)
     m = _CREATE_RE.match(ddl.strip().rstrip(";"))
     if not m:
         raise ValueError("not a CREATE TABLE statement")
@@ -270,8 +226,7 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
     aliases: dict[str, str] = {}
     agg_functions: dict[str, str] = {}
     enums: dict[str, dict[str, int]] = {}
-    for item in _split_args(m.group("cols"), many=True):
-        item = item.strip()
+    for item in split_top(m.group("cols")):
         if not item or re.match(r"^(INDEX|PROJECTION|CONSTRAINT|PRIMARY\s+KEY)\b", item, re.IGNORECASE):
             continue  # secondary indexes/projections: D9/D10 handled elsewhere
         am = _COL_ATTR_RE.search(item)
@@ -279,14 +234,13 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
         if am and am.group(1).upper() == "ALIAS":
             # ALIAS is virtual — not part of the stored schema; the
             # type annotation is optional in CH (`c ALIAS expr`)
-            aliases[item.split()[0].strip("`")] = am.group(2).strip()
+            aliases[unquote(item.split()[0])] = am.group(2).strip()
             continue
-        cm = re.match(r"^`([^`]+)`\s+(.+)$", item, re.DOTALL) or re.match(
-            r"^([\w]+)\s+(.+)$", item, re.DOTALL
-        )
+        lits = Masked(item)
+        cm = re.match(rf"^({LIT}|\w+)\s+(.+)$", lits.text, re.DOTALL)
         if not cm:
             raise ValueError(f"cannot parse column: {item!r}")
-        name, ch_type = cm.group(1), cm.group(2).strip()
+        name, ch_type = lits.value(cm.group(1)), lits.unmask(cm.group(2)).strip()
         if not re.match(r"^[\w]+$", name):
             name = f"`{name}`"  # spaced identifiers stay backtick-quoted
         if am:
@@ -315,12 +269,12 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
         if not raw or raw.lower() == "tuple()":
             return ()
         if raw.startswith("(") and raw.endswith(")"):
-            return tuple(k for k in _split_args(raw[1:-1], many=True) if k)
+            return tuple(k for k in split_top(raw[1:-1]) if k)
         return (raw,)  # single column or expression key (e.g. toYYYYMM(dt))
 
     engine = m.group("engine")
     raw_args = m.group("engine_args") or ""
-    eargs = [a for a in _split_args(raw_args, many=True) if a] if raw_args.strip() else []
+    eargs = [a for a in split_top(raw_args) if a]
     td = TableDef(  # engine args kept verbatim for Buffer/Kafka/Join engines
 
         name=m.group("name"),
@@ -339,9 +293,9 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
         td.settings["engine_full"] = (
             f"{engine}({raw_args.strip()})" if raw_args.strip() else engine
         )
-        if len(eargs) >= 2 and eargs[0].strip("'\"").startswith("/"):
-            td.settings["zookeeper_path"] = eargs[0].strip("'\"")
-            td.settings["replica_macro"] = eargs[1].strip("'\"")
+        if len(eargs) >= 2 and unquote(eargs[0]).startswith("/"):
+            td.settings["zookeeper_path"] = unquote(eargs[0])
+            td.settings["replica_macro"] = unquote(eargs[1])
             eargs = eargs[2:]
     base = td.engine
     if base == "ReplacingMergeTree" and eargs:
@@ -366,7 +320,7 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
         for part in sm.group(1).split(","):
             if "=" in part:
                 k, v = part.split("=", 1)
-                tbl_settings[k.strip()] = v.strip().strip("'\"")
+                tbl_settings[k.strip()] = unquote(v)
         if tbl_settings:
             td.settings["table_settings"] = tbl_settings
     if eargs:

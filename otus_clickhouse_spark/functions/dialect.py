@@ -21,6 +21,7 @@ from __future__ import annotations
 import re
 
 from otus_clickhouse_spark.functions.clickhouse import AGGREGATE_ALIASES, SCALAR_ALIASES
+from otus_clickhouse_spark.functions.lexer import LIT, Masked, call_args, close_paren, split_top
 
 _FINAL_RE = re.compile(r"\bFROM\s+([A-Za-z_][A-Za-z0-9_.]*)\s+FINAL\b", re.IGNORECASE)
 _COUNT0_RE = re.compile(r"\bcount\s*\(\s*\)", re.IGNORECASE)
@@ -39,89 +40,7 @@ _IF_COMBINATOR_RE = re.compile(
 )
 
 
-def _split_call_args(s: str, open_paren: int) -> tuple[list[str], int]:
-    """Robust top-level arg splitter (handles nesting + quotes)."""
-    depth = 0
-    args: list[str] = []
-    buf: list[str] = []
-    i = open_paren + 1
-    while i < len(s):
-        c = s[i]
-        if c in "'\"":
-            j = i + 1
-            while j < len(s) and s[j] != c:
-                j += 1
-            buf.append(s[i : j + 1])
-            i = j + 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c == "]":
-            depth -= 1
-        elif c == ")":
-            if depth == 0:
-                args.append("".join(buf).strip())
-                return args, i + 1
-            depth -= 1
-        elif c == "," and depth == 0:
-            args.append("".join(buf).strip())
-            buf = []
-            i += 1
-            continue
-        buf.append(c)
-        i += 1
-    raise ValueError("unbalanced parens")
-
-
-def _strip_line_comments(text: str) -> str:
-    """Remove ``-- …`` line comments in ONE left-to-right scan that
-    tracks quote state. A two-phase approach (find quoted regions, then
-    sub in between) mis-lexes a comment whose text contains an unpaired
-    quote — ``SELECT 1 AS x -- don't`` would treat the apostrophe as a
-    string opener and swallow code. Here the ``--`` is recognized first,
-    so everything to end-of-line is dropped regardless of its content;
-    quotes only matter when they OPEN outside a comment."""
-    out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in "'\"`":
-            j = i + 1
-            while j < n and text[j] != c:
-                j += 2 if text[j] == "\\" else 1
-            out.append(text[i : j + 1])
-            i = j + 1
-            continue
-        if c == "-" and text[i : i + 2] == "--":
-            while i < n and text[i] != "\n":
-                i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-def _sub_outside_quotes(pattern: str | re.Pattern, repl, text: str) -> str:
-    """Apply ``re.sub`` only OUTSIDE quoted regions ('…', "…", `…`), so
-    identifier rewrites never mangle string literals (e.g. the table-name
-    strip must leave ``WHERE s = 'default.netflix'`` alone)."""
-    out: list[str] = []
-    i = 0
-    start = 0
-    while i < len(text):
-        c = text[i]
-        if c in "'\"`":
-            out.append(re.sub(pattern, repl, text[start:i]))
-            j = i + 1
-            while j < len(text) and text[j] != c:
-                j += 2 if text[j] == "\\" else 1
-            out.append(text[i : j + 1])
-            i = j + 1
-            start = i
-            continue
-        i += 1
-    out.append(re.sub(pattern, repl, text[start:]))
-    return "".join(out)
+_CTE_TOKEN_RE = re.compile(r"[(\[\]),]|\bSELECT\b", re.IGNORECASE)
 
 
 def _rewrite_scalar_cte(text: str) -> str:
@@ -134,38 +53,20 @@ def _rewrite_scalar_cte(text: str) -> str:
     m = re.match(r"^(\s*)WITH\b", text, re.IGNORECASE)
     if not m:
         return text
-    i = m.end()
-    depth = 0
-    items: list[str] = []
-    buf: list[str] = []
-    main_start = None
-    while i < len(text):
-        c = text[i]
-        if c in "'\"`":
-            j = i + 1
-            while j < len(text) and text[j] != c:
-                j += 1
-            buf.append(text[i : j + 1])
-            i = j + 1
-            continue
+    depth, start, items, main_start = 0, m.end(), [], None
+    for t in _CTE_TOKEN_RE.finditer(text, m.end()):
+        c = t.group()
         if c in "([":
             depth += 1
         elif c in ")]":
             depth -= 1
-        if depth == 0:
-            if c == ",":
-                items.append("".join(buf))
-                buf = []
-                i += 1
-                continue
-            if re.match(r"(?i)SELECT\b", text[i:]) and re.search(
-                r"(?i)\bAS\s+\w+\s*$", "".join(buf)
-            ):
-                items.append("".join(buf))
-                main_start = i
-                break
-        buf.append(c)
-        i += 1
+        elif depth == 0 and c == ",":
+            items.append(text[start : t.start()])
+            start = t.end()
+        elif depth == 0 and re.search(r"(?i)\bAS\s+\w+\s*$", text[start : t.start()]):
+            items.append(text[start : t.start()])
+            main_start = t.start()
+            break
     if main_start is None:
         return text  # standard-CTE-only (or unparseable): Spark handles it
     scalars: list[tuple[str, str]] = []
@@ -183,9 +84,7 @@ def _rewrite_scalar_cte(text: str) -> str:
         return text
     rest = text[main_start:]
     for name, expr in scalars:
-        rest = _sub_outside_quotes(
-            re.compile(rf"\b{re.escape(name)}\b"), lambda _m, e=expr: f"({e})", rest
-        )
+        rest = re.sub(rf"\b{re.escape(name)}\b", lambda _m, e=expr: f"({e})", rest)
     head = ("WITH " + ", ".join(keep) + " ") if keep else ""
     return m.group(1) + head + rest
 
@@ -201,7 +100,7 @@ def _rewrite_transform4(text: str) -> str:
         if not m:
             return text
         start = pos + m.start()
-        args, end = _split_call_args(text, text.index("(", start))
+        args, end = call_args(text, text.index("(", start))
         if len(args) != 4:
             pos = start + len("transform")
             continue
@@ -219,7 +118,7 @@ def _rewrite_count_equal(text: str) -> str:
         m = re.search(r"\bcountEqual\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         arr, x = args
         text = (
             text[: m.start()]
@@ -253,7 +152,7 @@ def _rewrite_multiif(text: str) -> str:
         m = re.search(r"\bmultiIf\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         pairs = args[:-1]
         default = args[-1]
         whens = " ".join(
@@ -285,7 +184,7 @@ def _rewrite_state_combinators(text: str) -> str:
         if not m:
             return text
         base, is_if, kind = m.group(1), bool(m.group(2)), m.group(3)
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         if kind == "State":
             cond = args[-1] if is_if else None
             vals = args[:-1] if is_if else args
@@ -326,7 +225,9 @@ def _rewrite_state_combinators(text: str) -> str:
         text = text[: m.start()] + repl + text[end:]
 
 
-def _rewrite_finalize_aggregation(text: str, agg_funcs: dict[str, str]) -> str:
+def _rewrite_finalize_aggregation(
+    text: str, agg_funcs: dict[str, str], lits: Masked
+) -> str:
     """``finalizeAggregation(state)`` (lecture_07.md:516-546): show one
     state value's current result without merging across rows.
 
@@ -341,10 +242,10 @@ def _rewrite_finalize_aggregation(text: str, agg_funcs: dict[str, str]) -> str:
         m = re.search(r"\bfinalizeAggregation\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         arg = args[0].strip()
         im = re.match(r"^(anyLast|any|uniqExact|uniq|sum|min|max|count|avg|groupArray)(?:If)?State\s*\(", arg)
-        fn = im.group(1) if im else agg_funcs.get(arg.split(".")[-1].strip("`"), "")
+        fn = im.group(1) if im else agg_funcs.get(lits.value(arg.split(".")[-1]), "")
         fn = re.sub(r"If$", "", fn)
         if fn == "uniqExact":
             repl = f"size({arg})"
@@ -376,7 +277,7 @@ def _rewrite_if_combinators(text: str) -> str:
         if not m:
             return text
         base = m.group(1)
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         spark_agg = {
             "argMax": "max_by",
             "argMin": "min_by",
@@ -425,7 +326,7 @@ def _rewrite_kurtpop(text: str) -> str:
         m = re.search(r"\bkurtPop\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         text = text[: m.start()] + f"(kurtosis({', '.join(args)}) + 3.0)" + text[end:]
 
 
@@ -437,7 +338,7 @@ def _rewrite_bounding_ratio(text: str) -> str:
         m = re.search(r"\bboundingRatio\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         x, y = args
         repl = f"((max({y}) - min({y})) / (max({x}) - min({x})))"
         text = text[: m.start()] + repl + text[end:]
@@ -453,7 +354,7 @@ def _rewrite_timeslots_default(text: str) -> str:
         if not m:
             return text
         start = pos + m.start()
-        args, end = _split_call_args(text, text.index("(", start))
+        args, end = call_args(text, text.index("(", start))
         if len(args) == 2:
             text = text[:start] + f"timeSlots({args[0]}, {args[1]}, 1800)" + text[end:]
         pos = start + 1
@@ -471,7 +372,7 @@ def _rewrite_crypto_hashes(text: str) -> str:
             m = re.search(rf"\b{ch_name}\s*\(", text)
             if not m:
                 break
-            args, end = _split_call_args(text, text.index("(", m.start()))
+            args, end = call_args(text, text.index("(", m.start()))
             text = text[: m.start()] + f"unhex({spark_fn}({', '.join(args)}))" + text[end:]
     # CH DateTime ± integer means seconds (hw14.md:40 `now() - 86400`);
     # Spark requires an interval
@@ -486,7 +387,7 @@ def _rewrite_crypto_hashes(text: str) -> str:
         m = re.search(r"\bmonthName\s*\(", text)
         if not m:
             break
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         text = text[: m.start()] + f"date_format({args[0]}, 'MMMM')" + text[end:]
     return text
 
@@ -502,7 +403,7 @@ def _rewrite_splitByChar(text: str) -> str:
         m = re.search(r"\bsplitByChar\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         sep, s = args
         repl = f"split({s}, concat('\\\\Q', {sep}, '\\\\E'))"
         text = text[: m.start()] + repl + text[end:]
@@ -516,7 +417,7 @@ def _rewrite_extractAll(text: str) -> str:
         m = re.search(r"\bextractAll\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         s, pat = args
         text = text[: m.start()] + f"regexp_extract_all({s}, {pat}, 0)" + text[end:]
 
@@ -528,30 +429,19 @@ _AJ_STOP_RE = re.compile(
 )
 
 
-def _split_top_commas(s: str) -> list[str]:
-    out, buf, depth, i = [], [], 0, 0
-    while i < len(s):
-        c = s[i]
-        if c in "'\"":
-            j = i + 1
-            while j < len(s) and s[j] != c:
-                j += 1
-            buf.append(s[i : j + 1])
-            i = j + 1
-            continue
-        if c == "(":
+def _clause_end(text: str, start: int, stop_re: re.Pattern) -> int:
+    """End of the clause that starts at ``start``: the first top-level
+    ``stop_re`` keyword, an unbalanced ``)``/``]``, or the end of text."""
+    depth = 0
+    for t in re.finditer(r"[(\[]|[)\]]|" + stop_re.pattern, text[start:], stop_re.flags):
+        c = t.group()
+        if c in "([":
             depth += 1
-        elif c == ")":
+        elif c in ")]" and depth:
             depth -= 1
-        if c == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(c)
-        i += 1
-    if buf:
-        out.append("".join(buf).strip())
-    return out
+        elif not depth:
+            return start + t.start()
+    return len(text)
 
 
 def _rewrite_array_join(text: str) -> str:
@@ -569,29 +459,9 @@ def _rewrite_array_join(text: str) -> str:
             return text
         outer = "OUTER " if m.group(1) else ""
         start = m.end()
-        i, depth, end = start, 0, len(text)
-        while i < len(text):
-            c = text[i]
-            if c in "'\"":
-                j = i + 1
-                while j < len(text) and text[j] != c:
-                    j += 1
-                i = j + 1
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0 and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                if _AJ_STOP_RE.match(text, i):
-                    end = i
-                    break
-            i += 1
+        end = _clause_end(text, start, _AJ_STOP_RE)
         items = []
-        for item in _split_top_commas(text[start:end].strip()):
+        for item in split_top(text[start:end].strip()):
             am = re.match(r"(?is)^(.*?)\s+AS\s+(\w+)$", item)
             if am:
                 items.append((am.group(1).strip(), am.group(2)))
@@ -615,50 +485,36 @@ _SAMPLE_RE = re.compile(r"(\bFROM\s+[A-Za-z_][\w.]*)\s+SAMPLE\s+(\d*\.?\d+)", re
 _NUMBERS_RE = re.compile(r"\bnumbers\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)", re.IGNORECASE)
 
 
-def _rewrite_array_literals(text: str) -> str:
+def _array_literals(text: str) -> str:
     """ClickHouse ``[1,2,3]`` array literals → ``array(1,2,3)``.
 
     A ``[`` directly after an identifier, ``)`` or ``]`` is subscript
     indexing (``arr[1]``) and is left alone; anywhere else it opens a
-    literal (lecture_06.md:19-41 uses ``['37','38']``).
+    literal (lecture_06.md:19-41 uses ``['37','38']``), including at the
+    very start of a fragment (``[0.99, 0.01]`` as an ALTER UPDATE value).
     """
     out: list[str] = []
     stack: list[bool] = []  # True = literal bracket we rewrote
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in "'\"":
-            j = i + 1
-            while j < n and text[j] != c:
-                j += 1
-            out.append(text[i : j + 1])
-            i = j + 1
-            continue
-        if c == "[":
-            # subscript only when the bracket directly follows an
-            # identifier/)/] — `arr[1]`; a space/comma/paren/keyword
-            # boundary before `[` means a literal (`SELECT [1,2]`)
-            prev = ""
-            for seg in reversed(out):
-                if seg:
-                    prev = seg[-1]
-                    break
-            # NB `prev in "_)]"` alone is True for prev == "" (empty
-            # string is a substring of anything) — a literal at the very
-            # START of the fragment (`[0.99, 0.01]` as an ALTER UPDATE
-            # assignment value) must open a literal, not a subscript
-            if prev.isalnum() or (prev and prev in "_)]"):
-                stack.append(False)
-                out.append("[")
-            else:
-                stack.append(True)
-                out.append("array(")
-        elif c == "]":
-            out.append(")" if stack and stack.pop() else "]")
+    pos = 0
+    for b in re.finditer(r"[\[\]]", text):
+        i = b.start()
+        out.append(text[pos:i])
+        pos = i + 1
+        if b.group() == "[":
+            prev = text[i - 1] if i else " "
+            stack.append(not (prev.isalnum() or prev in "_)]"))
+            out.append("array(" if stack[-1] else "[")
         else:
-            out.append(c)
-        i += 1
+            out.append(")" if stack and stack.pop() else "]")
+    out.append(text[pos:])
     return "".join(out)
+
+
+def _rewrite_array_literals(sql: str) -> str:
+    """The array-literal rewrite for a raw fragment outside
+    :func:`translate` (an INSERT … VALUES clause)."""
+    lits = Masked(sql)
+    return lits.unmask(_array_literals(lits.text))
 
 
 # ClickHouse higher-order array functions take the lambda FIRST
@@ -719,7 +575,7 @@ def _rewrite_array_lambda(text: str) -> str:
             out.append(text[pos:])
             break
         name = m.group(1)
-        args, end = _split_call_args(text, m.end() - 1)
+        args, end = call_args(text, m.end() - 1)
         # a top-level lambda starts with `x ->` or `(x, y) ->`
         if not re.match(r"^\s*(\w+|\(\s*\w+(\s*,\s*\w+)*\s*\))\s*->", args[0]):
             if name == "arraySum" and len(args) == 1:
@@ -817,7 +673,7 @@ def _rewrite_array_plain(text: str) -> str:
         if not m:
             return text
         name = m.group(1)
-        args, end = _split_call_args(text, m.end() - 1)
+        args, end = call_args(text, m.end() - 1)
         a = args[0]
         if name == "arrayUnion":
             repl = f"array_distinct(concat({', '.join(args)}))"
@@ -894,7 +750,7 @@ def _rewrite_array_plain(text: str) -> str:
             if not pm:
                 raise ValueError(f"unsupported mapApply lambda: {args[0]!r}")
             kp, vp, body = pm.groups()
-            ke, ve = _split_top_commas(body)
+            ke, ve = split_top(body)
 
             def _sub(expr: str) -> str:
                 expr = re.sub(rf"\b{kp}\b", "__e['key']", expr)
@@ -930,13 +786,13 @@ _DATEDIFF_BODIES = {
 }
 
 
-def _rewrite_datediff(text: str) -> str:
+def _rewrite_datediff(text: str, lits: Masked) -> str:
     while True:
         m = _DATEDIFF_RE.search(text)
         if not m:
             return text
-        args, end = _split_call_args(text, m.end() - 1)
-        unit = args[0].strip().strip("'\"").lower()
+        args, end = call_args(text, m.end() - 1)
+        unit = lits.value(args[0]).lower()
         body = _DATEDIFF_BODIES.get(unit)
         if body is None or len(args) != 3:
             # unknown unit / non-literal — fall back to Spark's datediff
@@ -966,13 +822,13 @@ _AGE_BODIES = {
 }
 
 
-def _rewrite_age(text: str) -> str:
+def _rewrite_age(text: str, lits: Masked) -> str:
     while True:
         m = _AGE_RE.search(text)
         if not m:
             return text
-        args, end = _split_call_args(text, m.end() - 1)
-        unit = args[0].strip().strip("'\"").lower()
+        args, end = call_args(text, m.end() - 1)
+        unit = lits.value(args[0]).lower()
         # CH age(unit, start, end[, timezone]) — the optional 4th
         # timezone arg shifts wall-clock boundaries; epoch differences
         # are timezone-invariant, so it is accepted and ignored here
@@ -1005,21 +861,13 @@ def _rewrite_dynamic_interval(text: str) -> str:
             out.append(text[i:])
             break
         start = m.end() - 1  # at '('
-        depth, j = 0, start
-        while j < len(text):
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
+        j = close_paren(text, start)
         um = re.match(
             r"\s*(second|minute|hour|day|week|month|year)s?\b",
             text[j + 1 :],
             re.IGNORECASE,
         )
-        if j >= len(text) or not um:
+        if j < 0 or not um:
             out.append(text[i : m.end()])
             i = m.end()
             continue
@@ -1042,7 +890,7 @@ def _rewrite_tostartofinterval(text: str) -> str:
         m = _TSI_RE.search(text)
         if not m:
             return text
-        args, end = _split_call_args(text, m.end() - 1)
+        args, end = call_args(text, m.end() - 1)
         im = re.match(r"^\s*INTERVAL\s+(\d+)\s+(\w+?)s?\s*$", args[1], re.IGNORECASE)
         if not im:  # toIntervalDay(1)-style constructor form (hw14.md)
             im = re.match(r"^\s*toInterval(\w+?)s?\s*\(\s*(\d+)\s*\)\s*$", args[1], re.IGNORECASE)
@@ -1078,14 +926,14 @@ def _rewrite_tostartofinterval(text: str) -> str:
 _TUPLE_EL_RE = re.compile(r"\btupleElement\s*\(")
 
 
-def _rewrite_tuple_element(text: str) -> str:
+def _rewrite_tuple_element(text: str, lits: Masked) -> str:
     while True:
         m = _TUPLE_EL_RE.search(text)
         if not m:
             return text
-        args, end = _split_call_args(text, m.end() - 1)
+        args, end = call_args(text, m.end() - 1)
         idx = args[1].strip()
-        field = f"col{idx}" if idx.isdigit() else idx.strip("'\"")
+        field = f"col{idx}" if idx.isdigit() else lits.value(idx)
         text = text[: m.start()] + f"({args[0]}).{field}" + text[end:]
 
 
@@ -1102,7 +950,7 @@ def _rewrite_tostartofweek(text: str) -> str:
         if not m:
             out.append(text[pos:])
             return "".join(out)
-        args, end = _split_call_args(text, m.end() - 1)
+        args, end = call_args(text, m.end() - 1)
         if len(args) == 1:
             out.append(text[pos : m.start()] + f"toStartOfWeek({args[0]}, 0)")
         else:
@@ -1127,7 +975,7 @@ def _rewrite_quantiles(text: str) -> str:
         if not m:
             return text
         name = m.group(1)
-        ps, after_ps = _split_call_args(text, m.end() - 1)
+        ps, after_ps = call_args(text, m.end() - 1)
         rest = text[after_ps:].lstrip()
         if not rest.startswith("("):
             # single-paren form: quantile(x) = median-ish; dialect alias
@@ -1140,7 +988,7 @@ def _rewrite_quantiles(text: str) -> str:
             )
             continue
         open2 = text.index("(", after_ps)
-        cols, end = _split_call_args(text, open2)
+        cols, end = call_args(text, open2)
         fn = "percentile" if "Exact" in name else "percentile_approx"
         plist = ps[0] if len(ps) == 1 else f"array({', '.join(ps)})"
         if name in ("quantileGK", "quantileddSketch") and len(ps) >= 2:
@@ -1185,27 +1033,27 @@ _ARRAY_REDUCE_FNS = {
 }
 
 
-def _rewrite_array_reduce(text: str) -> str:
+def _rewrite_array_reduce(text: str, lits: Masked) -> str:
     while True:
         m = re.search(r"\barrayReduce\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, m.end() - 1)
-        fn = args[0].strip("'\"").lower()
+        args, end = call_args(text, m.end() - 1)
+        fn = lits.value(args[0]).lower()
         builder = _ARRAY_REDUCE_FNS.get(fn)
         if builder is None:
             raise ValueError(f"arrayReduce: unsupported aggregate {args[0]}")
         text = text[: m.start()] + builder(args[1]) + text[end:]
 
 
-def _rewrite_array_combinators(text: str) -> str:
-    text = _rewrite_array_reduce(text)
+def _rewrite_array_combinators(text: str, lits: Masked) -> str:
+    text = _rewrite_array_reduce(text, lits)
     while True:
         m = _ARRAY_COMB_RE.search(text)
         if not m:
             return text
         fn = m.group(1)
-        args, end = _split_call_args(text, m.end() - 1)
+        args, end = call_args(text, m.end() - 1)
         a = args[0]
         elem_sum = f"aggregate({a}, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
         if fn == "sum":
@@ -1278,7 +1126,7 @@ def _seq_pattern(pattern_literal: str, args2: list[str]) -> tuple[str, list[str]
     return args2[0], [args2[i] for i in order]
 
 
-def _rewrite_behavioral(text: str) -> str:
+def _rewrite_behavioral(text: str, lits: Masked) -> str:
     from otus_clickhouse_spark.operators.behavioral import (
         sequence_count_expr,
         window_funnel_expr,
@@ -1290,7 +1138,7 @@ def _rewrite_behavioral(text: str) -> str:
         if not m:
             return text
         name = m.group(1)
-        args1, after1 = _split_call_args(text, m.end() - 1)
+        args1, after1 = call_args(text, m.end() - 1)
         if name == "avgWeighted":
             x, w = args1[0], args1[1]
             expr = f"(sum(({x}) * ({w})) / sum({w}))"
@@ -1385,26 +1233,26 @@ def _rewrite_behavioral(text: str) -> str:
             pos = after1  # not the two-paren form; leave as-is
             continue
         open2 = after1 + stripped
-        args2, end = _split_call_args(text, open2)
+        args2, end = call_args(text, open2)
         if name == "windowFunnel":
             if len(args1) > 1:
                 # 'strict_order'/'strict_dedup'/'strict_increase' change
                 # which chains count; silently ignoring them would return
                 # wrong numbers, so refuse loudly.
                 raise ValueError(
-                    f"windowFunnel mode {args1[1]} not supported "
+                    f"windowFunnel mode {lits.unmask(args1[1])} not supported "
                     "(default mode only)"
                 )
             expr = window_funnel_expr(args2[0], args2[1:], float(args1[0]))
         elif name in ("sequenceMatch", "sequenceMatchEvents"):
-            ts, conds = _seq_pattern(args1[0], args2)
+            ts, conds = _seq_pattern(lits.value(args1[0]), args2)
             expr = (
                 "CAST(("
                 + window_funnel_expr(ts, conds, None)
                 + f") = {len(conds)} AS INT)"
             )
         elif name == "sequenceCount":
-            ts, conds = _seq_pattern(args1[0], args2)
+            ts, conds = _seq_pattern(lits.value(args1[0]), args2)
             expr = sequence_count_expr(ts, conds, None)
         elif name == "uniqUpTo":
             # exact when ≤ N, else N+1 (the CH contract)
@@ -1434,42 +1282,9 @@ def _rewrite_order_by_nulls(text: str) -> str:
         if not m:
             out.append(text[pos:])
             return "".join(out)
-        if text[:m.start()].count("'") % 2 == 1:
-            # inside a string literal (e.g. query_log LIKE patterns)
-            out.append(text[pos : m.end()])
-            pos = m.end()
-            continue
-        # find the end of the ORDER BY item list: a top-level terminator
-        # keyword, an unbalanced ')', or end of text
-        i, depth, end = m.end(), 0, len(text)
-        while i < len(text):
-            c = text[i]
-            if c in "'\"":
-                nxt = text.find(c, i + 1)
-                i = (nxt if nxt != -1 else len(text) - 1) + 1
-                continue
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0 and c.isalpha():
-                t = _ORDER_TERM_RE.match(text, i)
-                if t:
-                    end = i
-                    break
-                while i < len(text) and (text[i].isalnum() or text[i] == "_"):
-                    i += 1
-                continue
-            i += 1
-        else:
-            end = len(text)
-        items = _split_top_commas(text[m.end() : end])
+        end = _clause_end(text, m.end(), _ORDER_TERM_RE)
         fixed = []
-        for it in items:
-            s = it.strip()
+        for s in split_top(text[m.end() : end]):
             if not s or re.search(r"\bNULLS\b", s, re.IGNORECASE):
                 fixed.append(f" {s}")
             elif re.search(r"\bDESC\b\s*$", s, re.IGNORECASE):
@@ -1481,7 +1296,6 @@ def _rewrite_order_by_nulls(text: str) -> str:
         if end < len(text) and not text[end].isspace() and text[end] not in ")]":
             out.append(" ")
         pos = end
-    # unreachable
 
 
 # position(haystack, needle[, start]) — ClickHouse puts the haystack
@@ -1494,7 +1308,7 @@ def _rewrite_position(text: str) -> str:
         if not m:
             return text
         at = pos + m.start()
-        args, end = _split_call_args(text, pos + m.end() - 1)
+        args, end = call_args(text, pos + m.end() - 1)
         if len(args) < 2:  # SQL-standard position(x IN y) — leave alone
             pos = at + len(m.group(0))
             continue
@@ -1510,24 +1324,6 @@ def _rewrite_position(text: str) -> str:
 # 0-based for arrays, so passing subscripts through silently shifts
 # every array index by one. MUST run before any rewrite that injects
 # Spark-native lambda bodies (which use 0-based st[i-1] internally).
-def _match_bracket(text: str, open_idx: int) -> int:
-    """Index of the ] matching text[open_idx] == '[' (quote-aware)."""
-    depth, i = 0, open_idx
-    while i < len(text):
-        c = text[i]
-        if c in "'\"":
-            nxt = text.find(c, i + 1)
-            i = nxt if nxt != -1 else len(text) - 1
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-            if depth == 0 and c == "]":
-                return i
-        i += 1
-    return -1
-
-
 def _subscript_base_start(text: str, bracket_idx: int) -> int:
     """Start of the expression a subscript applies to: an identifier
     chain (``arr``, ``t.col``) or a call (``splitByChar(…)``), walked
@@ -1559,20 +1355,7 @@ def _subscript_base_start(text: str, bracket_idx: int) -> int:
 def _rewrite_subscripts(text: str) -> str:
     pos = 0
     while True:
-        # quote-aware scan for the next subscript bracket (a '[' inside
-        # a string literal is regex/char-class content, not a subscript)
-        idx = -1
-        i = pos
-        while i < len(text):
-            c = text[i]
-            if c in "'\"":
-                nxt = text.find(c, i + 1)
-                i = (nxt if nxt != -1 else len(text) - 1) + 1
-                continue
-            if c == "[":
-                idx = i
-                break
-            i += 1
+        idx = text.find("[", pos)
         if idx == -1:
             return text
         start = _subscript_base_start(text, idx)
@@ -1588,7 +1371,7 @@ def _rewrite_subscripts(text: str) -> str:
             continue
         expr, j = base, idx
         while j < len(text) and text[j] == "[":
-            end = _match_bracket(text, j)
+            end = close_paren(text, j)
             if end == -1:
                 return text  # unbalanced; leave untouched
             # NB: no static CAST on the index — maps subscript by string
@@ -1637,7 +1420,7 @@ def _rewrite_numbers(text: str) -> str:
     )
 
 
-def _rewrite_dictget(text: str, dicts: dict[str, str]) -> str:
+def _rewrite_dictget(text: str, dicts: dict[str, str], lits: Masked) -> str:
     """SQL-level dictGet family (lectures/lecture_11.md:20-40,305-345).
 
     ``dictGet('d', 'attr', k)`` → a correlated scalar subquery over the
@@ -1650,15 +1433,15 @@ def _rewrite_dictget(text: str, dicts: dict[str, str]) -> str:
         if not m:
             return text
         kind = m.group(1)
-        args, end = _split_call_args(text, text.index("(", m.start()))
-        dname = args[0].strip().strip("'\"")
+        args, end = call_args(text, text.index("(", m.start()))
+        dname = lits.value(args[0])
         key = dicts.get(dname)
         if key is None:
             raise KeyError(f"unknown dictionary: {dname}")
         if kind == "Has":
             repl = f"((SELECT count(*) FROM dict_{dname} WHERE __dk = ({args[1]})) > 0)"
         else:
-            attr = args[1].strip().strip("'\"")
+            attr = lits.value(args[1])
             sub = f"(SELECT max(__da_{attr}) FROM dict_{dname} WHERE __dk = ({args[2]}))"
             if kind == "GetOrDefault":
                 repl = f"coalesce({sub}, {args[3]})"
@@ -1667,7 +1450,9 @@ def _rewrite_dictget(text: str, dicts: dict[str, str]) -> str:
         text = text[: m.start()] + repl + text[end:]
 
 
-def _expand_macros(text: str, macros: dict[str, tuple[list[str], str]]) -> str:
+def _expand_macros(
+    text: str, macros: dict[str, tuple[list[str], str]], lits: Masked
+) -> str:
     """SQL lambda UDFs (F1; lectures/lecture_06.md:102-119,
     homeworks/hw04.md:76-103): ``CREATE FUNCTION f AS (x, k) -> k*x``
     registers a macro; calls are inlined textually, so the body stays a
@@ -1682,17 +1467,17 @@ def _expand_macros(text: str, macros: dict[str, tuple[list[str], str]]) -> str:
         if not m:
             return text
         params, body = macros[m.group(1)]
-        args, end = _split_call_args(text, text.index("(", m.start()))
+        args, end = call_args(text, text.index("(", m.start()))
         if len(args) != len(params):
             raise ValueError(f"{m.group(1)} expects {len(params)} args, got {len(args)}")
-        out = body
+        out = lits.mask(body)
         for p, a in zip(params, args):
             out = re.sub(rf"\b{re.escape(p)}\b", f"({a})", out)
         text = text[: m.start()] + f"({out})" + text[end:]
     return text
 
 
-def _rewrite_joinget(text: str, tables: dict) -> str:
+def _rewrite_joinget(text: str, tables: dict, lits: Masked) -> str:
     """joinGet('join_tbl', 'attr', key) (J11; lectures/lecture_09.md:
     236-283): point lookup into a Join-engine table. The table's join
     key is its ORDER BY / engine key from the registry; the call
@@ -1702,13 +1487,13 @@ def _rewrite_joinget(text: str, tables: dict) -> str:
         m = re.search(r"\bjoinGet\s*\(", text)
         if not m:
             return text
-        args, end = _split_call_args(text, text.index("(", m.start()))
-        tname = args[0].strip().strip("'\"")
+        args, end = call_args(text, text.index("(", m.start()))
+        tname = lits.value(args[0])
         td = tables.get(tname)
         if td is None or not td.order_by:
             raise KeyError(f"joinGet: unknown or keyless table {tname!r}")
         key = td.order_by[0]
-        attr = args[1].strip().strip("'\"")
+        attr = lits.value(args[1])
         repl = f"(SELECT max({attr}) FROM {tname} WHERE {key} = ({args[2]}))"
         text = text[: m.start()] + repl + text[end:]
 
@@ -1718,22 +1503,29 @@ def translate(
     tables: dict | None = None,
     dicts: dict | None = None,
     macros: dict | None = None,
+    lits: Masked | None = None,
 ) -> str:
     """Translate ClickHouse-dialect SQL into Spark SQL.
 
     ``dicts`` maps dictionary name → key column for dictGet rewrites;
     ``macros`` maps SQL-lambda-UDF name → (params, body) for inlining.
+    Every pass runs on masked text (functions/lexer.py); a caller that
+    has already masked ``text`` passes its table as ``lits``. The result
+    is unmasked, ready for ``spark.sql``.
     """
     tables = tables or {}
+    if lits is None:
+        lits = Masked(text)
+        text = lits.text
     if macros:
-        text = _expand_macros(text, macros)
+        text = _expand_macros(text, macros, lits)
     text = _rewrite_scalar_cte(text)
     # CH's default database prefix over the engine's flat temp-view
     # namespace: `default.t` ≡ `t` (the Airflow lab's etl.py qualifies
     # every statement; clusters/airflow_and_ch/airflow/dags/etl.py:16-35).
     # Only known registered names are stripped, so struct fields or
     # other-catalog references never get mangled.
-    text = _sub_outside_quotes(
+    text = re.sub(
         r"\bdefault\.(\w+)",
         lambda m: m.group(1) if m.group(1) in tables else m.group(0),
         text,
@@ -1742,11 +1534,9 @@ def translate(
     def final_sub(m: re.Match) -> str:
         return f"FROM {m.group(1)}__final"
 
-    # client-side artifacts: `\G` vertical-format terminator
-    # (hw02.md:110-style probes) and trailing /* … */ block comments that
-    # would otherwise hide the FORMAT/SETTINGS suffixes from the strips
-    text = re.sub(r"\s*\\G\s*$", "", text)
-    text = re.sub(r"/\*([^*]|\*(?!/))*\*/\s*$", "", text).rstrip()
+    # client-side artifact: the `\G` vertical-format terminator
+    # (hw02.md:110-style probes)
+    text = re.sub(r"\s*\\G\s*$", "", text).rstrip()
     # trailing clauses that only affect the CH client/session, not the
     # result: SETTINGS k=v[, …] (lecture_10.md:181) and FORMAT <fmt>
     # (lecture_03.md:209-213) — stripped; session settings are routed
@@ -1791,17 +1581,17 @@ def translate(
             code2name = {v: k for k, v in mapping.items()}
             code_case = (
                 f"CASE {col} "
-                + " ".join(f"WHEN '{n}' THEN {c}" for n, c in mapping.items())
+                + " ".join(f"WHEN {lits.quote(n)} THEN {c}" for n, c in mapping.items())
                 + " END"
             )
 
             def eq_sub(m, c2n=code2name):
                 name = c2n.get(int(m.group(2)))
-                return f"{m.group(1)}'{name}'" if name is not None else m.group(0)
+                return m.group(1) + lits.quote(name) if name is not None else m.group(0)
 
             def in_sub(m, c2n=code2name):
                 vals = ", ".join(
-                    f"'{c2n[int(x)]}'" if int(x) in c2n else x
+                    lits.quote(c2n[int(x)]) if int(x) in c2n else x
                     for x in (s.strip() for s in m.group(2).split(","))
                 )
                 return m.group(1) + vals + m.group(3)
@@ -1821,7 +1611,7 @@ def translate(
             )
             # ORDER BY enum_col [ASC|DESC] → order by numeric code
             def order_sub(m, c=col, ce=code_case):
-                clause = re.sub(rf"\b{c}\b(?!\s*')", f"({ce})", m.group(2))
+                clause = re.sub(rf"\b{c}\b(?!\s*{LIT})", f"({ce})", m.group(2))
                 return m.group(1) + clause
 
             text = re.sub(
@@ -1850,15 +1640,12 @@ def translate(
         text,
         flags=re.IGNORECASE | re.DOTALL,
     )
-    # quote-aware: a `{rounding:UInt32}` placeholder INSIDE a string
-    # literal (hw14.md stores dashboard queries as VALUES strings) is
-    # data, not a parameter of this statement
-    text = _sub_outside_quotes(_PARAM_RE, lambda m: f":{m.group(1)}", text)
+    text = _PARAM_RE.sub(lambda m: f":{m.group(1)}", text)
     text = _COUNT0_RE.sub("count(*)", text)
     agg_funcs: dict[str, str] = {}
     for td in tables.values():
         agg_funcs.update(getattr(td, "settings", {}).get("agg_functions", {}))
-    text = _rewrite_finalize_aggregation(text, agg_funcs)
+    text = _rewrite_finalize_aggregation(text, agg_funcs, lits)
     text = _rewrite_state_combinators(text)
     text = re.sub(r"\buniqExact\s*\(", "count(DISTINCT ", text)
     text = _rewrite_multiif(text)
@@ -1938,11 +1725,11 @@ def translate(
         from otus_clickhouse_spark.functions.ddl import ch_type_to_spark
 
         fn = "TRY_CAST" if m.group(1) else "CAST"
-        spark_t, _null = ch_type_to_spark(m.group(3).strip())
+        spark_t, _null = ch_type_to_spark(lits.value(m.group(3)))
         return f"{fn}({m.group(2)} AS {spark_t})"
 
     text = re.sub(
-        r"\baccurateCast(OrNull)?\s*\(\s*([^,()]+?)\s*,\s*'([^']+)'\s*\)",
+        rf"\baccurateCast(OrNull)?\s*\(\s*([^,()]+?)\s*,\s*({LIT})\s*\)",
         _acc_cast,
         text,
     )
@@ -1954,7 +1741,7 @@ def translate(
     text = _rewrite_timeslots_default(text)
     text = _rewrite_splitByChar(text)
     text = _rewrite_extractAll(text)
-    text = _rewrite_array_literals(text)
+    text = _array_literals(text)
     text = _rewrite_subscripts(text)
     text = _rewrite_position(text)
     text = _rewrite_tostartofinterval(text)
@@ -1963,20 +1750,20 @@ def translate(
     # (lecture_07.md:43-45 inserts carry one); Spark does not
     text = re.sub(r",\s*(FROM\b)", r" \1", text, flags=re.IGNORECASE)
     text = _rewrite_tostartofweek(text)
-    text = _rewrite_tuple_element(text)
+    text = _rewrite_tuple_element(text, lits)
     text = _rewrite_array_lambda(text)
     text = _rewrite_array_plain(text)
     text = _rewrite_quantiles(text)
-    text = _rewrite_behavioral(text)
-    text = _rewrite_array_combinators(text)
-    text = _rewrite_datediff(text)
-    text = _rewrite_age(text)
+    text = _rewrite_behavioral(text, lits)
+    text = _rewrite_array_combinators(text, lits)
+    text = _rewrite_datediff(text, lits)
+    text = _rewrite_age(text, lits)
     text = _rewrite_array_join(text)
     text = _rewrite_sample(text)
     text = _rewrite_numbers(text)
     if dicts:
-        text = _rewrite_dictget(text, dicts)
-    text = _rewrite_joinget(text, tables)
+        text = _rewrite_dictget(text, dicts, lits)
+    text = _rewrite_joinget(text, tables, lits)
     text = _rewrite_order_by_nulls(text)
     text = _ALIAS_RE.sub(lambda m: _SIMPLE_ALIASES[m.group(1)] + "(", text)
-    return text
+    return lits.unmask(text)

@@ -41,11 +41,6 @@ def uniq_merge(state_col: str | Column) -> Column:
     return F.hll_sketch_estimate(F.hll_union_agg(state_col))
 
 
-def finalize_uniq(state_col: str | Column) -> Column:
-    """``finalizeAggregation(state)`` for a single state value."""
-    return F.hll_sketch_estimate(state_col)
-
-
 def uniq_exact_state(col: str | Column) -> Column:
     """``uniqExactState(col)`` → the sorted distinct value set — the
     EXACT mergeable state (CH stores the value set too; memory grows

@@ -111,10 +111,6 @@ def _dct2(block):
     return _DCT @ block @ _DCT.T
 
 
-def _idct2(coef):
-    return _DCT.T @ coef @ _DCT
-
-
 def _build_huffman(bits, vals):
     """(code, length) per symbol, canonical order (spec C.2)."""
     codes, code = {}, 0

@@ -27,11 +27,6 @@ def hash_bucket(id_col: str, buckets: int = 100) -> "F.Column":
     return h % buckets
 
 
-def sample_fraction(df: DataFrame, fraction: float, id_col: str) -> DataFrame:
-    """SAMPLE 0.1 (lecture_08.md:41-50), deterministic-by-id."""
-    return df.where(hash_bucket(id_col) < int(round(fraction * 100)))
-
-
 def mixture_weights(
     df: DataFrame,
     strata_col: str,

@@ -26,14 +26,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, "\\s+"), lambda t: F.length(t) > 0)
 
 
-def bpe_ish_tokens(text: Column) -> Column:
-    """BPE-ish sub-word split: words plus punctuation as separate tokens."""
-    return F.filter(
-        F.split(F.regexp_replace(text, r"([\p{Punct}])", r" $1 "), "\\s+"),
-        lambda t: F.length(t) > 0,
-    )
-
-
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 

@@ -20,6 +20,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from otus_clickhouse_spark.functions.lexer import Masked, split_top
+
 
 @dataclass
 class Projection:
@@ -104,7 +106,7 @@ class ProjectionRegistry:
         re.IGNORECASE,
     )
 
-    def try_rewrite_sql(self, sql: str):
+    def try_rewrite_sql(self, sql: str, lits: Masked):
         """Silent projection selection for the SQL entry point
         (lecture_13.md:243-314: the query keeps naming the base table;
         the optimizer serves it from the pre-aggregate).
@@ -112,7 +114,8 @@ class ProjectionRegistry:
         Handles the shape projections exist for: single-table
         ``SELECT keys…, agg(col) AS a… FROM t [WHERE pred-on-keys]
         GROUP BY keys…``. Anything else returns None and runs on the
-        base table unchanged (exactly CH's fallback behavior).
+        base table unchanged (exactly CH's fallback behavior). ``sql`` is
+        masked by ``lits`` (functions/lexer.py).
         """
         if not self.use_projections or not self.projections:
             return None
@@ -122,8 +125,7 @@ class ProjectionRegistry:
         table = m.group("table")
         keys = [k.strip() for k in m.group("keys").split(",") if k.strip()]
         wanted: dict[str, tuple[str, str]] = {}
-        for item in _split_top_level(m.group("select")):
-            item = item.strip()
+        for item in split_top(m.group("select")):
             if item in keys:
                 continue
             am = self._AGG_ITEM.match(item)
@@ -139,10 +141,10 @@ class ProjectionRegistry:
             # pre-aggregate can't answer it (CH falls back the same way)
             proj_keys = {k.lower() for p in self.projections.values() for k in p.group_keys}
             sql_words = {"and", "or", "not", "in", "between", "like", "is", "null", "true", "false"}
-            idents = set(re.findall(r"[A-Za-z_][\w]*", re.sub(r"'[^']*'", "", where)))
+            idents = set(re.findall(r"[A-Za-z_][\w]*", where))
             if any(i.lower() not in proj_keys | sql_words for i in idents):
                 return None
-            served = served.where(where)
+            served = served.where(lits.unmask(where))
         self.serve_hits += 1
         return served
 
@@ -180,25 +182,3 @@ class ProjectionRegistry:
                 ]
             )
         return None
-
-
-def _split_top_level(select_list: str) -> list[str]:
-    """Split a SELECT list on commas not inside parentheses."""
-    parts, depth, cur = [], 0, []
-    for ch in select_list:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
-def _is_literal(tok: str) -> bool:
-    return tok.replace(".", "", 1).isdigit()

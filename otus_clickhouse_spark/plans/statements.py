@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from otus_clickhouse_spark.engine import partition_columns
+from otus_clickhouse_spark.functions.lexer import split_top, unquote
 
 _UPDATE_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+UPDATE\s+(.*?)\s+WHERE\s+(.*)$",
@@ -264,34 +265,6 @@ _DROP_DICT_RE = re.compile(
 )
 
 
-def _split_assignments(s: str) -> list[str]:
-    """Split ``a = f(x, y), b = z`` on top-level commas only."""
-    out, buf, depth = [], [], 0
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c in "'\"":
-            j = i + 1
-            while j < len(s) and s[j] != c:
-                j += 1
-            buf.append(s[i : j + 1])
-            i = j + 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        if c == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(c)
-        i += 1
-    if buf:
-        out.append("".join(buf).strip())
-    return out
-
-
 def _expr(engine, text: str):
     """Column from a ClickHouse-dialect expression fragment."""
     from otus_clickhouse_spark.functions.dialect import translate
@@ -446,7 +419,7 @@ def _apply_rbac(engine, s: str) -> None:
     if pm:
         name, body, to = pm.groups()
         settings = {
-            sm.group(1): sm.group(2).strip().strip("'\"")
+            sm.group(1): unquote(sm.group(2))
             for item in body.split(",")
             if (sm := re.match(r"^\s*(\w+)\s*=?\s*(\S+)\s*$", item))
         }
@@ -547,27 +520,6 @@ def _apply_rbac(engine, s: str) -> None:
             raise PermissionError(f"role {which} not granted to {user}")
 
 
-def _split_nc_items(body: str) -> list[str]:
-    """Split ``k = v, k2 = v2`` on commas outside quotes."""
-    out, buf, q = [], [], None
-    for c in body:
-        if q:
-            buf.append(c)
-            if c == q:
-                q = None
-        elif c in "'\"":
-            q = c
-            buf.append(c)
-        elif c == ",":
-            out.append("".join(buf))
-            buf = []
-        else:
-            buf.append(c)
-    if "".join(buf).strip():
-        out.append("".join(buf))
-    return out
-
-
 # multi-action ALTER: `ALTER TABLE t ADD COLUMN x, MODIFY ORDER BY (…)`
 # (lecture_13-style) splits into sequential single-action statements.
 # Only commas followed by an action keyword split — UPDATE/PROJECTION
@@ -661,7 +613,7 @@ def _try_route_inner(engine, s: str):
         # ≈ system.settings; spark.* keys pass through to the session
         # conf, CH-named keys are recorded (queryable, mostly advisory —
         # Catalyst/AQE already does what most of them tune by hand)
-        key, val = m.group(1), m.group(2).strip().strip("'\"")
+        key, val = m.group(1), unquote(m.group(2))
         if key.startswith("spark."):
             engine.spark.conf.set(key, val)
         engine.session_settings[key] = val
@@ -750,16 +702,14 @@ def _try_route_inner(engine, s: str):
         # ALTER TABLE … ADD PROJECTION p (SELECT keys…, aggs… GROUP BY keys)
         # → build + register the pre-aggregate; Engine.sql silently serves
         # matching aggregations from it (lecture_13.md:243-314)
-        from otus_clickhouse_spark.functions.dialect import _split_top_commas
-
         table, pname, select_list, group_by = m.groups()
         keys = (
-            [k.strip() for k in _split_top_commas(group_by)]
+            [k.strip() for k in split_top(group_by)]
             if group_by
             else []
         )
         aggs: dict[str, tuple[str, str]] = {}
-        for item in _split_top_commas(select_list):
+        for item in split_top(select_list):
             item = item.strip()
             am = _PROJ_AGG_RE.match(item)
             if am:
@@ -796,7 +746,7 @@ def _try_route_inner(engine, s: str):
 
         name, assigns, pred = m.groups()
         assignments = {}
-        for a in _split_assignments(assigns):
+        for a in split_top(assigns):
             col, expr = a.split("=", 1)
             assignments[col.strip()] = _expr(engine, expr.strip())
         _persist(engine, name, update(engine.table(name), _expr(engine, pred), assignments))
@@ -825,7 +775,7 @@ def _try_route_inner(engine, s: str):
     if m:
         from otus_clickhouse_spark.plans.mutations import drop_partition
 
-        name, value = m.group(1), m.group(2).strip().strip("'\"")
+        name, value = m.group(1), unquote(m.group(2))
         td = engine.tables[name]
         pcol = _partition_column(td)
         df = engine.table(name)
@@ -837,7 +787,7 @@ def _try_route_inner(engine, s: str):
     if m:
         # DETACH PARTITION (M3; lecture_16.md:114-152): move the
         # partition's rows to a detached store; readers stop seeing them
-        name, value = m.group(1), m.group(2).strip().strip("'\"")
+        name, value = m.group(1), unquote(m.group(2))
         td = engine.tables[name]
         pcol = _partition_column(td)
         df = engine.table(name)
@@ -849,7 +799,7 @@ def _try_route_inner(engine, s: str):
 
     m = _ATTACH_PART_FROM_RE.match(s)
     if m:
-        name, value, src = m.group(1), m.group(2).strip().strip("'\""), m.group(3)
+        name, value, src = m.group(1), unquote(m.group(2)), m.group(3)
         src_td = engine.tables[src]
         incoming = engine.table(src)
         if value != "all" and src_td.partition_by:
@@ -862,7 +812,7 @@ def _try_route_inner(engine, s: str):
     m = _ATTACH_PART_RE.match(s)
     if m:
         # ATTACH PARTITION: append the detached rows back, drop the store
-        name, value = m.group(1), m.group(2).strip().strip("'\"")
+        name, value = m.group(1), unquote(m.group(2))
         td = engine.tables[name]
         det = _detached_path(td, value)
         if not os.path.exists(det):
@@ -877,7 +827,7 @@ def _try_route_inner(engine, s: str):
     if m:
         # REPLACE PARTITION … FROM other (M4; lecture_16.md:211-327):
         # swap the partition's content for the source table's copy
-        name, value, src = m.group(1), m.group(2).strip().strip("'\""), m.group(3)
+        name, value, src = m.group(1), unquote(m.group(2)), m.group(3)
         td = engine.tables[name]
         pcol = _partition_column(td)
         df = engine.table(name)
@@ -894,7 +844,7 @@ def _try_route_inner(engine, s: str):
     if m:
         # MOVE PARTITION TO TABLE (M4; lecture_16.md:145): append the
         # partition's rows to the destination, remove them from the source
-        name, value, dst = m.group(1), m.group(2).strip().strip("'\""), m.group(3)
+        name, value, dst = m.group(1), unquote(m.group(2)), m.group(3)
         td = engine.tables[name]
         pcol = _partition_column(td)
         df = engine.table(name)
@@ -915,7 +865,7 @@ def _try_route_inner(engine, s: str):
         snap = os.path.join("spark-warehouse", "_shadow", f"{name}_{uuid.uuid4().hex[:8]}")
         if value is not None:
             pcol = _partition_column(td)
-            v = value.strip().strip("'\"")
+            v = unquote(value)
             df = engine.table(name)
             df.filter(
                 F.col(pcol).eqNullSafe(F.lit(v).cast(df.schema[pcol].dataType))
@@ -1131,8 +1081,8 @@ def _try_route_inner(engine, s: str):
         # external table functions/engines resolve by name
         name, body = m.groups()
         kv = {
-            km.group(1).lower(): km.group(2).strip().strip("'\"")
-            for item in _split_nc_items(body)
+            km.group(1).lower(): unquote(km.group(2))
+            for item in split_top(body)
             if (km := re.match(r"^\s*(\w+)\s*=\s*(.+?)\s*$", item, re.DOTALL))
         }
         engine._named_collections[name] = kv
@@ -1142,10 +1092,10 @@ def _try_route_inner(engine, s: str):
     if m:
         name, body = m.groups()
         coll = engine._named_collections[name]
-        for item in _split_nc_items(body):
+        for item in split_top(body):
             km = re.match(r"^\s*(\w+)\s*=\s*(.+?)\s*$", item, re.DOTALL)
             if km:
-                coll[km.group(1).lower()] = km.group(2).strip().strip("'\"")
+                coll[km.group(1).lower()] = unquote(km.group(2))
         return {"altered_named_collection": name}
 
     m = _DROP_NC_RE.match(s)
@@ -1283,7 +1233,7 @@ def _try_route_inner(engine, s: str):
     m = _CREATE_DICT_RE.match(s)
     if m:
         name, cols_ddl, key, src = m.groups()
-        cols = [c.strip().split()[0] for c in _split_assignments(cols_ddl) if c.strip()]
+        cols = [c.strip().split()[0] for c in split_top(cols_ddl) if c.strip()]
         engine.create_dictionary(name, engine.table(src).select(*cols), key)
         engine._dict_sources[name] = (src, cols)  # for SYSTEM RELOAD DICTIONARY
         engine._dict_ddl[name] = s  # for SHOW CREATE DICTIONARY

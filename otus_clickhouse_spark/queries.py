@@ -48,10 +48,15 @@ _TABLES: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def _session_stopped(sess: SparkSession) -> bool:
+    """True when ``sess``'s SparkContext is gone; a JVM that no longer
+    answers (py4j) or a half-torn-down context counts as stopped, any
+    other error propagates."""
+    from py4j.protocol import Py4JError
+
     try:
         sc = sess.sparkContext
         return sc._jsc is None or sc._jsc.sc().isStopped()
-    except Exception:
+    except (AttributeError, Py4JError):
         return True
 
 
@@ -70,7 +75,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # JVM-side plans forever). Misses are rare (one per table per
     # session), so the sweep costs nothing on the hot path.
     for k, (sess, _) in list(_TABLES.items()):
-        if _session_stopped(sess):
+        if sess is not spark and _session_stopped(sess):
             del _TABLES[k]
     df = read_table(spark, path)
     _TABLES[key] = (spark, df)

@@ -20,6 +20,8 @@ import urllib.request
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otus_clickhouse_spark.functions.lexer import unquote
+
 _FORMATS = {"csv", "json", "parquet", "orc", "text", "avro"}
 
 _CH_FORMAT_MAP = {
@@ -193,11 +195,11 @@ def resolve_external_conf(
             continue
         kv = re.match(r"^(\w+)\s*=\s*(.*)$", raw, re.DOTALL)
         if kv:
-            conf[kv.group(1).lower()] = kv.group(2).strip().strip("'\"")
+            conf[kv.group(1).lower()] = unquote(kv.group(2))
         elif not pos and not conf and re.fullmatch(r"\w+", raw) and raw in (collections or {}):
             conf.update((collections or {})[raw])
         else:
-            pos.append(raw.strip("'\""))
+            pos.append(unquote(raw))
     names = (
         ["url", "table", "user", "password"]
         if kind == "jdbc"

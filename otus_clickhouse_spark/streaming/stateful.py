@@ -51,41 +51,6 @@ def running_counts(stream: DataFrame, key_col: str = "user_id", value_col: str =
     )
 
 
-def _session_agg(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """Gap-based session: emit a row when the processing-time timeout
-    fires (no events for the key within the gap)."""
-    if state.hasTimedOut:
-        n, total = state.get
-        state.remove()
-        yield pd.DataFrame({"key": [key[0]], "n_events": [n], "sum_value": [total]})
-        return
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    state.setTimeoutDuration(30_000)
-    yield from ()
-
-
-def session_totals(stream: DataFrame, key_col: str = "user_id", value_col: str = "value") -> DataFrame:
-    """Streaming sessionization with processing-time gap timeout — the
-    applyInPandasWithState analogue of ``session_window`` when the
-    session close action (emit once, clear state) must be custom."""
-    from pyspark.sql import functions as F
-
-    src = stream.select(F.col(key_col).alias("key"), F.col(value_col).alias("value"))
-    return src.groupBy("key").applyInPandasWithState(
-        _session_agg,
-        outputStructType="key long, n_events long, sum_value double",
-        stateStructType="n long, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
 def _funnel_update_factory(n_conds: int, window_us: int | None):
     def update(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState

@@ -1,7 +1,8 @@
 """Output-FORMAT rendering + CLI statement loop (S12, EP1;
 lectures/lecture_03.md:196-213 format surface, hw02.md:110 ``\\G``)."""
 
-from otus_clickhouse_spark.__main__ import _split_statements, pop_format, run_statement
+from otus_clickhouse_spark.__main__ import pop_format, run_statement
+from otus_clickhouse_spark.functions.lexer import split_statements
 from otus_clickhouse_spark.formats import render
 
 COLS = ["id", "name", "score"]
@@ -37,10 +38,11 @@ def test_pop_format():
 
 
 def test_split_statements():
-    stmts = _split_statements(
+    stmts = split_statements(
         "SELECT 'a;b'; -- comment; with semicolon\nSELECT 2;\nSELECT (1); "
     )
     assert stmts == ["SELECT 'a;b'", "SELECT 2", "SELECT (1)"]
+    assert split_statements("SELECT 1 /* a; b */; SELECT 2") == ["SELECT 1", "SELECT 2"]
 
 
 def test_run_statement_select_and_ddl(engine):

@@ -1001,13 +1001,6 @@ def test_default_prefix_strip_skips_string_literals():
     assert "'default.netflix'" in out
 
 
-def test_sub_outside_quotes_handles_backticks_and_doubles():
-    from otus_clickhouse_spark.functions.dialect import _sub_outside_quotes
-
-    s = "a 'keep a' `keep a` \"keep a\" a"
-    assert _sub_outside_quotes(r"\ba\b", "X", s) == "X 'keep a' `keep a` \"keep a\" X"
-
-
 def test_crypto_hash_binary_composition(engine):
     """CH's MD5/SHA* return raw bytes — hex(MD5(x)) must yield the
     digest hex (the builtin-shadowing gap is closed by a textual

@@ -33,19 +33,26 @@ import random
 import duckdb
 import pytest
 
-# the ~1600-statement generative sweep is the full suite's second
-# biggest wall (r13); excluded from the driver's default verify
-# window, run at round close with -m ""
-pytestmark = pytest.mark.slow
-
+# The ~1600-statement generative sweep is the full suite's second
+# biggest wall (r13), so it runs only with -m "" (the `full` ids). The
+# `fast` ids draw a few statements per family from the same seeded
+# grammar and stay in the default run.
 N_EXPRS = 1200          # scalar expressions checked value-for-value
 N_AGGS = 240            # aggregate expressions (incl. combinators)
 N_WINDOWS = 200         # window functions with frames (r11 ask #5)
 N_ARRAY_JOINS = 110     # ARRAY JOIN incl. LEFT + multi-array
 N_FILLS = 60            # ORDER BY … WITH FILL grids
 N_JOINS = 130           # 2-table joins USING/ON + IN-subqueries
+N_LITERALS = 120        # string literals carrying quotes/comments/keywords
 BATCH = 12              # expressions per SELECT (amortize Spark jobs)
 SEED = 1107
+
+
+def _sizes(full: int, fast: int):
+    return pytest.mark.parametrize("n", [
+        pytest.param(fast, id="fast"),
+        pytest.param(full, id="full", marks=pytest.mark.slow),
+    ])
 
 
 # --------------------------------------------------------------- fixture
@@ -177,31 +184,53 @@ def gen_int(rng: random.Random, depth: int) -> E:
     return E(f"position({s.ch}, '{lit}')", f"strpos({s.dk}, '{lit}')")
 
 
-def gen_str(rng: random.Random, depth: int) -> E:
+# literal content the dialect must pass through untouched: quotes,
+# comment markers, statement separators and the keywords / names that
+# rewrite passes look for
+_LIT_PIECES = [
+    "'", '"', "`", "\\", "--", "/*", "*/", ";", "(", ")", "[", ",",
+    " ORDER BY ", "LIMIT 1 BY", "FINAL", "system.one", "count()",
+    "uniqExact(", "{p:UInt8}", "default.fuzz_t", "ab",
+]
+
+
+def gen_lit(rng: random.Random) -> E:
+    """A string literal built from ``_LIT_PIECES``: backslash escapes on
+    the ClickHouse side, doubled quotes on the DuckDB side."""
+    content = "".join(rng.choice(_LIT_PIECES) for _ in range(rng.randint(1, 4)))
+    ch = content.replace("\\", "\\\\").replace("'", "\\'")
+    return E(f"'{ch}'", "'" + content.replace("'", "''") + "'", "STR")
+
+
+def gen_str(rng: random.Random, depth: int, lits: bool = False) -> E:
+    """``lits`` adds :func:`gen_lit` to the leaves (the literal family);
+    the other families keep their corpus."""
     if depth <= 0:
+        if lits and rng.random() < 0.85:
+            return gen_lit(rng)
         return rng.choice([E("s", t="STR"), E("'abc'", t="STR"), E("'Zz y'", t="STR")])
     pick = rng.randrange(6)
     if pick == 0:
-        a, b = gen_str(rng, depth - 1), gen_str(rng, depth - 1)
+        a, b = gen_str(rng, depth - 1, lits), gen_str(rng, depth - 1, lits)
         return E(f"concat({a.ch}, {b.ch})", f"concat({a.dk}, {b.dk})", "STR")
     if pick == 1:
-        a = gen_str(rng, depth - 1)
+        a = gen_str(rng, depth - 1, lits)
         f = rng.choice(["upper", "lower"])
         return E(f"{f}({a.ch})", f"{f}({a.dk})", "STR")
     if pick == 2:
-        a = gen_str(rng, depth - 1)
+        a = gen_str(rng, depth - 1, lits)
         start, n = rng.randint(1, 3), rng.randint(1, 4)
         return E(f"substring({a.ch}, {start}, {n})",
                  f"substring({a.dk}, {start}, {n})", "STR")
     if pick == 3:
-        a = gen_str(rng, depth - 1)
+        a = gen_str(rng, depth - 1, lits)
         return E(f"reverse({a.ch})", f"reverse({a.dk})", "STR")
     if pick == 4:
-        a = gen_str(rng, depth - 1)
+        a = gen_str(rng, depth - 1, lits)
         n = rng.randint(1, 3)
         return E(f"repeat({a.ch}, {n})", f"repeat({a.dk}, {n})", "STR")
     b = gen_bool(rng, depth - 1)
-    x, y = gen_str(rng, depth - 1), gen_str(rng, depth - 1)
+    x, y = gen_str(rng, depth - 1, lits), gen_str(rng, depth - 1, lits)
     return E(f"if({b.ch}, {x.ch}, {y.ch})",
              f"(CASE WHEN {b.dk} THEN {x.dk} ELSE {y.dk} END)", "STR")
 
@@ -369,19 +398,21 @@ def _run_batch(fuzz_env, exprs, group_by: str | None = None, agg: bool = False):
 
 # ----------------------------------------------------------------- tests
 
-def test_fuzz_scalar_expressions(fuzz_env):
+@_sizes(N_EXPRS, 24)
+def test_fuzz_scalar_expressions(fuzz_env, n):
     """≥1000 generated scalar expressions, value-checked vs DuckDB."""
     rng = random.Random(SEED)
-    exprs = [gen_scalar(rng) for _ in range(N_EXPRS)]
+    exprs = [gen_scalar(rng) for _ in range(n)]
     for i in range(0, len(exprs), BATCH):
         _run_batch(fuzz_env, exprs[i : i + BATCH])
 
 
-def test_fuzz_aggregates_and_combinators(fuzz_env):
+@_sizes(N_AGGS, 12)
+def test_fuzz_aggregates_and_combinators(fuzz_env, n):
     """Generated aggregates (-If, Distinct, parametric quantile,
     argMax/argMin, groupArray) under GROUP BY, value-checked vs DuckDB."""
     rng = random.Random(SEED + 1)
-    aggs = [gen_agg(rng) for _ in range(N_AGGS)]
+    aggs = [gen_agg(rng) for _ in range(n)]
     for i in range(0, len(aggs), BATCH):
         group = rng.choice([None, "(u % 3)", "(j % 2)"])
         _run_batch(fuzz_env, aggs[i : i + BATCH], group_by=group, agg=True)
@@ -450,9 +481,10 @@ def gen_window(rng: random.Random) -> E:
     return E(f"{f}({c}) {over}", t=t)
 
 
-def test_fuzz_window_functions_with_frames(fuzz_env):
+@_sizes(N_WINDOWS, 12)
+def test_fuzz_window_functions_with_frames(fuzz_env, n):
     rng = random.Random(SEED + 2)
-    exprs = [gen_window(rng) for _ in range(N_WINDOWS)]
+    exprs = [gen_window(rng) for _ in range(n)]
     for i in range(0, len(exprs), 8):
         batch = exprs[i : i + 8]
         sel_ch = ", ".join(f"{e.ch} AS c{k}" for k, e in enumerate(batch))
@@ -503,9 +535,10 @@ def gen_array_join(rng: random.Random) -> tuple[str, str]:
     )
 
 
-def test_fuzz_array_join(fuzz_env):
+@_sizes(N_ARRAY_JOINS, 4)
+def test_fuzz_array_join(fuzz_env, n):
     rng = random.Random(SEED + 3)
-    for _ in range(N_ARRAY_JOINS):
+    for _ in range(n):
         ch_sql, dk_sql = gen_array_join(rng)
         _run_sql_pair(fuzz_env, ch_sql, dk_sql)
 
@@ -537,9 +570,10 @@ def gen_with_fill(rng: random.Random) -> tuple[str, str]:
     return ch, dk
 
 
-def test_fuzz_with_fill(fuzz_env):
+@_sizes(N_FILLS, 3)
+def test_fuzz_with_fill(fuzz_env, n):
     rng = random.Random(SEED + 4)
-    for _ in range(N_FILLS):
+    for _ in range(n):
         ch_sql, dk_sql = gen_with_fill(rng)
         _run_sql_pair(fuzz_env, ch_sql, dk_sql)
 
@@ -597,13 +631,25 @@ def gen_join(rng: random.Random) -> tuple[str, str]:
     )
 
 
-def test_fuzz_two_table_joins(fuzz_env):
+@_sizes(N_JOINS, 4)
+def test_fuzz_two_table_joins(fuzz_env, n):
     rng = random.Random(SEED + 5)
-    for _ in range(N_JOINS):
+    for _ in range(n):
         ch_sql, dk_sql = gen_join(rng)
         _run_sql_pair(fuzz_env, ch_sql, dk_sql)
 
 
+@_sizes(N_LITERALS, 24)
+def test_fuzz_string_literals(fuzz_env, n):
+    """Literal-heavy scalar expressions: every rewrite pass must leave
+    the literal's bytes alone, so the values match DuckDB's."""
+    rng = random.Random(SEED + 6)
+    exprs = [gen_str(rng, rng.randint(1, 3), lits=True) for _ in range(n)]
+    for i in range(0, len(exprs), BATCH):
+        _run_batch(fuzz_env, exprs[i : i + BATCH])
+
+
+@pytest.mark.slow
 def test_fuzz_state_merge_through_persisted_table(fuzz_env):
     """-State aggregates written to a PERSISTED table (CTAS), read back
     and -Merge'd, must equal the direct aggregate — including partial
@@ -640,6 +686,7 @@ def test_fuzz_state_merge_through_persisted_table(fuzz_env):
         eng.execute("DROP TABLE IF EXISTS fz_states")
 
 
+@pytest.mark.slow
 def test_fuzz_state_merge_roundtrip(fuzz_env):
     """-State → finalizeAggregation must equal the plain aggregate for
     every mergeable function the dialect exposes (engine-only property —
