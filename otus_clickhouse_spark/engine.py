@@ -221,6 +221,8 @@ class Engine:
             for cpath in td.settings.get("cold_volumes", {}).values():
                 if os.path.exists(cpath):
                     frame = frame.unionByName(read_table(self.spark, cpath))
+            # on the base frame, so the views below inherit it
+            frame = single_task(frame)
         # ALIAS columns (lecture_12.md:27-28): virtual, recomputed per
         # query — appended to the view, never stored
         for col, expr in td.settings.get("aliases", {}).items():
@@ -242,6 +244,29 @@ class Engine:
             from otus_clickhouse_spark.operators.final import final_view
 
             final_view(frame, td).createOrReplaceTempView(f"{td.name}__final")
+
+    def local_frame(self, rows, schema: StructType | str) -> DataFrame:
+        """A frame over driver-side Python rows, planned as a ``LocalTableScan``.
+
+        The one way engine code turns Python rows into a frame. The rows
+        go to the JVM as a ``pyarrow.Table`` held in the plan; a list
+        handed to ``createDataFrame`` would be ``parallelize``d instead,
+        and every query over it would start Python-worker tasks. Values
+        convert through the schema's own ``toInternal``, exactly as
+        ``createDataFrame(rows, schema)`` converts them: a naive datetime
+        is local time, a date is days since the epoch.
+        """
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import _parse_datatype_string
+
+        struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+        arrow = to_arrow_schema(struct)
+        columns = list(zip(*(struct.toInternal(r) for r in rows))) or [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+        )
+        return self.spark.createDataFrame(table, struct)
 
     def create_table(self, ddl: str, path: str | None = None) -> TableDef:
         """Run a ClickHouse CREATE TABLE statement as-is (D2; DDL shapes
@@ -316,7 +341,7 @@ class Engine:
             ):
                 td.settings.setdefault(key, val)
             td.path = None
-            self.spark.createDataFrame([], schema).createOrReplaceTempView(td.name)
+            self.local_frame([], schema).createOrReplaceTempView(td.name)
             return td
         if td.engine == "Merge":
             # Merge(db, 'regex') — lectures/lecture_09.md:589-651:
@@ -330,7 +355,7 @@ class Engine:
             candidates = [n for n in self.tables if n != td.name]
             merge_tables(self.spark, pattern, candidates).createOrReplaceTempView(td.name)
             return td
-        empty = self.spark.createDataFrame([], schema)
+        empty = self.local_frame([], schema)
         self.register_table(td, df=empty)
         return td
 
@@ -405,9 +430,7 @@ class Engine:
             (name, q["interval_s"], ",".join(sorted(q["to"])))
             for name, q in sorted(self._quotas.items())
         ]
-        return self.spark.createDataFrame(
-            rows, "quota_name string, duration bigint, apply_to string"
-        )
+        return self.local_frame(rows, "quota_name string, duration bigint, apply_to string")
 
     def system_quota_limits(self) -> DataFrame:
         """≈ system.quota_limits (lecture_18.md:506-533)."""
@@ -421,7 +444,7 @@ class Engine:
             )
             for name, q in sorted(self._quotas.items())
         ]
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows,
             "quota_name string, duration bigint, max_queries bigint, "
             "max_errors bigint, max_result_rows bigint",
@@ -468,9 +491,7 @@ class Engine:
             (u, self._user_auth.get(u, "no_password"), "local_directory")
             for u in sorted(self._users)
         ]
-        return self.spark.createDataFrame(
-            rows, "name string, auth_type string, storage string"
-        )
+        return self.local_frame(rows, "name string, auth_type string, storage string")
 
     def system_roles(self) -> DataFrame:
         """≈ system.roles (hw12.md:31-38 golden): name, a stable id,
@@ -483,7 +504,7 @@ class Engine:
             (r, str(_uuid.uuid5(_uuid.NAMESPACE_OID, "role:" + r)), "local_directory")
             for r in sorted(self._roles)
         ]
-        return self.spark.createDataFrame(rows, "name string, id string, storage string")
+        return self.local_frame(rows, "name string, id string, storage string")
 
     def system_role_grants(self) -> DataFrame:
         """≈ system.role_grants (lecture_18.md:195)."""
@@ -492,7 +513,7 @@ class Engine:
             for u, roles in sorted(self._role_grants.items())
             for r in sorted(roles)
         ]
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows, "user_name string, granted_role_name string, active boolean"
         )
 
@@ -543,7 +564,7 @@ class Engine:
             (name, ", ".join(f"{k} = {'[HIDDEN]' if 'pass' in k else v}" for k, v in kv.items()))
             for name, kv in sorted(self._named_collections.items())
         ]
-        return self.spark.createDataFrame(rows, "name string, collection string")
+        return self.local_frame(rows, "name string, collection string")
 
     def system_clusters(self) -> DataFrame:
         """≈ system.clusters (lecture_15.md:74-83; hw10.md:14-24): one
@@ -553,7 +574,7 @@ class Engine:
             for name, shards in sorted(self._clusters.items())
             for s in range(1, shards + 1)
         ]
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows, "cluster string, shard_num int, replica_num int, host_name string, port int"
         )
 
@@ -561,7 +582,7 @@ class Engine:
         """≈ system.macros: the server's config-macro substitution set
         (hw09.md:295-325 uses getMacro('replica') over it)."""
         rows = sorted(self.macros.items())
-        return self.spark.createDataFrame(rows, "macro string, substitution string")
+        return self.local_frame(rows, "macro string, substitution string")
 
     def system_replicas(self) -> DataFrame:
         """≈ system.replicas (hw09.md:10-20): one row per Replicated*
@@ -584,7 +605,7 @@ class Engine:
                 ("default", name, td.settings.get("engine_full", td.engine),
                  1, 0, zk, replica, f"{zk}/replicas/{replica}", n_rep, n_rep)
             )
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows,
             "database string, table string, engine string, is_leader int, "
             "is_readonly int, zookeeper_path string, replica_name string, "
@@ -594,7 +615,7 @@ class Engine:
     def system_storage_policies(self) -> DataFrame:
         """≈ system.storage_policies (hw13.md:15-27 golden: default +
         s3_main volumes with their disk lists)."""
-        return self.spark.createDataFrame(
+        return self.local_frame(
             self.storage_policies,
             "policy_name string, volume_name string, disks array<string>",
         )
@@ -606,7 +627,7 @@ class Engine:
         DATABASES golden lists both)."""
         builtin = {"system": "System", "INFORMATION_SCHEMA": "Memory",
                    "information_schema": "Memory"}
-        return self.spark.createDataFrame(
+        return self.local_frame(
             [
                 (d, builtin.get(d) or self._database_engines.get(d, "Atomic"))
                 for d in sorted(self._databases | set(builtin))
@@ -621,9 +642,7 @@ class Engine:
             "id string, name string, status string, "
             "start_time timestamp, end_time timestamp"
         )
-        if not self._backups:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(self._backups, schema)
+        return self.local_frame(self._backups, schema)
 
     def add_storage_policy(self, policy: str, volume: str, disks: list[str]):
         """Register a storage policy (CH <storage_configuration> config;
@@ -1459,7 +1478,7 @@ class Engine:
                     f"SELECT ON system.{sysname}"
                 )
             view = f"__system_{sysname}"
-            method().createOrReplaceTempView(view)
+            single_task(method()).createOrReplaceTempView(view)
             text = re.sub(rf"\bsystem\.{sysname}\b", view, text)
         # COLUMNS('regex') dynamic projection (P1; lecture_02.md course
         # usage `select columns('key') from system.tables`): expand to the
@@ -1507,14 +1526,22 @@ class Engine:
             # Planned as one window shuffle partitioned by the BY keys.
             n_per = int(lb.group(1))
             tail_limit = int(lb.group(3)) if lb.group(3) else None
-            by_items = [lits.unmask(s) for s in split_top(lb.group(2))]
+            by_items = split_top(lb.group(2))
             om = None
             for cand in _ORDER_ITEMS_RE.finditer(text):
                 if not text[cand.end() : lb.start()].strip():
                     om = cand  # the ORDER BY directly before LIMIT n BY
-            order_items = [lits.unmask(s) for s in split_top(om.group(1))] if om else []
+            order_items = split_top(om.group(1)) if om else []
             text = text[: om.start() if om else lb.start()]
-            limit_by = (n_per, by_items, order_items, tail_limit)
+            text, items, hidden = _carry_hidden(text, by_items + order_items)
+            by_items, order_items = items[: len(by_items)], items[len(by_items) :]
+            limit_by = (
+                n_per,
+                [lits.unmask(i) for i in by_items],
+                [lits.unmask(i) for i in order_items],
+                tail_limit,
+                hidden,
+            )
         dicts = {n: d.key for n, d in self._dictionaries.items()}
         fill = _WITH_FILL_RE.search(text)
         if fill:
@@ -2141,7 +2168,7 @@ class Engine:
             topic = td.settings.get("kafka_topic_list", td.name)
             if head is not None:
                 (
-                    self.spark.createDataFrame([(head,)], "value string")
+                    self.local_frame([(head,)], "value string")
                     .write.format("kafka")
                     .option("kafka.bootstrap.servers", brokers)
                     .option("topic", topic)
@@ -2187,7 +2214,7 @@ class Engine:
         schema = self.spark.table(name).schema
         now = _dt.datetime.now()
         rows = [(m, topic, "", start + i, now, 0) for i, m in enumerate(msgs)]
-        base = self.spark.createDataFrame(
+        base = self.local_frame(
             rows,
             "message string, _topic string, _key string, _offset long, "
             "_timestamp_ms timestamp, _partition int",
@@ -2555,7 +2582,7 @@ class Engine:
                     self._dict_sources.get(name, ("", []))[0],
                 )
             )
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows,
             "database string, name string, uuid string, status string, "
             "`key.names` array<string>, `key.types` array<string>, "
@@ -2579,9 +2606,7 @@ class Engine:
             ("Overview", "Total MergeTree parts",
              "SELECT count(*) FROM system.parts"),
         ]
-        return self.spark.createDataFrame(
-            rows, "dashboard string, title string, query string"
-        )
+        return self.local_frame(rows, "dashboard string, title string, query string")
 
     # ----------------------------------------------------------- system views
     def system_tables(self) -> DataFrame:
@@ -2645,7 +2670,7 @@ class Engine:
             )
         from pyspark.sql import functions as F
 
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows,
             "database string, name string, uuid string, engine string, "
             "data_paths array<string>, "
@@ -2694,7 +2719,7 @@ class Engine:
                                 )
         from pyspark.sql import functions as F
 
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows,
             "table string, name string, partition string, partition_id string, "
             "disk_name string, path string, bytes_on_disk long, active int",
@@ -2710,7 +2735,7 @@ class Engine:
         from pyspark.sql import functions as F
 
         empty = ("", "QueryFinish", _dt.datetime.now(), _dt.date.today(), 0.0, 0, "", [])
-        df = self.spark.createDataFrame(
+        df = self.local_frame(
             self._query_log or [empty],
             "query string, type string, event_time timestamp, event_date date, "
             "duration_sec double, result_rows long, exception string, "
@@ -2752,7 +2777,7 @@ class Engine:
         n_sel = sum(1 for q in failed if re.match(r"\s*(SELECT|WITH)\b", q[0], re.IGNORECASE))
         n_ins = sum(1 for q in failed if re.match(r"\s*INSERT\b", q[0], re.IGNORECASE))
         now = _dt.datetime.now()
-        return self.spark.createDataFrame(
+        return self.local_frame(
             [("localhost", now, now.date(), len(failed), n_sel, n_ins, 0, 0, 0, 0)],
             "hostname string, event_time timestamp, event_date date, "
             "ProfileEvent_FailedQuery long, ProfileEvent_FailedSelectQuery long, "
@@ -2773,11 +2798,11 @@ class Engine:
             n = p.df.count() if p.df is not None else 0
             for pos, col in enumerate(cols, 1):
                 rows.append((p.name, p.table, f"{p.table}_all", int(n), 1, col, "", pos))
-        return self.spark.createDataFrame(
-            rows or [("", "", "", 0, 0, "", "", 0)],
+        return self.local_frame(
+            rows,
             "name string, table string, parent_name string, rows long, active int, "
             "column string, type string, column_position int",
-        ).where("name != ''")
+        )
 
     def system_merge_tree_settings(self) -> DataFrame:
         """≈ system.merge_tree_settings (lecture_09.md:async-insert
@@ -2791,15 +2816,12 @@ class Engine:
             ("old_parts_lifetime", "480", "compacted-file GC delay"),
             ("merge_with_ttl_timeout", "14400", "TTL sweep cadence"),
         ]
-        return self.spark.createDataFrame(
-            rows, "name string, value string, description string"
-        )
+        return self.local_frame(rows, "name string, value string, description string")
 
     def system_errors(self) -> DataFrame:
         """≈ system.errors (lecture_20.md:337-349): error classes with
         trip counts since start. Derived from the query log's exception
         records — name is the exception class, value its count."""
-        import datetime as _dt
         from collections import Counter
 
         errs = [
@@ -2815,11 +2837,11 @@ class Engine:
             (name, int(n), last[name][0][:200], last[name][1])
             for name, n in counts.items()
         ]
-        return self.spark.createDataFrame(
-            rows or [("", 0, "", _dt.datetime.now())],
+        return self.local_frame(
+            rows,
             "name string, value long, last_error_message string, "
             "last_error_time timestamp",
-        ).where("name != ''")
+        )
 
     def system_merges(self) -> DataFrame:
         """≈ system.merges (lecture_20.md:320-334): merges/mutations IN
@@ -2827,7 +2849,7 @@ class Engine:
         synchronous — between statements nothing is running, so the
         current-state table is schema-correct and empty (exactly what a
         quiesced CH server shows)."""
-        return self.spark.createDataFrame(
+        return self.local_frame(
             [],
             "database string, table string, elapsed double, progress double, "
             "rows_read long, is_mutation int, merge_type string",
@@ -2856,14 +2878,14 @@ class Engine:
             pass
         rows.append(("Uptime", _time.time() - self._started_at))
         rows.append(("NumberOfTables", float(len(self.tables))))
-        return self.spark.createDataFrame(rows, "metric string, value double")
+        return self.local_frame(rows, "metric string, value double")
 
     def system_replication_queue(self) -> DataFrame:
         """≈ system.replication_queue (lecture_20.md:823-827): pending
         replicated fetches/merges. The single-JVM topology has no
         queue — schema-correct and empty, the healthy-cluster state the
         lecture query expects."""
-        return self.spark.createDataFrame(
+        return self.local_frame(
             [],
             "table string, replica_name string, node_name string, merge_type string, "
             "last_exception string, last_attempt_time timestamp",
@@ -2876,7 +2898,7 @@ class Engine:
         into Python, so the view is schema-correct and EMPTY here — on
         a cluster the rows would come from a SparkListener feeding task
         metrics (peakExecutionMemory) into this table's shape."""
-        return self.spark.createDataFrame(
+        return self.local_frame(
             [],
             "event_time timestamp, event_date date, trace_type string, "
             "query_id string, size long",
@@ -2903,7 +2925,7 @@ class Engine:
                 elif f.name in aliases:
                     kind, expr = "ALIAS", aliases[f.name]
                 rows.append((t.name, f.name, f.dataType.simpleString(), kind, expr))
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows, "table string, name string, type string, default_kind string, default_expression string"
         )
 
@@ -2918,7 +2940,7 @@ class Engine:
         ]
         rows += [(n, "System", "") for n in SCALAR_ALIASES]
         rows += [(n, "System", "") for n in AGGREGATE_ALIASES]
-        return self.spark.createDataFrame(rows, "name string, origin string, create_query string")
+        return self.local_frame(rows, "name string, origin string, create_query string")
 
     def system_data_skipping_indices(self) -> DataFrame:
         """system.data_skipping_indices (D8; lecture_08.md:225)."""
@@ -2927,18 +2949,14 @@ class Engine:
             for t, td in self.tables.items()
             for i, (expr, itype) in td.skip_indexes.items()
         ]
-        return self.spark.createDataFrame(
-            rows, "table string, name string, expr string, type string"
-        )
+        return self.local_frame(rows, "table string, name string, expr string, type string")
 
     def system_events(self) -> DataFrame:
         """≈ system.events (lecture_20.md:296-478 monitoring): cumulative
         engine counters (Query/SelectQuery/InsertQuery/FailedSelectQuery)."""
         with self._events_lock:
             rows = sorted(self._events.items())
-        return self.spark.createDataFrame(
-            rows or [("", 0)], "event string, value long"
-        ).where("event != ''")
+        return self.local_frame(rows, "event string, value long")
 
     def system_metrics(self) -> DataFrame:
         """≈ system.metrics: current gauges (running queries, registered
@@ -2950,7 +2968,7 @@ class Engine:
             ("DictionariesRegistered", len(self._dictionaries)),
             ("MaterializedViews", sum(len(v) for v in self._mvs.values())),
         ]
-        return self.spark.createDataFrame(rows, "metric string, value long")
+        return self.local_frame(rows, "metric string, value long")
 
     def system_mutations(self) -> DataFrame:
         """≈ system.mutations (lecture_16.md:60-98): mutations routed
@@ -2970,11 +2988,10 @@ class Engine:
         from pyspark.sql import functions as F
 
         return (
-            self.spark.createDataFrame(
-                rows or [("", "", "", 0.0, 0)],
+            self.local_frame(
+                rows,
                 "command string, table string, mutation_id string, finished_at double, is_done int",
             )
-            .where("command != ''")
             # failure bookkeeping (lecture_20.md:817-821 stuck-mutation
             # probe): synchronous write-then-swap either succeeds or
             # raises to the caller, so the fail columns are empty/null
@@ -3000,7 +3017,7 @@ class Engine:
             )
             for priv, db, tbl, grantee in self._grants
         ]
-        return self.spark.createDataFrame(
+        return self.local_frame(
             rows,
             "user_name string, role_name string, access_type string, "
             "database string, table string, column string, "
@@ -3014,16 +3031,14 @@ class Engine:
 
         now = time.time()
         rows = [(qid, text, round(now - t0, 3)) for qid, (text, t0) in self._processes.items()]
-        return self.spark.createDataFrame(
-            rows or [("", "", 0.0)], "query_id string, query string, elapsed double"
-        ).where("query_id != ''")
+        return self.local_frame(rows, "query_id string, query string, elapsed double")
 
     def system_settings(self) -> DataFrame:
         """≈ system.settings: spark conf + session SET overrides
         (lecture_12.md:62-212)."""
         items = [(k, str(v)) for k, v in self.spark.sparkContext.getConf().getAll()]
         items += list(self.session_settings.items())
-        return self.spark.createDataFrame(items, "name string, value string")
+        return self.local_frame(items, "name string, value string")
 
 
 _PASTE_REL = r"(\w+|\((?:[^()]|\([^()]*\))*\))"
@@ -3093,11 +3108,53 @@ def _order_expr(item: str):
     return c.desc() if (m.group(2) or "").upper() == "DESC" else c.asc()
 
 
+def _carry_hidden(text: str, items: list[str]) -> tuple[str, list[str], list[str]]:
+    """Make LIMIT BY's BY and ORDER BY items columns of the query result.
+
+    ``text`` is the masked query without its ORDER BY / LIMIT BY tail.
+    An item whose expression is not an output column of the outermost
+    select list (``ORDER BY v`` with ``v`` not selected, or any
+    expression) rides along as a hidden select item ``__lb_h<i>``.
+    Returns the text with the hidden items added, the items rewritten
+    to name them (ASC/DESC/NULLS kept) and the hidden names, which
+    :func:`_apply_limit_by` drops afterwards.
+    """
+    from otus_clickhouse_spark.functions.dialect import _FROM_KW_RE, _SELECT_KW_RE, _clause_end
+
+    start = _clause_end(text, 0, _SELECT_KW_RE) + len("SELECT")
+    end = _clause_end(text, start, _FROM_KW_RE)
+    names, star = set(), False
+    for sel in split_top(text[start:end]):
+        m = re.fullmatch(r"(?is)(?:DISTINCT\s+)?(?:\w+\.)*(\w+|\*)|.*\sAS\s+(\w+)", sel)
+        name = m and (m.group(2) or m.group(1)).lower()
+        star |= name == "*"
+        names.add(name)
+    out, hidden, extra = [], [], ""
+    for item in items:
+        m = re.match(r"(?is)(.*?)((?:\s+(?:ASC|DESC))?(?:\s+NULLS\s+(?:FIRST|LAST))?)\s*$", item)
+        expr, order = m.group(1), m.group(2)
+        if expr.lower() in names or (star and re.fullmatch(r"\w+", expr)):
+            out.append(item)
+            continue
+        hidden.append(f"__lb_h{len(hidden)}")
+        extra += f", {expr} AS {hidden[-1]}"
+        out.append(hidden[-1] + order)
+    if hidden:
+        text = f"{text[:end].rstrip()}{extra} {text[end:]}"
+    return text, out, hidden
+
+
 def _apply_limit_by(
-    df: DataFrame, n_per: int, by_items: list[str], order_items: list[str], tail: int | None
+    df: DataFrame,
+    n_per: int,
+    by_items: list[str],
+    order_items: list[str],
+    tail: int | None,
+    hidden: list[str],
 ) -> DataFrame:
     """LIMIT n BY: keep the first n rows per BY-key group, in the query's
-    ORDER BY order (arbitrary pick when unordered, as in ClickHouse)."""
+    ORDER BY order (arbitrary pick when unordered, as in ClickHouse).
+    The ``hidden`` columns :func:`_carry_hidden` added are dropped."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -3110,6 +3167,7 @@ def _apply_limit_by(
     )
     if order_items:
         out = out.orderBy(*[_order_expr(o) for o in order_items])
+    out = out.drop(*hidden)
     return out.limit(tail) if tail is not None else out
 
 
@@ -3128,6 +3186,21 @@ def partition_columns(td: TableDef, columns) -> list[str]:
 def _fields(schema: StructType) -> list[tuple]:
     """A schema's (name, type) list, nullability and metadata aside."""
     return [(f.name, f.dataType) for f in schema.fields]
+
+
+def single_task(frame: DataFrame) -> DataFrame:
+    """``frame`` as one partition when it is too small to split.
+
+    Too small means Spark's own size estimate of the optimized plan is
+    at most ``spark.sql.files.openCostInBytes``, Spark's estimate of
+    what opening one file costs. ``CoalesceExec(1)`` reports
+    ``SinglePartition``, so an aggregate, window or global sort over the
+    frame plans no Exchange and a statement runs as one job. Filters
+    and column pruning still push through the coalesce into the scan.
+    """
+    conf = frame.sparkSession._jsparkSession.sessionState().conf()
+    size = frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return frame.coalesce(1) if size <= conf.filesOpenCostInBytes() else frame
 
 
 def _enum_norm(td, fname: str, col):

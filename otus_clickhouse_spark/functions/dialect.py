@@ -424,7 +424,8 @@ def _rewrite_extractAll(text: str) -> str:
 
 _ARRAY_JOIN_RE = re.compile(r"\b(LEFT\s+)?ARRAY\s+JOIN\b", re.IGNORECASE)
 _AJ_STOP_RE = re.compile(
-    r"\b(WHERE|GROUP|ORDER|HAVING|LIMIT|SETTINGS|UNION|WINDOW|INTERSECT|EXCEPT)\b",
+    r"\b(WHERE|GROUP|ORDER|HAVING|LIMIT|SETTINGS|UNION|WINDOW|INTERSECT|EXCEPT"
+    r"|(?:LEFT\s+)?ARRAY\s+JOIN)\b",
     re.IGNORECASE,
 )
 
@@ -451,8 +452,10 @@ def _rewrite_array_join(text: str) -> str:
     Multiple arrays unnest ALIGNED (not cartesian): the first is
     posexploded and the rest are indexed at the same position —
     exactly the reference's built-row-wise semantics. ``LEFT ARRAY
-    JOIN`` keeps empty-array rows (explode_outer).
+    JOIN`` keeps empty-array rows (explode_outer). Consecutive ARRAY
+    JOIN clauses multiply, each its own LATERAL VIEW.
     """
+    views = 0
     while True:
         m = _ARRAY_JOIN_RE.search(text)
         if not m:
@@ -471,14 +474,55 @@ def _rewrite_array_join(text: str) -> str:
                 items.append((item, item.split(".")[-1]))
         if len(items) == 1:
             expr, name = items[0]
-            repl = f" LATERAL VIEW {outer}explode({expr}) __aj0 AS {name} "
+            repl = f" LATERAL VIEW {outer}explode({expr}) __aj{views} AS {name} "
         else:
             e0, n0 = items[0]
-            parts = [f" LATERAL VIEW {outer}posexplode({e0}) __aj0 AS __ajpos, {n0}"]
+            pos = f"__ajpos{views or ''}"
+            parts = [f" LATERAL VIEW {outer}posexplode({e0}) __aj{views} AS {pos}, {n0}"]
             for k, (e, n) in enumerate(items[1:], 1):
-                parts.append(f" LATERAL VIEW explode(array(({e})[__ajpos])) __aj{k} AS {n}")
+                parts.append(f" LATERAL VIEW explode(array(({e})[{pos}])) __aj{views + k} AS {n}")
             repl = "".join(parts) + " "
+        views += len(items)
         text = text[: m.start()] + repl + text[end:]
+
+
+_SELECT_KW_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
+_FROM_KW_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
+_GROUP_BY_RE = re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE)
+_SELECT_AJ_RE = re.compile(r"(?s)arrayJoin\s*(\(.*\))\s+AS\s+(\w+)")
+
+
+def _rewrite_select_array_join(text: str) -> str:
+    """``SELECT arrayJoin(e) AS x, … FROM r … GROUP BY x`` → ``SELECT x,
+    … FROM r ARRAY JOIN e AS x … GROUP BY x``.
+
+    Spark cannot group by the alias of a generator in the same select
+    list, so in a grouped query each aliased select-list ``arrayJoin``
+    becomes its own ARRAY JOIN clause (one per call: separate calls
+    multiply, as in ClickHouse), which :func:`_rewrite_array_join`
+    plans as a LATERAL VIEW. Ungrouped queries keep ``explode``.
+    """
+    for sel in reversed(list(_SELECT_KW_RE.finditer(text))):
+        start = sel.end()
+        end = _clause_end(text, start, _FROM_KW_RE)
+        if not _FROM_KW_RE.match(text, end) or "arrayJoin" not in text[start:end]:
+            continue
+        rel = _clause_end(text, end, _AJ_STOP_RE)
+        if not _GROUP_BY_RE.match(text, _clause_end(text, rel, _GROUP_BY_RE)):
+            continue
+        items, joins = [], ""
+        for item in split_top(text[start:end]):
+            m = _SELECT_AJ_RE.fullmatch(item)
+            if m and close_paren(m.group(1), 0) == len(m.group(1)) - 1:
+                items.append(m.group(2))
+                joins += f" ARRAY JOIN {m.group(1)[1:-1]} AS {m.group(2)}"
+            else:
+                items.append(item)
+        if joins:
+            text = (
+                f"{text[:start]} {', '.join(items)} {text[end:rel].rstrip()}{joins} {text[rel:]}"
+            )
+    return text
 
 
 _SAMPLE_RE = re.compile(r"(\bFROM\s+[A-Za-z_][\w.]*)\s+SAMPLE\s+(\d*\.?\d+)", re.IGNORECASE)
@@ -1758,6 +1802,7 @@ def translate(
     text = _rewrite_array_combinators(text, lits)
     text = _rewrite_datediff(text, lits)
     text = _rewrite_age(text, lits)
+    text = _rewrite_select_array_join(text)
     text = _rewrite_array_join(text)
     text = _rewrite_sample(text)
     text = _rewrite_numbers(text)

@@ -322,12 +322,10 @@ def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> No
                 # TTL moved EVERY row out: keep a real (0-row, with
                 # footer) hot path so read_table works and the df=None
                 # registration path unions the cold volumes back in
-                engine.spark.createDataFrame([], schema).repartition(1).write.parquet(
-                    td.path
-                )
+                engine.local_frame([], schema).repartition(1).write.parquet(td.path)
                 engine.register_table(td)
             else:
-                engine.register_table(td, df=engine.spark.createDataFrame([], schema))
+                engine.register_table(td, df=engine.local_frame([], schema))
             return
         old = f"{td.path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
         shutil.move(td.path, old)
@@ -1050,7 +1048,7 @@ def _try_route_inner(engine, s: str):
         # TRUNCATE removes every part, TTL-moved cold tiers included
         for cpath in td.settings.pop("cold_volumes", {}).values():
             shutil.rmtree(cpath, ignore_errors=True)
-        engine.register_table(td, df=engine.spark.createDataFrame([], schema))
+        engine.register_table(td, df=engine.local_frame([], schema))
         return {"truncated": name}
 
     m = _RENAME_RE.match(s)

@@ -264,6 +264,44 @@ def test_limit_by_clause(engine):
     assert len(rows2) == 2
 
 
+@pytest.fixture
+def kvs(engine, tmp_path):
+    """A 5-row MergeTree ``kvs (k, v, s)``: k=1 has v 30/10/20, k=2 has v 5/7."""
+    engine.execute("CREATE TABLE kvs (k UInt32, v UInt32, s String) ENGINE = MergeTree ORDER BY k")
+    engine.tables["kvs"].path = str(tmp_path / "kvs")
+    engine.execute(
+        "INSERT INTO kvs VALUES (1, 30, 'a'), (1, 10, 'b'), (1, 20, 'c'), (2, 5, 'd'), (2, 7, 'e')"
+    )
+    yield "kvs"
+    engine.execute("DROP TABLE kvs")
+
+
+def test_limit_by_orders_by_a_column_not_selected(engine, kvs):
+    # ORDER BY items missing from the select list ride along hidden
+    rows = engine.run("SELECT k, s FROM kvs ORDER BY k, v LIMIT 1 BY k")
+    assert [tuple(r) for r in rows] == [(1, "b"), (2, "d")]
+    # BY keys and ORDER BY expressions may be unselected too
+    rows = engine.run("SELECT s FROM kvs ORDER BY v % 7 DESC, s LIMIT 1 BY k")
+    assert [r.s for r in rows] == ["c", "d"]
+    rows = engine.run("SELECT s FROM kvs ORDER BY v DESC LIMIT 1 BY k LIMIT 1")
+    assert [tuple(r) for r in rows] == [("a",)]
+
+
+def test_array_join_alias_in_group_by(engine, kvs):
+    rows = engine.run(
+        "SELECT arrayJoin([1, 2, 3]) AS x, count() AS c FROM kvs GROUP BY x ORDER BY x"
+    )
+    assert [tuple(r) for r in rows] == [(1, 5), (2, 5), (3, 5)]
+    # two calls multiply; a WHERE and an ungrouped arrayJoin still work
+    rows = engine.run(
+        "SELECT arrayJoin([1, 2]) AS x, arrayJoin(['p', 'q']) AS y, sum(v) AS t "
+        "FROM kvs WHERE k = 2 GROUP BY x, y ORDER BY x, y"
+    )
+    assert [tuple(r) for r in rows] == [(1, "p", 12), (1, "q", 12), (2, "p", 12), (2, "q", 12)]
+    rows = engine.run("SELECT arrayJoin([1, 2]) AS x FROM kvs WHERE k = 2 ORDER BY x")
+    assert [r.x for r in rows] == [1, 1, 2, 2]
+
+
 def test_with_totals(engine):
     rows = engine.sql(
         "SELECT l_returnflag, count() AS n FROM lineitem "
