@@ -11,6 +11,7 @@ reference lectures/lecture_07.md:34-817) are carried as metadata on
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -19,6 +20,7 @@ import threading
 from dataclasses import dataclass, field
 
 from pyspark.errors import AnalysisException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -31,6 +33,7 @@ from otus_clickhouse_spark.functions.lexer import (
     strip_comments,
     unquote,
 )
+from otus_clickhouse_spark.system_tables import CATALOG
 
 @dataclass
 class TableDef:
@@ -57,15 +60,6 @@ class TableDef:
     # bloom-family types on plain columns map to parquet bloom filters at
     # write time; minmax/set are subsumed by row-group min/max stats.
     skip_indexes: dict = field(default_factory=dict)
-
-
-# system tables holding access-control metadata: readable only with an
-# explicit SELECT grant (hw12.md:53-61 ACCESS_DENIED golden); everything
-# else in system.* stays implicitly readable for introspection
-_PROTECTED_SYSTEM_TABLES = {
-    "users", "roles", "grants", "role_grants", "quotas", "quota_limits",
-    "settings_profiles",
-}
 
 
 class Engine:
@@ -246,7 +240,9 @@ class Engine:
 
             final_view(frame, td).createOrReplaceTempView(f"{td.name}__final")
 
-    def local_frame(self, rows, schema: StructType | str) -> DataFrame:
+    def local_frame(
+        self, rows, schema: StructType | str, single_if_small: bool = False
+    ) -> DataFrame:
         """A frame over driver-side Python rows, planned as a ``LocalTableScan``.
 
         The one way engine code turns Python rows into a frame. The rows
@@ -256,6 +252,10 @@ class Engine:
         convert through the schema's own ``toInternal``, exactly as
         ``createDataFrame(rows, schema)`` converts them: a naive datetime
         is local time, a date is days since the epoch.
+
+        ``single_if_small`` coalesces the frame to one partition when the
+        Arrow table is at most ``spark.sql.files.openCostInBytes``, the
+        threshold :func:`single_task` applies to parquet tables.
         """
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -267,7 +267,22 @@ class Engine:
         table = pa.Table.from_arrays(
             [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)], schema=arrow
         )
-        return self.spark.createDataFrame(table, struct)
+        frame = self.spark.createDataFrame(table, struct)
+        if single_if_small and table.nbytes <= _open_cost(self.spark):
+            return frame.coalesce(1)
+        return frame
+
+    def system(self, name: str) -> DataFrame:
+        """``system.<name>`` from the catalog (D8): the entry's rows as one
+        local frame, a single partition when small. A protected entry
+        needs an explicit SELECT grant, the denial hw12.md:53-61 shows."""
+        entry = CATALOG[name]
+        user = self.current_user
+        if entry.protected and user != "default" and not self._granted(user, "SELECT", name):
+            raise PermissionError(
+                f"ACCESS_DENIED: user {user} lacks the grant SELECT ON system.{name}"
+            )
+        return self.local_frame(entry.rows(self), entry.schema, single_if_small=True)
 
     def create_table(self, ddl: str, path: str | None = None) -> TableDef:
         """Run a ClickHouse CREATE TABLE statement as-is (D2; DDL shapes
@@ -425,32 +440,6 @@ class Engine:
             (_time.time(), kind, n)
         )
 
-    def system_quotas(self) -> DataFrame:
-        """≈ system.quotas (lecture_18.md:538)."""
-        rows = [
-            (name, q["interval_s"], ",".join(sorted(q["to"])))
-            for name, q in sorted(self._quotas.items())
-        ]
-        return self.local_frame(rows, "quota_name string, duration bigint, apply_to string")
-
-    def system_quota_limits(self) -> DataFrame:
-        """≈ system.quota_limits (lecture_18.md:506-533)."""
-        rows = [
-            (
-                name,
-                q["interval_s"],
-                q["max"].get("queries"),
-                q["max"].get("errors"),
-                q["max"].get("result_rows"),
-            )
-            for name, q in sorted(self._quotas.items())
-        ]
-        return self.local_frame(
-            rows,
-            "quota_name string, duration bigint, max_queries bigint, "
-            "max_errors bigint, max_result_rows bigint",
-        )
-
     def _granted(self, user: str, priv: str, table: str) -> bool:
         """Direct grants + grants of the user's ACTIVE roles (a granted
         role confers nothing until SET ROLE — lecture_18.md:170)."""
@@ -484,39 +473,6 @@ class Engine:
     def _referenced_tables(self, text: str) -> list[str]:
         names = re.findall(r"\b(?:FROM|JOIN)\s+`?(\w+)`?", text, re.IGNORECASE)
         return [n for n in set(names) if n in self.tables]
-
-    def system_users(self) -> DataFrame:
-        """≈ system.users (lecture_18.md:56; hw12.md:72-80 golden shows
-        name + auth_type): RBAC-created users."""
-        rows = [
-            (u, self._user_auth.get(u, "no_password"), "local_directory")
-            for u in sorted(self._users)
-        ]
-        return self.local_frame(rows, "name string, auth_type string, storage string")
-
-    def system_roles(self) -> DataFrame:
-        """≈ system.roles (hw12.md:31-38 golden): name, a stable id,
-        storage. The id is a deterministic UUID of the role name (CH
-        assigns a random one at CREATE; determinism is friendlier to
-        tests and changes nothing the reference asserts)."""
-        import uuid as _uuid
-
-        rows = [
-            (r, str(_uuid.uuid5(_uuid.NAMESPACE_OID, "role:" + r)), "local_directory")
-            for r in sorted(self._roles)
-        ]
-        return self.local_frame(rows, "name string, id string, storage string")
-
-    def system_role_grants(self) -> DataFrame:
-        """≈ system.role_grants (lecture_18.md:195)."""
-        rows = [
-            (u, r, r in self._active_roles.get(u, set()))
-            for u, roles in sorted(self._role_grants.items())
-            for r in sorted(roles)
-        ]
-        return self.local_frame(
-            rows, "user_name string, granted_role_name string, active boolean"
-        )
 
     def define_cluster(self, name: str, shards: int = 1) -> None:
         """Declare a cluster topology (lecture_15.md:40-67): the Spark
@@ -557,93 +513,6 @@ class Engine:
             shard = F.lit(1).cast("int")
         frame.withColumn("_shard_num", shard).createOrReplaceTempView(td.name)
         return td
-
-    def system_named_collections(self) -> DataFrame:
-        """≈ system.named_collections (D14): names + keys, secrets masked
-        like the reference's SHOW NAMED COLLECTIONS SECRETS gating."""
-        rows = [
-            (name, ", ".join(f"{k} = {'[HIDDEN]' if 'pass' in k else v}" for k, v in kv.items()))
-            for name, kv in sorted(self._named_collections.items())
-        ]
-        return self.local_frame(rows, "name string, collection string")
-
-    def system_clusters(self) -> DataFrame:
-        """≈ system.clusters (lecture_15.md:74-83; hw10.md:14-24): one
-        row per (cluster, shard) of every declared topology."""
-        rows = [
-            (name, s, 1, "localhost", 9000)
-            for name, shards in sorted(self._clusters.items())
-            for s in range(1, shards + 1)
-        ]
-        return self.local_frame(
-            rows, "cluster string, shard_num int, replica_num int, host_name string, port int"
-        )
-
-    def system_macros(self) -> DataFrame:
-        """≈ system.macros: the server's config-macro substitution set
-        (hw09.md:295-325 uses getMacro('replica') over it)."""
-        rows = sorted(self.macros.items())
-        return self.local_frame(rows, "macro string, substitution string")
-
-    def system_replicas(self) -> DataFrame:
-        """≈ system.replicas (hw09.md:10-20): one row per Replicated*
-        table. Single-session emulation: this engine is always the
-        leader of its own data; total/active replicas come from the
-        widest declared cluster topology (replicas of one shard would
-        each run this same engine over shared storage)."""
-        n_rep = max(self._clusters.values(), default=1)
-        rows = []
-        for name, td in sorted(self.tables.items()):
-            if not td.settings.get("replicated"):
-                continue
-            zk = td.settings.get(
-                "zookeeper_path", f"/clickhouse/tables/{{shard}}/{name}"
-            )
-            for macro, sub in self.macros.items():
-                zk = zk.replace("{" + macro + "}", sub)
-            replica = self.macros.get("replica", "replica_1")
-            rows.append(
-                ("default", name, td.settings.get("engine_full", td.engine),
-                 1, 0, zk, replica, f"{zk}/replicas/{replica}", n_rep, n_rep)
-            )
-        return self.local_frame(
-            rows,
-            "database string, table string, engine string, is_leader int, "
-            "is_readonly int, zookeeper_path string, replica_name string, "
-            "replica_path string, total_replicas int, active_replicas int",
-        )
-
-    def system_storage_policies(self) -> DataFrame:
-        """≈ system.storage_policies (hw13.md:15-27 golden: default +
-        s3_main volumes with their disk lists)."""
-        return self.local_frame(
-            self.storage_policies,
-            "policy_name string, volume_name string, disks array<string>",
-        )
-
-    def system_databases(self) -> DataFrame:
-        """≈ system.databases (D1; lecture_16.md SHOW DATABASES surface):
-        one row per known namespace over the flat catalog — plus CH's
-        two built-in INFORMATION_SCHEMA spellings (hw19.md:88-95 SHOW
-        DATABASES golden lists both)."""
-        builtin = {"system": "System", "INFORMATION_SCHEMA": "Memory",
-                   "information_schema": "Memory"}
-        return self.local_frame(
-            [
-                (d, builtin.get(d) or self._database_engines.get(d, "Atomic"))
-                for d in sorted(self._databases | set(builtin))
-            ],
-            "name string, engine string",
-        )
-
-    def system_backups(self) -> DataFrame:
-        """≈ system.backups (hw13.md:78,123: one row per BACKUP/RESTORE
-        with a uuid id and BACKUP_CREATED/RESTORED status)."""
-        schema = (
-            "id string, name string, status string, "
-            "start_time timestamp, end_time timestamp"
-        )
-        return self.local_frame(self._backups, schema)
 
     def add_storage_policy(self, policy: str, volume: str, disks: list[str]):
         """Register a storage policy (CH <storage_configuration> config;
@@ -828,15 +697,14 @@ class Engine:
             srcdb, src = copym3.group("srcdb"), copym3.group("src")
             attrs = copym3.group("attrs")
             if srcdb and srcdb.lower() == "system":
-                method = getattr(self, f"system_{src}", None)
-                if method is None:
+                if src not in CATALOG:
                     raise KeyError(f"unknown system table system.{src}")
-                src_df = method()
+                empty = self.local_frame([], CATALOG[src].schema)
             elif srcdb is None and src in self.tables:
-                src_df = self.table(src)
+                empty = self.table(src).limit(0).localCheckpoint(eager=True)
             else:
-                src_df = None
-            if src_df is not None:
+                empty = None
+            if empty is not None:
                 em = re.search(r"ENGINE\s*=\s*(\w+)", attrs, re.IGNORECASE)
                 om = re.search(
                     r"ORDER\s+BY\s+\(?([\w, ]+?)\)?\s*(?:PARTITION|SETTINGS|$)",
@@ -854,7 +722,7 @@ class Engine:
                     order_by=okey,
                 )
                 self.tables[name] = td
-                self.register_table(td, df=src_df.limit(0).localCheckpoint(eager=True))
+                self.register_table(td, df=empty)
                 return td
         if re.match(r"^\s*CREATE\s+TABLE\b", s, re.IGNORECASE):
             return self.create_table(s)
@@ -1451,8 +1319,8 @@ class Engine:
             text,
         )
         # system.* metadata tables in raw SQL (D8; lecture_16.md:60-98,
-        # lecture_20.md:296-478 monitoring queries): materialize the
-        # engine-maintained frame as a view at query time. Also unwraps
+        # lecture_20.md:296-478 monitoring queries): each catalog entry
+        # read becomes a view of its rows at query time. Also unwraps
         # remote()/cluster()/clusterAllReplicas(c, system.x) — on Spark
         # the driver already sees global metadata, so the fan-out is a
         # no-op (lecture_16.md:90-98).
@@ -1462,24 +1330,9 @@ class Engine:
             text,
             flags=re.IGNORECASE,
         )
-        for sysname in set(re.findall(r"\bsystem\.(\w+)\b", text)):
-            method = getattr(self, f"system_{sysname}", None)
-            if method is None:
-                continue
-            # access-control metadata requires an explicit grant, exactly
-            # the denial hw12.md:53-61 demonstrates (most other system
-            # tables stay implicitly readable, like CH's introspection set)
-            if (
-                sysname in _PROTECTED_SYSTEM_TABLES
-                and self.current_user != "default"
-                and not self._granted(self.current_user, "SELECT", sysname)
-            ):
-                raise PermissionError(
-                    f"ACCESS_DENIED: user {self.current_user} lacks the grant "
-                    f"SELECT ON system.{sysname}"
-                )
+        for sysname in set(re.findall(r"\bsystem\.(\w+)\b", text)) & CATALOG.keys():
             view = f"__system_{sysname}"
-            single_task(method()).createOrReplaceTempView(view)
+            self.system(sysname).createOrReplaceTempView(view)
             text = re.sub(rf"\bsystem\.{sysname}\b", view, text)
         # COLUMNS('regex') dynamic projection (P1; lecture_02.md course
         # usage `select columns('key') from system.tables`): expand to the
@@ -1588,21 +1441,33 @@ class Engine:
             df = self._fill_join_defaults(df, text)
         return df
 
-    def _analyze(self, sql: str, params) -> DataFrame:
+    def _analyze(self, sql: str, params=None, frame: DataFrame | None = None):
         """``spark.sql(sql)``, re-analyzed after each repair
         :func:`_repair_call` makes to the call Catalyst reports failing.
-        A statement costs 1 + (calls repaired) analyses; one that cannot
-        be repaired raises its first error."""
-        try:
+        Given ``frame``, ``sql`` is an expression fragment resolved
+        against it, and the result is the fragment's Column. A statement
+        costs 1 + (calls repaired) analyses; one that cannot be repaired
+        raises its first error. PySpark's log record of each failed
+        attempt is dropped (:func:`_quiet_analysis`)."""
+        with _quiet_analysis():
+            try:
+                return self._analyze_once(sql, params, frame)
+            except AnalysisException as first:
+                exc = first
+                while (sql := _repair_call(sql, exc)) is not None:
+                    try:
+                        return self._analyze_once(sql, params, frame)
+                    except AnalysisException as again:
+                        exc = again
+                raise
+
+    def _analyze_once(self, sql: str, params, frame: DataFrame | None):
+        if frame is None:
             return self.spark.sql(sql, args=params or None)
-        except AnalysisException as first:
-            exc = first
-            while (sql := _repair_call(sql, exc)) is not None:
-                try:
-                    return self.spark.sql(sql, args=params or None)
-                except AnalysisException as again:
-                    exc = again
-            raise
+        from pyspark.sql import functions as F
+
+        frame.select(F.expr(sql))  # analyzed here: raises where Catalyst fails
+        return F.expr(sql)
 
     def _fill_join_defaults(self, df: DataFrame, text: str) -> DataFrame:
         """J16 ``join_use_nulls = 0`` (lecture_10.md settings surface):
@@ -2481,489 +2346,6 @@ class Engine:
         self.create_dictionary(name, df, d.key)
         return True
 
-    def system_dictionaries(self) -> DataFrame:
-        """≈ system.dictionaries (lecture_11.md:312,356-390): one row per
-        live dictionary, CH's dotted key./attribute. column names kept so
-        the lecture's ``select * … format Vertical`` probe runs verbatim.
-        Status is always LOADED — our dictionaries materialize at CREATE
-        (the lecture's own advice: configure eager load)."""
-        import uuid as _uuid
-
-        rows = []
-        for name, d in sorted(self._dictionaries.items()):
-            attrs = [f for f in d.df.schema.fields if f.name != d.key]
-            key_f = [f for f in d.df.schema.fields if f.name == d.key]
-            rows.append(
-                (
-                    "default", name,
-                    str(_uuid.uuid5(_uuid.NAMESPACE_OID, "dict:" + name)),
-                    "LOADED",
-                    [d.key],
-                    [f.dataType.simpleString() for f in key_f],
-                    [f.name for f in attrs],
-                    [f.dataType.simpleString() for f in attrs],
-                    d.df.count(),
-                    self._dict_sources.get(name, ("", []))[0],
-                )
-            )
-        return self.local_frame(
-            rows,
-            "database string, name string, uuid string, status string, "
-            "`key.names` array<string>, `key.types` array<string>, "
-            "`attribute.names` array<string>, `attribute.types` array<string>, "
-            "element_count long, source string",
-        )
-
-    def system_dashboards(self) -> DataFrame:
-        """≈ system.dashboards (lecture_22.md:1-4): the built-in
-        monitoring dashboard's (dashboard, title, query) rows — the web
-        page fetches these and substitutes {rounding}/{seconds}. Queries
-        here target our system.metrics/events counterparts so they run
-        against this engine."""
-        rows = [
-            ("Overview", "Queries/second",
-             "SELECT count(*) FROM system.query_log"),
-            ("Overview", "Selected rows/second",
-             "SELECT value FROM system.events WHERE event = 'SelectedRows'"),
-            ("Overview", "Inserted rows/second",
-             "SELECT value FROM system.events WHERE event = 'InsertedRows'"),
-            ("Overview", "Total MergeTree parts",
-             "SELECT count(*) FROM system.parts"),
-        ]
-        return self.local_frame(rows, "dashboard string, title string, query string")
-
-    # ----------------------------------------------------------- system views
-    def system_tables(self) -> DataFrame:
-        """≈ system.tables (lectures/lecture_02.md:197-276). Column names
-        AND types follow CH (Array data_paths; footer-derived
-        total_rows/total_bytes — hw08.md's size probe) so lecture
-        queries — including COLUMNS('key') projections and
-        ``data_paths != []`` — run verbatim."""
-        import hashlib
-
-        def _sizes(path):
-            """(rows, compressed bytes, uncompressed bytes, has_data) from
-            parquet footers — metadata reads only, never data pages. At
-            warehouse scale this is the one catalog call that touches
-            O(files) footers; a production deployment keeps part
-            metadata resident like CH (or a lakehouse manifest) instead
-            of re-reading footers per introspection query."""
-            import pyarrow.parquet as pq
-
-            if not path or not os.path.exists(path):
-                return 0, 0, 0, 0
-            files = (
-                [path]
-                if os.path.isfile(path)
-                else [
-                    os.path.join(r, f)
-                    for r, _, fs in os.walk(path)
-                    for f in fs
-                    if f.endswith(".parquet")
-                ]
-            )
-            n = comp = uncomp = 0
-            for f in files:
-                meta = pq.ParquetFile(f).metadata
-                n += meta.num_rows
-                comp += os.path.getsize(f)
-                uncomp += sum(
-                    meta.row_group(i).total_byte_size for i in range(meta.num_row_groups)
-                )
-            return n, comp, uncomp, int(bool(files))
-
-        rows = []
-        for t in self.tables.values():
-            n, comp, uncomp, has = _sizes(t.path)
-            rows.append(
-                (
-                    *self._split_db(t.name),
-                    hashlib.md5(t.name.encode()).hexdigest(),
-                    t.engine,
-                    [t.path] if t.path else [],
-                    os.path.join("spark-warehouse", f"{t.name}.def"),
-                    ",".join(t.order_by),
-                    ",".join(t.order_by),
-                    ",".join(t.partition_by),
-                    t.comment,
-                    n,
-                    comp,
-                    uncomp,
-                    has,
-                )
-            )
-        from pyspark.sql import functions as F
-
-        return self.local_frame(
-            rows,
-            "database string, name string, uuid string, engine string, "
-            "data_paths array<string>, "
-            "metadata_path string, primary_key string, sorting_key string, "
-            "partition_key string, comment string, total_rows long, "
-            "total_bytes long, total_bytes_uncompressed long, has_own_data int",
-        ).withColumn("table", F.col("name"))  # CH exposes `table` as a name alias
-
-    def system_parts(self) -> DataFrame:
-        """≈ system.parts: one row per data file (lecture_08.md:273-377)."""
-        rows = []
-        for t in self.tables.values():
-            if not t.path or not os.path.exists(t.path):
-                continue
-            if os.path.isfile(t.path):
-                rows.append(
-                    (t.name, os.path.basename(t.path), "all", "all", "default",
-                     t.path, os.path.getsize(t.path), 1)
-                )
-            else:
-                # hot tier + any TTL-moved cold volumes (lecture_14.md:233):
-                # parts report the disk they live on, like CH with a
-                # storage policy (hw13.md:15-27)
-                tiers = [(t.path, "default")] + [
-                    (cp, vol)
-                    for vol, cp in t.settings.get("cold_volumes", {}).items()
-                ]
-                for tier_path, disk in tiers:
-                    if not os.path.isdir(tier_path):
-                        continue
-                    for root, _dirs, files in os.walk(tier_path):
-                        for f in files:
-                            if f.endswith(".parquet"):
-                                p = os.path.join(root, f)
-                                rel = os.path.relpath(p, tier_path)
-                                part = os.path.dirname(rel) or "all"
-                                # CH reports the bare partition VALUE
-                                # (hw11.md golden `partition: 20240101`),
-                                # not the hive directory name — strip the
-                                # `col=` prefix incl. generated `_p_*`
-                                # partition-expression columns
-                                part = re.sub(r"^[^=/]+=", "", part)
-                                rows.append(
-                                    (t.name, rel, part, part, disk, p,
-                                     os.path.getsize(p), 1)
-                                )
-        from pyspark.sql import functions as F
-
-        return self.local_frame(
-            rows,
-            "table string, name string, partition string, partition_id string, "
-            "disk_name string, path string, bytes_on_disk long, active int",
-            # listed files are all live — removal is immediate here
-            # (hw11.md's post-DROP-PARTITION inspection runs verbatim)
-        ).withColumn("removal_state", F.lit("Part hasn't begun to be removed"))
-
-    def system_query_log(self) -> DataFrame:
-        """≈ system.query_log (lecture_20.md:296-478): queries run via
-        :meth:`run`, with duration / result rows / exception."""
-        import datetime as _dt
-
-        from pyspark.sql import functions as F
-
-        empty = ("", "QueryFinish", _dt.datetime.now(), _dt.date.today(), 0.0, 0, "", [])
-        df = self.local_frame(
-            self._query_log or [empty],
-            "query string, type string, event_time timestamp, event_date date, "
-            "duration_sec double, result_rows long, exception string, "
-            "tables array<string>",
-        )
-        # CH-named companions (lecture_20.md:828-843 slow-query probe
-        # runs verbatim): start time ≈ event_time − duration; read_rows
-        # reports the result size (the engine doesn't meter scan I/O —
-        # documented proxy); exception_code 0 ⇔ success; single-node
-        # _shard_num = 1
-        return (
-            df.withColumn(
-                "query_start_time",
-                (F.unix_timestamp("event_time") - F.col("duration_sec")).cast("timestamp"),
-            )
-            .withColumn("query_duration_ms", (F.col("duration_sec") * 1000).cast("long"))
-            .withColumn("read_rows", F.col("result_rows"))
-            .withColumn("read_bytes", F.lit(0).cast("long"))
-            .withColumn("memory_usage", F.lit(0).cast("long"))
-            .withColumn(
-                "exception_code",
-                F.when(F.col("exception") == "", 0).otherwise(1).cast("int"),
-            )
-            .withColumn("_shard_num", F.lit(1).cast("int"))
-        )
-
-    def system_metric_log(self) -> DataFrame:
-        """≈ system.metric_log (lecture_20.md:790-798 failure sweep):
-        periodic snapshots with one ProfileEvent_* column per counter.
-        One current-snapshot row here; the failure counters derive from
-        the query log (FailedQuery family) — replication/distributed
-        failure classes are structurally zero on the single-JVM
-        topology, exactly what the lecture's healthy-cluster golden
-        shows."""
-        import datetime as _dt
-
-        failed = [q for q in self._query_log
-                  if q[1] in ("ExceptionWhileProcessing", "ExceptionBeforeStart")]
-        n_sel = sum(1 for q in failed if re.match(r"\s*(SELECT|WITH)\b", q[0], re.IGNORECASE))
-        n_ins = sum(1 for q in failed if re.match(r"\s*INSERT\b", q[0], re.IGNORECASE))
-        now = _dt.datetime.now()
-        return self.local_frame(
-            [("localhost", now, now.date(), len(failed), n_sel, n_ins, 0, 0, 0, 0)],
-            "hostname string, event_time timestamp, event_date date, "
-            "ProfileEvent_FailedQuery long, ProfileEvent_FailedSelectQuery long, "
-            "ProfileEvent_FailedInsertQuery long, "
-            "ProfileEvent_ReplicatedPartFailedFetches long, "
-            "ProfileEvent_ReplicatedPartChecksFailed long, "
-            "ProfileEvent_DistributedConnectionFailTry long, "
-            "ProfileEvent_ReplicatedDataLoss long",
-        )
-
-    def system_projection_parts_columns(self) -> DataFrame:
-        """≈ system.projection_parts_columns (lecture_13.md projection
-        inspection): one row per (projection, column) with the parent
-        table and the materialized row count."""
-        rows = []
-        for p in self.projections.projections.values():
-            cols = list(p.group_keys) + list(p.aggs)
-            n = p.df.count() if p.df is not None else 0
-            for pos, col in enumerate(cols, 1):
-                rows.append((p.name, p.table, f"{p.table}_all", int(n), 1, col, "", pos))
-        return self.local_frame(
-            rows,
-            "name string, table string, parent_name string, rows long, active int, "
-            "column string, type string, column_position int",
-        )
-
-    def system_merge_tree_settings(self) -> DataFrame:
-        """≈ system.merge_tree_settings (lecture_09.md:async-insert
-        probe): MergeTree profile defaults. The Spark analogue of each
-        knob is noted in the description column; unknown names simply
-        return no rows, like CH."""
-        rows = [
-            ("index_granularity", "8192", "row-group/page granule analogue"),
-            ("max_bytes_to_merge_at_max_space_in_pool", "161061273600", "compaction target size"),
-            ("parts_to_throw_insert", "3000", "small-files backpressure"),
-            ("old_parts_lifetime", "480", "compacted-file GC delay"),
-            ("merge_with_ttl_timeout", "14400", "TTL sweep cadence"),
-        ]
-        return self.local_frame(rows, "name string, value string, description string")
-
-    def system_errors(self) -> DataFrame:
-        """≈ system.errors (lecture_20.md:337-349): error classes with
-        trip counts since start. Derived from the query log's exception
-        records — name is the exception class, value its count."""
-        from collections import Counter
-
-        errs = [
-            (q[6].split(":")[0].strip() or "UNKNOWN", q[6], q[2])
-            for q in self._query_log
-            if q[1] in ("ExceptionWhileProcessing", "ExceptionBeforeStart")
-        ]
-        counts = Counter(name for name, _, _ in errs)
-        last: dict[str, tuple] = {}
-        for name, msg, ts in errs:
-            last[name] = (msg, ts)
-        rows = [
-            (name, int(n), last[name][0][:200], last[name][1])
-            for name, n in counts.items()
-        ]
-        return self.local_frame(
-            rows,
-            "name string, value long, last_error_message string, "
-            "last_error_time timestamp",
-        )
-
-    def system_merges(self) -> DataFrame:
-        """≈ system.merges (lecture_20.md:320-334): merges/mutations IN
-        FLIGHT right now. The engine's OPTIMIZE and mutations are
-        synchronous — between statements nothing is running, so the
-        current-state table is schema-correct and empty (exactly what a
-        quiesced CH server shows)."""
-        return self.local_frame(
-            [],
-            "database string, table string, elapsed double, progress double, "
-            "rows_read long, is_mutation int, merge_type string",
-        )
-
-    def system_asynchronous_metrics(self) -> DataFrame:
-        """≈ system.asynchronous_metrics (lecture_20.md:252-308, the
-        third Prometheus/Graphite export source beside metrics/events):
-        periodically sampled host-level gauges. Real samples where the
-        platform provides them."""
-        import time as _time
-
-        rows = []
-        try:
-            la1, la5, la15 = os.getloadavg()
-            rows += [("LoadAverage1", la1), ("LoadAverage5", la5), ("LoadAverage15", la15)]
-        except OSError:
-            pass
-        try:
-            with open("/proc/self/status") as f:
-                for line in f:
-                    if line.startswith("VmRSS:"):
-                        rows.append(("MemoryResident", float(line.split()[1]) * 1024))
-                        break
-        except OSError:
-            pass
-        rows.append(("Uptime", _time.time() - self._started_at))
-        rows.append(("NumberOfTables", float(len(self.tables))))
-        return self.local_frame(rows, "metric string, value double")
-
-    def system_replication_queue(self) -> DataFrame:
-        """≈ system.replication_queue (lecture_20.md:823-827): pending
-        replicated fetches/merges. The single-JVM topology has no
-        queue — schema-correct and empty, the healthy-cluster state the
-        lecture query expects."""
-        return self.local_frame(
-            [],
-            "table string, replica_name string, node_name string, merge_type string, "
-            "last_exception string, last_attempt_time timestamp",
-        )
-
-    def system_trace_log(self) -> DataFrame:
-        """≈ system.trace_log (hw14.md:36-41 MemoryPeak dashboards;
-        lecture_20.md profiling): the sampling-profiler event stream.
-        The JVM path has no clickhouse-style memory/CPU sampler wired
-        into Python, so the view is schema-correct and EMPTY here — on
-        a cluster the rows would come from a SparkListener feeding task
-        metrics (peakExecutionMemory) into this table's shape."""
-        return self.local_frame(
-            [],
-            "event_time timestamp, event_date date, trace_type string, "
-            "query_id string, size long",
-        )
-
-    def system_columns(self) -> DataFrame:
-        """≈ system.columns (lecture_02.md:197-276): one row per column
-        of each registered table, with the attribute kind."""
-        rows = []
-        for t in self.tables.values():
-            defaults = t.settings.get("defaults", {})
-            mat = t.settings.get("materialized", {})
-            aliases = t.settings.get("aliases", {})
-            try:
-                fields = self.table(t.name).schema.fields
-            except Exception:
-                continue
-            for f in fields:
-                kind, expr = "", ""
-                if f.name in defaults:
-                    kind, expr = "DEFAULT", defaults[f.name]
-                elif f.name in mat:
-                    kind, expr = "MATERIALIZED", mat[f.name]
-                elif f.name in aliases:
-                    kind, expr = "ALIAS", aliases[f.name]
-                rows.append((t.name, f.name, f.dataType.simpleString(), kind, expr))
-        return self.local_frame(
-            rows, "table string, name string, type string, default_kind string, default_expression string"
-        )
-
-    def system_functions(self) -> DataFrame:
-        """≈ system.functions (lecture_06.md:112-119): registered
-        ClickHouse-named SQL UDFs plus user lambdas, with origin."""
-        from otus_clickhouse_spark.functions.clickhouse import AGGREGATE_ALIASES, SCALAR_ALIASES
-
-        rows = [
-            (n, "SQLUserDefined", f"CREATE FUNCTION {n} AS ({', '.join(ps)}) -> {body}")
-            for n, (ps, body) in self._sql_macros.items()
-        ]
-        rows += [(n, "System", "") for n in SCALAR_ALIASES]
-        rows += [(n, "System", "") for n in AGGREGATE_ALIASES]
-        return self.local_frame(rows, "name string, origin string, create_query string")
-
-    def system_data_skipping_indices(self) -> DataFrame:
-        """system.data_skipping_indices (D8; lecture_08.md:225)."""
-        rows = [
-            (t, i, expr, itype)
-            for t, td in self.tables.items()
-            for i, (expr, itype) in td.skip_indexes.items()
-        ]
-        return self.local_frame(rows, "table string, name string, expr string, type string")
-
-    def system_events(self) -> DataFrame:
-        """≈ system.events (lecture_20.md:296-478 monitoring): cumulative
-        engine counters (Query/SelectQuery/InsertQuery/FailedSelectQuery)."""
-        with self._events_lock:
-            rows = sorted(self._events.items())
-        return self.local_frame(rows, "event string, value long")
-
-    def system_metrics(self) -> DataFrame:
-        """≈ system.metrics: current gauges (running queries, registered
-        tables/dictionaries) — the Prometheus-exporter surface the course
-        scrapes (lecture_20.md:497-529)."""
-        rows = [
-            ("Query", len(self._processes)),
-            ("TablesRegistered", len(self.tables)),
-            ("DictionariesRegistered", len(self._dictionaries)),
-            ("MaterializedViews", sum(len(v) for v in self._mvs.values())),
-        ]
-        return self.local_frame(rows, "metric string, value long")
-
-    def system_mutations(self) -> DataFrame:
-        """≈ system.mutations (lecture_16.md:60-98): mutations routed
-        through Engine.execute, with completion time. Our mutations are
-        synchronous write-then-swap, so ``is_done`` is always 1 — unlike
-        CH's async part rewrites (a difference, documented)."""
-        rows = [
-            (
-                s,
-                (tm.group(1) if (tm := re.search(r"\bTABLE\s+(\w+)", s, re.IGNORECASE)) else ""),
-                f"mutation_{i}.txt",
-                float(ts),
-                1,
-            )
-            for i, (s, ts, _st) in enumerate(self._mutations_log)
-        ]
-        from pyspark.sql import functions as F
-
-        return (
-            self.local_frame(
-                rows,
-                "command string, table string, mutation_id string, finished_at double, is_done int",
-            )
-            # failure bookkeeping (lecture_20.md:817-821 stuck-mutation
-            # probe): synchronous write-then-swap either succeeds or
-            # raises to the caller, so the fail columns are empty/null
-            .withColumn("latest_fail_reason", F.lit(""))
-            .withColumn("latest_fail_time", F.lit(None).cast("timestamp"))
-        )
-
-    def system_grants(self) -> DataFrame:
-        """≈ system.grants (lecture_18.md:134-216; hw12.md:83-107
-        Vertical golden): one structured row per (privilege, object,
-        grantee) — grantee lands in user_name or role_name depending on
-        which kind of principal it is, like CH."""
-        rows = [
-            (
-                grantee if grantee not in self._roles else None,
-                grantee if grantee in self._roles else None,
-                priv,
-                None if db == "*" else db,
-                None if tbl == "*" else tbl,
-                None,
-                0,
-                0,
-            )
-            for priv, db, tbl, grantee in self._grants
-        ]
-        return self.local_frame(
-            rows,
-            "user_name string, role_name string, access_type string, "
-            "database string, table string, column string, "
-            "is_partial_revoke int, grant_option int",
-        )
-
-    def system_processes(self) -> DataFrame:
-        """≈ system.processes (lecture_16.md:328-336): queries currently
-        inside :meth:`run`, with their cancellable query_id."""
-        import time
-
-        now = time.time()
-        rows = [(qid, text, round(now - t0, 3)) for qid, (text, t0) in self._processes.items()]
-        return self.local_frame(rows, "query_id string, query string, elapsed double")
-
-    def system_settings(self) -> DataFrame:
-        """≈ system.settings: spark conf + session SET overrides
-        (lecture_12.md:62-212)."""
-        items = [(k, str(v)) for k, v in self.spark.sparkContext.getConf().getAll()]
-        items += list(self.session_settings.items())
-        return self.local_frame(items, "name string, value string")
-
 
 _PASTE_REL = r"(\w+|\((?:[^()]|\([^()]*\))*\))"
 _PASTE_SQL_RE = re.compile(
@@ -3095,6 +2477,28 @@ def _apply_limit_by(
     return out.limit(tail) if tail is not None else out
 
 
+_ANALYZING = threading.local()
+
+
+@contextlib.contextmanager
+def _quiet_analysis():
+    """Drop, in this thread, the ERROR record (message and full JVM
+    stack) PySpark's ``SQLQueryContextLogger`` writes when a captured
+    AnalysisException is built. Per thread, not a logger level: the
+    HTTP server's handler threads share one Engine."""
+    outer = getattr(_ANALYZING, "on", False)
+    _ANALYZING.on = True
+    try:
+        yield
+    finally:
+        _ANALYZING.on = outer
+
+
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(
+    lambda record: not getattr(_ANALYZING, "on", False)
+)
+
+
 # ClickHouse functions Spark splits by argument type, as Catalyst names them
 _POLY_CALL_RE = re.compile(r"(length|element_at)\s*\(", re.IGNORECASE)
 _CAST_INT_RE = re.compile(r"CAST\s*\(.*\sAS\s+INT\s*\)", re.IGNORECASE | re.DOTALL)
@@ -3152,19 +2556,24 @@ def _fields(schema: StructType) -> list[tuple]:
     return [(f.name, f.dataType) for f in schema.fields]
 
 
+def _open_cost(spark: SparkSession) -> int:
+    """``spark.sql.files.openCostInBytes``: what Spark estimates opening
+    one file costs, the size below which a relation is not worth
+    splitting."""
+    return spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+
+
 def single_task(frame: DataFrame) -> DataFrame:
     """``frame`` as one partition when it is too small to split.
 
     Too small means Spark's own size estimate of the optimized plan is
-    at most ``spark.sql.files.openCostInBytes``, Spark's estimate of
-    what opening one file costs. ``CoalesceExec(1)`` reports
+    at most :func:`_open_cost`. ``CoalesceExec(1)`` reports
     ``SinglePartition``, so an aggregate, window or global sort over the
     frame plans no Exchange and a statement runs as one job. Filters
     and column pruning still push through the coalesce into the scan.
     """
-    conf = frame.sparkSession._jsparkSession.sessionState().conf()
     size = frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return frame.coalesce(1) if size <= conf.filesOpenCostInBytes() else frame
+    return frame.coalesce(1) if size <= _open_cost(frame.sparkSession) else frame
 
 
 def _enum_norm(td, fname: str, col):

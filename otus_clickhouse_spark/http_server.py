@@ -17,6 +17,8 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from otus_clickhouse_spark.system_tables import CATALOG
+
 
 def make_handler(engine):
     from otus_clickhouse_spark.__main__ import execute_render
@@ -54,11 +56,11 @@ def make_handler(engine):
                 # the exporter surface the course scrapes
                 # (lecture_20.md:497-529)
                 lines = [
-                    f"otus_metric_{r.metric} {r.value}"
-                    for r in engine.system_metrics().collect()
+                    f"otus_metric_{metric} {value}"
+                    for metric, value in CATALOG["metrics"].rows(engine)
                 ] + [
-                    f"otus_event_{r.event}_total {r.value}"
-                    for r in engine.system_events().collect()
+                    f"otus_event_{event}_total {value}"
+                    for event, value in CATALOG["events"].rows(engine)
                 ]
                 self._send(200, "\n".join(lines))
                 return

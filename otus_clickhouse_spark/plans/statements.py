@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from otus_clickhouse_spark.engine import partition_columns
 from otus_clickhouse_spark.functions.lexer import split_top, unquote
+from otus_clickhouse_spark.system_tables import CATALOG
 
 _UPDATE_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+UPDATE\s+(.*?)\s+WHERE\s+(.*)$",
@@ -265,11 +266,12 @@ _DROP_DICT_RE = re.compile(
 )
 
 
-def _expr(engine, text: str):
-    """Column from a ClickHouse-dialect expression fragment."""
+def _expr(engine, text: str, frame: DataFrame):
+    """Column from a ClickHouse-dialect expression fragment, resolved
+    against ``frame`` with the type repairs a SELECT gets."""
     from otus_clickhouse_spark.functions.dialect import translate
 
-    return F.expr(translate(text, engine.tables))
+    return engine._analyze(translate(text, engine.tables), frame=frame)
 
 
 def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> None:
@@ -743,11 +745,12 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.plans.mutations import update
 
         name, assigns, pred = m.groups()
+        df = engine.table(name)
         assignments = {}
         for a in split_top(assigns):
             col, expr = a.split("=", 1)
-            assignments[col.strip()] = _expr(engine, expr.strip())
-        _persist(engine, name, update(engine.table(name), _expr(engine, pred), assignments))
+            assignments[col.strip()] = _expr(engine, expr.strip(), df)
+        _persist(engine, name, update(df, _expr(engine, pred, df), assignments))
         return {"mutated": name}
 
     m = _ALTER_DELETE_RE.match(s)
@@ -755,7 +758,8 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.plans.mutations import delete
 
         name, pred = m.groups()
-        _persist(engine, name, delete(engine.table(name), _expr(engine, pred)))
+        df = engine.table(name)
+        _persist(engine, name, delete(df, _expr(engine, pred, df)))
         return {"mutated": name}
 
     m = _LW_DELETE_RE.match(s)
@@ -763,7 +767,8 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.plans.mutations import lightweight_delete, read_with_mask
 
         name, pred = m.groups()
-        masked = lightweight_delete(engine.table(name), _expr(engine, pred))
+        df = engine.table(name)
+        masked = lightweight_delete(df, _expr(engine, pred, df))
         _persist(engine, name, masked)
         # readers see the mask applied; raw rows stay on disk (lecture_16.md:196-202)
         read_with_mask(engine.table(name)).createOrReplaceTempView(name)
@@ -905,9 +910,12 @@ def _try_route_inner(engine, s: str):
             # query, never stored — record the expression so re-registration
             # (inserts, restarts) re-attaches it, and refresh the view
             engine.tables[name].settings.setdefault("aliases", {})[col] = alias.strip()
-            df.withColumn(col, _expr(engine, alias).cast(spark_type)).createOrReplaceTempView(name)
+            alias_col = _expr(engine, alias, df).cast(spark_type)
+            df.withColumn(col, alias_col).createOrReplaceTempView(name)
             return {"added_column": col, "alias": True}
-        value = _expr(engine, default).cast(spark_type) if default else F.lit(None).cast(spark_type)
+        value = (
+            _expr(engine, default, df).cast(spark_type) if default else F.lit(None).cast(spark_type)
+        )
         df = df.withColumn(col, value)
         if after:
             order = [c for c in df.columns if c != col]
@@ -990,7 +998,7 @@ def _try_route_inner(engine, s: str):
             vol = action[1]
             cold = f"{td.path.rstrip('/')}__volume_{vol}"
             main = read_table(engine.spark, td.path)
-            pred = _expr(engine, ttl)
+            pred = _expr(engine, ttl, main)
             expired = main.filter(pred)
             moved = expired.count()
             if moved:
@@ -1001,7 +1009,8 @@ def _try_route_inner(engine, s: str):
                 _persist(engine, name, main.filter(~pred), keep_cold=True)
             return {"ttl_applied": name, "moved": moved, "to": action}
         before = engine.table(name).count()
-        _persist(engine, name, ttl_expire(engine.table(name), _expr(engine, ttl)))
+        df = engine.table(name)
+        _persist(engine, name, ttl_expire(df, _expr(engine, ttl, df)))
         return {"ttl_applied": name, "dropped": before - engine.table(name).count()}
 
     m = _OPTIMIZE_RE.match(s)
@@ -1125,7 +1134,12 @@ def _try_route_inner(engine, s: str):
         # engine's registries (Spark handles SHOW TABLES/DATABASES itself)
         kind = m.group(1).upper()
         if kind == "PROCESSLIST":
-            return engine.system_processes().collect()
+            from pyspark.sql import Row
+            from pyspark.sql.types import StructType
+
+            entry = CATALOG["processes"]
+            shape = Row(*StructType.fromDDL(entry.schema).names)
+            return [shape(*r) for r in entry.rows(engine)]
         if kind == "DICTIONARIES":
             return sorted(engine._dictionaries)
         if kind == "CLUSTERS":

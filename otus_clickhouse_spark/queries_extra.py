@@ -1231,6 +1231,9 @@ def q96_query_log_observability(spark, sf_dir):
     serves (dashboard, title, query) rows; system.trace_log exposes the
     profiler-stream schema. All scalars replayed by the oracle."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from otus_clickhouse_spark.system_tables import CATALOG
 
     eng = _mini_engine(spark, sf_dir, ["nation"])
     eng.run("SELECT count(*) AS n FROM nation")
@@ -1250,11 +1253,8 @@ def q96_query_log_observability(spark, sf_dir):
     dash = eng.sql(
         "SELECT CAST(count() > 0 AS INT) AS dashboards_has_queries FROM system.dashboards"
     )
-    trace = eng.system_trace_log()
-    schema_ok = int(
-        [f.name for f in trace.schema.fields]
-        == ["event_time", "event_date", "trace_type", "query_id", "size"]
-    )
+    trace = StructType.fromDDL(CATALOG["trace_log"].schema)
+    schema_ok = int(trace.names == ["event_time", "event_date", "trace_type", "query_id", "size"])
     return ql.crossJoin(dash).withColumn("trace_log_schema_ok", F.lit(schema_ok))
 
 

@@ -1,6 +1,8 @@
 """ClickHouse dialect: SQL UDF registration + translator rewrites."""
 
 import ast
+import logging
+import threading
 from pathlib import Path
 
 import pytest
@@ -263,7 +265,7 @@ def test_set_statement(engine):
     engine.execute("SET max_memory_usage = 10000000000")
     vals = {
         r.name: r.value
-        for r in engine.system_settings().where("name = 'max_memory_usage'").collect()
+        for r in engine.system("settings").where("name = 'max_memory_usage'").collect()
     }
     assert vals["max_memory_usage"] == "10000000000"
 
@@ -1607,3 +1609,137 @@ def test_to_datetime_of_an_integer_is_epoch_seconds(engine, tmp_path):
         ]
     finally:
         engine.execute("DROP TABLE IF EXISTS ts_t")
+
+
+# ------------------------------------- mutation fragments get the repair
+
+
+@pytest.fixture
+def arr_t(engine, tmp_path):
+    """``arr_t (k UInt32, s String, a Array(Int32))``: three rows, one
+    of them with an empty array."""
+    engine.execute(
+        "CREATE TABLE arr_t (k UInt32, s String, a Array(Int32)) ENGINE = MergeTree ORDER BY k"
+    )
+    engine.tables["arr_t"].path = str(tmp_path / "arr_t")
+    engine.execute("INSERT INTO arr_t VALUES (1, 'x', [1, 2]), (2, '', []), (3, 'zz', [3])")
+    yield engine
+    engine.execute("DROP TABLE arr_t")
+
+
+def _arr_rows(engine) -> list[tuple]:
+    return [tuple(r) for r in engine.sql("SELECT k, s, a FROM arr_t ORDER BY k").collect()]
+
+
+@pytest.mark.parametrize(
+    "statement",
+    [
+        "ALTER TABLE arr_t DELETE WHERE length(a) = 0",
+        "ALTER TABLE arr_t DELETE WHERE empty(a)",
+        "DELETE FROM arr_t WHERE length(a) = 0",
+    ],
+)
+def test_delete_predicate_gets_the_select_repair(arr_t, statement):
+    where = statement.split(" WHERE ")[1]
+    assert [r.k for r in arr_t.sql(f"SELECT k FROM arr_t WHERE {where}").collect()] == [2]
+    arr_t.execute(statement)
+    assert _arr_rows(arr_t) == [(1, "x", [1, 2]), (3, "zz", [3])]
+
+
+def test_update_assignment_and_predicate_get_the_select_repair(arr_t):
+    arr_t.execute(
+        "ALTER TABLE arr_t UPDATE s = toString(length(a) + length(s)) "
+        "WHERE notEmpty(a) AND length(s) < 2"
+    )
+    assert _arr_rows(arr_t) == [(1, "3", [1, 2]), (2, "", []), (3, "zz", [3])]
+
+
+def test_unrepairable_mutation_predicate_raises_the_original_error(arr_t):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException) as err:
+        arr_t.execute("ALTER TABLE arr_t DELETE WHERE length(struct(k, s)) = 0")
+    assert err.value.getQueryContext()[0].fragment() == "length(struct(k, s))"
+    assert len(_arr_rows(arr_t)) == 3
+
+
+def test_fragment_error_spans_are_relative_to_the_fragment(engine):
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    frame = engine.local_frame([(1, [1, 2])], "k int, a array<int>")
+    with pytest.raises(AnalysisException) as err:
+        frame.select(F.expr("k + length(a) > 2"))
+    ctx = err.value.getQueryContext()[0]
+    assert (ctx.startIndex(), ctx.stopIndex(), ctx.fragment()) == (4, 12, "length(a)")
+    col = engine._analyze("k + length(a) > 2", frame=frame)
+    assert frame.select(col.alias("v")).collect()[0].v is True
+
+
+# ------------------------------------ repaired attempts log nothing
+
+
+class _Records(logging.Handler):
+    def __init__(self):
+        super().__init__()
+        self.records = []
+
+    def emit(self, record):
+        self.records.append(record)
+
+
+@pytest.fixture
+def context_log():
+    """Records PySpark's ``SQLQueryContextLogger`` writes."""
+    from pyspark.logger import PySparkLogger
+
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    handler = _Records()
+    logger.addHandler(handler)
+    yield handler.records
+    logger.removeHandler(handler)
+
+
+def test_repaired_attempts_log_nothing(poly, context_log):
+    eng, counting = poly
+    sql, rows, analyses = _POLY_CASES[4]
+    assert [tuple(r) for r in eng.sql(sql).collect()] == rows
+    assert counting.calls == analyses == 6
+    assert context_log == []
+
+
+def test_error_raised_by_the_repair_loop_is_unchanged_and_unlogged(poly, context_log):
+    from pyspark.errors import AnalysisException
+
+    eng, _ = poly
+    with pytest.raises(AnalysisException) as err:
+        eng.sql("SELECT length(struct(1, 2)) AS n")
+    assert err.value.getCondition() == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE"
+    assert err.value.getQueryContext()[0].fragment() == "length(struct(1, 2))"
+    assert context_log == []
+
+
+def test_errors_outside_the_repair_loop_still_log(engine, spark, monkeypatch, context_log):
+    """Another thread's failure logs while this one is inside the loop."""
+    from pyspark.errors import AnalysisException
+
+    def other_thread():
+        with pytest.raises(AnalysisException):
+            spark.sql("SELECT length(array(1)) AS n")
+
+    class Proxy(_CountingSpark):
+        def sql(self, *args, **kwargs):
+            if self.calls == 0:
+                th = threading.Thread(target=other_thread)
+                th.start()
+                th.join()
+            return super().sql(*args, **kwargs)
+
+    monkeypatch.setattr(engine, "spark", Proxy(spark))
+    assert engine.sql("SELECT length(array(1, 2)) AS n").collect()[0].n == 2
+    assert [r.context["errorClass"] for r in context_log] == [
+        "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE"
+    ]
+    with pytest.raises(AnalysisException):
+        spark.sql("SELECT length(array(1)) AS n")
+    assert len(context_log) == 2

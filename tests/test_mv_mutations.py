@@ -124,15 +124,15 @@ def test_merge_tables_union(spark):
 
 
 def test_engine_system_views(engine):
-    assert engine.system_tables().count() >= 10
-    parts = engine.system_parts()
+    assert engine.system("tables").count() >= 10
+    parts = engine.system("parts")
     assert parts.where(F.col("bytes_on_disk") > 0).count() >= 10
-    assert engine.system_settings().count() > 5
-    cols = engine.system_columns()
+    assert engine.system("settings").count() > 5
+    cols = engine.system("columns")
     n_li = len(engine.table("lineitem").columns)
     assert cols.where(F.col("table") == "lineitem").count() == n_li
     engine.execute("CREATE FUNCTION sysfn_probe AS (x) -> x + 1")
-    fns = engine.system_functions()
+    fns = engine.system("functions")
     assert fns.where("origin = 'SQLUserDefined' AND name = 'sysfn_probe'").count() == 1
     assert fns.where("origin = 'System'").count() > 10
     engine.execute("DROP FUNCTION sysfn_probe")

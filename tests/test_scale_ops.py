@@ -73,7 +73,7 @@ def test_query_log(engine):
     engine.run("SELECT count(*) AS n FROM lineitem")
     with pytest.raises(Exception):
         engine.run("SELECT * FROM no_such_table_xyz")
-    log = engine.system_query_log().collect()
+    log = engine.system("query_log").collect()
     ok = [r for r in log if "lineitem" in r.query]
     bad = [r for r in log if "no_such_table_xyz" in r.query]
     assert ok and ok[0].result_rows == 1 and ok[0].duration_sec > 0

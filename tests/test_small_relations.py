@@ -3,7 +3,8 @@
 A parquet-backed table whose size estimate is at most
 ``spark.sql.files.openCostInBytes`` is registered as one partition, so a
 grouped or sorted statement over it plans no Exchange; ``system.*``
-views get the same rule. Every engine frame built from Python rows is a
+views get the same threshold, measured on their Arrow rows
+(tests/test_system_catalog.py). Every engine frame built from Python rows is a
 ``LocalTableScan`` made by ``Engine.local_frame``. Each test checks the
 cheaper form against what the plain form returns, or that the plain
 form is kept where the rule does not apply.
@@ -159,13 +160,13 @@ def test_system_tables_equal_the_row_list_reference(engine, spark, monkeypatch, 
     built = []
     real = engine.local_frame
 
-    def spy(rows, schema):
-        df = real(rows, schema)
+    def spy(rows, schema, **kw):
+        df = real(rows, schema, **kw)
         built.append((list(rows), schema, df))
         return df
 
     monkeypatch.setattr(engine, "local_frame", spy)
-    getattr(engine, f"system_{table}")()
+    engine.system(table)
     (rows, schema, got), = built
     assert rows
     want = spark.createDataFrame(rows, schema)
@@ -205,10 +206,11 @@ def _create_frame_calls(tree) -> list[tuple[str, int]]:
 
 
 def test_only_local_frame_creates_frames_from_rows():
-    """engine.py and plans/statements.py build frames from Python rows
-    only through ``local_frame``: one construction, a LocalTableScan."""
+    """engine.py, plans/statements.py and the system-table catalog build
+    frames from Python rows only through ``local_frame``: one
+    construction, a LocalTableScan."""
     offenders = {}
-    for rel in ("engine.py", "plans/statements.py"):
+    for rel in ("engine.py", "plans/statements.py", "system_tables.py"):
         path = PACKAGE / rel
         calls = _create_frame_calls(ast.parse(path.read_text(), str(path)))
         bad = [line for func, line in calls if func != "local_frame"]

@@ -145,7 +145,7 @@ def test_kill_query_and_system_processes(engine):
     th.start()
     qid = None
     for _ in range(300):  # wait for registration (driver-side — polling
-        # via system_processes() would need a task slot, and the slow
+        # via system("processes") would need a task slot, and the slow
         # query's tasks occupy all of local[4]'s)
         if engine._processes:
             qid = next(iter(engine._processes))
@@ -164,7 +164,7 @@ def test_kill_query_and_system_processes(engine):
     assert not th.is_alive() and time.time() - t0 < 60
     assert res == {"killed": True}
     assert errors, "cancelled query should raise in its thread"
-    assert not engine.system_processes().collect()
+    assert not engine.system("processes").collect()
 
 
 def test_system_events_and_metrics(engine):

@@ -832,7 +832,7 @@ def test_create_view(engine):
 
 def test_system_data_skipping_indices(engine, sales):
     engine.execute(f"ALTER TABLE {sales} ADD INDEX a_idx amount TYPE bloom_filter")
-    rows = engine.system_data_skipping_indices().collect()
+    rows = engine.system("data_skipping_indices").collect()
     assert any(r.table == sales and r.name == "a_idx" and r.type == "bloom_filter" for r in rows)
     engine.execute(f"ALTER TABLE {sales} DROP INDEX a_idx")
 
@@ -966,7 +966,7 @@ def test_system_mutations_log(engine, sales):
     muts = [r.command for r in engine.sql("SELECT * FROM system.mutations").collect()]
     assert any("UPDATE amount" in m for m in muts)
     assert any("DELETE WHERE id = 2" in m for m in muts)
-    assert all(r.is_done == 1 for r in engine.system_mutations().collect())
+    assert all(r.is_done == 1 for r in engine.system("mutations").collect())
 
 
 def test_replication_metadata_hw09(engine, tmp_path):

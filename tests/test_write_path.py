@@ -316,7 +316,7 @@ def test_event_counters_exact_under_threads(engine):
     lose no system.events increments."""
 
     def query_count():
-        rows = engine.system_events().where("event = 'Query'").collect()
+        rows = engine.system("events").where("event = 'Query'").collect()
         return rows[0].value if rows else 0
 
     n_threads, per_thread = 8, 12
