@@ -194,8 +194,7 @@ class Engine:
         Also materializes the ``<name>__final`` view when the engine type
         has FINAL collapse semantics (lecture_07.md:465-481, 551-790).
         """
-        from pyspark.sql import functions as F
-
+        from otus_clickhouse_spark.functions.dialect import translate
         from otus_clickhouse_spark.io import read_table
 
         self.tables[td.name] = td
@@ -219,10 +218,13 @@ class Engine:
             # on the base frame, so the views below inherit it
             frame = single_task(frame)
         # ALIAS columns (lecture_12.md:27-28): virtual, recomputed per
-        # query — appended to the view, never stored
+        # query — appended to the view, never stored; the dialect
+        # expression gets the same translation and type repair as SELECT
         for col, expr in td.settings.get("aliases", {}).items():
             if col not in frame.columns:
-                frame = frame.withColumn(col, F.expr(expr))
+                frame = frame.withColumn(
+                    col, self._analyze(translate(expr, self.tables), frame=frame)
+                )
         # row policies (lecture_18.md:561-609): mandatory prefilter on
         # every read; permissive policies OR together like the reference
         preds = self._row_policies.get(td.name)

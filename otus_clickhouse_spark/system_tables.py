@@ -44,11 +44,6 @@ def _entry(name: str, schema: str, protected: bool = False):
     return register
 
 
-def _fixed(name: str, schema: str, rows: tuple = ()) -> None:
-    """Register ``system.<name>`` with rows that never change."""
-    CATALOG[name] = SystemTable(schema, lambda engine: list(rows))
-
-
 # lecture_18.md:538
 @_entry("quotas", "quota_name string, duration bigint, apply_to string", protected=True)
 def _quotas(engine):
@@ -198,13 +193,13 @@ def _settings(engine):
 
 
 # lecture_09.md async-insert probe: MergeTree defaults and their Spark analogues
-_fixed("merge_tree_settings", "name string, value string, description string", (
+_entry("merge_tree_settings", "name string, value string, description string")(lambda engine: [
     ("index_granularity", "8192", "row-group/page granule analogue"),
     ("max_bytes_to_merge_at_max_space_in_pool", "161061273600", "compaction target size"),
     ("parts_to_throw_insert", "3000", "small-files backpressure"),
     ("old_parts_lifetime", "480", "compacted-file GC delay"),
     ("merge_with_ttl_timeout", "14400", "TTL sweep cadence"),
-))
+])
 
 
 def _sizes(path) -> tuple[int, int, int, int]:
@@ -235,15 +230,16 @@ def _sizes(path) -> tuple[int, int, int, int]:
     "has_own_data int, table string",
 )
 def _tables(engine):
-    return [
-        (
-            *engine._split_db(t.name), hashlib.md5(t.name.encode()).hexdigest(), t.engine,
+    rows = []
+    for t in engine.tables.values():
+        db, base = engine._split_db(t.name)
+        rows.append((
+            db, base, hashlib.md5(t.name.encode()).hexdigest(), t.engine,
             [t.path] if t.path else [], os.path.join("spark-warehouse", f"{t.name}.def"),
             ",".join(t.order_by), ",".join(t.order_by), ",".join(t.partition_by), t.comment,
-            *_sizes(t.path), t.name,
-        )
-        for t in engine.tables.values()
-    ]
+            *_sizes(t.path), base,
+        ))
+    return rows
 
 
 # lecture_08.md:273-377, one row per file; cold volumes lecture_14.md:233; hw11.md golden
@@ -370,14 +366,14 @@ def _functions(engine):
 
 
 # lecture_22.md:1-4: the built-in dashboard's queries, over this engine's tables
-_fixed("dashboards", "dashboard string, title string, query string", (
+_entry("dashboards", "dashboard string, title string, query string")(lambda engine: [
     ("Overview", "Queries/second", "SELECT count(*) FROM system.query_log"),
     ("Overview", "Selected rows/second",
      "SELECT value FROM system.events WHERE event = 'SelectedRows'"),
     ("Overview", "Inserted rows/second",
      "SELECT value FROM system.events WHERE event = 'InsertedRows'"),
     ("Overview", "Total MergeTree parts", "SELECT count(*) FROM system.parts"),
-))
+])
 
 
 def _failed(engine) -> list[tuple]:
@@ -494,19 +490,19 @@ def _mutations(engine):
 
 
 # lecture_20.md:320-334: OPTIMIZE and mutations are synchronous, none in flight
-_fixed(
+_entry(
     "merges",
     "database string, table string, elapsed double, progress double, rows_read long, "
     "is_mutation int, merge_type string",
-)
+)(lambda engine: [])
 # lecture_20.md:823-827: one JVM has no replication queue
-_fixed(
+_entry(
     "replication_queue",
     "table string, replica_name string, node_name string, merge_type string, "
     "last_exception string, last_attempt_time timestamp",
-)
+)(lambda engine: [])
 # hw14.md:36-41: no sampling profiler feeds it
-_fixed(
+_entry(
     "trace_log",
     "event_time timestamp, event_date date, trace_type string, query_id string, size long",
-)
+)(lambda engine: [])

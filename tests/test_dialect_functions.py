@@ -1654,6 +1654,25 @@ def test_update_assignment_and_predicate_get_the_select_repair(arr_t):
     assert _arr_rows(arr_t) == [(1, "3", [1, 2]), (2, "", []), (3, "zz", [3])]
 
 
+def test_alias_column_keeps_the_repair_across_inserts(arr_t):
+    """The stored ALIAS text is re-attached on every re-registration
+    (each INSERT refreshes the view) through the same repair."""
+    arr_t.execute("ALTER TABLE arr_t ADD COLUMN n UInt64 ALIAS length(a)")
+    got = [(r.k, r.n) for r in arr_t.sql("SELECT k, n FROM arr_t ORDER BY k").collect()]
+    assert got == [(1, 2), (2, 0), (3, 1)]
+    arr_t.execute("INSERT INTO arr_t (k, s, a) VALUES (4, 'w', [4, 5, 6])")
+    got = [(r.k, r.n) for r in arr_t.sql("SELECT k, n FROM arr_t ORDER BY k").collect()]
+    assert got == [(1, 2), (2, 0), (3, 1), (4, 3)]
+    arr_t.execute("ALTER TABLE arr_t DELETE WHERE n = 0")
+    assert [r.k for r in arr_t.sql("SELECT k FROM arr_t ORDER BY k").collect()] == [1, 3, 4]
+
+
+def test_default_column_backfill_gets_the_select_repair(arr_t):
+    arr_t.execute("ALTER TABLE arr_t ADD COLUMN m UInt64 DEFAULT length(a)")
+    got = [(r.k, r.m) for r in arr_t.sql("SELECT k, m FROM arr_t ORDER BY k").collect()]
+    assert got == [(1, 2), (2, 0), (3, 1)]
+
+
 def test_unrepairable_mutation_predicate_raises_the_original_error(arr_t):
     from pyspark.errors import AnalysisException
 

@@ -58,6 +58,9 @@ def _seed(eng, tmp_path) -> None:
     """A state that gives most system tables at least one row."""
     ex = eng.execute
     ex("CREATE DATABASE cat_db")
+    ex("CREATE TABLE cat_db.cat_n (id UInt32) ENGINE = MergeTree ORDER BY tuple()")
+    eng.tables["cat_db__cat_n"].path = str(tmp_path / "cat_n")
+    ex("INSERT INTO cat_db.cat_n VALUES (7)")
     ex(
         "CREATE TABLE cat_t (k UInt32, s String, a Array(Int32)) ENGINE = MergeTree "
         "PARTITION BY k ORDER BY k"
@@ -131,7 +134,8 @@ def _normalize(eng, name: str, tmp_path, rows: list[list]) -> list[list]:
 
     if name == "tables":
         for r in rows:
-            path = eng.tables[r[1]].path
+            flat = r[1] if r[0] == "default" else f"{r[0]}__{r[1]}"
+            path = eng.tables[flat].path
             files = _parquet_files(path) if path and os.path.isdir(path) else []
             comp = sum(os.path.getsize(f) for f in files)
             metas = [pq.ParquetFile(f).metadata for f in files]
@@ -206,7 +210,7 @@ def test_protected_tables_need_a_grant(seeded):
     for name in sorted(PROTECTED):
         with pytest.raises(PermissionError, match=f"ACCESS_DENIED: .* SELECT ON system.{name}"):
             seeded.sql(f"SELECT * FROM system.{name}")
-    assert seeded.sql("SELECT count() AS n FROM system.tables").collect()[0].n == 2
+    assert seeded.sql("SELECT count() AS n FROM system.tables").collect()[0].n == 3
     seeded.set_user("default")
     seeded.execute("GRANT SELECT ON system.users TO cat_user")
     seeded.set_user("cat_user")
@@ -231,7 +235,7 @@ def test_columns_skip_a_registered_name_without_a_view(seeded, monkeypatch):
 
     seeded.tables["cat_ghost"] = TableDef(name="cat_ghost")
     rows = seeded.sql("SELECT DISTINCT table FROM system.columns ORDER BY table").collect()
-    assert [r.table for r in rows] == ["cat_r", "cat_t"]
+    assert [r.table for r in rows] == ["cat_db__cat_n", "cat_r", "cat_t"]
     del seeded.tables["cat_ghost"]
     real = seeded.table
 
