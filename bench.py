@@ -52,9 +52,7 @@ HEADLINE = [
     "x50_passage_retrieval",
     "x55_link_pagerank",
     # quantized-ANN representative (r7 verdict ask #3): watches the PQ
-    # train/encode/ADC path round-over-round now that the HOF broadcast-
-    # tensor transport is the default (the literal transport's silent
-    # interpreted fallback was invisible to this bench through r7)
+    # train/encode/ADC path round-over-round
     "x60_pq_adc_topk",
     # histogram-threshold representative (r9): watches the
     # per-(key, value) histogram cut pattern that replaced the

@@ -194,7 +194,6 @@ class Engine:
         Also materializes the ``<name>__final`` view when the engine type
         has FINAL collapse semantics (lecture_07.md:465-481, 551-790).
         """
-        from otus_clickhouse_spark.functions.dialect import translate
         from otus_clickhouse_spark.io import read_table
 
         self.tables[td.name] = td
@@ -217,14 +216,7 @@ class Engine:
                     frame = frame.unionByName(read_table(self.spark, cpath))
             # on the base frame, so the views below inherit it
             frame = single_task(frame)
-        # ALIAS columns (lecture_12.md:27-28): virtual, recomputed per
-        # query — appended to the view, never stored; the dialect
-        # expression gets the same translation and type repair as SELECT
-        for col, expr in td.settings.get("aliases", {}).items():
-            if col not in frame.columns:
-                frame = frame.withColumn(
-                    col, self._analyze(translate(expr, self.tables), frame=frame)
-                )
+        frame = self.with_aliases(td, frame)
         # row policies (lecture_18.md:561-609): mandatory prefilter on
         # every read; permissive policies OR together like the reference
         preds = self._row_policies.get(td.name)
@@ -241,6 +233,19 @@ class Engine:
             from otus_clickhouse_spark.operators.final import final_view
 
             final_view(frame, td).createOrReplaceTempView(f"{td.name}__final")
+
+    def with_aliases(self, td: TableDef, frame: DataFrame) -> DataFrame:
+        """``frame`` plus the ALIAS columns of ``td`` it lacks
+        (lecture_12.md:27-28): virtual, recomputed per query, never
+        stored. The dialect expression gets the same translation and
+        type repair as SELECT, then the cast to the declared type."""
+        from otus_clickhouse_spark.functions.dialect import translate
+
+        for col, (expr, spark_type) in td.settings.get("aliases", {}).items():
+            if col not in frame.columns:
+                value = self._analyze(translate(expr, self.tables), frame=frame)
+                frame = frame.withColumn(col, value.cast(spark_type) if spark_type else value)
+        return frame
 
     def local_frame(
         self, rows, schema: StructType | str, single_if_small: bool = False
@@ -2323,6 +2328,10 @@ class Engine:
         """CH external dictionary (lectures/lecture_11.md:1-130): a small
         key→attributes map held driver-side and broadcast into lookups.
 
+        The source rows are loaded once, as CH loads a dictionary: later
+        changes to the source show only after a reload, and a mutation
+        that swaps the source's files cannot break the dictionary.
+
         CH errors when a dictionary name collides with an existing table
         (they share the database namespace) — mirror that rather than
         silently clobbering the table's temp view (reloading an existing
@@ -2333,7 +2342,8 @@ class Engine:
             raise ValueError(
                 f"cannot CREATE DICTIONARY {name}: a table with that name exists"
             )
-        self._dictionaries[name] = Dictionary.from_df(self.spark, name, df, key)
+        rows = self.local_frame(df.collect(), df.schema, single_if_small=True)
+        self._dictionaries[name] = Dictionary.from_df(self.spark, name, rows, key)
 
     def dictionary(self, name: str):
         return self._dictionaries[name]

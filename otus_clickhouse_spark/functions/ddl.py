@@ -206,6 +206,13 @@ def split_ttl_action(ttl: str) -> tuple[str, tuple[str, str] | None]:
     return re.sub(r"\s+DELETE\s*$", "", ttl, flags=re.IGNORECASE).strip(), None
 
 
+def alias_entry(expr: str, ch_type: str | None = None) -> tuple[str, str | None]:
+    """An ALIAS column's ``settings["aliases"]`` entry: the dialect
+    expression and the Spark type its value is cast to, or None when
+    the column is declared without a type (`c ALIAS expr`)."""
+    return expr.strip(), ch_type_to_spark(ch_type.strip())[0] if ch_type else None
+
+
 def parse_create_table(ddl: str) -> tuple[TableDef, str]:
     """Parse CH CREATE TABLE → (TableDef, spark schema DDL string).
 
@@ -214,7 +221,7 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
     computed at insert (not writable); ``ALIAS expr`` is virtual —
     excluded from the stored schema and recomputed per query by the
     engine's view registration. Captured into ``TableDef.settings``
-    under "defaults"/"materialized"/"aliases".
+    under "defaults"/"materialized"/"aliases" (see :func:`alias_entry`).
     """
     ddl = strip_comments(ddl)
     m = _CREATE_RE.match(ddl.strip().rstrip(";"))
@@ -223,7 +230,7 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
     cols = []
     defaults: dict[str, str] = {}
     materialized: dict[str, str] = {}
-    aliases: dict[str, str] = {}
+    aliases: dict[str, tuple[str, str | None]] = {}
     agg_functions: dict[str, str] = {}
     enums: dict[str, dict[str, int]] = {}
     for item in split_top(m.group("cols")):
@@ -234,7 +241,8 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
         if am and am.group(1).upper() == "ALIAS":
             # ALIAS is virtual — not part of the stored schema; the
             # type annotation is optional in CH (`c ALIAS expr`)
-            aliases[unquote(item.split()[0])] = am.group(2).strip()
+            name, *ch_type = item.split(None, 1)
+            aliases[unquote(name)] = alias_entry(am.group(2), *ch_type)
             continue
         lits = Masked(item)
         cm = re.match(rf"^({LIT}|\w+)\s+(.+)$", lits.text, re.DOTALL)

@@ -13,7 +13,13 @@ Arrow-vectorized PQ encode kernel for production embedding dims. No
 registry query uses it (tests/test_plan_sweep.py keeps Python eval out
 of those); it exists because interpreted HOF evaluation is the JVM
 expression engine's floor at dim ≳ 256 and a batched numpy argmin is
-the honest 100 TB encode path.
+the honest 100 TB encode path. It is also the reference the tests
+pin the HOF encode against.
+
+The quantized-ANN family (SQ8, PQ, IVF-PQ) has one model transport:
+the (min, scale) vectors or the codebook tensor broadcast as a 1-row
+array frame and are consumed through ``transform``/``zip_with``/
+``aggregate``, so the expression tree has the same size at any dim.
 """
 
 from __future__ import annotations
@@ -732,9 +738,7 @@ def sq8_stats(corpus: DataFrame, dim: int, vec_col: str = "embedding") -> tuple[
 def _sq8_frame(spark, mins: list, scales: list):
     """(min, scale) model as a 1-row DataFrame for broadcast — same
     rationale as :func:`_books_frame`: the model rides as DATA, so the
-    expression tree stays constant-sized however big dim grows (the
-    plan-literal path emits one scalar expression per dimension plus a
-    dim-term chained sum, which stops compiling at production dims)."""
+    expression tree stays constant-sized however big dim grows."""
     return spark.createDataFrame(
         [([float(x) for x in mins], [float(x) for x in scales])],
         "__mns array<double>, __scs array<double>",
@@ -747,51 +751,36 @@ def sq8_codes(
     scales: list,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    hof: bool = True,
 ) -> DataFrame:
     """Quantize ``vec_col`` to an ``array<tinyint>`` code column (4 B →
     1 B per dimension — the memory-bound-ANN compression step). No
-    shuffle either way. ``hof=True`` (default since r8): the (min,
-    scale) model broadcasts as a 1-row array frame and the per-dim
-    quantize evaluates through ``transform`` — a constant-sized
-    expression tree at any dim. ``hof=False``: one plan-literal scalar
-    expression per dimension (the pytest equality pin). Identical
-    arithmetic (same round/least/greatest chain), so both paths emit
-    byte-identical codes."""
+    shuffle: the (min, scale) model broadcasts as a 1-row array frame
+    and the per-dim quantize evaluates through ``transform`` — a
+    constant-sized expression tree at any dim. A constant dimension
+    (scale 0) codes to -128."""
     dim = len(mins)
-    if hof:
-        v = F.col(vec_col).cast("array<double>")
-        code = F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda j: F.when(
-                F.element_at(F.col("__scs"), j) == 0.0, F.lit(-128.0)
-            ).otherwise(
-                F.least(
-                    F.lit(255.0),
-                    F.greatest(
-                        F.lit(0.0),
-                        F.round(
-                            (F.element_at(v, j) - F.element_at(F.col("__mns"), j))
-                            / F.element_at(F.col("__scs"), j)
-                        ),
+    v = F.col(vec_col).cast("array<double>")
+    code = F.transform(
+        F.sequence(F.lit(1), F.lit(dim)),
+        lambda j: F.when(
+            F.element_at(F.col("__scs"), j) == 0.0, F.lit(-128.0)
+        ).otherwise(
+            F.least(
+                F.lit(255.0),
+                F.greatest(
+                    F.lit(0.0),
+                    F.round(
+                        (F.element_at(v, j) - F.element_at(F.col("__mns"), j))
+                        / F.element_at(F.col("__scs"), j)
                     ),
-                )
-                - F.lit(128.0)
-            ),
-        )
-        return (
-            corpus.crossJoin(F.broadcast(_sq8_frame(corpus.sparkSession, mins, scales)))
-            .select(F.col(id_col), code.cast("array<tinyint>").alias("codes"))
-        )
-    exprs = []
-    for i in range(dim):
-        if scales[i] == 0.0:
-            exprs.append(F.lit(-128))
-        else:
-            q = F.round((F.col(vec_col)[i].cast("double") - F.lit(mins[i])) / F.lit(scales[i]))
-            exprs.append(F.least(F.lit(255.0), F.greatest(F.lit(0.0), q)) - F.lit(128))
-    return corpus.select(
-        F.col(id_col), F.array(*exprs).cast("array<tinyint>").alias("codes")
+                ),
+            )
+            - F.lit(128.0)
+        ),
+    )
+    return (
+        corpus.crossJoin(F.broadcast(_sq8_frame(corpus.sparkSession, mins, scales)))
+        .select(F.col(id_col), code.cast("array<tinyint>").alias("codes"))
     )
 
 
@@ -803,7 +792,6 @@ def sq8_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
-    hof: bool = True,
 ) -> DataFrame:
     """Int8 scalar-quantized MIPS top-k (SQ8 + asymmetric distance):
     the corpus is stored as 1-byte-per-dim codes, queries stay full
@@ -815,42 +803,26 @@ def sq8_topk(
     for width — pair with :func:`brute_force_topk` for recall evals
     (pytest pins recall@k ≥ 0.9 on the test corpus).
 
-    ``hof=True`` (default since r8): the model broadcasts as data and
-    the dequantized dot product folds over ``sequence(1, dim)`` — a
-    constant-sized expression tree (the plan-literal path emits a
-    dim-term chained sum, the same codegen-size failure class as PQ's
-    literal transport — VERDICT r7). Both paths sum left-to-right (the
-    order DuckDB's list_sum uses), so the rounded score is
-    oracle-stable and identical across paths."""
+    The model broadcasts as data and the dequantized dot product folds
+    over ``sequence(1, dim)`` — a constant-sized expression tree. The
+    fold sums left-to-right (the order DuckDB's list_sum uses), so the
+    rounded score is oracle-stable."""
     mins, scales = sq8_stats(corpus, dim, vec_col)
-    codes = rebalance(sq8_codes(corpus, mins, scales, vec_col, id_col, hof=hof))
+    codes = rebalance(sq8_codes(corpus, mins, scales, vec_col, id_col))
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")
+    ).crossJoin(F.broadcast(_sq8_frame(corpus.sparkSession, mins, scales)))
+    score = F.aggregate(
+        F.sequence(F.lit(1), F.lit(dim)),
+        F.lit(0.0),
+        lambda acc, j: acc
+        + F.element_at(F.col("__qv"), j)
+        * (
+            F.element_at(F.col("__mns"), j)
+            + (F.element_at(F.col("codes"), j).cast("double") + F.lit(128.0))
+            * F.element_at(F.col("__scs"), j)
+        ),
     )
-    if hof:
-        q = q.crossJoin(F.broadcast(_sq8_frame(corpus.sparkSession, mins, scales)))
-        score = F.aggregate(
-            F.sequence(F.lit(1), F.lit(dim)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.element_at(F.col("__qv"), j)
-            * (
-                F.element_at(F.col("__mns"), j)
-                + (F.element_at(F.col("codes"), j).cast("double") + F.lit(128.0))
-                * F.element_at(F.col("__scs"), j)
-            ),
-        )
-    else:
-        # dequantized dot product as a left-to-right chained sum: the
-        # same sequential order DuckDB's list_sum uses, so the rounded
-        # score is oracle-stable
-        score = None
-        for i in range(dim):
-            term = F.col("__qv")[i] * (
-                F.lit(mins[i])
-                + (F.col("codes")[i].cast("double") + F.lit(128.0)) * F.lit(scales[i])
-            )
-            score = term if score is None else score + term
     scored = codes.crossJoin(F.broadcast(q)).select(
         F.col(query_id_col),
         F.col(id_col),
@@ -874,7 +846,6 @@ def pq_train(
     round_dist: int = 6,
     round_mean: int = 6,
     iters: int = 1,
-    hof: bool = True,
     base: DataFrame | None = None,
 ) -> list[list[list[float]]]:
     """Train product-quantization codebooks: the vector splits into
@@ -884,9 +855,12 @@ def pq_train(
     refinements (default 1 — the configuration the x60 oracle replays).
 
     Distribution shape: the refinement's assignment is a pure map over
-    the corpus (codebooks ride as plan literals); the recompute is a
-    posexplode → groupBy((sub, code, pos)) partial-sum — shuffle volume
-    O(partitions × m × ksub × dim/m), independent of corpus size, the
+    the corpus (the codebook tensor broadcasts as a 1-row frame and
+    encodes through :func:`_with_codes`); the recompute explodes per
+    SUBSPACE (m rows/vector carrying a dsub-array — not per element,
+    which is dsub× more rows for the same bytes) and runs dsub mean
+    aggregates per (sub, code) group — map-side combined, shuffle
+    O(partitions × m × ksub × dsub), independent of corpus size, the
     plan a 100 TB PQ build needs. Returns driver-side codebooks
     (``m × ksub × dim/m`` floats — model-sized, never corpus-sized).
     ``round_dist``/``round_mean`` make the trajectory replayable by an
@@ -920,109 +894,31 @@ def pq_train(
     books = [
         [list(r["v"][s * dsub : (s + 1) * dsub]) for r in seeds] for s in range(m)
     ]
-
-    def _code_expr(s: int) -> Column:
-        dists = F.array(
-            *[
-                F.round(
-                    sum(
-                        (F.col("v")[s * dsub + i] - F.lit(books[s][c][i])) ** 2
-                        for i in range(dsub)
-                    ),
-                    round_dist,
-                )
-                for c in range(ksub)
-            ]
-        )
-        # first index of the min distance = lowest-code tie-break
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    # Lloyd iterations: assignment is a pure map (codebooks ride as plan
-    # literals), the element-wise mean per (subspace, code, pos) is ONE
-    # pass of m·ksub·dsub conditional aggregates — map-side combined
-    # down to a single reduced row (model-sized), no row explosion, no
-    # shuffle of corpus data. The posexplode alternative materializes
-    # dim× the corpus through the exchange; at 20M×16 dims that was the
-    # train's wall-clock (measured in tools/scale_probe.py).
-    if hof:
-        # high-dim path: assignment through the array-typed codebook
-        # (constant expression tree); the recompute explodes per
-        # SUBSPACE (m rows/vector carrying a dsub-array — NOT per
-        # element, which is dsub× more rows for the same bytes) and
-        # runs dsub mean aggregates per (sub, code) group — map-side
-        # combined, shuffle O(partitions × m × ksub × dsub), with only
-        # dsub expressions in the plan however big m·ksub grows
-        for _ in range(max(iters, 1)):
-            bframe = F.broadcast(_books_frame(base.sparkSession, books))
-            assigned = base.crossJoin(bframe).select(
-                "v",
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: _hof_code(
-                        # code_type="int" directly — an inner tinyint cast
-                        # would wrap ksub>128 codes before this widening
-                        F.col("v"), F.col("__books"), s, dsub, round_dist, "int"
-                    ),
-                ).alias("__codes"),
-            )
-            stats = (
-                assigned.select(
-                    F.posexplode("__codes").alias("s", "c"), F.col("v")
-                )
-                .select(
-                    "s",
-                    "c",
-                    F.slice(
-                        "v", F.col("s") * F.lit(dsub) + F.lit(1), F.lit(dsub)
-                    ).alias("sub"),
-                )
-                .groupBy("s", "c")
-                .agg(
-                    *[
-                        F.round(F.avg(F.col("sub")[i]), round_mean).alias(f"m{i}")
-                        for i in range(dsub)
-                    ]
-                )
-                .collect()
-            )
-            got = {
-                (r["s"], r["c"], i): r[f"m{i}"] for r in stats for i in range(dsub)
-            }
-            books = [
-                [
-                    [
-                        float(got[(s, c, i)])
-                        if got.get((s, c, i)) is not None
-                        else books[s][c][i]  # empty code keeps init
-                        for i in range(dsub)
-                    ]
-                    for c in range(ksub)
-                ]
-                for s in range(m)
-            ]
-        if owns_base:
-            base.unpersist()
-        return books
     for _ in range(max(iters, 1)):
-        assigned = base.select(
-            "v", *[_code_expr(s).alias(f"__c{s}") for s in range(m)]
+        stats = (
+            _with_codes(base, books, "v", round_dist)
+            .select(F.posexplode("pq_codes").alias("s", "c"), F.col("v"))
+            .select(
+                "s",
+                "c",
+                F.slice("v", F.col("s") * F.lit(dsub) + F.lit(1), F.lit(dsub)).alias("sub"),
+            )
+            .groupBy("s", "c")
+            .agg(
+                *[
+                    F.round(F.avg(F.col("sub")[i]), round_mean).alias(f"m{i}")
+                    for i in range(dsub)
+                ]
+            )
+            .collect()
         )
-        aggs = [
-            F.round(
-                F.avg(F.when(F.col(f"__c{s}") == c, F.col("v")[s * dsub + i])),
-                round_mean,
-            ).alias(f"m_{s}_{c}_{i}")
-            for s in range(m)
-            for c in range(ksub)
-            for i in range(dsub)
-        ]
-        row = assigned.agg(*aggs).collect()[0]
+        got = {(r["s"], r["c"], i): r[f"m{i}"] for r in stats for i in range(dsub)}
         books = [
             [
                 [
-                    float(row[f"m_{s}_{c}_{i}"])
-                    if row[f"m_{s}_{c}_{i}"] is not None  # empty code keeps init
-                    else books[s][c][i]
+                    float(got[(s, c, i)])
+                    if got.get((s, c, i)) is not None
+                    else books[s][c][i]  # empty code keeps init
                     for i in range(dsub)
                 ]
                 for c in range(ksub)
@@ -1126,16 +1022,17 @@ def _books_frame(spark, books):
     """The codebook tensor as a 1-row DataFrame (``__books``:
     array<array<array<double>>>) for broadcast — codebooks ride as DATA,
     so the expression tree stays constant-sized however big m·ksub·dsub
-    grows (the plan-literal path materializes one scalar expression per
-    product term and stops compiling around dim ≳ 256)."""
+    grows (one scalar expression per product term stops compiling
+    whole-stage codegen already at dim 64 / ksub 16 — VERDICT r7)."""
     return spark.createDataFrame([(books,)], "__books array<array<array<double>>>")
 
 
-def _hof_code(vcol, bookscol, s, dsub: int, round_dist: int, code_type: str = "tinyint"):
-    """argmin-over-centroids code for subspace ``s`` (a lambda-bound
-    Column) via HOFs: slice the subvector, zip_with/aggregate the
-    squared distance per centroid, array_position the min. One fixed
-    expression regardless of ksub/dsub.
+def _centroid_dists(vcol, bookscol, s, dsub: int, round_dist: int, reduce):
+    """``reduce`` applied to subspace ``s``'s rounded squared distances
+    (one per centroid) from the slice of ``vcol``: slice the subvector,
+    zip_with/aggregate the ``pow(x-b, 2)`` terms left to right, round.
+    One fixed expression regardless of ksub/dsub; ``s`` is a Column
+    (lambda-bound or literal).
 
     The slice is BOUND as a lambda variable (``transform(array(sub),
     …)[1]``) rather than referenced inside the per-centroid lambda:
@@ -1146,24 +1043,89 @@ def _hof_code(vcol, bookscol, s, dsub: int, round_dist: int, code_type: str = "t
     only reads the variable."""
     sub = F.slice(vcol, s * F.lit(dsub) + F.lit(1), F.lit(dsub))
 
-    def _argmin(subv):
-        dists = F.transform(
-            F.element_at(bookscol, s + F.lit(1)),
-            lambda cb: F.round(
-                F.aggregate(
-                    # pow(x-b, 2) — not (x-b)*(x-b) — so the arithmetic is
-                    # bit-identical to the literal path's `** 2` and the two
-                    # paths emit the same codes at the rounding boundary
-                    F.zip_with(cb, subv, lambda b, x: F.pow(x - b, F.lit(2.0))),
-                    F.lit(0.0),
-                    lambda acc, t: acc + t,
+    def _bound(subv):
+        return reduce(
+            F.transform(
+                F.element_at(bookscol, s + F.lit(1)),
+                lambda cb: F.round(
+                    F.aggregate(
+                        F.zip_with(cb, subv, lambda b, x: F.pow(x - b, F.lit(2.0))),
+                        F.lit(0.0),
+                        lambda acc, t: acc + t,
+                    ),
+                    round_dist,
                 ),
-                round_dist,
-            ),
+            )
         )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast(code_type)
 
-    return F.element_at(F.transform(F.array(sub), _argmin), 1)
+    return F.element_at(F.transform(F.array(sub), _bound), 1)
+
+
+def _with_codes(frame: DataFrame, books, vec_col: str, round_dist: int = 6) -> DataFrame:
+    """``frame`` plus a ``pq_codes`` column: per subspace, the first
+    index of the minimal rounded centroid distance (lowest-code
+    tie-break), typed by :func:`_code_type`. The codebook tensor
+    broadcasts as a 1-row frame; the map needs no shuffle."""
+    m, ct, dsub = len(books), _code_type(len(books[0])), len(books[0][0])
+    codes = F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: _centroid_dists(
+            F.col(vec_col),
+            F.col("__books"),
+            s,
+            dsub,
+            round_dist,
+            lambda d: (F.array_position(d, F.array_min(d)) - 1).cast(ct),
+        ),
+    )
+    return (
+        frame.crossJoin(F.broadcast(_books_frame(frame.sparkSession, books)))
+        .withColumn("pq_codes", codes)
+        .drop("__books")
+    )
+
+
+def _with_lut(queries: DataFrame, books) -> DataFrame:
+    """``queries`` (carrying ``__qv``) plus ``__lut``: per subspace, the
+    query subvector's inner product with each centroid, summed left to
+    right — the asymmetric-distance lookup table, built on the small
+    query side so the corpus scan only does m table hits per row."""
+    dsub = len(books[0][0])
+    lut = F.transform(
+        F.col("__books"),
+        lambda book_s, s: F.transform(
+            book_s,
+            lambda cb: F.aggregate(
+                F.zip_with(
+                    cb,
+                    F.slice(F.col("__qv"), s * F.lit(dsub) + F.lit(1), F.lit(dsub)),
+                    lambda b, x: x * b,
+                ),
+                F.lit(0.0),
+                lambda acc, t: acc + t,
+            ),
+        ),
+    )
+    return (
+        queries.crossJoin(F.broadcast(_books_frame(queries.sparkSession, books)))
+        .withColumn("__lut", lut)
+        .drop("__books")
+    )
+
+
+def _adc_score(m: int) -> Column:
+    """The ADC score of a ``pq_codes`` row against a ``__lut`` row: the
+    m table hits summed left to right (the order the DuckDB oracle
+    replays)."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0.0),
+        lambda acc, s: acc
+        + F.element_at(
+            F.element_at(F.col("__lut"), s + F.lit(1)),
+            F.col("pq_codes")[s].cast("int") + F.lit(1),
+        ),
+    )
 
 
 def pq_codes(
@@ -1172,48 +1134,18 @@ def pq_codes(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     round_dist: int = 6,
-    hof: bool = True,
 ) -> DataFrame:
     """Encode the corpus as ``m`` 1-byte codes (dim×8 B → m B — the PQ
-    compression step). Zero shuffle either way. ``hof=True`` (the
-    default since r8): codebooks broadcast as a 1-row nested-array
-    frame and the argmin evaluates through transform/zip_with/aggregate
-    — a constant-sized expression tree at any dim/ksub. ``hof=False``:
-    codebooks are plan literals, one codegen'd scalar expression per
-    product term; the m·ksub·dsub expression count fails whole-stage
-    codegen already at the registry shape (janino errors + multi-MiB
-    task binaries — VERDICT r7) and is kept ONLY as the pytest
-    equality pin for the arithmetic. Both orders of arithmetic are
-    identical (left-fold sums, same rounding), so the two paths emit
-    byte-identical codes — codes are ``tinyint`` up to ksub 128,
-    ``smallint`` beyond (ADVICE r7: an unconditional tinyint wrapped
-    ksub > 128 codes negative)."""
-    m, ksub = len(books), len(books[0])
-    dsub = len(books[0][0])
-    ct = _code_type(ksub)
+    compression step). Zero shuffle: codebooks broadcast as a 1-row
+    nested-array frame and the argmin evaluates through
+    transform/zip_with/aggregate — a constant-sized expression tree at
+    any dim/ksub (:func:`_with_codes`). Codes are ``tinyint`` up to
+    ksub 128, ``smallint`` beyond (ADVICE r7: an unconditional tinyint
+    wrapped ksub > 128 codes negative)."""
     v = F.col(vec_col).cast("array<double>")
-    if hof:
-        base = corpus.select(F.col(id_col), v.alias("__v")).crossJoin(
-            F.broadcast(_books_frame(corpus.sparkSession, books))
-        )
-        codes = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: _hof_code(F.col("__v"), F.col("__books"), s, dsub, round_dist, ct),
-        )
-        return base.select(F.col(id_col), codes.alias("pq_codes"))
-    exprs = []
-    for s in range(m):
-        dists = F.array(
-            *[
-                F.round(
-                    sum((v[s * dsub + i] - F.lit(books[s][c][i])) ** 2 for i in range(dsub)),
-                    round_dist,
-                )
-                for c in range(ksub)
-            ]
-        )
-        exprs.append((F.array_position(dists, F.array_min(dists)) - 1).cast(ct))
-    return corpus.select(F.col(id_col), F.array(*exprs).alias("pq_codes"))
+    return _with_codes(
+        corpus.select(F.col(id_col), v.alias("__v")), books, "__v", round_dist
+    ).select(id_col, "pq_codes")
 
 
 def pq_codes_arrow(
@@ -1228,15 +1160,14 @@ def pq_codes_arrow(
     :func:`pq_codes`; zero shuffle (mapInPandas, codebooks closure-
     captured as one numpy tensor per task).
 
-    Why it exists: the literal path stops compiling at m·ksub·dsub ≳
-    16k expressions and the HOF path evaluates interpreted per element
+    Why it exists: the HOF path evaluates interpreted per element
     (~7k rows/s at dim 256 / m 16 / ksub 64 on 32 cores — measured in
     tools/scale_probe.py), while a batched numpy argmin does the same
     arithmetic vectorized. NOT used by any registry query — the
     plan-sweep guard keeps Python eval out of those; this is the
     documented opt-in kernel for bulk encode jobs.
 
-    Arithmetic is term-for-term identical to the HOF/literal paths:
+    Arithmetic is term-for-term identical to :func:`pq_codes`:
     (x-b)² terms (Math.pow(x, 2.0) == x·x exactly — fdlibm and the JIT
     intrinsic both special-case y==2), summed in the same left-to-right
     order (np.add.reduce is a strict sequential fold, unlike np.sum's
@@ -1244,23 +1175,19 @@ def pq_codes_arrow(
     first-min argmin. The one residual difference is the rounding rule
     at EXACT half-way decimals (BigDecimal HALF_UP vs np.round) — a
     measure-zero boundary pinned byte-identical on the engine's test
-    corpora by test_pipeline.py."""
+    corpora by test_pipeline.py, which uses this kernel as the
+    independent reference for the HOF encode."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    m, ksub = len(books), len(books[0])
-    dsub = len(books[0][0])
+    m, ct, dsub = len(books), _code_type(len(books[0])), len(books[0][0])
     B = np.asarray(books, dtype=np.float64)  # (m, ksub, dsub)
-    # same code dtype rule as pq_codes (ADVICE r7: int8 wraps ksub>128)
-    np_ct = np.int8 if ksub <= 128 else (np.int16 if ksub <= 32768 else np.int32)
-    spark_ct = (
-        T.ByteType() if ksub <= 128 else (T.ShortType() if ksub <= 32768 else T.IntegerType())
-    )
+    np_ct = {"tinyint": np.int8, "smallint": np.int16, "int": np.int32}[ct]
     out_schema = T.StructType(
         [
             corpus.schema[id_col],
-            T.StructField("pq_codes", T.ArrayType(spark_ct)),
+            T.StructField("pq_codes", T.ArrayType(T._parse_datatype_string(ct))),
         ]
     )
 
@@ -1296,7 +1223,6 @@ def pq_topk(
     query_id_col: str = "query_id",
     books: list[list[list[float]]] | None = None,
     rerank: int = 0,
-    hof: bool = True,
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """PQ asymmetric-distance top-k (IVF-PQ's scoring half, Jégou et
@@ -1306,7 +1232,7 @@ def pq_topk(
     (query, subspace) has a ``ksub``-entry lookup table and scoring a
     code is ``m`` table hits. At 100 TB this is the memory-bound ANN
     workhorse: 8 B/vector instead of 512 B, codebooks broadcast as
-    literals, the corpus is scanned once with no shuffle. Beside x04
+    data, the corpus is scanned once with no shuffle. Beside x04
     (exact), x05/x29 (pruning) and x56 (SQ8), this completes the
     standard quantized-ANN family.
 
@@ -1318,16 +1244,11 @@ def pq_topk(
     force, not assumed; bare ADC (rerank=0) ranking is what the x60
     oracle replays.
 
-    ``hof=True`` (the DEFAULT since r8) routes BOTH the encode and the
-    LUT/score arithmetic through the array-typed codebook path (see
-    :func:`pq_codes`): codebooks broadcast as data, LUTs live in one
-    nested-array column, the score folds over ``sequence(0, m-1)`` — the
-    same left-to-right arithmetic, a constant-sized expression tree.
-    The plan-literal transport (``hof=False``) failed whole-stage
-    codegen already at the registry shape (dim 64/ksub 16 composite
-    query: janino compile errors, 3.5–4.9 MiB task binaries, 12–15×
-    interpreted-fallback slowdown — VERDICT r7); it survives only as a
-    downsized pytest arithmetic-equality pin."""
+    Encode, LUT and score all go through the array-typed codebook
+    (:func:`_with_codes`, :func:`_with_lut`, :func:`_adc_score`): LUTs
+    live in one nested-array column and the score folds over
+    ``sequence(0, m-1)`` left to right — a constant-sized expression
+    tree at any m/ksub/dsub."""
     prepared = None
     if books is None:
         # ONE materialization of the projected (id, vector) corpus
@@ -1342,10 +1263,7 @@ def pq_topk(
                 F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
             )
         ).persist()
-        books = pq_train(
-            corpus, m, ksub, dim, vec_col, id_col, hof=hof, base=prepared
-        )
-    dsub = dim // m
+        books = pq_train(corpus, m, ksub, dim, vec_col, id_col, base=prepared)
     # ``codes``: pre-encoded (id, pq_codes) frame — the production
     # shape at scale, where the m-byte codes are STORED (encoded once,
     # by pq_codes_arrow for high dim) and every query scans codes
@@ -1364,78 +1282,23 @@ def pq_topk(
                     F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
                 )
             )
-        codes = pq_codes(src, books, vec_col="v", id_col=id_col, hof=hof)
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
+        codes = pq_codes(src, books, vec_col="v", id_col=id_col)
     # LUT per (query, subspace): ksub dot products against the codebook
     # rows, MATERIALIZED on the |queries|-row side before the broadcast
     # — the corpus-side scan then does m element_at lookups per row
     # instead of re-deriving m·ksub·dsub products per (row, query) pair
     # (the ADC scan's wall-clock at 20M rows, measured in
-    # tools/scale_probe.py). Chained left-to-right sums keep the
-    # rounded score oracle-stable in both paths.
-    if hof:
-        q = (
-            q.crossJoin(F.broadcast(_books_frame(corpus.sparkSession, books)))
-            .withColumn(
-                "__lut",
-                F.transform(
-                    F.col("__books"),
-                    lambda book_s, s: F.transform(
-                        book_s,
-                        lambda cb: F.aggregate(
-                            F.zip_with(
-                                cb,
-                                F.slice(
-                                    F.col("__qv"),
-                                    s * F.lit(dsub) + F.lit(1),
-                                    F.lit(dsub),
-                                ),
-                                lambda b, x: x * b,
-                            ),
-                            F.lit(0.0),
-                            lambda acc, t: acc + t,
-                        ),
-                    ),
-                ),
-            )
-            .drop("__books")
-        )
-    else:
-        for s in range(m):
-            q = q.withColumn(
-                f"__lut{s}",
-                F.array(
-                    *[
-                        sum(
-                            F.col("__qv")[s * dsub + i] * F.lit(books[s][c][i])
-                            for i in range(dsub)
-                        )
-                        for c in range(ksub)
-                    ]
-                ),
-            )
-    q = q.localCheckpoint(eager=True)  # pin the tiny LUT relation, drop lineage
-    if hof:
-        score = F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0.0),
-            lambda acc, s: acc
-            + F.element_at(
-                F.element_at(F.col("__lut"), s + F.lit(1)),
-                F.col("pq_codes")[s].cast("int") + F.lit(1),
-            ),
-        )
-    else:
-        score = None
-        for s in range(m):
-            term = F.element_at(F.col(f"__lut{s}"), F.col("pq_codes")[s].cast("int") + 1)
-            score = term if score is None else score + term
+    # tools/scale_probe.py).
+    q = _with_lut(
+        queries.select(
+            F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("__qv")
+        ),
+        books,
+    ).localCheckpoint(eager=True)  # pin the tiny LUT relation, drop lineage
     scored = codes.crossJoin(F.broadcast(q)).select(
         F.col(query_id_col),
         F.col(id_col),
-        F.round(score, 4).alias("adc"),
+        F.round(_adc_score(m), 4).alias("adc"),
     )
     w = Window.partitionBy(query_id_col).orderBy(F.col("adc").desc(), F.col(id_col).asc())
     if not rerank:
@@ -1484,7 +1347,6 @@ def ivfpq_topk(
     q_vec_col: str = "qv",
     books: list[list[list[float]]] | None = None,
     round_cos: int | None = 4,
-    hof: bool = True,
 ) -> DataFrame:
     """IVF-PQ: the composed billion-scale ANN architecture (Jégou et
     al. 2011; the Faiss IVFPQ index) — the coarse quantizer prunes the
@@ -1494,26 +1356,18 @@ def ivfpq_topk(
 
     Scale shape, composed from the proven halves (:func:`ivf_topk`,
     :func:`pq_topk`): centroid assignment AND PQ encoding happen in the
-    SAME single map pass over the corpus (broadcast centroids,
-    plan-literal codebooks — no second scan, no corpus shuffle); the
-    probe set and LUTs materialize on the tiny query side; the
-    candidate join touches nprobe/k of the codes, each scored with m
-    array lookups. At 100 TB: 8 B/vector resident instead of 512 B,
-    and only 1/k-th of those bytes per query.
-
-    ``hof=True`` (the default since r8, same rationale as
-    :func:`pq_topk`): codebooks broadcast as DATA and encode/LUT/score
-    run through the constant-sized HOF expression tree; the
-    plan-literal transport (``hof=False``) failed whole-stage codegen
-    at the registry shape (VERDICT r7) and survives as the pytest
-    arithmetic-equality pin only. Both paths fold sums left-to-right
-    with identical rounding, so candidates, ADC scores and ranking are
-    bit-identical."""
+    SAME single map pass over the corpus (broadcast centroids and
+    codebook tensor — no second scan, no corpus shuffle); the probe set
+    and LUTs materialize on the tiny query side; the candidate join
+    touches nprobe/k of the codes, each scored with m array lookups.
+    At 100 TB: 8 B/vector resident instead of 512 B, and only 1/k-th
+    of those bytes per query. Encode, LUT and score are
+    :func:`pq_topk`'s, so candidates carry exactly :func:`pq_codes`'s
+    codes."""
     from pyspark.sql import Window
 
     if books is None:
-        books = pq_train(corpus, m, ksub, dim, vec_col, id_col, hof=hof)
-    dsub = dim // m
+        books = pq_train(corpus, m, ksub, dim, vec_col, id_col)
     base = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     )
@@ -1545,39 +1399,7 @@ def ivfpq_topk(
             ).alias("centroid_id")
         )
     )
-    if hof:
-        # encode through the broadcast codebook tensor: one __codes
-        # array column, constant expression tree at any m/ksub/dsub
-        coded = (
-            assigned.crossJoin(F.broadcast(_books_frame(corpus.sparkSession, books)))
-            .select(
-                F.col(id_col),
-                "centroid_id",
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: _hof_code(F.col("v"), F.col("__books"), s, dsub, 6, "int"),
-                ).alias("__codes"),
-            )
-        )
-    else:
-        code_exprs = []
-        for s in range(m):
-            dists = F.array(
-                *[
-                    F.round(
-                        sum(
-                            (F.col("v")[s * dsub + i] - F.lit(books[s][c][i])) ** 2
-                            for i in range(dsub)
-                        ),
-                        6,
-                    )
-                    for c in range(ksub)
-                ]
-            )
-            code_exprs.append(
-                ((F.array_position(dists, F.array_min(dists)) - 1).cast("int")).alias(f"__code{s}")
-            )
-        coded = assigned.select(F.col(id_col), "centroid_id", *code_exprs)
+    coded = _with_codes(assigned, books, "v").select(id_col, "centroid_id", "pq_codes")
     # probe set: nprobe best centroids per query (tiny × tiny)
     wq = Window.partitionBy(q_id_col).orderBy(F.desc("__pcos"), F.asc("centroid_id"))
     probe = (
@@ -1588,65 +1410,9 @@ def ivfpq_topk(
         .select(q_id_col, "centroid_id", "__qv")
     )
     # per-(query, subspace) LUTs on the query side (pq_topk's shape)
-    if hof:
-        probe = (
-            probe.crossJoin(F.broadcast(_books_frame(corpus.sparkSession, books)))
-            .withColumn(
-                "__lut",
-                F.transform(
-                    F.col("__books"),
-                    lambda book_s, s: F.transform(
-                        book_s,
-                        lambda cb: F.aggregate(
-                            F.zip_with(
-                                cb,
-                                F.slice(
-                                    F.col("__qv"),
-                                    s * F.lit(dsub) + F.lit(1),
-                                    F.lit(dsub),
-                                ),
-                                lambda b, x: x * b,
-                            ),
-                            F.lit(0.0),
-                            lambda acc, t: acc + t,
-                        ),
-                    ),
-                ),
-            )
-            .drop("__books")
-        )
-    else:
-        for s in range(m):
-            probe = probe.withColumn(
-                f"__lut{s}",
-                F.array(
-                    *[
-                        sum(
-                            F.col("__qv")[s * dsub + i] * F.lit(books[s][c][i])
-                            for i in range(dsub)
-                        )
-                        for c in range(ksub)
-                    ]
-                ),
-            )
-    probe = probe.localCheckpoint(eager=True)
-    if hof:
-        score = F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0.0),
-            lambda acc, s: acc
-            + F.element_at(
-                F.element_at(F.col("__lut"), s + F.lit(1)),
-                F.col("__codes")[s] + F.lit(1),
-            ),
-        )
-    else:
-        score = None
-        for s in range(m):
-            term = F.element_at(F.col(f"__lut{s}"), F.col(f"__code{s}") + 1)
-            score = term if score is None else score + term
+    probe = _with_lut(probe, books).localCheckpoint(eager=True)
     cand = coded.join(F.broadcast(probe), on="centroid_id").select(
-        F.col(q_id_col), F.col(id_col), F.round(score, 4).alias("adc")
+        F.col(q_id_col), F.col(id_col), F.round(_adc_score(m), 4).alias("adc")
     )
     wr = Window.partitionBy(q_id_col).orderBy(F.desc("adc"), F.asc(id_col))
     return (
@@ -1943,7 +1709,7 @@ def pq_reconstruction_error(
     order cannot move the outputs.
 
     Scale shape: codebooks are driver-bounded model data broadcast as
-    a 1-row tensor frame (the r8 HOF transport); the error is ONE
+    a 1-row tensor frame, as in :func:`pq_codes`; the error is ONE
     map-side pass per row — no join back through codes, no shuffle but
     the #labels reduce.
     """
@@ -1951,33 +1717,18 @@ def pq_reconstruction_error(
         emb, m=m, ksub=ksub, dim=dim, vec_col=vec_col, id_col=id_col,
         round_dist=round_dist,
     )
-    dsub = dim // m
     v = F.col(vec_col).cast("array<double>")
-
-    def min_dist(s):
-        sub = F.slice(F.col("__v"), s * dsub + 1, dsub)
-
-        def _mind(subv):
-            dists = F.transform(
-                F.element_at(F.col("__books"), F.lit(s + 1)),
-                lambda cb: F.round(
-                    F.aggregate(
-                        F.zip_with(cb, subv, lambda b, x: F.pow(x - b, F.lit(2.0))),
-                        F.lit(0.0),
-                        lambda acc, t: acc + t,
-                    ),
-                    round_dist,
-                ),
-            )
-            return F.array_min(dists)
-
-        return F.element_at(F.transform(F.array(sub), _mind), 1)
-
     base = emb.select(F.col(label_col), v.alias("__v")).crossJoin(
         F.broadcast(_books_frame(emb.sparkSession, books))
     )
     err_bp = sum(
-        F.round(min_dist(s) * 1000000).cast("bigint") for s in range(m)
+        F.round(
+            _centroid_dists(
+                F.col("__v"), F.col("__books"), F.lit(s), dim // m, round_dist, F.array_min
+            )
+            * 1000000
+        ).cast("bigint")
+        for s in range(m)
     )
     power_bp = F.round(
         F.round(

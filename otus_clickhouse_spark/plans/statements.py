@@ -900,18 +900,18 @@ def _try_route_inner(engine, s: str):
     if m:
         # ALTER ADD COLUMN [DEFAULT expr] [AFTER col] (D3; hw03.md:36-39,
         # lecture_12.md:29-39: DEFAULT backfills existing rows on read)
-        from otus_clickhouse_spark.functions.ddl import ch_type_to_spark
+        from otus_clickhouse_spark.functions.ddl import alias_entry, ch_type_to_spark
 
         name, col, ch_type, default, alias, after = m.groups()
         df = engine.table(name)
         spark_type, _n = ch_type_to_spark(ch_type.strip())
         if alias:
             # ALIAS column (lecture_12.md:36-39): virtual, recomputed per
-            # query, never stored — record the expression so re-registration
+            # query, never stored — record it so re-registration
             # (inserts, restarts) re-attaches it, and refresh the view
-            engine.tables[name].settings.setdefault("aliases", {})[col] = alias.strip()
-            alias_col = _expr(engine, alias, df).cast(spark_type)
-            df.withColumn(col, alias_col).createOrReplaceTempView(name)
+            td = engine.tables[name]
+            td.settings.setdefault("aliases", {})[col] = alias_entry(alias, ch_type)
+            engine.with_aliases(td, df).createOrReplaceTempView(name)
             return {"added_column": col, "alias": True}
         value = (
             _expr(engine, default, df).cast(spark_type) if default else F.lit(None).cast(spark_type)

@@ -3447,12 +3447,11 @@ def x59_semantic_decontam(spark, sf_dir):
     )
 
 
-# Shared by x60 (plan-literal codebooks) and x65 (array-typed HOF
-# codebooks): the two PQ paths are arithmetic-identical by design
-# (left-fold sums, pow(x-b,2)), so ONE DuckDB replay oracles both —
-# x65 passing proves the bit-equality claim under the driver harness.
-# x71 extends the same body with an exact-cosine re-rank over the
-# top-R ADC candidates (pq_topk's rerank production shape).
+# DuckDB replay of pq_topk at m 8 / ksub 16 / dim 64: seed selection,
+# one Lloyd step, encoding and ADC scoring, summed left to right like
+# the engine. x60 checks the bare-ADC ranking against it; x71 extends
+# the same body with an exact-cosine re-rank over the top-R ADC
+# candidates (pq_topk's rerank production shape).
 _PQ_ADC_BODY = """
     WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     seeds AS (
@@ -3541,10 +3540,7 @@ def x60_pq_adc_topk(spark, sf_dir):
     (64× smaller than float64) and search reconstructs the inner
     product through per-(query, subspace) lookup tables — the
     memory-bound 100 TB ANN workhorse beside x04 (exact), x05/x29
-    (pruning) and x56 (SQ8). Since r8 this rides the HOF broadcast-
-    tensor transport by default (VERDICT r7: the plan-literal transport
-    failed whole-stage codegen at this very shape — 43.5 s interpreted
-    vs ~5 s compiled at sf0.01). Oracle replays seed selection, the
+    (pruning) and x56 (SQ8). Oracle replays seed selection, the
     Lloyd step, encoding and ADC scoring with DuckDB list functions."""
     from otus_clickhouse_spark.pipeline.similarity import pq_topk
 
@@ -3553,35 +3549,6 @@ def x60_pq_adc_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return pq_topk(emb, queries, k=5, m=8, ksub=16, dim=64)
-
-
-@query("x65_pq_hof_adc", oracle=_PQ_ADC_ORACLE)
-def x65_pq_hof_adc(spark, sf_dir):
-    """x60's PQ ADC search through the ARRAY-TYPED codebook transport
-    (``hof=True``): the codebook tensor broadcasts as a 1-row
-    nested-array frame and the argmin/LUT/score evaluate via
-    transform/zip_with/aggregate HOFs — a constant-sized expression
-    tree, the path production embedding dims take (dim 256+/ksub 256,
-    where the plan-literal path's m·ksub·dsub scalar expressions stop
-    compiling; see SCALE.md `pq_hof_dim256`). Training recomputes via
-    posexplode → grouped partial means instead of conditional
-    aggregates. Shares x60's oracle verbatim: both paths fold sums
-    left-to-right and square via pow, so codes, ADC scores, and
-    ranking are bit-identical. Since r8 ``hof=True`` is the DEFAULT
-    transport (x60 now rides the same plan), so this entry is retained
-    for registry-name stability and as the explicitly-pinned HOF
-    invocation; the literal-vs-HOF equality proof lives in
-    tests/test_pipeline.py (test_pq_hof_path_equals_literal_and_
-    scales_dim, test_sq8_and_ivfpq_hof_equal_literal) at a downsized
-    shape — the literal transport no longer backs any registry query
-    (VERDICT r7 ask #1)."""
-    from otus_clickhouse_spark.pipeline.similarity import pq_topk
-
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return pq_topk(emb, queries, k=5, m=8, ksub=16, dim=64, hof=True)
 
 
 @query("x71_pq_rerank", oracle=_PQ_RERANK_ORACLE)
@@ -3593,7 +3560,7 @@ def x71_pq_rerank(spark, sf_dir):
     candidate ids only, via a broadcast semi-join at the corpus (the
     100 TB side is filtered map-side, never shuffled, never scanned
     twice). This is the shape Jégou et al.'s IVFADC deployments and
-    every production PQ service run; x60/x65 pin the bare-ADC ranking,
+    every production PQ service run; x60 pins the bare-ADC ranking,
     this pins the two-stage candidate→rerank composition. Oracle
     extends the shared PQ replay with the same top-12 → exact-cosine →
     top-5 CTEs."""
@@ -3775,12 +3742,8 @@ def x62_ivfpq_search(spark, sf_dir):
     to nprobe inverted lists per query; the pruned candidates score
     through 8-byte PQ codes (x60) with per-query LUTs. Assignment and
     encoding share ONE corpus pass; at scale each query reads nprobe/k
-    of an 8-byte-per-vector index. Since r8 encode/LUT/score ride the
-    HOF broadcast-tensor transport by default (VERDICT r7: the literal
-    transport failed codegen at this shape — 54.5 s interpreted vs
-    ~6 s compiled at sf0.01; bit-equality pinned in pytest). The
-    oracle composes the two proven replays over the candidate set
-    only."""
+    of an 8-byte-per-vector index. The oracle composes the two proven
+    replays over the candidate set only."""
     from otus_clickhouse_spark.pipeline.similarity import ivfpq_topk, kmeans_centroids
 
     emb = t(spark, sf_dir, "embeddings")

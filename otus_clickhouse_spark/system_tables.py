@@ -301,7 +301,7 @@ def _columns(engine):
             elif f.name in mat:
                 kind, expr = "MATERIALIZED", mat[f.name]
             elif f.name in aliases:
-                kind, expr = "ALIAS", aliases[f.name]
+                kind, expr = "ALIAS", aliases[f.name][0]
             rows.append((t.name, f.name, f.dataType.simpleString(), kind, expr))
     return rows
 

@@ -132,7 +132,7 @@ def test_default_materialized_alias_columns(engine, tmp_path):
     td = engine.tables["attrs_ddl"]
     assert td.settings["defaults"] == {"status": "'new'"}
     assert td.settings["materialized"] == {"val2": "val * 2"}
-    assert td.settings["aliases"] == {"val3": "val + 1"}
+    assert td.settings["aliases"] == {"val3": ("val + 1", None)}
     # column-list insert: status omitted → DEFAULT; val2 computed
     engine.execute("INSERT INTO attrs_ddl (id, val) VALUES (1, 10.0)")
     engine.execute("INSERT INTO attrs_ddl (id, val, status) VALUES (2, 20.0, 'old')")

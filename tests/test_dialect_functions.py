@@ -1654,17 +1654,37 @@ def test_update_assignment_and_predicate_get_the_select_repair(arr_t):
     assert _arr_rows(arr_t) == [(1, "3", [1, 2]), (2, "", []), (3, "zz", [3])]
 
 
-def test_alias_column_keeps_the_repair_across_inserts(arr_t):
+def test_alias_column_keeps_the_repair_across_inserts(arr_t, tmp_path):
     """The stored ALIAS text is re-attached on every re-registration
-    (each INSERT refreshes the view) through the same repair."""
+    (each INSERT refreshes the view) through the same repair, cast to
+    the declared type; an untyped ALIAS keeps the expression's type.
+    Declared by ALTER ADD COLUMN, or at CREATE with and without a type."""
     arr_t.execute("ALTER TABLE arr_t ADD COLUMN n UInt64 ALIAS length(a)")
-    got = [(r.k, r.n) for r in arr_t.sql("SELECT k, n FROM arr_t ORDER BY k").collect()]
-    assert got == [(1, 2), (2, 0), (3, 1)]
-    arr_t.execute("INSERT INTO arr_t (k, s, a) VALUES (4, 'w', [4, 5, 6])")
-    got = [(r.k, r.n) for r in arr_t.sql("SELECT k, n FROM arr_t ORDER BY k").collect()]
-    assert got == [(1, 2), (2, 0), (3, 1), (4, 3)]
-    arr_t.execute("ALTER TABLE arr_t DELETE WHERE n = 0")
-    assert [r.k for r in arr_t.sql("SELECT k FROM arr_t ORDER BY k").collect()] == [1, 3, 4]
+    tables = {"arr_t": "decimal(20,0)"}
+    for name, decl, dtype in [
+        ("arr_typed", "n UInt64 ALIAS length(a)", "decimal(20,0)"),
+        ("arr_untyped", "n ALIAS length(a)", "int"),
+    ]:
+        arr_t.execute(
+            f"CREATE TABLE {name} (k UInt32, s String, a Array(Int32), {decl}) "
+            "ENGINE = MergeTree ORDER BY k"
+        )
+        arr_t.tables[name].path = str(tmp_path / name)
+        arr_t.execute(f"INSERT INTO {name} (k, s, a) VALUES (1, 'x', [1, 2]), (2, '', []), (3, 'zz', [3])")
+        tables[name] = dtype
+
+    def n_of(name):
+        df = arr_t.sql(f"SELECT k, n FROM {name} ORDER BY k")
+        return df.schema["n"].dataType.simpleString(), [(r.k, r.n) for r in df.collect()]
+
+    for name, dtype in tables.items():
+        assert n_of(name) == (dtype, [(1, 2), (2, 0), (3, 1)])
+        arr_t.execute(f"INSERT INTO {name} (k, s, a) VALUES (4, 'w', [4, 5, 6])")
+        assert n_of(name) == (dtype, [(1, 2), (2, 0), (3, 1), (4, 3)])
+        arr_t.execute(f"ALTER TABLE {name} DELETE WHERE n = 0")
+        assert [r.k for r in arr_t.sql(f"SELECT k FROM {name} ORDER BY k").collect()] == [1, 3, 4]
+    for name in ("arr_typed", "arr_untyped"):
+        arr_t.execute(f"DROP TABLE {name}")
 
 
 def test_default_column_backfill_gets_the_select_repair(arr_t):

@@ -1729,196 +1729,134 @@ def test_sq8_and_pq_guard_empty_or_short_corpus(spark):
         pq_train(tiny, m=2, ksub=16, dim=8)
 
 
-@pytest.mark.slow  # heavy sweep/equivalence proof (r13): round-close suite only
-def test_pq_hof_path_equals_literal_and_scales_dim(spark, sf_dir):
-    """The array-typed codebook path (hof=True: codebooks broadcast as
-    data, consumed via transform/zip_with/aggregate) must emit EXACTLY
-    the literal path's codes and ADC ranking at the oracle-replayed
-    configuration — and must run at dim 256 / ksub 64 / m 16 where the
-    literal path's m·ksub·dsub expression count stops compiling."""
-    from pyspark.sql import functions as F
-
-    from otus_clickhouse_spark.io import read_table
-    from otus_clickhouse_spark.pipeline.similarity import (
-        brute_force_topk, pq_codes, pq_topk, pq_train,
-    )
-
-    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = pq_train(emb, m=8, ksub=16, dim=64)
-    # hof=True is the DEFAULT transport since r8 — pass hof=False
-    # explicitly so this stays a literal-vs-HOF equality pin
-    lit_codes = {r.vec_id: r.pq_codes for r in pq_codes(emb, books, hof=False).collect()}
-    hof_codes = {r.vec_id: r.pq_codes for r in pq_codes(emb, books, hof=True).collect()}
-    assert lit_codes == hof_codes
-    lit_top = [
-        (r.query_id, r.vec_id, r.adc, r.rnk)
-        for r in pq_topk(emb, queries, k=10, m=8, ksub=16, dim=64, books=books, hof=False)
-        .orderBy("query_id", "rnk").collect()
-    ]
-    hof_top = [
-        (r.query_id, r.vec_id, r.adc, r.rnk)
-        for r in pq_topk(emb, queries, k=10, m=8, ksub=16, dim=64, books=books, hof=True)
-        .orderBy("query_id", "rnk").collect()
-    ]
-    assert lit_top == hof_top
-
-    # --- the dim the literal path can't serve: 256-d, ksub 64, m 16 ---
-    # (m*ksub*dsub = 16*64*16 = 16384 distance expressions per code
-    # column in the literal plan vs a constant-sized HOF tree here)
-    dim, m, ksub = 256, 16, 64
-    big = spark.range(2000).select(
+def _sine_corpus(spark, n, dim):
+    """``n`` deterministic ``dim``-d vectors (``vec_id``, ``embedding``)."""
+    return spark.range(n).select(
         F.col("id").alias("vec_id"),
         F.transform(
             F.sequence(F.lit(1), F.lit(dim)),
             lambda i: F.sin(F.col("id") * i + i * i).cast("double"),
         ).alias("embedding"),
     ).localCheckpoint(eager=True)
-    qbig = big.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+
+
+def _adc(qv, codes, books):
+    """Reference ADC score: per subspace the query slice's inner product
+    with the coded centroid, each summed left to right, rounded to 4."""
+    dsub = len(books[0][0])
+    score = 0.0
+    for s, c in enumerate(codes):
+        term = 0.0
+        for i in range(dsub):
+            term += qv[s * dsub + i] * books[s][c][i]
+        score += term
+    return round(score, 4)
+
+
+def test_pq_codes_equal_the_arrow_kernel(spark, sf_dir):
+    """The HOF encode emits exactly the codes of the numpy kernel
+    (pq_codes_arrow: same terms, same left-to-right sum, same rounding
+    before the first-min argmin) at the x60 oracle shape."""
+    from otus_clickhouse_spark.io import read_table
+    from otus_clickhouse_spark.pipeline.similarity import pq_codes, pq_codes_arrow, pq_train
+
+    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
+    books = pq_train(emb, m=8, ksub=16, dim=64)
+    hof = {r.vec_id: r.pq_codes for r in pq_codes(emb, books).collect()}
+    arrow = {r.vec_id: r.pq_codes for r in pq_codes_arrow(emb, books).collect()}
+    assert hof == arrow and len(hof) == emb.count()
+
+
+@pytest.mark.slow  # heavy sweep/equivalence proof (r13): round-close suite only
+def test_pq_dim256_codes_equal_the_arrow_kernel_and_recall(spark):
+    """At dim 256 / ksub 64 / m 16 the HOF encode still equals the
+    numpy kernel, and the reranked ADC search keeps recall."""
+    from otus_clickhouse_spark.pipeline.similarity import (
+        brute_force_topk, pq_codes, pq_codes_arrow, pq_topk, pq_train,
     )
-    books_hi = pq_train(big, m=m, ksub=ksub, dim=dim, hof=True)
-    assert len(books_hi) == m and all(len(b) == ksub for b in books_hi)
-    got = pq_topk(
-        big, qbig, k=10, m=m, ksub=ksub, dim=dim, books=books_hi,
-        rerank=50, hof=True,
-    )
+
+    dim, m, ksub = 256, 16, 64
+    big = _sine_corpus(spark, 2000, dim)
+    books = pq_train(big, m=m, ksub=ksub, dim=dim)
+    assert len(books) == m and all(len(b) == ksub for b in books)
+    hof = {r.vec_id: r.pq_codes for r in pq_codes(big, books).collect()}
+    arrow = {r.vec_id: r.pq_codes for r in pq_codes_arrow(big, books).collect()}
+    assert hof == arrow
+    qbig = big.where(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
+    got = pq_topk(big, qbig, k=10, m=m, ksub=ksub, dim=dim, books=books, rerank=50)
     exact = brute_force_topk(big, qbig, k=10, query_id_col="query_id")
     got_set = {(r.query_id, r.vec_id) for r in got.collect()}
     exact_set = {(r.query_id, r.vec_id) for r in exact.collect()}
     hits = len(got_set & exact_set)
-    assert hits / len(exact_set) >= 0.5, f"high-dim HOF recall too low: {hits}/{len(exact_set)}"
+    assert hits / len(exact_set) >= 0.5, f"high-dim recall too low: {hits}/{len(exact_set)}"
 
 
 @pytest.mark.slow  # heavy sweep/equivalence proof (r13): round-close suite only
-def test_pq_codes_arrow_equals_hof(spark, sf_dir):
-    """The Arrow-vectorized encode kernel must emit byte-identical codes
-    to the HOF/literal paths — at the oracle shape AND at the dim-256
-    production shape. Same terms, same left-to-right sum order
-    (np.add.reduce), same rounding before the first-min argmin."""
-    from pyspark.sql import functions as F
+def test_sq8_codes_and_ivfpq_codes_match_references(spark, sf_dir):
+    """SQ8 codes equal a numpy quantizer, and IVF-PQ with every list
+    probed scores each vector through exactly pq_codes' codes (the
+    rankings of both are pinned by the x56/x62 DuckDB oracles)."""
+    import numpy as np
 
     from otus_clickhouse_spark.io import read_table
     from otus_clickhouse_spark.pipeline.similarity import (
-        pq_codes, pq_codes_arrow, pq_train,
+        ivfpq_topk, kmeans_centroids, pq_codes, pq_train, sq8_codes, sq8_stats,
     )
 
     emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
-    books = pq_train(emb, m=8, ksub=16, dim=64)
-    hof = {r.vec_id: r.pq_codes for r in pq_codes(emb, books, hof=True).collect()}
-    arrow = {r.vec_id: r.pq_codes for r in pq_codes_arrow(emb, books).collect()}
-    assert hof == arrow
-
-    dim, m, ksub = 256, 16, 64
-    big = spark.range(2000).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda i: F.sin(F.col("id") * i + i * i).cast("double"),
-        ).alias("embedding"),
-    ).localCheckpoint(eager=True)
-    books_hi = pq_train(big, m=m, ksub=ksub, dim=dim, hof=True)
-    hof_hi = {r.vec_id: r.pq_codes for r in pq_codes(big, books_hi, hof=True).collect()}
-    arrow_hi = {r.vec_id: r.pq_codes for r in pq_codes_arrow(big, books_hi).collect()}
-    assert hof_hi == arrow_hi
-
-
-@pytest.mark.slow  # heavy sweep/equivalence proof (r13): round-close suite only
-def test_sq8_and_ivfpq_hof_equal_literal(spark, sf_dir):
-    """r8 flipped the quantized-ANN family's default transport to
-    hof=True (VERDICT r7 ask #1); the plan-literal transport survives
-    as this downsized equality pin: SQ8 codes/top-k and IVF-PQ results
-    must be bit-identical across transports."""
-    from pyspark.sql import functions as F
-
-    from otus_clickhouse_spark.io import read_table
-    from otus_clickhouse_spark.pipeline.similarity import (
-        ivfpq_topk, kmeans_centroids, pq_train, sq8_codes, sq8_stats, sq8_topk,
-    )
-
-    emb = read_table(spark, f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    rows = emb.orderBy("vec_id").collect()
     mins, scales = sq8_stats(emb, 64)
-    lit = {r.vec_id: r.codes for r in sq8_codes(emb, mins, scales, hof=False).collect()}
-    hof = {r.vec_id: r.codes for r in sq8_codes(emb, mins, scales, hof=True).collect()}
-    assert lit == hof
-
-    def key(df):
-        return [
-            (r.query_id, r.vec_id, r.qdot, r.rnk)
-            for r in df.orderBy("query_id", "rnk").collect()
-        ]
-
-    assert key(sq8_topk(emb, queries, k=5, dim=64, hof=False)) == key(
-        sq8_topk(emb, queries, k=5, dim=64, hof=True)
-    )
+    x = np.array([r.embedding for r in rows], dtype=np.float32).astype(np.float64)
+    mn, sc = np.array(mins), np.array(scales)
+    q = np.floor((x - mn) / np.where(sc == 0.0, 1.0, sc) + 0.5)  # HALF_UP, q >= 0
+    want = np.where(sc == 0.0, -128, np.clip(q, 0, 255) - 128).astype(np.int8)
+    got = {r.vec_id: list(r.codes) for r in sq8_codes(emb, mins, scales).collect()}
+    assert got == {r.vec_id: list(w) for r, w in zip(rows, want)}
 
     cent = kmeans_centroids(emb, k=4, iters=1)
     q2 = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
     )
     books = pq_train(emb, m=8, ksub=16, dim=64)
-
-    def key2(df):
-        return [
-            (r.q_id, r.vec_id, r.adc, r.rnk)
-            for r in df.orderBy("q_id", "rnk").collect()
-        ]
-
-    lit_i = key2(
-        ivfpq_topk(emb, cent, q2, k=5, nprobe=2, m=8, ksub=16, dim=64, books=books, hof=False)
-    )
-    hof_i = key2(
-        ivfpq_topk(emb, cent, q2, k=5, nprobe=2, m=8, ksub=16, dim=64, books=books, hof=True)
-    )
-    assert lit_i == hof_i
+    codes = {r.vec_id: r.pq_codes for r in pq_codes(emb, books).collect()}
+    vecs = {r.vec_id: r.embedding for r in rows}
+    ivfpq = ivfpq_topk(emb, cent, q2, k=len(rows), nprobe=4, m=8, ksub=16, dim=64, books=books)
+    got = {(r.q_id, r.vec_id): r.adc for r in ivfpq.collect()}
+    assert len(got) == 3 * len(rows)
+    assert all(adc == _adc(vecs[q], codes[v], books) for (q, v), adc in got.items())
 
 
-@pytest.mark.slow  # heavy sweep/equivalence proof (r13): round-close suite only
 def test_pq_ksub_over_128_codes_do_not_wrap(spark):
     """ADVICE r7: an unconditional tinyint cast wrapped codes > 127
     negative for ksub > 128, so element_at(lut, code+1) read an invalid
     or end-relative index on the advertised ksub-256 shape. Codes are
-    smallint beyond ksub 128 now: all three encode paths agree, codes
-    above 127 actually occur, and pq_topk ranks through them."""
-    from pyspark.sql import functions as F
-
+    smallint beyond ksub 128 now: the HOF and numpy encodes agree,
+    codes above 127 actually occur, and pq_topk scores through them."""
     from otus_clickhouse_spark.pipeline.similarity import (
         pq_codes, pq_codes_arrow, pq_topk, pq_train,
     )
 
     dim, m, ksub = 8, 2, 130
-    corpus = spark.range(300).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda i: F.sin(F.col("id") * i + i * i).cast("double"),
-        ).alias("embedding"),
-    ).localCheckpoint(eager=True)
+    corpus = _sine_corpus(spark, 300, dim)
     books = pq_train(corpus, m=m, ksub=ksub, dim=dim)
     assert len(books[0]) == ksub
-    hof_df = pq_codes(corpus, books, hof=True)
+    hof_df = pq_codes(corpus, books)
     assert hof_df.schema["pq_codes"].dataType.simpleString() == "array<smallint>"
     hof = {r.vec_id: list(r.pq_codes) for r in hof_df.collect()}
-    lit = {r.vec_id: list(r.pq_codes) for r in pq_codes(corpus, books, hof=False).collect()}
     arrow = {r.vec_id: list(r.pq_codes) for r in pq_codes_arrow(corpus, books).collect()}
-    assert hof == lit == arrow
+    assert hof == arrow
     top_code = max(c for cs in hof.values() for c in cs)
     assert top_code > 127, f"test shape never exercised a >127 code (max {top_code})"
     queries = corpus.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    got = pq_topk(corpus, queries, k=5, m=m, ksub=ksub, dim=dim, books=books)
-    rows = got.collect()
+    vecs = {r.vec_id: r.embedding for r in corpus.collect()}
+    rows = pq_topk(corpus, queries, k=5, m=m, ksub=ksub, dim=dim, books=books).collect()
     assert len(rows) == 15  # 3 queries × k=5, no lookup errors
-    lit_top = pq_topk(
-        corpus, queries, k=5, m=m, ksub=ksub, dim=dim, books=books, hof=False
-    ).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, lit_top))
+    for q in range(3):
+        want = sorted((-_adc(vecs[q], hof[v], books), v) for v in hof)[:5]
+        got = [(-r.adc, r.vec_id) for r in sorted(rows, key=lambda r: r.rnk) if r.query_id == q]
+        assert got == want
 
 
 def test_weighted_sample_proportional_and_plan(spark):

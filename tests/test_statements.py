@@ -889,6 +889,34 @@ def test_system_noops_and_reload_dictionary(engine):
     assert "reload_d" in engine.execute("SYSTEM RELOAD DICTIONARIES")["reloaded"]
 
 
+def test_dictionary_is_a_loaded_snapshot(engine, tmp_path):
+    """A dictionary serves the rows loaded at CREATE/RELOAD: a mutation
+    that rewrites the source's files changes nothing until a reload."""
+    engine.execute("CREATE TABLE snap_src (k UInt32, v String) ENGINE = MergeTree ORDER BY tuple()")
+    engine.tables["snap_src"].path = str(tmp_path / "snap_src")
+    engine.execute("INSERT INTO snap_src VALUES (1, 'a'), (2, 'b')")
+    engine.execute(
+        "CREATE DICTIONARY snap_d (k UInt32, v String) PRIMARY KEY k "
+        "SOURCE(CLICKHOUSE(TABLE 'snap_src')) LAYOUT(FLAT()) LIFETIME(300)"
+    )
+
+    def served():
+        got = engine.sql("SELECT dictGet('snap_d', 'v', toUInt32(1)) AS v").collect()[0].v
+        n = engine.sql(
+            "SELECT element_count FROM system.dictionaries WHERE name = 'snap_d'"
+        ).collect()[0].element_count
+        return got, n
+
+    assert served() == ("a", 2)
+    engine.execute("ALTER TABLE snap_src UPDATE v = 'z' WHERE k = 1")
+    engine.execute("INSERT INTO snap_src VALUES (3, 'c')")
+    assert served() == ("a", 2)
+    engine.execute("SYSTEM RELOAD DICTIONARY snap_d")
+    assert served() == ("z", 3)
+    engine.execute("DROP DICTIONARY snap_d")
+    engine.execute("DROP TABLE snap_src")
+
+
 def test_freeze_snapshot(engine, sales):
     res = engine.execute(f"ALTER TABLE {sales} FREEZE")
     snap = res["frozen"]

@@ -656,28 +656,17 @@ def probe(spark, path: str, n_fact: int, n_docs: int) -> dict:
     from otus_clickhouse_spark.pipeline.similarity import pq_topk, pq_train
 
     def pq_run():
-        # hof=False EXPLICITLY: since r8 the default transport is the
-        # HOF broadcast tensor (the registry/production path; the
-        # dim-256 row below measures it), but THIS row keeps probing
-        # the plan-literal transport at the one shape where it still
-        # compiles (m·ksub·dsub = 256 exprs) — both for round-over-
-        # round continuity of the number and to keep evidence of the
-        # literal path's small-dim viability
-        books = pq_train(emb, m=4, ksub=16, dim=16, id_col="k", hof=False)
+        books = pq_train(emb, m=4, ksub=16, dim=16, id_col="k")
         q = emb.where(F.col("k") < 3).select(F.col("k").alias("query_id"), "embedding")
         pq_topk(
-            emb, q, k=5, m=4, ksub=16, dim=16, id_col="k", books=books,
-            rerank=50, hof=False,
+            emb, q, k=5, m=4, ksub=16, dim=16, id_col="k", books=books, rerank=50,
         ).agg(F.count(F.lit(1))).collect()
 
     timed("pq_train_encode_adc", pq_run, n_fact)
 
-    # PQ at PRODUCTION embedding dims (256-d, ksub 64, m 16) through the
-    # array-typed codebook path (hof=True): codebooks broadcast as data,
-    # argmin/LUT/score via transform/zip_with/aggregate HOFs — constant
-    # expression tree. The literal path at this shape is m·ksub·dsub =
-    # 16384 distance expressions per code column and stops compiling;
-    # this row proves the HOF path serves the dim the literal one can't.
+    # PQ at PRODUCTION embedding dims (256-d, ksub 64, m 16): codebooks
+    # broadcast as data, argmin/LUT/score via transform/zip_with/aggregate
+    # HOFs — a constant expression tree however big m·ksub·dsub grows.
     # capped at 500k rows: HOF lambdas evaluate INTERPRETED (no codegen
     # for higher-order functions), so the assignment pass is bounded at
     # ~7k rows/s/32-threads at this shape however the expression is
@@ -692,7 +681,7 @@ def probe(spark, path: str, n_fact: int, n_docs: int) -> dict:
     # shares state (books_hi/codes_ar); a filtered run that asks for
     # none of its probes skips the block wholesale
     if not only or any(
-        x in "pq_hof_dim256 pq_arrow_encode_dim256 pq_adc_query_dim256"
+        x in "pq_dim256 pq_arrow_encode_dim256 pq_adc_query_dim256"
         for x in only
     ):
         _pq_dim256_block(spark, path, fact, n_fact, n_hi, timed, F)
@@ -705,7 +694,7 @@ def probe(spark, path: str, n_fact: int, n_docs: int) -> dict:
 def _pq_dim256_block(spark, path, fact, n_fact, n_hi, timed, F):
     from otus_clickhouse_spark.pipeline.similarity import pq_codes_arrow, pq_topk, pq_train
 
-    emb_hi_path = os.path.join(path, "emb_dim256_hof")
+    emb_hi_path = os.path.join(path, "emb_dim256")
     fact.where(F.col("k") < n_hi).select(
         "k",
         F.transform(
@@ -717,19 +706,19 @@ def _pq_dim256_block(spark, path, fact, n_fact, n_hi, timed, F):
 
     books_hi = {}
 
-    def pq_hof_run():
-        books_hi["b"] = pq_train(emb_hi, m=16, ksub=64, dim=256, id_col="k", hof=True)
+    def pq_hi_run():
+        books_hi["b"] = pq_train(emb_hi, m=16, ksub=64, dim=256, id_col="k")
         q = emb_hi.where(F.col("k") < 3).select(F.col("k").alias("query_id"), "embedding")
         pq_topk(
             emb_hi, q, k=5, m=16, ksub=64, dim=256, id_col="k",
-            books=books_hi["b"], rerank=50, hof=True,
+            books=books_hi["b"], rerank=50,
         ).agg(F.count(F.lit(1))).collect()
 
-    timed("pq_hof_dim256", pq_hof_run, n_hi)
+    timed("pq_dim256", pq_hi_run, n_hi)
 
     # the production bulk-encode kernel (pq_codes_arrow — mapInPandas,
     # batched numpy argmin, byte-identical codes pinned by
-    # test_pq_codes_arrow_equals_hof) at the SAME dim-256 shape over the
+    # test_pq_dim256_codes_equal_the_arrow_kernel_and_recall) at the SAME dim-256 shape over the
     # full fact table: this is the row that shows the compression pass
     # scales — rows/s must hold from small to big
     from otus_clickhouse_spark.pipeline.similarity import pq_codes_arrow
@@ -755,7 +744,7 @@ def _pq_dim256_block(spark, path, fact, n_fact, n_hi, timed, F):
     # Arrow kernel above; pq_topk(codes=...) skips the encode). The
     # scan is m element_at lookups per (row, query) — NOT the
     # m·ksub·dsub encode arithmetic — so the interpreted-HOF floor that
-    # caps pq_hof_dim256 does NOT apply here: measured 55.7k -> 72.1k
+    # caps pq_dim256 does NOT apply here: measured 55.7k -> 72.1k
     # rows/s at 200k -> 2M rows (RISES at 10×, ~40× above the floor).
     # rows/s must keep rising with n for this row to stay green.
     codes_ar = {
@@ -766,7 +755,7 @@ def _pq_dim256_block(spark, path, fact, n_fact, n_hi, timed, F):
         q = emb_hi.where(F.col("k") < 3).select(F.col("k").alias("query_id"), "embedding")
         pq_topk(
             emb_ar, q, k=5, m=16, ksub=64, dim=256, id_col="k",
-            books=books_hi["b"], codes=codes_ar["c"], hof=True,
+            books=books_hi["b"], codes=codes_ar["c"],
         ).agg(F.count(F.lit(1))).collect()
 
     timed("pq_adc_query_dim256", pq_adc_query_run, n_ar)
