@@ -194,8 +194,6 @@ class Engine:
         Also materializes the ``<name>__final`` view when the engine type
         has FINAL collapse semantics (lecture_07.md:465-481, 551-790).
         """
-        from otus_clickhouse_spark.io import read_table
-
         self.tables[td.name] = td
         known = self._file_schemas.pop(td.name, None)
         frame = df
@@ -207,15 +205,7 @@ class Engine:
                 and not td.settings.get("cold_volumes")
                 and _fields(known) == _fields(appended)
             )
-            frame = read_table(self.spark, td.path, schema=known if reuse else None)
-            self._file_schemas[td.name] = frame.schema
-            # tiered storage (lecture_14.md:233 TTL … TO VOLUME): rows moved
-            # to cold volumes are still part of the table — union them in
-            for cpath in td.settings.get("cold_volumes", {}).values():
-                if os.path.exists(cpath):
-                    frame = frame.unionByName(read_table(self.spark, cpath))
-            # on the base frame, so the views below inherit it
-            frame = single_task(frame)
+            frame = self._read_parts(td, known if reuse else None)
         frame = self.with_aliases(td, frame)
         # row policies (lecture_18.md:561-609): mandatory prefilter on
         # every read; permissive policies OR together like the reference
@@ -233,6 +223,38 @@ class Engine:
             from otus_clickhouse_spark.operators.final import final_view
 
             final_view(frame, td).createOrReplaceTempView(f"{td.name}__final")
+
+    def _read_parts(self, td: TableDef, schema: StructType | None = None) -> DataFrame:
+        """The rows in ``td``'s files, as one partition when small.
+
+        ``schema`` is the hot path's file schema from an earlier read,
+        which skips the footer-inference job (:func:`io.read_table`)."""
+        from otus_clickhouse_spark.io import read_table
+
+        frame = read_table(self.spark, td.path, schema=schema)
+        self._file_schemas[td.name] = frame.schema
+        # tiered storage (lecture_14.md:233 TTL … TO VOLUME): rows moved
+        # to cold volumes are still part of the table — union them in
+        for cpath in td.settings.get("cold_volumes", {}).values():
+            if os.path.exists(cpath):
+                frame = frame.unionByName(read_table(self.spark, cpath))
+        return single_task(frame)
+
+    def stored(self, name: str) -> DataFrame:
+        """Every stored row of ``name``: what a rewrite of its parts reads.
+
+        The registered view is filtered by the row policies, so a
+        mutation built from it would delete the hidden rows. This reads
+        the table's files instead, with its ALIAS columns and without
+        the rows a lightweight DELETE masked. A table without files is
+        its registered view."""
+        from otus_clickhouse_spark.plans.mutations import read_with_mask
+
+        td = self.tables.get(name)
+        if td is None or not td.path or not os.path.exists(td.path):
+            return self.table(name)
+        frame = self._read_parts(td, self._file_schemas.get(name))
+        return read_with_mask(self.with_aliases(td, frame))
 
     def with_aliases(self, td: TableDef, frame: DataFrame) -> DataFrame:
         """``frame`` plus the ALIAS columns of ``td`` it lacks
@@ -774,23 +796,7 @@ class Engine:
             name, collist, rest = im.group(2), im.group(3), im.group(4)
             cols = [unquote(c) for c in collist.split(",")] if collist else None
             if rest.upper().startswith(("SELECT", "WITH")):
-                sel = self.sql(rest, **params)
-                if cols:
-                    sel = sel.toDF(*cols)
-                    # a PARTIAL column list fills the omitted columns
-                    # with their DEFAULT exprs, same as the VALUES and
-                    # FORMAT-data paths (hw06.md roles.created_at
-                    # DEFAULT now() via INSERT … (cols) SELECT)
-                    ddl = self.tables[name].settings.get("schema")
-                    if ddl:
-                        from pyspark.sql.types import StructType
-
-                        declared = {f.name for f in StructType.fromDDL(ddl).fields}
-                        if set(cols) != declared:
-                            sel = self._values_frame_from(name, sel, cols)
-                else:
-                    sel = self._align_positional(name, sel)
-                return self.insert(name, sel)
+                return self.insert(name, self._align_block(name, self.sql(rest, **params), cols))
             return self.insert(name, self._values_frame(name, rest, cols))
         dfm = re.match(
             r"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?format\s*\(\s*(\w+)\s*,\s*(.*)\)\s*$",
@@ -1009,43 +1015,49 @@ class Engine:
                 return d, name[len(d) + 2 :]
         return "default", name
 
-    def _values_frame(self, name: str, values_clause: str, cols: list[str] | None = None) -> DataFrame:
-        """Rows from ``VALUES (…), (…)``, aligned to the table's DECLARED
-        column order and types. The live view's order can differ (a
-        partitioned parquet read appends partition columns last), so
-        positional rename must follow the DDL, not the view.
-
-        With an explicit column list (``INSERT INTO t (a, b) VALUES``),
-        omitted columns are filled with their ``DEFAULT expr``
-        (lecture_12.md:29-39) or the CH type-zero default (0 / '' /
-        epoch — non-nullable columns have no NULL to fall back to).
-        MATERIALIZED columns are never writable; they are computed in
-        :meth:`insert`.
-        """
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
+    def _writable(self, name: str) -> list:
+        """The fields an INSERT writes: the DECLARED schema without its
+        MATERIALIZED columns, or the view's fields for a table with no
+        DDL. The live view's order can differ from the declared one (a
+        partitioned parquet read appends partition columns last)."""
         td = self.tables[name]
-        # CH VALUES literals use CH syntax too — `[1,2]` arrays, (a, b)
-        # tuples — so the clause goes through the same literal rewrites
-        # as a SELECT (found by the r11 dialect fuzz: INSERT … VALUES
-        # with an array literal parse-errored while SELECT [1,2] worked)
-        from otus_clickhouse_spark.functions.dialect import _rewrite_array_literals
-
-        vals = self.spark.sql(f"SELECT * FROM {_rewrite_array_literals(values_clause)}")
         ddl = td.settings.get("schema")
         if not ddl:
-            return vals.toDF(*(cols or self.table(name).columns))
-        st = StructType.fromDDL(ddl)
+            return self.table(name).schema.fields
         mat = td.settings.get("materialized", {})
-        writable = [f for f in st.fields if f.name not in mat]
+        return [f for f in StructType.fromDDL(ddl).fields if f.name not in mat]
+
+    def _align_block(self, name: str, frame: DataFrame, cols: list[str] | None = None) -> DataFrame:
+        """An INSERT block in the table's writable layout: declared
+        order and types, enum codes normalized.
+
+        ``cols`` is the statement's column list, naming the frame's
+        columns in order. Without one, a frame of the writable arity
+        maps to the writable columns by POSITION, like ClickHouse
+        (lecture_07.md:516-524 inserts unaliased ``…State`` expressions
+        into typed state columns); a frame of another arity passes
+        through as it is. Columns the block omits
+        get their ``DEFAULT expr`` (lecture_12.md:29-39) or the CH
+        type-zero default (0 / '' / epoch — non-nullable columns have
+        no NULL to fall back to). MATERIALIZED columns are never
+        writable; they are computed in :meth:`insert`.
+        """
+        from pyspark.sql import functions as F
+
+        td = self.tables[name]
+        if not td.settings.get("schema"):
+            # registered files or CREATE … AS: no declared layout
+            return frame.toDF(*cols) if cols else frame
+        writable = self._writable(name)
         if cols is None:
+            if len(frame.columns) != len(writable):
+                return frame
             cols = [f.name for f in writable]
-        vals = vals.toDF(*cols)
+        frame = frame.toDF(*cols)
         defaults = td.settings.get("defaults", {})
         out = []
         for f in writable:
-            if f.name in cols:
+            if f.name in frame.columns:
                 out.append(_enum_norm(td, f.name, F.col(f.name).cast(f.dataType)))
             elif f.name in defaults:
                 out.append(F.expr(defaults[f.name]).cast(f.dataType).alias(f.name))
@@ -1053,7 +1065,18 @@ class Engine:
                 out.append(F.lit(None).cast(f.dataType).alias(f.name))
             else:
                 out.append(_zero_default(f.dataType).alias(f.name))
-        return vals.select(*out)
+        return frame.select(*out)
+
+    def _values_frame(self, name: str, values_clause: str, cols: list[str] | None = None) -> DataFrame:
+        """Rows from ``VALUES (…), (…)`` as an INSERT block of ``name``."""
+        # CH VALUES literals use CH syntax too — `[1,2]` arrays, (a, b)
+        # tuples — so the clause goes through the same literal rewrites
+        # as a SELECT (found by the r11 dialect fuzz: INSERT … VALUES
+        # with an array literal parse-errored while SELECT [1,2] worked)
+        from otus_clickhouse_spark.functions.dialect import _rewrite_array_literals
+
+        vals = self.spark.sql(f"SELECT * FROM {_rewrite_array_literals(values_clause)}")
+        return self._align_block(name, vals, cols or [f.name for f in self._writable(name)])
 
     def _format_frame(
         self, name: str, fmt: str, data: str, cols: list[str] | None = None
@@ -1069,15 +1092,9 @@ class Engine:
         file()/s3() instead."""
         import tempfile
 
-        from pyspark.sql.types import StructType
-
         from otus_clickhouse_spark.sources.readers import _reader
 
-        td = self.tables[name]
-        ddl = td.settings.get("schema")
-        mat = td.settings.get("materialized", {}) if ddl else {}
-        st = StructType.fromDDL(ddl) if ddl else self.table(name).schema
-        writable = [f for f in st.fields if f.name not in mat]
+        writable = self._writable(name)
         if cols is not None:
             # the parse schema must follow the STATEMENT's column order,
             # not the declared one — `INSERT INTO t (name, id)` binds the
@@ -1087,7 +1104,6 @@ class Engine:
             if unknown:
                 raise KeyError(f"unknown or non-writable column(s) in INSERT: {unknown}")
             writable = [by_name[c] for c in cols]
-        sub = StructType(writable)
         with tempfile.NamedTemporaryFile(
             "w", suffix=".dat", delete=False, encoding="utf-8"
         ) as f:
@@ -1098,62 +1114,11 @@ class Engine:
             # client-request-sized, and pinning the rows here lets the
             # spool file be unlinked immediately (Buffer/Memory engines
             # would otherwise hold a lazy reference to it forever)
-            df = _reader(self.spark, fmt, schema=sub).load(spool).localCheckpoint(eager=True)
+            reader = _reader(self.spark, fmt, schema=StructType(writable))
+            df = reader.load(spool).localCheckpoint(eager=True)
         finally:
             os.unlink(spool)
-        if cols is not None and set(cols) != {fld.name for fld in st.fields}:
-            # partial column list → route through the DEFAULT-filling
-            # VALUES alignment by reusing its field logic
-            return self._values_frame_from(name, df, cols)
-        # full set (possibly permuted statement order) → land in declared order
-        return df.select(*[f.name for f in st.fields if f.name not in mat])
-
-    def _values_frame_from(self, name: str, vals: DataFrame, cols: list[str]) -> DataFrame:
-        """Align an already-parsed frame carrying a PARTIAL column list to
-        the declared schema, filling DEFAULT/zero columns (shared by the
-        FORMAT-data insert path)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
-        td = self.tables[name]
-        st = StructType.fromDDL(td.settings["schema"])
-        mat = td.settings.get("materialized", {})
-        defaults = td.settings.get("defaults", {})
-        out = []
-        for f in st.fields:
-            if f.name in mat:
-                continue
-            if f.name in cols:
-                out.append(_enum_norm(td, f.name, F.col(f.name).cast(f.dataType)))
-            elif f.name in defaults:
-                out.append(F.expr(defaults[f.name]).cast(f.dataType).alias(f.name))
-            elif f.nullable:
-                out.append(F.lit(None).cast(f.dataType).alias(f.name))
-            else:
-                out.append(_zero_default(f.dataType).alias(f.name))
-        return vals.select(*out)
-
-    def _align_positional(self, name: str, df: DataFrame) -> DataFrame:
-        """``INSERT INTO t SELECT …`` with no column list maps SELECT
-        expressions to table columns by POSITION, like ClickHouse
-        (lecture_07.md:516-524 inserts unaliased ``…State`` expressions
-        into typed state columns). Rename + cast to the declared
-        writable schema when arities match; otherwise pass through."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
-        td = self.tables.get(name)
-        ddl = td.settings.get("schema") if td else None
-        if not ddl:
-            return df
-        mat = td.settings.get("materialized", {})
-        writable = [f for f in StructType.fromDDL(ddl).fields if f.name not in mat]
-        if len(df.columns) != len(writable):
-            return df
-        df = df.toDF(*[f.name for f in writable])
-        return df.select(
-            *[_enum_norm(td, f.name, F.col(f.name).cast(f.dataType)) for f in writable]
-        )
+        return self._align_block(name, df, cols)
 
     def execute_script(self, script: str, **params) -> list:
         """Run a multi-statement SQL script (homeworks/scripts/hw02.sql
@@ -1710,17 +1675,20 @@ class Engine:
 
     # ----------------------------------------------------------------- write
     def insert(self, name: str, df: DataFrame, mode: str = "append") -> None:
-        """EP3 insert path: sorted/partitioned parquet write (lecture_04.md:9-52).
+        """EP3 insert path: the block lands as new parts (lecture_04.md:9-52)
+        in the layout of :func:`otus_clickhouse_spark.io.write_parts`.
 
         Sorting within partitions by the table's ORDER BY reproduces the
         MergeTree property that row-group min/max stats (≈ sparse PK
         index) are selective for ORDER-BY-key predicates. Expression
         partition keys (``PARTITION BY toYYYYMM(dt)``, SURVEY.md §7 hard
-        part 6) are materialized as generated ``_p_*`` columns at write
-        time, so directory layout — and therefore partition pruning —
-        matches the ClickHouse partition key exactly.
+        part 6) are written as generated ``_p_*`` columns, so directory
+        layout — and therefore partition pruning — matches the
+        ClickHouse partition key exactly.
         """
         from pyspark.sql import functions as F
+
+        from otus_clickhouse_spark.io import write_parts
 
         self._bump("InsertQuery")
         self.check_access("INSERT", [name])
@@ -1783,46 +1751,7 @@ class Engine:
         # (lecture_12.md:14-27) — overwrite/add regardless of the input
         for col, expr in td.settings.get("materialized", {}).items():
             df = df.withColumn(col, F.expr(expr))
-        block = df  # the inserted block, pre-partition-columns, for MV triggers
-        part_cols = partition_columns(td, df.columns)
-        for expr, col in zip(td.partition_by, part_cols):
-            if col != expr:
-                df = df.withColumn(col, F.expr(expr))
-        if td.order_by:
-            df = df.sortWithinPartitions(*[k for k in td.order_by if k in df.columns])
-        # LZ4 block compression is ClickHouse's default codec
-        # (lecture_02.md compression model) and measurably out-writes
-        # snappy on this path (see the bench insert-probe sweep); parquet
-        # dictionary encoding stays on for the read side (its row-group
-        # dictionaries are the LowCardinality analogue)
-        # Parquet per-page CRC32 costs ~15% of write throughput on the
-        # insert probe and guards only against silent page corruption —
-        # ClickHouse likewise relies on its own compressed-block
-        # checksums, and parquet-mr wrote no page CRCs before 1.12, so
-        # readers everywhere tolerate their absence. Page size stays at
-        # the 1 MB default: the page column-index is the sparse-PK
-        # analogue for sub-row-group pruning and larger pages would
-        # coarsen it.
-        writer = (
-            df.write.mode(mode)
-            .option("compression", "lz4")
-            .option("parquet.page.write-checksum.enabled", "false")
-        )
-        # parquet bloom filters on the sort key (≈ bloom_filter skipping
-        # index, D9/lecture_08.md:99-240): point lookups on ORDER BY
-        # columns skip row groups even when min/max ranges overlap
-        bloom_cols = {k for k in td.order_by}
-        bloom_cols.update(
-            expr
-            for expr, itype in td.skip_indexes.values()
-            if itype.split("(")[0] in ("bloom_filter", "tokenbf_v1", "ngrambf_v1")
-        )
-        for k in bloom_cols:
-            if k in df.columns:
-                writer = writer.option(f"parquet.bloom.filter.enabled#{k}", "true")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(td.path)
+        write_parts(df, td, td.path, mode)
         # refresh the view over the new file set
         self.register_table(td, appended=df.schema if mode == "append" else None)
         # push the inserted block through attached MVs synchronously,
@@ -1830,7 +1759,7 @@ class Engine:
         # an MV inserting into its target re-triggers that table's MVs,
         # which is exactly the cascade semantics (init.sql:46-79)
         for mv in self._mvs.get(name, []):
-            mv.process_block(block)
+            mv.process_block(df)
         # vector_similarity indexes: append ONLY the inserted sliver to
         # the stored IVF lists with the ORIGINAL centroids — O(block),
         # never O(table) (lecture_13.md:187-257 part-build analogy)
@@ -1841,7 +1770,7 @@ class Engine:
                 from otus_clickhouse_spark.pipeline.similarity import ivf_append_index
 
                 ivf_append_index(
-                    block.select(
+                    df.select(
                         F.col(meta["id_col"]).alias("vec_id"),
                         F.expr(meta["expr"]).alias("embedding"),
                     ),
@@ -2549,18 +2478,6 @@ def _repair_call(sql: str, exc: AnalysisException) -> str | None:
             return None
         call = f"element_at({args[0]}, CAST({args[1]} AS INT))"
     return sql[:start] + lits.unmask(call) + sql[stop:]
-
-
-def partition_columns(td: TableDef, columns) -> list[str]:
-    """The on-disk partition column of each PARTITION BY expression: a
-    plain column of the block keeps its name, any other expression is
-    written as a generated ``_p_*`` column (Engine.insert)."""
-    return [
-        expr
-        if re.fullmatch(r"[A-Za-z_]\w*", expr) and expr in columns
-        else "_p_" + re.sub(r"[^\w]+", "_", expr).strip("_")
-        for expr in td.partition_by
-    ]
 
 
 def _fields(schema: StructType) -> list[tuple]:

@@ -26,7 +26,14 @@ from __future__ import annotations
 import re
 
 from otus_clickhouse_spark.engine import TableDef
-from otus_clickhouse_spark.functions.lexer import LIT, Masked, split_top, strip_comments, unquote
+from otus_clickhouse_spark.functions.lexer import (
+    LIT,
+    Masked,
+    close_paren,
+    split_top,
+    strip_comments,
+    unquote,
+)
 
 _SIMPLE_TYPES = {
     "string": "string",
@@ -266,12 +273,15 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
         spark_type, nullable = ch_type_to_spark(ch_type)
         cols.append(f"{name} {spark_type}{'' if nullable else ' NOT NULL'}")
     rest = m.group("rest") or ""
+    tail = Masked(rest)
 
     def clause(kw: str) -> str | None:
-        cm = re.search(
-            rf"\b{kw}\s+(\([^)]*\)|[^\s]+(?:\([^)]*\))?)", rest, re.IGNORECASE
-        )
-        return cm.group(1).strip() if cm else None
+        # a key is one bare word or a call/tuple up to its closing paren
+        cm = re.search(rf"\b{kw}\s+(\w*\(|\S+)", tail.text, re.IGNORECASE)
+        if not cm:
+            return None
+        end = close_paren(tail.text, cm.end() - 1) + 1 if cm.group(1)[-1] == "(" else cm.end()
+        return tail.unmask(tail.text[cm.start(1) : end]).strip()
 
     def key_tuple(raw: str | None) -> tuple[str, ...]:
         if not raw or raw.lower() == "tuple()":

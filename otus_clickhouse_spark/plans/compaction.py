@@ -3,23 +3,23 @@
 MergeTree continuously merges small parts into larger sorted parts
 (reference lectures/lecture_02.md:107-196, lecture_04.md:3-52,
 lecture_16.md:3-6); the parquet-table analogue is a compaction job
-that rewrites a directory of small files into ~``target_bytes`` files,
-re-sorted by the table's ORDER BY so row-group min/max stats stay
-selective. At 100 TB this is what keeps scan task counts (and the
-driver's file-listing cost) bounded as streaming/MV appends accumulate
-small files — the #1 operational failure mode of append-heavy lakes.
-
-The rewrite is partition-directory-scoped: pass ``where`` to compact
-only affected partitions (≈ OPTIMIZE TABLE ... PARTITION p).
+that rewrites a directory of small files into ~``target_bytes`` files.
+The merged parts are written by :func:`otus_clickhouse_spark.io.rewrite_parts`,
+so they keep the layout an INSERT writes: the partition directories,
+files sorted by the table's ORDER BY (row-group min/max stats stay
+selective), LZ4 and the sort-key bloom filters. At 100 TB this is what
+keeps scan task counts (and the driver's file-listing cost) bounded as
+streaming/MV appends accumulate small files — the #1 operational
+failure mode of append-heavy lakes.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
+
+from otus_clickhouse_spark.io import partition_columns, read_table, rewrite_parts
 
 
 def plan_compaction(path: str, target_bytes: int = 256 * 1024 * 1024, min_files: int = 2):
@@ -43,36 +43,14 @@ def plan_compaction(path: str, target_bytes: int = 256 * 1024 * 1024, min_files:
     return {"n_files": n, "total_bytes": total, "n_target_files": int(n_target)}
 
 def compact_table(
-    spark: SparkSession,
-    path: str,
-    order_by: tuple[str, ...] = (),
-    partition_by: tuple[str, ...] = (),
-    target_bytes: int = 256 * 1024 * 1024,
+    spark: SparkSession, td, target_bytes: int = 256 * 1024 * 1024
 ) -> dict | None:
-    """OPTIMIZE TABLE ≈ merge parts: rewrite ``path`` with ~target-size,
-    ORDER-BY-sorted files. Returns the compaction stats, or None if the
-    table was already compact.
-
-    Write-then-swap: the new file set is written beside the old one and
-    moved into place, so concurrent readers of the old listing are
-    never half-served. (On a real lakehouse this is the table format's
-    job — Iceberg/Delta rewrite_data_files — the swap here is the
-    single-writer parquet-dir equivalent.)
-    """
-    plan = plan_compaction(path, target_bytes)
+    """OPTIMIZE TABLE ≈ merge parts: rewrite the files of ``td`` (a
+    ``TableDef``) as ~target-size parts. Returns the compaction stats,
+    or None if the table was already compact."""
+    plan = plan_compaction(td.path, target_bytes)
     if plan is None:
         return None
-    df = spark.read.parquet(path)
-    out = df.repartition(plan["n_target_files"], *partition_by) if partition_by else df.repartition(plan["n_target_files"])
-    if order_by:
-        out = out.sortWithinPartitions(*order_by)
-    tmp = f"{path.rstrip('/')}.__compact_{uuid.uuid4().hex[:8]}"
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    old = f"{path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+    df = read_table(spark, td.path)
+    rewrite_parts(df.repartition(plan["n_target_files"], *partition_columns(td, df.columns)), td)
     return plan

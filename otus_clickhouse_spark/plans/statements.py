@@ -19,9 +19,10 @@ statements the reference course actually issues against tables:
   (lectures/lecture_11.md:1-130) — broadcast lookup + SQL dictGet
 
 ClickHouse mutations rewrite whole parts in place; the parquet-table
-analogue is read → transform → write-then-swap (same mechanism as
-:mod:`otus_clickhouse_spark.plans.compaction`), so concurrent readers
-of the old file listing are never half-served. Expression predicates
+analogue reads every stored row (``Engine.stored``), transforms it and
+writes the table back through :func:`otus_clickhouse_spark.io.rewrite_parts`,
+the write-then-swap compaction and INSERT's layout share, so concurrent
+readers of the old file listing are never half-served. Expression predicates
 pass through the dialect translator, so ClickHouse function names
 (``toYYYYMM(dt) = 202407`` …) work inside WHERE/assignments.
 
@@ -42,7 +43,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from otus_clickhouse_spark.engine import partition_columns
+from otus_clickhouse_spark.io import partition_columns, rewrite_parts, write_parts
 from otus_clickhouse_spark.functions.lexer import split_top, unquote
 from otus_clickhouse_spark.system_tables import CATALOG
 
@@ -275,68 +276,50 @@ def _expr(engine, text: str, frame: DataFrame):
 
 
 def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> None:
-    """Write-then-swap the mutated content back under the table's path
-    (parquet-backed), or re-register the frame (view-backed).
+    """Rewrite the table's parts with the mutated content through
+    :func:`io.rewrite_parts` (parquet-backed), or re-register the frame
+    (view-backed).
 
-    ``df`` is normally derived from ``engine.table(name)`` — the view
-    that unions the hot path with any TTL-moved cold volumes — so the
-    rewrite re-homes every surviving row under the hot path and the
-    cold tier is cleared afterwards (CH mutations rewrite parts on
+    ``df`` is normally derived from ``engine.stored(name)`` — every
+    stored row, the hot path unioned with any TTL-moved cold volumes —
+    so the rewrite re-homes every surviving row under the hot path and
+    the cold tier is cleared afterwards (CH mutations rewrite parts on
     whatever disk they live on; re-homing keeps query results identical
     without double-counting). The TTL-move pass itself persists only
     hot-tier content and passes ``keep_cold=True``.
 
-    ALIAS columns ride along in the source view but are VIRTUAL —
+    ALIAS columns ride along in the source frame but are VIRTUAL —
     persisting them would freeze their values (new inserts would read
     null instead of recomputing), so they are dropped before the write
     and re-attached by register_table.
     """
     td = engine.tables[name]
-    for alias_col in td.settings.get("aliases", {}):
-        if alias_col in df.columns:
-            df = df.drop(alias_col)
-    if td.path and os.path.exists(td.path):
-        tmp = f"{td.path.rstrip('/')}.__mut_{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        part_cols = [c for c in df.columns if c.startswith("_p_")] or [
-            c for c in td.partition_by if c in df.columns
-        ]
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(tmp)
-        # data is materialized in tmp now; a full rewrite supersedes the
-        # cold tier, so drop it before re-registering (else the union in
-        # register_table would double every previously-moved row)
-        if not keep_cold and td.settings.get("cold_volumes"):
-            for cpath in td.settings["cold_volumes"].values():
-                shutil.rmtree(cpath, ignore_errors=True)
-            td.settings.pop("cold_volumes")
-        wrote_rows = any(
-            f.endswith(".parquet") for _r, _d, fs in os.walk(tmp) for f in fs
-        )
-        if not wrote_rows:
-            # mutation emptied the (hot tier of the) table: no parquet
-            # footer to re-read under tmp
-            schema = df.schema
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(td.path, ignore_errors=True)
-            if td.settings.get("cold_volumes"):
-                # TTL moved EVERY row out: keep a real (0-row, with
-                # footer) hot path so read_table works and the df=None
-                # registration path unions the cold volumes back in
-                engine.local_frame([], schema).repartition(1).write.parquet(td.path)
-                engine.register_table(td)
-            else:
-                engine.register_table(td, df=engine.local_frame([], schema))
-            return
-        old = f"{td.path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
-        shutil.move(td.path, old)
-        shutil.move(tmp, td.path)
-        shutil.rmtree(old)
-        engine.register_table(td)
-    else:
+    df = df.drop(*td.settings.get("aliases", {}))
+    if not (td.path and os.path.exists(td.path)):
         # view-backed: cut lineage so the new view doesn't reference itself
         engine.register_table(td, df=df.localCheckpoint(eager=True))
+        return
+    rewrite_parts(df, td)
+    # a full rewrite supersedes the cold tier, so drop it before
+    # re-registering (else the union in register_table would double
+    # every previously-moved row)
+    if not keep_cold and td.settings.get("cold_volumes"):
+        for cpath in td.settings.pop("cold_volumes").values():
+            shutil.rmtree(cpath, ignore_errors=True)
+    if any(f.endswith(".parquet") for _r, _d, fs in os.walk(td.path) for f in fs):
+        engine.register_table(td)
+        return
+    # the mutation emptied the (hot tier of the) table: no parquet
+    # footer to re-read
+    shutil.rmtree(td.path, ignore_errors=True)
+    if td.settings.get("cold_volumes"):
+        # TTL moved EVERY row out: keep a real (0-row, with footer) hot
+        # path so read_table works and the registration unions the cold
+        # volumes back in
+        engine.local_frame([], df.schema).repartition(1).write.parquet(td.path)
+        engine.register_table(td)
+    else:
+        engine.register_table(td, df=engine.local_frame([], df.schema))
 
 
 def _partition_column(td) -> str:
@@ -656,36 +639,12 @@ def _try_route_inner(engine, s: str):
 
     m = _MAT_INDEX_RE.match(s)
     if m:
-        # MATERIALIZE INDEX: rewrite existing files so they carry the
-        # bloom filter too (CH rewrites old parts the same way). Write-
-        # then-swap like compaction — Spark cannot overwrite its input.
+        # MATERIALIZE INDEX: rewrite the existing parts so they carry the
+        # bloom filter too (CH rewrites old parts the same way)
         table, iname = m.groups()
-        td = engine.tables[table]
-        if iname not in td.skip_indexes:
+        if iname not in engine.tables[table].skip_indexes:
             raise ValueError(f"unknown index {iname}")
-        if td.path:
-            df = engine.table(table)
-            if td.order_by:
-                df = df.sortWithinPartitions(*[k for k in td.order_by if k in df.columns])
-            tmp = td.path.rstrip("/") + ".__idx_rewrite"
-            writer = df.write.mode("overwrite")
-            blooms = set(td.order_by) | {
-                expr
-                for expr, itype in td.skip_indexes.values()
-                if itype.split("(")[0] in ("bloom_filter", "tokenbf_v1", "ngrambf_v1")
-            }
-            for k in blooms:
-                if k in df.columns:
-                    writer = writer.option(f"parquet.bloom.filter.enabled#{k}", "true")
-            part_cols = [c for c in partition_columns(td, df.columns) if c in df.columns]
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(tmp)
-            old = td.path.rstrip("/") + ".__idx_old"
-            shutil.move(td.path, old)
-            shutil.move(tmp, td.path)
-            shutil.rmtree(old)
-            engine.register_table(td)
+        _persist(engine, table, engine.stored(table))
         return {"index_materialized": iname}
 
     m = _DROP_INDEX_RE.match(s)
@@ -745,7 +704,7 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.plans.mutations import update
 
         name, assigns, pred = m.groups()
-        df = engine.table(name)
+        df = engine.stored(name)
         assignments = {}
         for a in split_top(assigns):
             col, expr = a.split("=", 1)
@@ -758,7 +717,7 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.plans.mutations import delete
 
         name, pred = m.groups()
-        df = engine.table(name)
+        df = engine.stored(name)
         _persist(engine, name, delete(df, _expr(engine, pred, df)))
         return {"mutated": name}
 
@@ -767,7 +726,7 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.plans.mutations import lightweight_delete, read_with_mask
 
         name, pred = m.groups()
-        df = engine.table(name)
+        df = engine.stored(name)
         masked = lightweight_delete(df, _expr(engine, pred, df))
         _persist(engine, name, masked)
         # readers see the mask applied; raw rows stay on disk (lecture_16.md:196-202)
@@ -781,7 +740,7 @@ def _try_route_inner(engine, s: str):
         name, value = m.group(1), unquote(m.group(2))
         td = engine.tables[name]
         pcol = _partition_column(td)
-        df = engine.table(name)
+        df = engine.stored(name)
         typed = F.lit(value).cast(df.schema[pcol].dataType)
         _persist(engine, name, df.filter(~F.col(pcol).eqNullSafe(typed)))
         return {"dropped_partition": value}
@@ -793,7 +752,7 @@ def _try_route_inner(engine, s: str):
         name, value = m.group(1), unquote(m.group(2))
         td = engine.tables[name]
         pcol = _partition_column(td)
-        df = engine.table(name)
+        df = engine.stored(name)
         typed = F.lit(value).cast(df.schema[pcol].dataType)
         det = _detached_path(td, value)
         df.filter(F.col(pcol).eqNullSafe(typed)).write.mode("overwrite").parquet(det)
@@ -804,7 +763,7 @@ def _try_route_inner(engine, s: str):
     if m:
         name, value, src = m.group(1), unquote(m.group(2)), m.group(3)
         src_td = engine.tables[src]
-        incoming = engine.table(src)
+        incoming = engine.stored(src)
         if value != "all" and src_td.partition_by:
             pcol = _partition_column(src_td)
             typed = F.lit(value).cast(incoming.schema[pcol].dataType)
@@ -833,9 +792,9 @@ def _try_route_inner(engine, s: str):
         name, value, src = m.group(1), unquote(m.group(2)), m.group(3)
         td = engine.tables[name]
         pcol = _partition_column(td)
-        df = engine.table(name)
+        df = engine.stored(name)
         typed = F.lit(value).cast(df.schema[pcol].dataType)
-        incoming = engine.table(src)
+        incoming = engine.stored(src)
         inc_pcol = _partition_column(engine.tables[src]) if engine.tables[src].partition_by else pcol
         incoming = incoming.filter(F.col(inc_pcol).eqNullSafe(typed)).select(*df.columns)
         _persist(
@@ -850,7 +809,7 @@ def _try_route_inner(engine, s: str):
         name, value, dst = m.group(1), unquote(m.group(2)), m.group(3)
         td = engine.tables[name]
         pcol = _partition_column(td)
-        df = engine.table(name)
+        df = engine.stored(name)
         typed = F.lit(value).cast(df.schema[pcol].dataType)
         moving = df.filter(F.col(pcol).eqNullSafe(typed)).localCheckpoint(eager=True)
         dst_cols = engine.table(dst).columns
@@ -869,7 +828,7 @@ def _try_route_inner(engine, s: str):
         if value is not None:
             pcol = _partition_column(td)
             v = unquote(value)
-            df = engine.table(name)
+            df = engine.stored(name)
             df.filter(
                 F.col(pcol).eqNullSafe(F.lit(v).cast(df.schema[pcol].dataType))
             ).write.parquet(snap)
@@ -903,7 +862,6 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.functions.ddl import alias_entry, ch_type_to_spark
 
         name, col, ch_type, default, alias, after = m.groups()
-        df = engine.table(name)
         spark_type, _n = ch_type_to_spark(ch_type.strip())
         if alias:
             # ALIAS column (lecture_12.md:36-39): virtual, recomputed per
@@ -911,8 +869,9 @@ def _try_route_inner(engine, s: str):
             # (inserts, restarts) re-attaches it, and refresh the view
             td = engine.tables[name]
             td.settings.setdefault("aliases", {})[col] = alias_entry(alias, ch_type)
-            engine.with_aliases(td, df).createOrReplaceTempView(name)
+            engine.with_aliases(td, engine.table(name)).createOrReplaceTempView(name)
             return {"added_column": col, "alias": True}
+        df = engine.stored(name)
         value = (
             _expr(engine, default, df).cast(spark_type) if default else F.lit(None).cast(spark_type)
         )
@@ -927,7 +886,8 @@ def _try_route_inner(engine, s: str):
     m = _DROP_COL_RE.match(s)
     if m:
         name, col = m.groups()
-        _persist(engine, name, engine.table(name).drop(col))
+        engine.tables[name].settings.get("aliases", {}).pop(col, None)
+        _persist(engine, name, engine.stored(name).drop(col))
         return {"dropped_column": col}
 
     m = _MODIFY_COL_DEFAULT_RE.match(s)
@@ -944,14 +904,14 @@ def _try_route_inner(engine, s: str):
 
         name, col, ch_type = m.groups()
         spark_type, _n = ch_type_to_spark(ch_type.strip())
-        df = engine.table(name)
+        df = engine.stored(name)
         _persist(engine, name, df.withColumn(col, F.col(col).cast(spark_type)))
         return {"modified_column": col}
 
     m = _RENAME_COL_RE.match(s)
     if m:
         name, old, new = m.groups()
-        _persist(engine, name, engine.table(name).withColumnRenamed(old, new))
+        _persist(engine, name, engine.stored(name).withColumnRenamed(old, new))
         return {"renamed_column": (old, new)}
 
     m = _MODIFY_TTL_RE.match(s)
@@ -1002,16 +962,16 @@ def _try_route_inner(engine, s: str):
             expired = main.filter(pred)
             moved = expired.count()
             if moved:
-                expired.write.mode("append").parquet(cold)
+                write_parts(expired, td, cold)
                 td.settings.setdefault("cold_volumes", {})[vol] = cold
                 # hot-tier-only content: the cold volume we just wrote
                 # must survive this rewrite
                 _persist(engine, name, main.filter(~pred), keep_cold=True)
             return {"ttl_applied": name, "moved": moved, "to": action}
-        before = engine.table(name).count()
-        df = engine.table(name)
+        df = engine.stored(name)
+        before = df.count()
         _persist(engine, name, ttl_expire(df, _expr(engine, ttl, df)))
-        return {"ttl_applied": name, "dropped": before - engine.table(name).count()}
+        return {"ttl_applied": name, "dropped": before - engine.stored(name).count()}
 
     m = _OPTIMIZE_RE.match(s)
     if m:
@@ -1019,7 +979,7 @@ def _try_route_inner(engine, s: str):
         td = engine.tables[name]
         if "DEDUPLICATE" in s.upper():
             cols = [c.strip() for c in dedup_by.split(",")] if dedup_by else None
-            df = engine.table(name)
+            df = engine.stored(name)
             df = df.dropDuplicates(cols) if cols else df.dropDuplicates()
             _persist(engine, name, df)
             return {"optimized": name, "deduplicate": True}
@@ -1032,16 +992,15 @@ def _try_route_inner(engine, s: str):
         ):
             # materialize the collapse (merge-to-completion), like a
             # forced final merge (lecture_07.md:362-377)
-            _persist(engine, name, engine.table(f"{name}__final"))
+            from otus_clickhouse_spark.operators.final import final_view
+
+            _persist(engine, name, final_view(engine.stored(name), td))
             return {"optimized": name, "final": True}
         from otus_clickhouse_spark.plans.compaction import compact_table
 
         stats = None
         if td.path and os.path.exists(td.path):
-            # keep the on-disk partition directories: compacted files
-            # written unpartitioned beside them vanish from the next read
-            pcols = tuple(partition_columns(td, engine.table(name).columns))
-            stats = compact_table(engine.spark, td.path, td.order_by, pcols)
+            stats = compact_table(engine.spark, td)
             engine.register_table(td)
         return {"optimized": name, "compaction": stats}
 

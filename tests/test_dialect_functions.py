@@ -1657,8 +1657,9 @@ def test_update_assignment_and_predicate_get_the_select_repair(arr_t):
 def test_alias_column_keeps_the_repair_across_inserts(arr_t, tmp_path):
     """The stored ALIAS text is re-attached on every re-registration
     (each INSERT refreshes the view) through the same repair, cast to
-    the declared type; an untyped ALIAS keeps the expression's type.
-    Declared by ALTER ADD COLUMN, or at CREATE with and without a type."""
+    the declared type; an untyped ALIAS keeps the expression's type,
+    until DROP COLUMN removes it. Declared by ALTER ADD COLUMN, or at
+    CREATE with and without a type."""
     arr_t.execute("ALTER TABLE arr_t ADD COLUMN n UInt64 ALIAS length(a)")
     tables = {"arr_t": "decimal(20,0)"}
     for name, decl, dtype in [
@@ -1683,6 +1684,11 @@ def test_alias_column_keeps_the_repair_across_inserts(arr_t, tmp_path):
         assert n_of(name) == (dtype, [(1, 2), (2, 0), (3, 1), (4, 3)])
         arr_t.execute(f"ALTER TABLE {name} DELETE WHERE n = 0")
         assert [r.k for r in arr_t.sql(f"SELECT k FROM {name} ORDER BY k").collect()] == [1, 3, 4]
+        # DROP COLUMN forgets the ALIAS, so no re-registration brings it back
+        arr_t.execute(f"ALTER TABLE {name} DROP COLUMN n")
+        assert arr_t.sql(f"SELECT * FROM {name}").columns == ["k", "s", "a"]
+        arr_t.execute(f"INSERT INTO {name} (k, s, a) VALUES (5, 'v', [])")
+        assert arr_t.sql(f"SELECT * FROM {name}").columns == ["k", "s", "a"]
     for name in ("arr_typed", "arr_untyped"):
         arr_t.execute(f"DROP TABLE {name}")
 

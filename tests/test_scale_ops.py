@@ -8,6 +8,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from otus_clickhouse_spark.engine import TableDef
 from otus_clickhouse_spark.operators import skew
 from otus_clickhouse_spark.plans import compaction
 
@@ -60,13 +61,14 @@ def test_compaction_merges_small_files(spark, tmp_path):
     ).repartition(16).write.parquet(path)
     before = compaction.plan_compaction(path, target_bytes=10 * 1024 * 1024)
     assert before and before["n_files"] == 16 and before["n_target_files"] == 1
-    stats = compaction.compact_table(spark, path, order_by=("id",), target_bytes=10 * 1024 * 1024)
+    td = TableDef(name="tbl", path=path, order_by=("id",))
+    stats = compaction.compact_table(spark, td, target_bytes=10 * 1024 * 1024)
     assert stats == before
     n_files = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
     assert n_files == 1
     assert spark.read.parquet(path).count() == 10_000
     # idempotent: already compact → no-op
-    assert compaction.compact_table(spark, path, target_bytes=10 * 1024 * 1024) is None
+    assert compaction.compact_table(spark, td, target_bytes=10 * 1024 * 1024) is None
 
 
 def test_query_log(engine):

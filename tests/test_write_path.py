@@ -85,8 +85,9 @@ def test_append_reuses_schema_equal_to_fresh_inference(engine, tmp_path, read_sp
                 f"INSERT INTO wp_plain SELECT toUInt32({k}) AS k, 'y' AS s, "
                 f"toDate('2024-06-07') AS d, toFloat64(2.5) AS v, toUInt8({x}) AS x"
             )
-        # the ALTER rewrite re-infers; appends with its schema reuse it
-        assert read_spy[3:] == [False, True, True]
+        # the ALTER reads the stored rows with the known schema and its
+        # rewrite re-infers; appends with its schema reuse it
+        assert read_spy[3:] == [True, False, True, True]
         _assert_matches_fresh_read(engine, "wp_plain")
         assert engine.run("SELECT sum(x) AS n FROM wp_plain")[0][0] == 22 * 7 + 9 + 1
     finally:
