@@ -33,6 +33,7 @@ from otus_clickhouse_spark.functions.lexer import (
     strip_comments,
     unquote,
 )
+from otus_clickhouse_spark.plans.mutations import read_with_mask
 from otus_clickhouse_spark.system_tables import CATALOG
 
 @dataclass
@@ -206,7 +207,7 @@ class Engine:
                 and _fields(known) == _fields(appended)
             )
             frame = self._read_parts(td, known if reuse else None)
-        frame = self.with_aliases(td, frame)
+        frame = read_with_mask(self.with_aliases(td, frame))
         # row policies (lecture_18.md:561-609): mandatory prefilter on
         # every read; permissive policies OR together like the reference
         preds = self._row_policies.get(td.name)
@@ -247,9 +248,8 @@ class Engine:
         mutation built from it would delete the hidden rows. This reads
         the table's files instead, with its ALIAS columns and without
         the rows a lightweight DELETE masked. A table without files is
-        its registered view."""
-        from otus_clickhouse_spark.plans.mutations import read_with_mask
-
+        its registered view, so a mutation of a view-backed table under
+        a row policy still drops the rows the policy hides."""
         td = self.tables.get(name)
         if td is None or not td.path or not os.path.exists(td.path):
             return self.table(name)
@@ -1751,9 +1751,14 @@ class Engine:
         # (lecture_12.md:14-27) — overwrite/add regardless of the input
         for col, expr in td.settings.get("materialized", {}).items():
             df = df.withColumn(col, F.expr(expr))
-        write_parts(df, td, td.path, mode)
+        part = df
+        if mode == "append" and "_row_exists" in self._file_schemas.get(name, StructType()).names:
+            # a lightweight DELETE masked the files: the new part carries
+            # the mask too, so whichever footer a read infers from has it
+            part = df.withColumn("_row_exists", F.lit(1))
+        write_parts(part, td, td.path, mode)
         # refresh the view over the new file set
-        self.register_table(td, appended=df.schema if mode == "append" else None)
+        self.register_table(td, appended=part.schema if mode == "append" else None)
         # push the inserted block through attached MVs synchronously,
         # like ClickHouse's PushingToViews (lecture_13.md:160-166);
         # an MV inserting into its target re-triggers that table's MVs,

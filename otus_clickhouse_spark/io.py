@@ -105,6 +105,9 @@ def write_parts(df: DataFrame, td, path: str, mode: str = "append") -> None:
         for expr, itype in td.skip_indexes.values()
         if itype.split("(")[0] in ("bloom_filter", "tokenbf_v1", "ngrambf_v1")
     }
+    # OPTIMIZE of a 240k-row table with two bloom columns, on 4 cores:
+    # the filters cost 130-260 ms of about 1 s; LZ4 against snappy and
+    # 3 against 10 candidates change nothing beyond the noise
     for col in blooms & set(df.columns):
         writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true").option(
             f"parquet.bloom.filter.candidates.number#{col}", "10"

@@ -41,8 +41,13 @@ def lightweight_delete(df: DataFrame, where: Column) -> DataFrame:
 
 
 def read_with_mask(df: DataFrame) -> DataFrame:
+    """``df`` without the rows a lightweight DELETE masked.
+
+    A file written without the mask (an INSERT after the DELETE) reads
+    it as NULL under the masked files' schema: its rows exist."""
     if "_row_exists" in df.columns:
-        return df.filter(F.col("_row_exists") == 1).drop("_row_exists")
+        exists = F.coalesce(F.col("_row_exists"), F.lit(1)) == 1
+        return df.filter(exists).drop("_row_exists")
     return df
 
 

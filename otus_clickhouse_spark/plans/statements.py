@@ -642,9 +642,11 @@ def _try_route_inner(engine, s: str):
         # MATERIALIZE INDEX: rewrite the existing parts so they carry the
         # bloom filter too (CH rewrites old parts the same way)
         table, iname = m.groups()
-        if iname not in engine.tables[table].skip_indexes:
+        td = engine.tables[table]
+        if iname not in td.skip_indexes:
             raise ValueError(f"unknown index {iname}")
-        _persist(engine, table, engine.stored(table))
+        if td.path and os.path.exists(td.path):  # no files, no parts to rewrite
+            _persist(engine, table, engine.stored(table))
         return {"index_materialized": iname}
 
     m = _DROP_INDEX_RE.match(s)
@@ -723,14 +725,13 @@ def _try_route_inner(engine, s: str):
 
     m = _LW_DELETE_RE.match(s)
     if m:
-        from otus_clickhouse_spark.plans.mutations import lightweight_delete, read_with_mask
+        from otus_clickhouse_spark.plans.mutations import lightweight_delete
 
         name, pred = m.groups()
         df = engine.stored(name)
-        masked = lightweight_delete(df, _expr(engine, pred, df))
-        _persist(engine, name, masked)
-        # readers see the mask applied; raw rows stay on disk (lecture_16.md:196-202)
-        read_with_mask(engine.table(name)).createOrReplaceTempView(name)
+        # raw rows stay on disk; register_table hides the masked ones
+        # (lecture_16.md:196-202)
+        _persist(engine, name, lightweight_delete(df, _expr(engine, pred, df)))
         return {"mutated": name}
 
     m = _DROP_PART_RE.match(s)

@@ -138,6 +138,35 @@ def test_mutation_keeps_rows_hidden_by_a_row_policy(engine, tmp_path):
         _drop(engine, "rp")
 
 
+def test_rows_inserted_after_a_lightweight_delete_survive_a_mutation(engine, tmp_path):
+    """An INSERT after ``DELETE FROM`` keeps the deleted rows hidden and
+    its own rows visible, and the next rewrite keeps exactly those."""
+    from otus_clickhouse_spark.plans.mutations import read_with_mask
+
+    # a part written without the mask reads it as NULL: its rows exist
+    unmasked = engine.local_frame([(1, 0), (2, 1), (3, None)], "k INT, _row_exists INT")
+    assert sorted(r.k for r in read_with_mask(unmasked).collect()) == [2, 3]
+
+    _drop(engine, "lw")
+    engine.execute("CREATE TABLE lw (k UInt32, s String) ENGINE = MergeTree ORDER BY k")
+    path = engine.tables["lw"].path = str(tmp_path / "lw")
+    try:
+        engine.execute("INSERT INTO lw VALUES (1, 'a'), (2, 'b')")
+        engine.execute("DELETE FROM lw WHERE k = 1")
+        engine.execute("INSERT INTO lw VALUES (3, 'c')")
+        # every part carries the mask, so any footer's schema has it
+        assert all("_row_exists" in pq.read_schema(f).names for f in _files(path))
+        assert [tuple(r) for r in engine.run("SELECT * FROM lw ORDER BY k")] == [
+            (2, "b"), (3, "c")
+        ]
+        engine.execute("ALTER TABLE lw UPDATE s = 'x' WHERE k = 2")
+        assert [tuple(r) for r in engine.run("SELECT * FROM lw ORDER BY k")] == [
+            (2, "x"), (3, "c")
+        ]
+    finally:
+        _drop(engine, "lw")
+
+
 def test_tuple_partition_key_with_a_call(engine, tmp_path):
     """``PARTITION BY (k, toYYYYMM(d))`` parses whole, and a mutation
     rewrites both directory levels, so the next INSERT still lands."""
