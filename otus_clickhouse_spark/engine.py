@@ -24,10 +24,17 @@ from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from otus_clickhouse_spark.functions.clickhouse import (
+    called_functions,
+    ensure_functions,
+    frame_expr,
+    set_current_user,
+)
 from otus_clickhouse_spark.functions.lexer import (
     LIT,
     Masked,
     call_args,
+    close_paren,
     split_statements,
     split_top,
     strip_comments,
@@ -163,9 +170,6 @@ class Engine:
         from otus_clickhouse_spark.plans.projections import ProjectionRegistry
 
         self.projections = ProjectionRegistry()
-        from otus_clickhouse_spark.functions.clickhouse import register_clickhouse_functions
-
-        register_clickhouse_functions(spark)
         if data_dir:
             self.register_data_dir(data_dir)
 
@@ -212,7 +216,7 @@ class Engine:
         # every read; permissive policies OR together like the reference
         preds = self._row_policies.get(td.name)
         if preds:
-            frame = frame.filter(" OR ".join(f"({p})" for p in preds))
+            frame = frame.filter(frame_expr(frame, " OR ".join(f"({p})" for p in preds)))
         frame.createOrReplaceTempView(td.name)
         if td.engine in (
             "ReplacingMergeTree",
@@ -415,10 +419,7 @@ class Engine:
         self.current_user = name
         # currentUser() is a SQL UDF — rebind it to the live user so
         # queries observe the switch (CH's currentUser() does)
-        self.spark.sql(
-            "CREATE OR REPLACE TEMPORARY FUNCTION currentUser() "
-            f"RETURNS STRING RETURN '{name}'"
-        )
+        set_current_user(self.spark, name)
         grantees = {name} | self._role_grants.get(name, set())
         for prof in self._profiles.values():
             if grantees & prof["to"]:
@@ -537,7 +538,7 @@ class Engine:
         frame = self.table(local)
         key = td.settings.get("sharding_key")
         if key and n > 1:
-            shard = (F.pmod(F.expr(key).cast("bigint"), F.lit(n)) + 1).cast("int")
+            shard = (F.pmod(frame_expr(frame, key).cast("bigint"), F.lit(n)) + 1).cast("int")
         else:
             shard = F.lit(1).cast("int")
         frame.withColumn("_shard_num", shard).createOrReplaceTempView(td.name)
@@ -1060,7 +1061,7 @@ class Engine:
             if f.name in frame.columns:
                 out.append(_enum_norm(td, f.name, F.col(f.name).cast(f.dataType)))
             elif f.name in defaults:
-                out.append(F.expr(defaults[f.name]).cast(f.dataType).alias(f.name))
+                out.append(frame_expr(frame, defaults[f.name]).cast(f.dataType).alias(f.name))
             elif f.nullable:
                 out.append(F.lit(None).cast(f.dataType).alias(f.name))
             else:
@@ -1073,10 +1074,22 @@ class Engine:
         # tuples — so the clause goes through the same literal rewrites
         # as a SELECT (found by the r11 dialect fuzz: INSERT … VALUES
         # with an array literal parse-errored while SELECT [1,2] worked)
+        vals = self._values(values_clause)
+        return self._align_block(name, vals, cols or [f.name for f in self._writable(name)])
+
+    def _values(self, values: str) -> DataFrame:
+        """The rows of a ``VALUES (…), (…)`` clause. An inline table
+        (or a generator) cannot call a SQL function, so rows that call a
+        ClickHouse function are read as a UNION ALL of one-row SELECTs."""
         from otus_clickhouse_spark.functions.dialect import _rewrite_array_literals
 
-        vals = self.spark.sql(f"SELECT * FROM {_rewrite_array_literals(values_clause)}")
-        return self._align_block(name, vals, cols or [f.name for f in self._writable(name)])
+        values = _rewrite_array_literals(values)
+        if not called_functions(values):
+            return self.spark.sql(f"SELECT * FROM {values}")
+        rows = split_top(re.sub(r"(?i)^\s*VALUES\b", "", values))
+        select = " UNION ALL ".join(map(_row_select, rows))
+        ensure_functions(self.spark, select)
+        return self.spark.sql(select)
 
     def _format_frame(
         self, name: str, fmt: str, data: str, cols: list[str] | None = None
@@ -1420,7 +1433,10 @@ class Engine:
         against it, and the result is the fragment's Column. A statement
         costs 1 + (calls repaired) analyses; one that cannot be repaired
         raises its first error. PySpark's log record of each failed
-        attempt is dropped (:func:`_quiet_analysis`)."""
+        attempt is dropped (:func:`_quiet_analysis`). The ClickHouse
+        functions ``sql`` calls are registered first, in the session
+        that analyzes it."""
+        ensure_functions(self.spark if frame is None else frame.sparkSession, sql)
         with _quiet_analysis():
             try:
                 return self._analyze_once(sql, params, frame)
@@ -1497,7 +1513,7 @@ class Engine:
 
         data = unquote(raw)
         if fmt.lower() == "values":
-            df = self.spark.sql(f"SELECT * FROM (VALUES {data})")
+            df = self._values(f"VALUES {data}")
             return df.toDF(*[f"c{i + 1}" for i in range(len(df.columns))])
         from otus_clickhouse_spark.sources.readers import _reader
 
@@ -1738,10 +1754,15 @@ class Engine:
             # then land in the local table
             key = td.settings.get("sharding_key")
             n = td.settings.get("n_shards", 1)
-            if key and n > 1:
-                df = df.repartition(n, F.pmod(F.expr(key).cast("bigint"), F.lit(n)))
-            elif key:
-                df = df.repartition(F.expr(key))
+            if key:
+                # a repartition cannot call a SQL function: project the key first
+                df = df.withColumn("__shard", frame_expr(df, key))
+                shard = F.col("__shard")
+                if n > 1:
+                    df = df.repartition(n, F.pmod(shard.cast("bigint"), F.lit(n)))
+                else:
+                    df = df.repartition(shard)
+                df = df.drop("__shard")
             self.insert(td.settings["local_table"], df, mode=mode)
             self._register_distributed(td)  # refresh proxy view + _shard_num
             for mv in self._mvs.get(name, []):
@@ -1750,7 +1771,7 @@ class Engine:
         # MATERIALIZED columns: always computed at insert, never writable
         # (lecture_12.md:14-27) — overwrite/add regardless of the input
         for col, expr in td.settings.get("materialized", {}).items():
-            df = df.withColumn(col, F.expr(expr))
+            df = df.withColumn(col, frame_expr(df, expr))
         part = df
         if mode == "append" and "_row_exists" in self._file_schemas.get(name, StructType()).names:
             # a lightweight DELETE masked the files: the new part carries
@@ -1777,7 +1798,7 @@ class Engine:
                 ivf_append_index(
                     df.select(
                         F.col(meta["id_col"]).alias("vec_id"),
-                        F.expr(meta["expr"]).alias("embedding"),
+                        frame_expr(df, meta["expr"]).alias("embedding"),
                     ),
                     meta["path"],
                 )
@@ -1795,9 +1816,10 @@ class Engine:
             meta["path"] = td.path.rstrip("/") + f".__ivf_{iname}"
         if not meta.get("path") or not td.path or not os.path.exists(td.path):
             return False
-        rows = self.table(table).select(
+        src = self.table(table)
+        rows = src.select(
             F.col(meta["id_col"]).alias("vec_id"),
-            F.expr(meta["expr"]).alias("embedding"),
+            frame_expr(src, meta["expr"]).alias("embedding"),
         )
         if rows.isEmpty():
             return False
@@ -1851,9 +1873,10 @@ class Engine:
                     shutil.rmtree(meta["path"], ignore_errors=True)
                 meta["built"] = False
                 continue
-            rows = self.table(name).select(
+            src = self.table(name)
+            rows = src.select(
                 F.col(meta["id_col"]).alias("vec_id"),
-                F.expr(meta["expr"]).alias("embedding"),
+                frame_expr(src, meta["expr"]).alias("embedding"),
             )
             if rows.isEmpty():
                 # mutation emptied the table: no rows to assign — drop
@@ -2347,16 +2370,15 @@ def F_desc(col: str):
     return F.desc(col)
 
 
-def _order_expr(item: str):
-    """Parse one ORDER BY item ('expr [ASC|DESC] [NULLS FIRST|LAST]')."""
-    from pyspark.sql import functions as F
-
+def _order_expr(df: DataFrame, item: str):
+    """Parse one ORDER BY item ('expr [ASC|DESC] [NULLS FIRST|LAST]')
+    over ``df``."""
     m = re.match(
         r"(.*?)(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?\s*$",
         item.strip(),
         re.IGNORECASE | re.DOTALL,
     )
-    c = F.expr(m.group(1))
+    c = frame_expr(df, m.group(1))
     return c.desc() if (m.group(2) or "").upper() == "DESC" else c.asc()
 
 
@@ -2410,15 +2432,15 @@ def _apply_limit_by(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    order = [_order_expr(o) for o in order_items] or [F.lit(1).asc()]
-    w = Window.partitionBy(*[F.expr(b) for b in by_items]).orderBy(*order)
+    order = [_order_expr(df, o) for o in order_items] or [F.lit(1).asc()]
+    w = Window.partitionBy(*[frame_expr(df, b) for b in by_items]).orderBy(*order)
     out = (
         df.withColumn("__lb_rn", F.row_number().over(w))
         .filter(F.col("__lb_rn") <= n_per)
         .drop("__lb_rn")
     )
     if order_items:
-        out = out.orderBy(*[_order_expr(o) for o in order_items])
+        out = out.orderBy(*[_order_expr(out, o) for o in order_items])
     out = out.drop(*hidden)
     return out.limit(tail) if tail is not None else out
 
@@ -2483,6 +2505,13 @@ def _repair_call(sql: str, exc: AnalysisException) -> str | None:
             return None
         call = f"element_at({args[0]}, CAST({args[1]} AS INT))"
     return sql[:start] + lits.unmask(call) + sql[stop:]
+
+
+def _row_select(row: str) -> str:
+    """The one-row SELECT of a VALUES row: a tuple ``(1, 'a')`` or one value."""
+    masked = Masked(row).text
+    whole = masked.startswith("(") and close_paren(masked, 0) == len(masked) - 1
+    return f"SELECT {row[1:-1] if whole else row}"
 
 
 def _fields(schema: StructType) -> list[tuple]:

@@ -1,3 +1,3 @@
-from otus_clickhouse_spark.functions.clickhouse import register_clickhouse_functions
+from otus_clickhouse_spark.functions.clickhouse import ensure_functions
 
-__all__ = ["register_clickhouse_functions"]
+__all__ = ["ensure_functions"]

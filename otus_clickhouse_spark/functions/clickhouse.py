@@ -7,12 +7,24 @@ RETURN <expr>``) — Catalyst inlines the body into the plan, so these
 cost nothing at runtime (no Python round-trip, stays inside
 whole-stage codegen).
 
+A function is registered the first time a statement or expression
+names it, in the session that analyzes the text
+(:func:`ensure_functions`): a session pays one ``CREATE`` per function
+it uses, not one per function in the table. No ClickHouse name is also
+a Spark builtin, so a text that misses registration fails with
+``UNRESOLVED_ROUTINE`` instead of resolving to another function.
+
 Citations are to the reference usage site under /root/reference/.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import random
+import re
+import threading
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # name -> (args, return type, body). All bodies are plain Spark SQL
 # expressions: they inline into the logical plan.
@@ -729,16 +741,14 @@ _SQL_FUNCTIONS: list[tuple[str, str, str, str]] = [
     ("negate", "x DOUBLE", "DOUBLE", "-x"),
     ("arrayWithConstant", "n INT, x DOUBLE", "ARRAY<DOUBLE>",
      "array_repeat(x, n)"),
-    # randConstant is registered separately (see
-    # register_clickhouse_functions): CH returns ONE value for the
-    # whole block/query; a bare rand() redraws per row. ADVICE r8: the
-    # literal is drawn at REGISTRATION time (per session) rather than
-    # module import, so independent engines/sessions in one Python
-    # process no longer share a value. Remaining documented
-    # divergence: CH redraws per query/block, this redraws per
-    # session registration (SQL UDF bodies inline at registration, so
-    # a per-query draw would need a scalar subquery, which UDF bodies
-    # can't host).
+    # randConstant: CH returns ONE value for the whole block/query; a
+    # bare rand() redraws per row. Its body is a literal drawn when a
+    # session registers it (see _FUNCTIONS below), so independent
+    # engines/sessions in one Python process do not share a value.
+    # Remaining documented divergence: CH redraws per query/block,
+    # this draws once per session (SQL UDF bodies inline at
+    # registration, so a per-query draw would need a scalar subquery,
+    # which UDF bodies can't host).
     ("nowInBlock", "", "TIMESTAMP", "now()"),
     ("fromModifiedJulianDay", "n INT", "DATE",
      "date_add(DATE'1858-11-17', n)"),
@@ -767,7 +777,7 @@ _SQL_FUNCTIONS: list[tuple[str, str, str, str]] = [
      "BOOLEAN",
      "((x - x0) * (x - x0)) / (a * a) + ((y - y0) * (y - y0)) / (b * b)"
      " <= 1.0"),
-    # re-registered with the live user name by Engine.set_user
+    # rebound to the live user name by set_current_user
     ("currentUser", "", "STRING", "'default'"),
 ]
 
@@ -858,23 +868,81 @@ SCALAR_ALIASES = {
     "tuple": "struct",
 }
 
-_registered_sessions: set[int] = set()
+# lower-cased name -> (name, args, return type, body). Spark resolves
+# function names case-insensitively, so the lookup is too. The body of
+# randConstant is None: a literal drawn once per session replaces it.
+_FUNCTIONS: dict[str, tuple[str, str, str, str | None]] = {
+    f[0].lower(): f for f in [*_SQL_FUNCTIONS, ("randConstant", "", "DOUBLE", None)]
+}
+_CALL_RE = re.compile(r"([A-Za-z_]\w*)\s*\(")
 
 
-def register_clickhouse_functions(spark: SparkSession) -> None:
-    """Idempotently register the ClickHouse-name SQL UDF surface."""
-    key = id(spark)
-    if key in _registered_sessions:
+def called_functions(text: str) -> set[str]:
+    """The lower-cased names of the table's functions that ``text`` calls."""
+    return {n for n in map(str.lower, _CALL_RE.findall(text)) if n in _FUNCTIONS}
+
+
+# the functions a body calls, registered before it
+_DEPENDENCIES = {
+    key: sorted(called_functions(body) - {key})
+    for key, (_name, _args, _rtype, body) in _FUNCTIONS.items()
+    if body
+}
+
+# JVM session UUID -> names registered there. Temporary functions live
+# in the JVM session, which every Engine of the process may share, so
+# the record of them is per process too. A set is replaced, never
+# mutated, so the lock-free read in ensure_functions sees a whole one.
+_registered: dict[str, frozenset[str]] = {}
+_lock = threading.Lock()
+
+
+def ensure_functions(spark: SparkSession, text: str) -> None:
+    """Register in ``spark`` each ClickHouse function that ``text``
+    calls and the session lacks, after the functions its body calls.
+
+    ``spark`` is the session that will analyze ``text``. Sessions are
+    told apart by their JVM session, not by the Python wrapper:
+    Structured Streaming hands ``foreachBatch`` a frame of a cloned
+    session with its own temporary functions."""
+    wanted = called_functions(text)
+    if not wanted:
         return
-    for name, args, rtype, body in _SQL_FUNCTIONS:
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) RETURNS {rtype} RETURN {body}"
-        )
-    # per-SESSION draw (see the randConstant note in _SQL_FUNCTIONS)
-    import random
+    key = spark._jsparkSession.sessionUUID()
+    if wanted <= _registered.get(key, frozenset()):
+        return
+    with _lock:
+        done = set(_registered.get(key, ()))
+        for name in sorted(wanted):
+            _register(spark, name, done)
+        _registered[key] = frozenset(done)
 
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION randConstant() "
-        f"RETURNS DOUBLE RETURN {random.random()!r}"
-    )
-    _registered_sessions.add(key)
+
+def _register(spark: SparkSession, key: str, done: set[str]) -> None:
+    if key in done:
+        return
+    for dep in _DEPENDENCIES.get(key, ()):
+        _register(spark, dep, done)
+    name, args, rtype, body = _FUNCTIONS[key]
+    _create(spark, name, args, rtype, body or repr(random.random()))
+    done.add(key)
+
+
+def _create(spark: SparkSession, name: str, args: str, rtype: str, body: str) -> None:
+    spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) RETURNS {rtype} RETURN {body}")
+
+
+def set_current_user(spark: SparkSession, user: str) -> None:
+    """Rebind ``currentUser()`` in ``spark`` to ``user`` and mark it
+    registered, so a later first use cannot rebind it to ``'default'``."""
+    key = spark._jsparkSession.sessionUUID()
+    with _lock:
+        _create(spark, "currentUser", "", "STRING", f"'{user}'")
+        _registered[key] = _registered.get(key, frozenset()) | {"currentuser"}
+
+
+def frame_expr(frame: DataFrame, text: str) -> Column:
+    """``F.expr(text)`` to use over ``frame``, with the ClickHouse
+    functions ``text`` calls registered in ``frame``'s session."""
+    ensure_functions(frame.sparkSession, text)
+    return F.expr(text)

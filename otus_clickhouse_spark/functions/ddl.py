@@ -187,6 +187,11 @@ _CREATE_RE = re.compile(
     r"(?P<rest>.*)$",
     re.IGNORECASE | re.DOTALL,
 )
+# the clauses that can follow a key in a CREATE TABLE's tail
+_CLAUSE_RE = re.compile(
+    r"\b(?:ORDER\s+BY|PARTITION\s+BY|PRIMARY\s+KEY|SAMPLE\s+BY|TTL|SETTINGS|COMMENT)\b",
+    re.IGNORECASE,
+)
 _COL_EXTRAS_RE = re.compile(
     r"\s+(DEFAULT|MATERIALIZED|ALIAS|CODEC|COMMENT|TTL)\b.*$", re.IGNORECASE | re.DOTALL
 )
@@ -276,19 +281,30 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
     tail = Masked(rest)
 
     def clause(kw: str) -> str | None:
-        # a key is one bare word or a call/tuple up to its closing paren
-        cm = re.search(rf"\b{kw}\s+(\w*\(|\S+)", tail.text, re.IGNORECASE)
+        # a key is the whole expression up to the next table clause
+        # outside parentheses: `PARTITION BY k % 2 ORDER BY k`
+        cm = re.search(rf"\b{kw}\s+", tail.text, re.IGNORECASE)
         if not cm:
             return None
-        end = close_paren(tail.text, cm.end() - 1) + 1 if cm.group(1)[-1] == "(" else cm.end()
-        return tail.unmask(tail.text[cm.start(1) : end]).strip()
+        body = tail.text[cm.end() :]
+        end = next(
+            (
+                e.start()
+                for e in _CLAUSE_RE.finditer(body)
+                if body.count("(", 0, e.start()) == body.count(")", 0, e.start())
+            ),
+            len(body),
+        )
+        return tail.unmask(body[:end]).strip()
 
     def key_tuple(raw: str | None) -> tuple[str, ...]:
         if not raw or raw.lower() == "tuple()":
             return ()
-        if raw.startswith("(") and raw.endswith(")"):
-            return tuple(k for k in split_top(raw[1:-1]) if k)
-        return (raw,)  # single column or expression key (e.g. toYYYYMM(dt))
+        masked = Masked(raw).text
+        if masked.startswith("(") and close_paren(masked, 0) == len(masked) - 1:
+            raw = raw[1:-1]  # a tuple of keys, not `(a + b) * 2`
+        # columns or expression keys (e.g. toYYYYMM(dt), k % 2)
+        return tuple(k for k in split_top(raw) if k)
 
     engine = m.group("engine")
     raw_args = m.group("engine_args") or ""

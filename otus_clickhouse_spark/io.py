@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from otus_clickhouse_spark.functions.clickhouse import frame_expr
+
 
 def _nanos_columns(path: str) -> list[str]:
     try:
@@ -90,7 +92,7 @@ def write_parts(df: DataFrame, td, path: str, mode: str = "append") -> None:
     part_cols = partition_columns(td, df.columns)
     for expr, col in zip(td.partition_by, part_cols):
         if col != expr:
-            df = df.withColumn(col, F.expr(expr))
+            df = df.withColumn(col, frame_expr(df, expr))
     keys = [k for k in td.order_by if k in df.columns]
     if part_cols or keys:
         df = df.sortWithinPartitions(*part_cols, *keys)

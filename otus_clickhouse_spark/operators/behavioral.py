@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from otus_clickhouse_spark.functions.clickhouse import frame_expr
+
 __all__ = [
     "window_funnel_expr",
     "window_funnel",
@@ -97,7 +99,7 @@ def window_funnel(
     ordered by funnel step (e.g. ``["event_type = 'view'", …]``).
     """
     expr = window_funnel_expr(ts_col, conds_sql, window_seconds)
-    return df.groupBy(user_col).agg(F.expr(expr).alias(level_col))
+    return df.groupBy(user_col).agg(frame_expr(df, expr).alias(level_col))
 
 
 def sequence_match(
@@ -126,7 +128,7 @@ def retention(
     ``r_i = cond1 AND cond_i fired`` — one 0/1 column per condition
     (``r1 … rN``). Single map-side-combinable aggregation."""
     flags = [
-        F.max(F.expr(f"IF(({c}), 1, 0)")).alias(f"__m{i}")
+        F.max(frame_expr(df, f"IF(({c}), 1, 0)")).alias(f"__m{i}")
         for i, c in enumerate(conds_sql)
     ]
     agg = df.groupBy(user_col).agg(*flags)
@@ -279,7 +281,7 @@ def sequence_count(
 ) -> DataFrame:
     """Per-user non-overlapping ordered-sequence match count."""
     expr = sequence_count_expr(ts_col, conds_sql, window_seconds)
-    return df.groupBy(user_col).agg(F.expr(expr).alias(count_col))
+    return df.groupBy(user_col).agg(frame_expr(df, expr).alias(count_col))
 
 
 def histogram(

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from otus_clickhouse_spark.io import partition_columns, rewrite_parts, write_parts
-from otus_clickhouse_spark.functions.lexer import split_top, unquote
+from otus_clickhouse_spark.functions.lexer import Masked, split_top, unquote
 from otus_clickhouse_spark.system_tables import CATALOG
 
 _UPDATE_RE = re.compile(
@@ -273,6 +273,20 @@ def _expr(engine, text: str, frame: DataFrame):
     from otus_clickhouse_spark.functions.dialect import translate
 
     return engine._analyze(translate(text, engine.tables), frame=frame)
+
+
+def _schema_columns(schema: str) -> list[str]:
+    """The column definitions of a declared schema (``k BIGINT NOT NULL,
+    m MAP<STRING, INT>``), split at the commas outside quoted names and
+    the ``()``, ``<>`` and ``[]`` of their types."""
+    lits = Masked(schema)
+    cols, depth, start = [], 0, 0
+    for i, c in enumerate(lits.text):
+        depth += (c in "(<[") - (c in ")>]")
+        if c == "," and depth == 0:
+            cols.append(lits.text[start:i])
+            start = i + 1
+    return [lits.unmask(c).strip() for c in [*cols, lits.text[start:]]]
 
 
 def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> None:
@@ -863,7 +877,7 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.functions.ddl import alias_entry, ch_type_to_spark
 
         name, col, ch_type, default, alias, after = m.groups()
-        spark_type, _n = ch_type_to_spark(ch_type.strip())
+        spark_type, nullable = ch_type_to_spark(ch_type.strip())
         if alias:
             # ALIAS column (lecture_12.md:36-39): virtual, recomputed per
             # query, never stored — record it so re-registration
@@ -882,6 +896,17 @@ def _try_route_inner(engine, s: str):
             order.insert(order.index(after) + 1, col)
             df = df.select(*order)
         _persist(engine, name, df)
+        td = engine.tables[name]
+        if td.settings.get("schema"):
+            # the declared layout INSERT aligns to gains the column at
+            # its AFTER position, and an omitted value its DEFAULT
+            cols = _schema_columns(td.settings["schema"])
+            names = [c.split()[0] for c in cols]
+            at = names.index(after) + 1 if after in names else len(cols)
+            cols.insert(at, f"{col} {spark_type}{'' if nullable else ' NOT NULL'}")
+            td.settings["schema"] = ", ".join(cols)
+            if default:
+                td.settings.setdefault("defaults", {})[col] = default.strip()
         return {"added_column": col}
 
     m = _DROP_COL_RE.match(s)

@@ -70,10 +70,11 @@ def test_if_combinators():
     ],
 )
 def test_clickhouse_sql_udfs(spark, expr, expected):
-    from otus_clickhouse_spark.functions.clickhouse import register_clickhouse_functions
+    from otus_clickhouse_spark.functions.clickhouse import ensure_functions
 
-    register_clickhouse_functions(spark)
-    got = spark.sql(f"SELECT {expr} AS v").collect()[0].v
+    stmt = f"SELECT {expr} AS v"
+    ensure_functions(spark, stmt)
+    got = spark.sql(stmt).collect()[0].v
     assert got == expected
 
 
@@ -99,10 +100,11 @@ def test_empty_and_not_empty(engine, expr, expected):
 
 
 def test_format_readable_size(spark):
-    from otus_clickhouse_spark.functions.clickhouse import register_clickhouse_functions
+    from otus_clickhouse_spark.functions.clickhouse import ensure_functions
 
-    register_clickhouse_functions(spark)
-    got = spark.sql("SELECT formatReadableSize(1536.0) AS v").collect()[0].v
+    stmt = "SELECT formatReadableSize(1536.0) AS v"
+    ensure_functions(spark, stmt)
+    got = spark.sql(stmt).collect()[0].v
     assert got == "1.50 KiB"
 
 
@@ -358,10 +360,11 @@ def test_with_totals(engine):
     ],
 )
 def test_extended_scalar_udfs(spark, expr, expected):
-    from otus_clickhouse_spark.functions.clickhouse import register_clickhouse_functions
+    from otus_clickhouse_spark.functions.clickhouse import ensure_functions
 
-    register_clickhouse_functions(spark)
-    got = spark.sql(translate(f"SELECT {expr} AS v")).collect()[0].v
+    stmt = translate(f"SELECT {expr} AS v")
+    ensure_functions(spark, stmt)
+    got = spark.sql(stmt).collect()[0].v
     assert got == expected
 
 

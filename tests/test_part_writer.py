@@ -194,7 +194,42 @@ def test_tuple_partition_key_with_a_call(engine, tmp_path):
         _drop(engine, "tk")
 
 
-WRITER_KEYS = ("compression", "parquet.bloom.filter.", "parquet.page.write-checksum.enabled")
+def test_unparenthesized_expression_key_is_one_key(engine, tmp_path):
+    """``PARTITION BY k % 2`` partitions by the whole expression: two
+    directories, not one per ``k``."""
+    _drop(engine, "pm")
+    engine.execute("CREATE TABLE pm (k UInt32) ENGINE = MergeTree PARTITION BY k % 2 ORDER BY k")
+    td = engine.tables["pm"]
+    assert (td.partition_by, td.order_by) == (("k % 2",), ("k",))
+    td.path = str(tmp_path / "pm")
+    try:
+        engine.execute("INSERT INTO pm SELECT toUInt32(number) AS k FROM numbers(10)")
+        assert sorted(p for p in os.listdir(td.path) if "=" in p) == ["_p_k_2=0", "_p_k_2=1"]
+        assert engine.run("SELECT count() FROM pm")[0][0] == 10
+    finally:
+        _drop(engine, "pm")
+
+
+def test_added_column_is_writable_with_its_default(engine, tmp_path):
+    """``ADD COLUMN x … DEFAULT 7 AFTER k`` joins the declared layout an
+    INSERT aligns to: a positional VALUES row fills it, a named column
+    list lands it, and an INSERT that omits it gets the DEFAULT."""
+    _drop(engine, "ac")
+    engine.execute("CREATE TABLE ac (k UInt32, s String) ENGINE = MergeTree ORDER BY k")
+    engine.tables["ac"].path = str(tmp_path / "ac")
+    try:
+        engine.execute("INSERT INTO ac VALUES (1, 'a')")
+        engine.execute("ALTER TABLE ac ADD COLUMN x UInt8 DEFAULT 7 AFTER k")
+        engine.execute("INSERT INTO ac VALUES (2, 9, 'b')")
+        engine.execute("INSERT INTO ac (k, x) SELECT toUInt32(3) AS k, toUInt8(5) AS x")
+        engine.execute("INSERT INTO ac (k, s) VALUES (4, 'd')")
+        rows = engine.run("SELECT k, x, s FROM ac ORDER BY k")
+        assert [tuple(r) for r in rows] == [(1, 7, "a"), (2, 9, "b"), (3, 5, ""), (4, 7, "d")]
+    finally:
+        _drop(engine, "ac")
+
+
+WRITER_KEYS =("compression", "parquet.bloom.filter.", "parquet.page.write-checksum.enabled")
 
 
 def _writer_keys(tree):
