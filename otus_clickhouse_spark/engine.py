@@ -233,17 +233,22 @@ class Engine:
         """The rows in ``td``'s files, as one partition when small.
 
         ``schema`` is the hot path's file schema from an earlier read,
-        which skips the footer-inference job (:func:`io.read_table`)."""
+        which skips the footer-inference job (:func:`io.read_table`).
+        Small is measured by the bytes the relation's file index lists
+        (:func:`_data_bytes`), without optimizing a plan on every
+        registration."""
         from otus_clickhouse_spark.io import read_table
 
         frame = read_table(self.spark, td.path, schema=schema)
         self._file_schemas[td.name] = frame.schema
+        size = _data_bytes(td.path)
         # tiered storage (lecture_14.md:233 TTL … TO VOLUME): rows moved
         # to cold volumes are still part of the table — union them in
         for cpath in td.settings.get("cold_volumes", {}).values():
             if os.path.exists(cpath):
                 frame = frame.unionByName(read_table(self.spark, cpath))
-        return single_task(frame)
+                size += _data_bytes(cpath)
+        return single_task(frame, size)
 
     def stored(self, name: str) -> DataFrame:
         """Every stored row of ``name``: what a rewrite of its parts reads.
@@ -2526,16 +2531,39 @@ def _open_cost(spark: SparkSession) -> int:
     return spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
 
 
-def single_task(frame: DataFrame) -> DataFrame:
+def _data_bytes(path: str) -> int:
+    """The summed length of the data files under ``path``: the
+    ``sizeInBytes`` Spark's file index gives a parquet relation, which
+    lists every file except hidden ones (a name starting with ``.``, such
+    as a ``.crc`` checksum, or with ``_`` outside a ``k=v`` partition
+    directory, such as ``_SUCCESS``)."""
+
+    def visible(name: str) -> bool:
+        return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if visible(d)]
+        total += sum(os.path.getsize(os.path.join(root, f)) for f in files if visible(f))
+    return total
+
+
+def single_task(frame: DataFrame, size: int | None = None) -> DataFrame:
     """``frame`` as one partition when it is too small to split.
 
-    Too small means Spark's own size estimate of the optimized plan is
-    at most :func:`_open_cost`. ``CoalesceExec(1)`` reports
-    ``SinglePartition``, so an aggregate, window or global sort over the
-    frame plans no Exchange and a statement runs as one job. Filters
-    and column pruning still push through the coalesce into the scan.
+    Too small means ``size`` bytes, by default Spark's own size estimate
+    of the optimized plan, is at most :func:`_open_cost`.
+    ``CoalesceExec(1)`` reports ``SinglePartition``, so an aggregate,
+    window or global sort over the frame plans no Exchange and a
+    statement runs as one job. Filters and column pruning still push
+    through the coalesce into the scan. A parquet table's registration
+    passes its file sizes (:meth:`Engine._read_parts`); the estimate is
+    the reference they are tested against.
     """
-    size = frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size is None:
+        size = frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return frame.coalesce(1) if size <= _open_cost(frame.sparkSession) else frame
 
 

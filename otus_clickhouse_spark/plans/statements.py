@@ -289,6 +289,34 @@ def _schema_columns(schema: str) -> list[str]:
     return [lits.unmask(c).strip() for c in [*cols, lits.text[start:]]]
 
 
+def _edit_declared(td, col: str, *, renamed: str | None = None, retyped: str | None = None):
+    """Carry ALTER … DROP/RENAME/MODIFY COLUMN ``col`` into the declared
+    layout INSERT aligns to (``td.settings["schema"]``), as ADD COLUMN
+    does: ``col`` is renamed, given the Spark type ``retyped``, or
+    dropped when neither is given. Its DEFAULT, MATERIALIZED, ALIAS,
+    enum and aggregate-state entries move with a rename and go with a
+    drop; a new type keeps them, as ClickHouse keeps the DEFAULT."""
+    if td.settings.get("schema"):
+        cols = []
+        for c in _schema_columns(td.settings["schema"]):
+            name, spark_type = c.split(None, 1)
+            if name != col:
+                cols.append(c)
+            elif renamed or retyped:
+                cols.append(f"{renamed or name} {retyped or spark_type}")
+        td.settings["schema"] = ", ".join(cols)
+    if retyped:
+        return
+    for key in ("defaults", "materialized", "aliases", "enums", "agg_functions"):
+        entries = td.settings.get(key)
+        if not entries or col not in entries:
+            continue
+        if renamed:  # same place: ALIAS columns attach in this order
+            td.settings[key] = {renamed if k == col else k: v for k, v in entries.items()}
+        else:
+            del entries[col]
+
+
 def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> None:
     """Rewrite the table's parts with the mutated content through
     :func:`io.rewrite_parts` (parquet-backed), or re-register the frame
@@ -912,8 +940,11 @@ def _try_route_inner(engine, s: str):
     m = _DROP_COL_RE.match(s)
     if m:
         name, col = m.groups()
-        engine.tables[name].settings.get("aliases", {}).pop(col, None)
-        _persist(engine, name, engine.stored(name).drop(col))
+        # the declared entries change first: the rewrite drops and
+        # re-attaches ALIAS columns by the recorded names
+        df = engine.stored(name).drop(col)
+        _edit_declared(engine.tables[name], col)
+        _persist(engine, name, df)
         return {"dropped_column": col}
 
     m = _MODIFY_COL_DEFAULT_RE.match(s)
@@ -929,15 +960,20 @@ def _try_route_inner(engine, s: str):
         from otus_clickhouse_spark.functions.ddl import ch_type_to_spark
 
         name, col, ch_type = m.groups()
-        spark_type, _n = ch_type_to_spark(ch_type.strip())
+        spark_type, nullable = ch_type_to_spark(ch_type.strip())
         df = engine.stored(name)
         _persist(engine, name, df.withColumn(col, F.col(col).cast(spark_type)))
+        _edit_declared(
+            engine.tables[name], col, retyped=f"{spark_type}{'' if nullable else ' NOT NULL'}"
+        )
         return {"modified_column": col}
 
     m = _RENAME_COL_RE.match(s)
     if m:
         name, old, new = m.groups()
-        _persist(engine, name, engine.stored(name).withColumnRenamed(old, new))
+        df = engine.stored(name).withColumnRenamed(old, new)
+        _edit_declared(engine.tables[name], old, renamed=new)
+        _persist(engine, name, df)
         return {"renamed_column": (old, new)}
 
     m = _MODIFY_TTL_RE.match(s)

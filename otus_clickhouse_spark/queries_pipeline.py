@@ -1917,10 +1917,15 @@ def _bpe_oracle(n_merges: int) -> str:
     """Unrolled BPE-training replay: K rounds of pair-count → argmax →
     boundary-aware replace (same double-space sentinel encoding as
     pipeline.text.bpe_apply_merge), identical tie-break (count desc,
-    left, right)."""
+    left, right).
+
+    Every CTE here and in the two replays built on it is MATERIALIZED:
+    DuckDB 1.0 inlines a CTE at each reference, and round r+1 reads
+    round r's winner twice, so inlined the work triples per round
+    (x122's oracle took minutes at sf0.01, under a second materialized)."""
     parts = [
         r"""
-    WITH w0 AS (
+    WITH w0 AS MATERIALIZED (
       SELECT word, count(*) AS cnt,
              array_to_string(regexp_split_to_array(word, ''), ' ') AS sym
       FROM (
@@ -1934,15 +1939,15 @@ def _bpe_oracle(n_merges: int) -> str:
     for r in range(n_merges):
         parts.append(
             f""",
-    p{r} AS (
+    p{r} AS MATERIALIZED (
       SELECT syms[i] AS l, syms[i + 1] AS r2, CAST(sum(cnt) AS BIGINT) AS c
       FROM (SELECT cnt, string_split(sym, ' ') AS syms,
                    unnest(generate_series(1, len(string_split(sym, ' ')) - 1)) AS i
             FROM w{r} WHERE len(string_split(sym, ' ')) >= 2)
       GROUP BY 1, 2
     ),
-    b{r} AS (SELECT {r} AS rank, l, r2, c FROM p{r} ORDER BY c DESC, l, r2 LIMIT 1),
-    w{r + 1} AS (
+    b{r} AS MATERIALIZED (SELECT {r} AS rank, l, r2, c FROM p{r} ORDER BY c DESC, l, r2 LIMIT 1),
+    w{r + 1} AS MATERIALIZED (
       SELECT word, cnt,
              trim(replace(replace(' ' || replace(sym, ' ', '  ') || ' ',
                                   (SELECT ' ' || l || '  ' || r2 || ' ' FROM b{r}),
@@ -1980,7 +1985,7 @@ def _bpe_apply_oracle(n_merges: int) -> str:
     parts = [
         body.rstrip().rstrip(",") + ",",
         r"""
-    d0 AS (
+    d0 AS MATERIALIZED (
       SELECT word, array_to_string(regexp_split_to_array(word, ''), ' ') AS sym
       FROM (
         SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
@@ -1992,7 +1997,7 @@ def _bpe_apply_oracle(n_merges: int) -> str:
     for r in range(n_merges):
         parts.append(
             f""",
-    d{r + 1} AS (
+    d{r + 1} AS MATERIALIZED (
       SELECT word,
              trim(replace(replace(' ' || replace(sym, ' ', '  ') || ' ',
                                   (SELECT ' ' || l || '  ' || r2 || ' ' FROM b{r}),
@@ -6343,7 +6348,7 @@ def _bpe_lang_oracle(n_merges: int) -> str:
     parts = [
         body.rstrip().rstrip(",") + ",",
         r"""
-    d0 AS (
+    d0 AS MATERIALIZED (
       SELECT lang, word, array_to_string(regexp_split_to_array(word, ''), ' ') AS sym
       FROM (
         SELECT lang,
@@ -6356,7 +6361,7 @@ def _bpe_lang_oracle(n_merges: int) -> str:
     for r in range(n_merges):
         parts.append(
             f""",
-    d{r + 1} AS (
+    d{r + 1} AS MATERIALIZED (
       SELECT lang, word,
              trim(replace(replace(' ' || replace(sym, ' ', '  ') || ' ',
                                   (SELECT ' ' || l || '  ' || r2 || ' ' FROM b{r}),
@@ -6367,11 +6372,11 @@ def _bpe_lang_oracle(n_merges: int) -> str:
         )
     parts.append(
         f""",
-    per AS (
+    per AS MATERIALIZED (
       SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
              CAST(sum(len(string_split(sym, ' '))) AS BIGINT) AS n_subwords
       FROM d{n_merges} GROUP BY lang),
-    tot AS (SELECT sum(n_words) AS tw, sum(n_subwords) AS ts FROM per)
+    tot AS MATERIALIZED (SELECT sum(n_words) AS tw, sum(n_subwords) AS ts FROM per)
     SELECT lang, n_words, n_subwords,
            round(n_subwords * 1.0 / n_words, 4) AS fertility,
            round((n_subwords * 1.0 / n_words) / (ts * 1.0 / tw), 4)

@@ -229,6 +229,64 @@ def test_added_column_is_writable_with_its_default(engine, tmp_path):
         _drop(engine, "ac")
 
 
+def test_dropped_column_leaves_the_declared_layout(engine, tmp_path):
+    """After ``DROP COLUMN x`` a positional VALUES row has the new arity
+    and a named column list does not bring ``x`` (or its DEFAULT) back."""
+    _drop(engine, "dc")
+    engine.execute(
+        "CREATE TABLE dc (k UInt32, x UInt8 DEFAULT 7, s String) ENGINE = MergeTree ORDER BY k"
+    )
+    engine.tables["dc"].path = str(tmp_path / "dc")
+    try:
+        engine.execute("INSERT INTO dc VALUES (1, 5, 'a')")
+        engine.execute("ALTER TABLE dc DROP COLUMN x")
+        engine.execute("INSERT INTO dc VALUES (2, 'b')")
+        engine.execute("INSERT INTO dc (k, s) VALUES (3, 'c')")
+        assert engine.table("dc").columns == ["k", "s"]
+        rows = engine.run("SELECT * FROM dc ORDER BY k")
+        assert [tuple(r) for r in rows] == [(1, "a"), (2, "b"), (3, "c")]
+    finally:
+        _drop(engine, "dc")
+
+
+def test_modified_column_takes_its_new_type_and_keeps_its_default(engine, tmp_path):
+    """After ``MODIFY COLUMN v String`` an INSERT casts to ``String``,
+    not the old ``UInt8``, and an omitted ``v`` still gets its DEFAULT."""
+    _drop(engine, "mc")
+    engine.execute("CREATE TABLE mc (k UInt32, v UInt8 DEFAULT 3) ENGINE = MergeTree ORDER BY k")
+    engine.tables["mc"].path = str(tmp_path / "mc")
+    try:
+        engine.execute("INSERT INTO mc VALUES (1, 5)")
+        engine.execute("ALTER TABLE mc MODIFY COLUMN v String")
+        engine.execute("INSERT INTO mc VALUES (2, 'hello')")
+        engine.execute("INSERT INTO mc (k) VALUES (3)")
+        rows = engine.run("SELECT k, v FROM mc ORDER BY k")
+        assert [tuple(r) for r in rows] == [(1, "5"), (2, "hello"), (3, "3")]
+    finally:
+        _drop(engine, "mc")
+
+
+def test_renamed_column_keeps_its_values_and_default(engine, tmp_path):
+    """After ``RENAME COLUMN v TO w`` a positional row, a named ``w`` and
+    an omitted ``w`` (its DEFAULT) all land; none reads NULL."""
+    _drop(engine, "rc")
+    engine.execute(
+        "CREATE TABLE rc (k UInt32, v String DEFAULT 'z') ENGINE = MergeTree ORDER BY k"
+    )
+    engine.tables["rc"].path = str(tmp_path / "rc")
+    try:
+        engine.execute("INSERT INTO rc VALUES (1, 'a')")
+        engine.execute("ALTER TABLE rc RENAME COLUMN v TO w")
+        engine.execute("INSERT INTO rc VALUES (2, 'b')")
+        engine.execute("INSERT INTO rc (k, w) VALUES (3, 'c')")
+        engine.execute("INSERT INTO rc (k) VALUES (4)")
+        assert engine.table("rc").columns == ["k", "w"]
+        rows = engine.run("SELECT k, w FROM rc ORDER BY k")
+        assert [tuple(r) for r in rows] == [(1, "a"), (2, "b"), (3, "c"), (4, "z")]
+    finally:
+        _drop(engine, "rc")
+
+
 WRITER_KEYS =("compression", "parquet.bloom.filter.", "parquet.page.write-checksum.enabled")
 
 

@@ -140,6 +140,80 @@ def test_growing_past_the_threshold_drops_the_single_partition(engine, tmp_path,
         engine.execute("DROP TABLE sr_grow")
 
 
+def _plan_bytes(df) -> int:
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def test_file_bytes_decide_as_the_plan_estimate_did(engine, spark, tmp_path, open_cost):
+    """A partitioned table with a cold volume: its data files (beside the
+    ``.crc`` and ``_SUCCESS`` files a write leaves) sum to Spark's own
+    estimate, and a threshold just below or at that sum gives the
+    registration the decision :func:`single_task` gives the plan."""
+    import shutil
+
+    from otus_clickhouse_spark.engine import TableDef, _data_bytes, single_task
+    from otus_clickhouse_spark.io import read_table
+
+    engine.execute(
+        "CREATE TABLE sr_src (k UInt32, s String) ENGINE = MergeTree "
+        "PARTITION BY k % 2 ORDER BY k"
+    )
+    src = engine.tables["sr_src"]
+    src.path = str(tmp_path / "hot")
+    try:
+        engine.execute(
+            "INSERT INTO sr_src SELECT toUInt32(number) AS k, toString(number) AS s "
+            "FROM numbers(300)"
+        )
+    finally:
+        engine.execute("DROP TABLE sr_src")
+    hot, cold = str(tmp_path / "hot"), str(tmp_path / "cold")
+    shutil.copytree(hot, cold)
+    names = [n for _r, _d, fs in os.walk(hot) for n in fs]
+    assert any(n.endswith(".crc") for n in names) and "_SUCCESS" in names
+    assert any(d.startswith("_p_") for d in os.listdir(hot))
+
+    plan = read_table(spark, hot).unionByName(read_table(spark, cold))
+    size = _data_bytes(hot) + _data_bytes(cold)
+    assert size == _plan_bytes(plan)
+    td = TableDef(name="sr_tiered", path=hot, settings={"cold_volumes": {"cold": cold}})
+    try:
+        for cost, single in ((size, True), (size - 1, False)):
+            open_cost(cost)
+            engine.register_table(td)
+            assert _single(engine.table("sr_tiered")) is single
+            assert _single(single_task(plan)) is single
+        assert engine.table("sr_tiered").count() == 600
+    finally:
+        engine.drop_table("sr_tiered")
+
+
+def test_registration_optimizes_no_plan(engine, monkeypatch, tmp_path):
+    """Registering a parquet table (every INSERT does) asks Catalyst for
+    no optimized plan: the single-task decision reads file sizes."""
+    from py4j.java_gateway import JavaObject
+
+    engine.execute("CREATE TABLE sr_noplan (k UInt32) ENGINE = MergeTree ORDER BY k")
+    engine.tables["sr_noplan"].path = str(tmp_path / "sr_noplan")
+    real = JavaObject.__getattr__
+
+    def guarded(self, name):
+        if name == "optimizedPlan":
+            raise AssertionError("a registration optimized a plan")
+        return real(self, name)
+
+    try:
+        engine.execute("INSERT INTO sr_noplan SELECT toUInt32(number) AS k FROM numbers(10)")
+        monkeypatch.setattr(JavaObject, "__getattr__", guarded)
+        engine.register_table(engine.tables["sr_noplan"])
+        monkeypatch.undo()
+        assert _single(engine.table("sr_noplan"))
+        assert engine.run("SELECT count() FROM sr_noplan")[0][0] == 10
+    finally:
+        monkeypatch.undo()
+        engine.execute("DROP TABLE sr_noplan")
+
+
 @pytest.fixture
 def new_york():
     """Process-local time zone away from UTC (naive datetimes are local)."""

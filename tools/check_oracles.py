@@ -5,6 +5,9 @@ DuckDB over the same parquet, then compares row count, column names/
 dtypes, and an order-insensitive value hash. Usage:
 
     python tools/check_oracles.py [sf_dir] [name_filter ...]
+
+After the ``ok/failing`` line it prints the five slowest queries by
+Spark seconds and the five slowest by oracle seconds.
 """
 
 from __future__ import annotations
@@ -57,6 +60,7 @@ def main():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     ok = bad = 0
+    spark_s, oracle_s = {}, {}
     for name, fn in qs.items():
         if filters and not any(f in name for f in filters):
             continue
@@ -68,7 +72,7 @@ def main():
             print(f"FAIL {name}: spark error: {ex}", flush=True)
             bad += 1
             continue
-        t_spark = time.time() - t0
+        t_spark = spark_s[name] = time.time() - t0
         if name not in oracles:
             print(f"ROWS {name}: {len(sdf)} rows (no oracle) [{t_spark:.1f}s]", flush=True)
             ok += 1
@@ -80,7 +84,7 @@ def main():
             print(f"FAIL {name}: duckdb error: {str(ex)[:200]}", flush=True)
             bad += 1
             continue
-        t_oracle = time.time() - t0
+        t_oracle = oracle_s[name] = time.time() - t0
         problems = []
         if len(sdf) != len(odf):
             problems.append(f"rows {len(sdf)} != {len(odf)}")
@@ -112,6 +116,9 @@ def main():
             gc.collect()
             spark.sparkContext._jvm.System.gc()
     print(f"\n{ok} ok, {bad} failing")
+    for side, secs in (("spark", spark_s), ("oracle", oracle_s)):
+        slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+        print(f"slowest {side}: " + ", ".join(f"{n} {s:.1f}s" for n, s in slowest))
     sys.exit(1 if bad else 0)
 
 
