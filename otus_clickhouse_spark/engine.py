@@ -18,11 +18,12 @@ import re
 import shutil
 import threading
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.errors import AnalysisException
 from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from otus_clickhouse_spark.functions.clickhouse import (
     called_functions,
@@ -42,6 +43,55 @@ from otus_clickhouse_spark.functions.lexer import (
 )
 from otus_clickhouse_spark.plans.mutations import read_with_mask
 from otus_clickhouse_spark.system_tables import CATALOG
+
+# column kinds (lecture_12.md:14-47): an INSERT writes the first two,
+# the files hold all but ALIAS, which is recomputed per query
+WRITABLE = ("", "DEFAULT")
+STORED = ("", "DEFAULT", "MATERIALIZED")
+# the lightweight-DELETE mask column (lecture_16.md:196-202)
+MASK = StructField("_row_exists", IntegerType())
+
+
+@dataclass(frozen=True)
+class Column:
+    """One column of a table's list: ``kind`` is "" (ordinary), DEFAULT,
+    MATERIALIZED or ALIAS, with its dialect ``expr`` (lecture_12.md:
+    14-47). ``ch_type`` is None for a column taken from a frame or a
+    footer; ``spark_type`` is None for an untyped `c ALIAS expr`."""
+
+    name: str
+    ch_type: str | None
+    spark_type: str | None
+    nullable: bool = True
+    kind: str = ""
+    expr: str | None = None
+
+    @cached_property
+    def field(self) -> StructField:
+        from pyspark.sql.types import _parse_datatype_string
+
+        return StructField(self.name, _parse_datatype_string(self.spark_type), self.nullable)
+
+    @cached_property
+    def enum(self) -> dict[str, int] | None:
+        """name → code of an Enum column (hw02.sql:17)."""
+        from otus_clickhouse_spark.functions.ddl import enum_mapping
+
+        return enum_mapping(self.ch_type) if self.ch_type else None
+
+    @cached_property
+    def agg_function(self) -> str | None:
+        """The function of an AggregateFunction column's state."""
+        from otus_clickhouse_spark.functions.ddl import agg_state_function
+
+        return agg_state_function(self.ch_type) if self.ch_type else None
+
+
+def columns_of(schema: StructType) -> tuple[Column, ...]:
+    """The column list of a table whose columns come from a frame or a
+    footer rather than DDL."""
+    return tuple(Column(f.name, None, f.dataType.simpleString(), f.nullable) for f in schema)
+
 
 @dataclass
 class TableDef:
@@ -68,6 +118,24 @@ class TableDef:
     # bloom-family types on plain columns map to parquet bloom filters at
     # write time; minmax/set are subsumed by row-group min/max stats.
     skip_indexes: dict = field(default_factory=dict)
+    # the declared columns, in order; None for a table whose rows are a
+    # frame registered for it (Merge, Distributed, external proxies)
+    columns: tuple[Column, ...] | None = None
+    # a lightweight DELETE wrote the mask column into the table's parts
+    masked: bool = False
+
+    def fields(self, kinds: tuple[str, ...] = STORED) -> list[StructField]:
+        """The fields of the listed columns of ``kinds``, in declared order."""
+        return [c.field for c in self.columns if c.kind in kinds]
+
+    def read_schema(self) -> StructType | None:
+        """The schema the table's files are read with: the stored
+        columns, and the mask once a lightweight DELETE wrote it. Spark
+        adds the generated ``_p_*`` partition columns from the
+        directory names. None (infer) for files that have no list yet."""
+        if self.columns is None:
+            return None
+        return StructType(self.fields() + ([MASK] if self.masked else []))
 
 
 class Engine:
@@ -106,8 +174,6 @@ class Engine:
         self._events: dict[str, int] = {}  # cumulative counters (system.events)
         # the HTTP server's handler threads share one Engine
         self._events_lock = threading.Lock()
-        # parquet-backed table → its files' schema at the last read
-        self._file_schemas: dict[str, StructType] = {}
         self._dict_sources: dict[str, tuple[str, list[str]]] = {}  # dict → (table, cols)
         self._dict_ddl: dict[str, str] = {}  # dict → original CREATE text
         self._view_ddl: dict[str, str] = {}  # plain view → its SELECT (SHOW CREATE)
@@ -184,34 +250,19 @@ class Engine:
         for name in names:
             self.register_table(TableDef(name=name, path=os.path.join(data_dir, f"{name}.parquet")))
 
-    def register_table(
-        self, td: TableDef, df: DataFrame | None = None, appended: StructType | None = None
-    ) -> None:
+    def register_table(self, td: TableDef, df: DataFrame | None = None) -> None:
         """Register a table: parquet-backed (``td.path``) or an explicit DataFrame.
 
-        ``appended`` is the schema of a block just appended to the
-        table's files. When it equals the files' schema from the last
-        read, the re-read reuses that schema instead of running a
-        footer-inference job. Partitioned tables and tables with cold
-        volumes always re-infer: a new partition value or tier can
-        change what inference returns.
+        The view lists the columns in declared order, then the generated
+        ``_p_*`` partition columns, so ``SELECT *``, ``system.columns``
+        and INSERT's positional mapping agree.
 
         Also materializes the ``<name>__final`` view when the engine type
         has FINAL collapse semantics (lecture_07.md:465-481, 551-790).
         """
         self.tables[td.name] = td
-        known = self._file_schemas.pop(td.name, None)
-        frame = df
-        if df is None:
-            reuse = (
-                appended is not None
-                and known is not None
-                and not td.partition_by
-                and not td.settings.get("cold_volumes")
-                and _fields(known) == _fields(appended)
-            )
-            frame = self._read_parts(td, known if reuse else None)
-        frame = read_with_mask(self.with_aliases(td, frame))
+        frame = self._read_parts(td) if df is None else df
+        frame = _declared_order(td, read_with_mask(self.with_aliases(td, frame)))
         # row policies (lecture_18.md:561-609): mandatory prefilter on
         # every read; permissive policies OR together like the reference
         preds = self._row_policies.get(td.name)
@@ -229,24 +280,27 @@ class Engine:
 
             final_view(frame, td).createOrReplaceTempView(f"{td.name}__final")
 
-    def _read_parts(self, td: TableDef, schema: StructType | None = None) -> DataFrame:
+    def _read_parts(self, td: TableDef) -> DataFrame:
         """The rows in ``td``'s files, as one partition when small.
 
-        ``schema`` is the hot path's file schema from an earlier read,
-        which skips the footer-inference job (:func:`io.read_table`).
-        Small is measured by the bytes the relation's file index lists
-        (:func:`_data_bytes`), without optimizing a plan on every
-        registration."""
+        The files are read with the table's column list, so no footer
+        is inferred; a table with no files yet reads as empty. Files the
+        engine did not write (a data dir, the CLI's directory) get their
+        list from their one footer read here. Small is measured by the
+        bytes the relation's file index lists (:func:`_data_bytes`)."""
         from otus_clickhouse_spark.io import read_table
 
-        frame = read_table(self.spark, td.path, schema=schema)
-        self._file_schemas[td.name] = frame.schema
+        if td.columns is not None and not (td.path and os.path.exists(td.path)):
+            return self.local_frame([], td.read_schema())
+        frame = read_table(self.spark, td.path, td.read_schema())
+        if td.columns is None:
+            td.columns = columns_of(frame.schema)
         size = _data_bytes(td.path)
         # tiered storage (lecture_14.md:233 TTL … TO VOLUME): rows moved
         # to cold volumes are still part of the table — union them in
         for cpath in td.settings.get("cold_volumes", {}).values():
             if os.path.exists(cpath):
-                frame = frame.unionByName(read_table(self.spark, cpath))
+                frame = frame.unionByName(read_table(self.spark, cpath, td.read_schema()))
                 size += _data_bytes(cpath)
         return single_task(frame, size)
 
@@ -262,21 +316,27 @@ class Engine:
         td = self.tables.get(name)
         if td is None or not td.path or not os.path.exists(td.path):
             return self.table(name)
-        frame = self._read_parts(td, self._file_schemas.get(name))
-        return read_with_mask(self.with_aliases(td, frame))
+        return read_with_mask(self.with_aliases(td, self._read_parts(td)))
 
     def with_aliases(self, td: TableDef, frame: DataFrame) -> DataFrame:
         """``frame`` plus the ALIAS columns of ``td`` it lacks
         (lecture_12.md:27-28): virtual, recomputed per query, never
-        stored. The dialect expression gets the same translation and
-        type repair as SELECT, then the cast to the declared type."""
+        stored. The value is cast to the declared type, if any."""
+        for c in td.columns or ():
+            if c.kind == "ALIAS" and c.name not in frame.columns:
+                value = self._fragment(c.expr, frame)
+                if c.spark_type:
+                    value = value.cast(c.spark_type)
+                frame = frame.withColumn(c.name, value)
+        return frame
+
+    def _fragment(self, text: str, frame: DataFrame):
+        """Column from a ClickHouse-dialect expression fragment, resolved
+        against ``frame`` with the translation and type repairs a SELECT
+        gets."""
         from otus_clickhouse_spark.functions.dialect import translate
 
-        for col, (expr, spark_type) in td.settings.get("aliases", {}).items():
-            if col not in frame.columns:
-                value = self._analyze(translate(expr, self.tables), frame=frame)
-                frame = frame.withColumn(col, value.cast(spark_type) if spark_type else value)
-        return frame
+        return self._analyze(translate(text, self.tables), frame=frame)
 
     def local_frame(
         self, rows, schema: StructType | str, single_if_small: bool = False
@@ -329,7 +389,7 @@ class Engine:
         (default: spark-warehouse/<name>)."""
         from otus_clickhouse_spark.functions.ddl import parse_create_table
 
-        td, schema = parse_create_table(ddl)
+        td = parse_create_table(ddl)
         if td.name in self.tables:
             # CH semantics: plain CREATE on an existing name errors;
             # IF NOT EXISTS is a no-op preserving the current data
@@ -345,7 +405,6 @@ class Engine:
                 shutil.rmtree(td.path, ignore_errors=True)
         else:
             td.path = path
-        td.settings["schema"] = schema  # declared column order/types for VALUES inserts
         self.tables[td.name] = td
         if td.engine == "Buffer":
             # Buffer(db, dest, layers, min/max time, min_rows, max_rows, …)
@@ -395,7 +454,7 @@ class Engine:
             ):
                 td.settings.setdefault(key, val)
             td.path = None
-            self.local_frame([], schema).createOrReplaceTempView(td.name)
+            self.local_frame([], td.read_schema()).createOrReplaceTempView(td.name)
             return td
         if td.engine == "Merge":
             # Merge(db, 'regex') — lectures/lecture_09.md:589-651:
@@ -409,8 +468,7 @@ class Engine:
             candidates = [n for n in self.tables if n != td.name]
             merge_tables(self.spark, pattern, candidates).createOrReplaceTempView(td.name)
             return td
-        empty = self.local_frame([], schema)
-        self.register_table(td, df=empty)
+        self.register_table(td)
         return td
 
     # ------------------------------------------------------------------ RBAC
@@ -694,8 +752,6 @@ class Engine:
             # clone the source's TableDef/engine metadata, start empty
             import copy as _copy
 
-            import shutil as _shutil
-
             td = _copy.deepcopy(self.tables[src])
             td.name = name
             td.path = os.path.join("spark-warehouse", name)
@@ -712,10 +768,11 @@ class Engine:
                 else:
                     td.settings.pop("replicated", None)
                     td.settings["engine_full"] = eng
-            _shutil.rmtree(td.path, ignore_errors=True)  # fresh table: no stale parts
-            # register the empty view directly: a partitioned write of
-            # zero rows leaves no parquet footer to re-read
-            self.register_table(td, df=self.table(src).limit(0).localCheckpoint(eager=True))
+            td.columns = td.columns or columns_of(self.table(src).schema)
+            td.masked = False
+            td.settings.pop("cold_volumes", None)
+            shutil.rmtree(td.path, ignore_errors=True)  # fresh table: no stale parts
+            self.register_table(td)
             return td
         copym3 = re.match(
             # attrs-BEFORE-AS schema copy (hw14.md:30 `create table d
@@ -734,12 +791,12 @@ class Engine:
             if srcdb and srcdb.lower() == "system":
                 if src not in CATALOG:
                     raise KeyError(f"unknown system table system.{src}")
-                empty = self.local_frame([], CATALOG[src].schema)
+                columns = columns_of(StructType.fromDDL(CATALOG[src].schema))
             elif srcdb is None and src in self.tables:
-                empty = self.table(src).limit(0).localCheckpoint(eager=True)
+                columns = self.tables[src].columns or columns_of(self.table(src).schema)
             else:
-                empty = None
-            if empty is not None:
+                columns = None
+            if columns is not None:
                 em = re.search(r"ENGINE\s*=\s*(\w+)", attrs, re.IGNORECASE)
                 om = re.search(
                     r"ORDER\s+BY\s+\(?([\w, ]+?)\)?\s*(?:PARTITION|SETTINGS|$)",
@@ -755,9 +812,10 @@ class Engine:
                     path=os.path.join("spark-warehouse", name),
                     engine=em.group(1) if em else "MergeTree",
                     order_by=okey,
+                    columns=columns,
                 )
-                self.tables[name] = td
-                self.register_table(td, df=empty)
+                shutil.rmtree(td.path, ignore_errors=True)  # fresh table: no stale parts
+                self.register_table(td)
                 return td
         if re.match(r"^\s*CREATE\s+TABLE\b", s, re.IGNORECASE):
             return self.create_table(s)
@@ -1022,56 +1080,63 @@ class Engine:
         return "default", name
 
     def _writable(self, name: str) -> list:
-        """The fields an INSERT writes: the DECLARED schema without its
-        MATERIALIZED columns, or the view's fields for a table with no
-        DDL. The live view's order can differ from the declared one (a
-        partitioned parquet read appends partition columns last)."""
+        """The fields an INSERT writes: the listed columns without the
+        MATERIALIZED and ALIAS ones, or the view's fields for a table
+        with no list (a Distributed proxy)."""
         td = self.tables[name]
-        ddl = td.settings.get("schema")
-        if not ddl:
+        if td.columns is None:
             return self.table(name).schema.fields
-        mat = td.settings.get("materialized", {})
-        return [f for f in StructType.fromDDL(ddl).fields if f.name not in mat]
+        return td.fields(WRITABLE)
 
     def _align_block(self, name: str, frame: DataFrame, cols: list[str] | None = None) -> DataFrame:
-        """An INSERT block in the table's writable layout: declared
-        order and types, enum codes normalized.
+        """An INSERT statement's block with its columns named for ``name``.
 
         ``cols`` is the statement's column list, naming the frame's
         columns in order. Without one, a frame of the writable arity
         maps to the writable columns by POSITION, like ClickHouse
         (lecture_07.md:516-524 inserts unaliased ``…State`` expressions
-        into typed state columns); a frame of another arity passes
-        through as it is. Columns the block omits
-        get their ``DEFAULT expr`` (lecture_12.md:29-39) or the CH
-        type-zero default (0 / '' / epoch — non-nullable columns have
-        no NULL to fall back to). MATERIALIZED columns are never
-        writable; they are computed in :meth:`insert`.
+        into typed state columns); a frame of another arity keeps its
+        names. :meth:`insert` then aligns the block to the list by name.
         """
-        from pyspark.sql import functions as F
-
-        td = self.tables[name]
-        if not td.settings.get("schema"):
-            # registered files or CREATE … AS: no declared layout
-            return frame.toDF(*cols) if cols else frame
-        writable = self._writable(name)
         if cols is None:
+            writable = self._writable(name)
             if len(frame.columns) != len(writable):
                 return frame
             cols = [f.name for f in writable]
-        frame = frame.toDF(*cols)
-        defaults = td.settings.get("defaults", {})
-        out = []
-        for f in writable:
-            if f.name in frame.columns:
-                out.append(_enum_norm(td, f.name, F.col(f.name).cast(f.dataType)))
-            elif f.name in defaults:
-                out.append(frame_expr(frame, defaults[f.name]).cast(f.dataType).alias(f.name))
-            elif f.nullable:
-                out.append(F.lit(None).cast(f.dataType).alias(f.name))
-            else:
-                out.append(_zero_default(f.dataType).alias(f.name))
-        return frame.select(*out)
+        return frame.toDF(*cols)
+
+    def _conform(self, td: TableDef, df: DataFrame, block: bool = True) -> DataFrame:
+        """``df`` in ``td``'s stored layout: every stored column, by name,
+        in declared order and type, and the mask column if ``df`` has it.
+        A column ``df`` lacks gets its ``DEFAULT expr`` (lecture_12.md:
+        29-39), NULL when Nullable, or else the CH type-zero default. An
+        INSERT ``block`` also gets its enum codes normalized and its
+        MATERIALIZED columns computed over any given value
+        (lecture_12.md:14-27); a rewrite keeps the stored values."""
+        from pyspark.sql import functions as F
+
+        given = set(df.columns)
+        stored = [c for c in td.columns if c.kind in STORED]
+        mask = [_q(MASK.name)] if MASK.name in given else []
+
+        def value(c: Column, frame: DataFrame, have: set[str]):
+            dtype = c.field.dataType
+            if c.name in have:
+                col = F.col(_q(c.name)).cast(dtype)
+                return _enum_norm(c, col) if block else col.alias(c.name)
+            if c.kind in ("DEFAULT", "MATERIALIZED"):
+                return self._fragment(c.expr, frame).cast(dtype).alias(c.name)
+            return (F.lit(None).cast(dtype) if c.nullable else _zero_default(dtype)).alias(c.name)
+
+        first = [c for c in stored if c.kind in WRITABLE or (c.name in given and not block)]
+        out = df.select(*[value(c, df, given) for c in first], *mask)
+        if len(first) < len(stored):
+            # MATERIALIZED expressions read the aligned columns
+            have = {c.name for c in first}
+            out = out.select(
+                *[_q(c.name) if c.name in have else value(c, out, have) for c in stored], *mask
+            )
+        return out
 
     def _values_frame(self, name: str, values_clause: str, cols: list[str] | None = None) -> DataFrame:
         """Rows from ``VALUES (…), (…)`` as an INSERT block of ``name``."""
@@ -1177,7 +1242,6 @@ class Engine:
             else:
                 self._mvs.pop(src, None)
         td = self.tables.pop(name, None)
-        self._file_schemas.pop(name, None)
         # an unregistered name may still have an orphaned managed dir
         # from an earlier engine over the same warehouse
         path = td.path if (td is not None and td.path) else os.path.join("spark-warehouse", name)
@@ -1471,22 +1535,27 @@ class Engine:
         declares NOT NULL (Nullable columns keep their NULLs). The
         engine's baseline is the SQL-standard ``join_use_nulls = 1``;
         this path activates on the explicit SET."""
-        non_nullable: set[str] = set()
-        for tname in self._referenced_tables(text):
-            schema = self.tables[tname].settings.get("schema", "")
-            for coldef in schema.split(","):
-                if "NOT NULL" in coldef.upper():
-                    non_nullable.add(coldef.strip().split()[0])
-        fills: dict = {}
-        for f in df.schema.fields:
-            if f.name not in non_nullable:
-                continue
-            t = f.dataType.simpleString()
-            if t in ("string",):
-                fills[f.name] = ""
-            elif t.startswith(("int", "bigint", "smallint", "tinyint", "double", "float", "decimal")):
-                fills[f.name] = 0
-        return df.na.fill(fills) if fills else df
+        from pyspark.sql import functions as F
+
+        non_nullable = {
+            c.name
+            for tname in self._referenced_tables(text)
+            for c in self.tables[tname].columns or ()
+            if not c.nullable
+        }
+        if not non_nullable & set(df.columns):
+            return df
+        # by position: a join's output can repeat a name
+        fields = df.schema.fields
+        by_pos = df.toDF(*[f"_{i}" for i in range(len(fields))])
+        return by_pos.select(*[
+            (
+                F.coalesce(by_pos[i], _zero_default(f.dataType))
+                if f.name in non_nullable
+                else by_pos[i]
+            ).alias(f.name)
+            for i, f in enumerate(fields)
+        ])
 
     def add_projection(self, name: str, table: str, group_keys, aggs) -> None:
         """ADD/MATERIALIZE PROJECTION (lecture_13.md:187-242): build the
@@ -1713,12 +1782,18 @@ class Engine:
 
         self._bump("InsertQuery")
         self.check_access("INSERT", [name])
+        td = self.tables[name]
+        if td.engine != "Distributed":
+            # every block lands in the declared types; a CTAS or an MV's
+            # implicit target takes its list from its first block
+            if td.columns is None:
+                td.columns = columns_of(df.schema)
+            df = self._conform(td, df)
         if name in self._buffers:
             buf = self._buffers[name]
             buf.insert(df)
             buf.read().createOrReplaceTempView(name)  # read-through view
             return
-        td = self.tables[name]
         if td.engine in ("Memory", "Set"):
             # Memory / Set engines (lecture_09.md:424-496): rows held
             # in RAM — blocks accumulate driver-side, the view is the
@@ -1773,18 +1848,9 @@ class Engine:
             for mv in self._mvs.get(name, []):
                 mv.process_block(df)
             return
-        # MATERIALIZED columns: always computed at insert, never writable
-        # (lecture_12.md:14-27) — overwrite/add regardless of the input
-        for col, expr in td.settings.get("materialized", {}).items():
-            df = df.withColumn(col, frame_expr(df, expr))
-        part = df
-        if mode == "append" and "_row_exists" in self._file_schemas.get(name, StructType()).names:
-            # a lightweight DELETE masked the files: the new part carries
-            # the mask too, so whichever footer a read infers from has it
-            part = df.withColumn("_row_exists", F.lit(1))
-        write_parts(part, td, td.path, mode)
+        write_parts(df, td, td.path, mode)
         # refresh the view over the new file set
-        self.register_table(td, appended=part.schema if mode == "append" else None)
+        self.register_table(td)
         # push the inserted block through attached MVs synchronously,
         # like ClickHouse's PushingToViews (lecture_13.md:160-166);
         # an MV inserting into its target re-triggers that table's MVs,
@@ -2519,9 +2585,20 @@ def _row_select(row: str) -> str:
     return f"SELECT {row[1:-1] if whole else row}"
 
 
-def _fields(schema: StructType) -> list[tuple]:
-    """A schema's (name, type) list, nullability and metadata aside."""
-    return [(f.name, f.dataType) for f in schema.fields]
+def _q(name: str) -> str:
+    """``name`` as a backquoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _declared_order(td: TableDef, frame: DataFrame) -> DataFrame:
+    """``frame`` with ``td``'s listed columns first, in declared order.
+    A partitioned read appends the partition columns last."""
+    if td.columns is None:
+        return frame
+    have = frame.columns
+    names = [c.name for c in td.columns if c.name in have]
+    order = names + [n for n in have if n not in names]
+    return frame if order == have else frame.select(*map(_q, order))
 
 
 def _open_cost(spark: SparkSession) -> int:
@@ -2567,19 +2644,19 @@ def single_task(frame: DataFrame, size: int | None = None) -> DataFrame:
     return frame.coalesce(1) if size <= _open_cost(frame.sparkSession) else frame
 
 
-def _enum_norm(td, fname: str, col):
+def _enum_norm(column: Column, col):
     """Enum columns accept the name OR the numeric code on insert (CH
     behavior; hw02.sql:17 + hw02.md:91-105): codes are normalized to
     the stored name string via a literal map (codegen'd, no UDF)."""
-    mapping = td.settings.get("enums", {}).get(fname)
+    mapping = column.enum
     if not mapping:
-        return col.alias(fname)
+        return col.alias(column.name)
     from pyspark.sql import functions as F
 
     m = F.create_map(
         *[F.lit(x) for name, code in mapping.items() for x in (str(code), name)]
     )
-    return F.coalesce(m[col], col).alias(fname)
+    return F.coalesce(m[col], col).alias(column.name)
 
 
 def _zero_default(dtype):
@@ -2598,4 +2675,6 @@ def _zero_default(dtype):
         return F.array().cast(dtype)
     if isinstance(dtype, T.MapType):
         return F.map_from_arrays(F.array(), F.array()).cast(dtype)
+    if isinstance(dtype, T.StructType):
+        return F.struct(*[_zero_default(f.dataType).alias(f.name) for f in dtype.fields])
     return F.lit(0).cast(dtype)  # numeric family

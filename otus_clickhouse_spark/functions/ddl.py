@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import re
 
-from otus_clickhouse_spark.engine import TableDef
+from otus_clickhouse_spark.engine import Column, TableDef
 from otus_clickhouse_spark.functions.lexer import (
     LIT,
     Masked,
@@ -218,65 +218,39 @@ def split_ttl_action(ttl: str) -> tuple[str, tuple[str, str] | None]:
     return re.sub(r"\s+DELETE\s*$", "", ttl, flags=re.IGNORECASE).strip(), None
 
 
-def alias_entry(expr: str, ch_type: str | None = None) -> tuple[str, str | None]:
-    """An ALIAS column's ``settings["aliases"]`` entry: the dialect
-    expression and the Spark type its value is cast to, or None when
-    the column is declared without a type (`c ALIAS expr`)."""
-    return expr.strip(), ch_type_to_spark(ch_type.strip())[0] if ch_type else None
+def column_def(item: str) -> Column:
+    """One column definition of a CREATE TABLE or an ADD COLUMN:
+    ``name Type [DEFAULT|MATERIALIZED|ALIAS expr] [CODEC(…)] [COMMENT …]``
+    (lecture_12.md:14-47). An ALIAS may omit the type (`c ALIAS expr`)."""
+    am = _COL_ATTR_RE.search(item)
+    kind, expr = (am.group(1).upper(), am.group(2).strip()) if am else ("", None)
+    lits = Masked(_COL_EXTRAS_RE.sub("", item).strip())
+    cm = re.match(rf"^({LIT}|\w+)(?:\s+(.+))?$", lits.text, re.DOTALL)
+    if not cm or not (cm.group(2) or kind == "ALIAS"):
+        raise ValueError(f"cannot parse column: {item!r}")
+    ch_type = lits.unmask(cm.group(2)).strip() if cm.group(2) else None
+    spark_type, nullable = ch_type_to_spark(ch_type) if ch_type else (None, True)
+    return Column(lits.value(cm.group(1)), ch_type, spark_type, nullable, kind, expr)
 
 
-def parse_create_table(ddl: str) -> tuple[TableDef, str]:
-    """Parse CH CREATE TABLE → (TableDef, spark schema DDL string).
+def parse_create_table(ddl: str) -> TableDef:
+    """Parse a CH CREATE TABLE into a TableDef with its column list.
 
     Column attributes (lecture_12.md:14-47): ``DEFAULT expr`` fills the
     column when an INSERT omits it; ``MATERIALIZED expr`` is always
     computed at insert (not writable); ``ALIAS expr`` is virtual —
     excluded from the stored schema and recomputed per query by the
-    engine's view registration. Captured into ``TableDef.settings``
-    under "defaults"/"materialized"/"aliases" (see :func:`alias_entry`).
+    engine's view registration.
     """
     ddl = strip_comments(ddl)
     m = _CREATE_RE.match(ddl.strip().rstrip(";"))
     if not m:
         raise ValueError("not a CREATE TABLE statement")
-    cols = []
-    defaults: dict[str, str] = {}
-    materialized: dict[str, str] = {}
-    aliases: dict[str, tuple[str, str | None]] = {}
-    agg_functions: dict[str, str] = {}
-    enums: dict[str, dict[str, int]] = {}
-    for item in split_top(m.group("cols")):
-        if not item or re.match(r"^(INDEX|PROJECTION|CONSTRAINT|PRIMARY\s+KEY)\b", item, re.IGNORECASE):
-            continue  # secondary indexes/projections: D9/D10 handled elsewhere
-        am = _COL_ATTR_RE.search(item)
-        item = _COL_EXTRAS_RE.sub("", item)
-        if am and am.group(1).upper() == "ALIAS":
-            # ALIAS is virtual — not part of the stored schema; the
-            # type annotation is optional in CH (`c ALIAS expr`)
-            name, *ch_type = item.split(None, 1)
-            aliases[unquote(name)] = alias_entry(am.group(2), *ch_type)
-            continue
-        lits = Masked(item)
-        cm = re.match(rf"^({LIT}|\w+)\s+(.+)$", lits.text, re.DOTALL)
-        if not cm:
-            raise ValueError(f"cannot parse column: {item!r}")
-        name, ch_type = lits.value(cm.group(1)), lits.unmask(cm.group(2)).strip()
-        if not re.match(r"^[\w]+$", name):
-            name = f"`{name}`"  # spaced identifiers stay backtick-quoted
-        if am:
-            kind, expr = am.group(1).upper(), am.group(2).strip()
-            if kind == "DEFAULT":
-                defaults[name] = expr
-            else:
-                materialized[name] = expr
-        fn = agg_state_function(ch_type)
-        if fn:
-            agg_functions[name] = fn
-        em = enum_mapping(ch_type)
-        if em:
-            enums[name] = em
-        spark_type, nullable = ch_type_to_spark(ch_type)
-        cols.append(f"{name} {spark_type}{'' if nullable else ' NOT NULL'}")
+    # secondary indexes/projections: D9/D10 handled elsewhere
+    other = re.compile(r"^(INDEX|PROJECTION|CONSTRAINT|PRIMARY\s+KEY)\b", re.IGNORECASE)
+    columns = tuple(
+        column_def(item) for item in split_top(m.group("cols")) if item and not other.match(item)
+    )
     rest = m.group("rest") or ""
     tail = Masked(rest)
 
@@ -317,6 +291,7 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
         # (in CH the PK defaults to the sort key and vice versa)
         order_by=key_tuple(clause("ORDER\\s+BY") or clause("PRIMARY\\s+KEY")),
         partition_by=key_tuple(clause("PARTITION\\s+BY")),
+        columns=columns,
     )
     if engine.startswith("Replicated"):
         # ReplicatedXMergeTree('/zk/path', '{replica}'[, x-engine args…])
@@ -359,14 +334,4 @@ def parse_create_table(ddl: str) -> tuple[TableDef, str]:
             td.settings["table_settings"] = tbl_settings
     if eargs:
         td.settings["engine_args"] = eargs
-    if defaults:
-        td.settings["defaults"] = defaults
-    if materialized:
-        td.settings["materialized"] = materialized
-    if aliases:
-        td.settings["aliases"] = aliases
-    if agg_functions:
-        td.settings["agg_functions"] = agg_functions
-    if enums:
-        td.settings["enums"] = enums
-    return td, ", ".join(cols)
+    return td

@@ -1633,7 +1633,8 @@ def translate(
     for tname, td in tables.items():
         if not re.search(rf"\b{tname}\b", text):
             continue
-        for col, mapping in getattr(td, "settings", {}).get("enums", {}).items():
+        listed = getattr(td, "columns", None) or ()
+        for col, mapping in [(c.name, c.enum) for c in listed if c.enum]:
             code2name = {v: k for k, v in mapping.items()}
             code_case = (
                 f"CASE {col} "
@@ -1698,9 +1699,12 @@ def translate(
     )
     text = _PARAM_RE.sub(lambda m: f":{m.group(1)}", text)
     text = _COUNT0_RE.sub("count(*)", text)
-    agg_funcs: dict[str, str] = {}
-    for td in tables.values():
-        agg_funcs.update(getattr(td, "settings", {}).get("agg_functions", {}))
+    agg_funcs = {
+        c.name: c.agg_function
+        for td in tables.values()
+        for c in getattr(td, "columns", None) or ()
+        if c.agg_function
+    }
     text = _rewrite_finalize_aggregation(text, agg_funcs, lits)
     text = _rewrite_state_combinators(text)
     text = re.sub(r"\buniqExact\s*\(", "count(DISTINCT ", text)

@@ -35,9 +35,9 @@ def _nanos_columns(path: str) -> list[str]:
 def read_table(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
     """spark.read.parquet with TIMESTAMP(NANOS) columns normalized to µs.
 
-    ``schema``, when given, is the files' schema as known from an earlier
-    read; it skips the footer-inference job. It is ignored for files with
-    nanosecond columns, whose on-disk type differs from the converted one.
+    ``schema``, when given, is the table's stored columns; it skips the
+    footer-inference job. It is ignored for files with nanosecond
+    columns, whose on-disk type differs from the converted one.
     """
     # timestamp semantics (date_trunc/window/unix_timestamp) follow the
     # session timezone; oracles + CH DateTime assume UTC — pin it so the

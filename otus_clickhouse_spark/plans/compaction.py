@@ -51,6 +51,6 @@ def compact_table(
     plan = plan_compaction(td.path, target_bytes)
     if plan is None:
         return None
-    df = read_table(spark, td.path)
+    df = read_table(spark, td.path, td.read_schema())
     rewrite_parts(df.repartition(plan["n_target_files"], *partition_columns(td, df.columns)), td)
     return plan

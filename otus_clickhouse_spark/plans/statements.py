@@ -35,6 +35,7 @@ key removes whole directories without reading data.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import re
 import shutil
@@ -42,7 +43,9 @@ import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from otus_clickhouse_spark.engine import Column, TableDef, _declared_order
 from otus_clickhouse_spark.io import partition_columns, rewrite_parts, write_parts
 from otus_clickhouse_spark.functions.lexer import Masked, split_top, unquote
 from otus_clickhouse_spark.system_tables import CATALOG
@@ -110,9 +113,9 @@ _RBAC_RE = re.compile(
     re.IGNORECASE,
 )
 _ADD_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+"
-    r"([\w()',= ]+?)(?:\s+DEFAULT\s+(.+?))?(?:\s+ALIAS\s+(.+?))?(?:\s+AFTER\s+(\w+))?\s*$",
-    re.IGNORECASE,
+    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?"
+    r"(\w+\s+.+?)(?:\s+AFTER\s+(\w+))?\s*$",
+    re.IGNORECASE | re.DOTALL,
 )
 _DROP_COL_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
@@ -267,54 +270,39 @@ _DROP_DICT_RE = re.compile(
 )
 
 
-def _expr(engine, text: str, frame: DataFrame):
-    """Column from a ClickHouse-dialect expression fragment, resolved
-    against ``frame`` with the type repairs a SELECT gets."""
-    from otus_clickhouse_spark.functions.dialect import translate
-
-    return engine._analyze(translate(text, engine.tables), frame=frame)
+def _ident(col: str) -> str:
+    # a bare name outside literals, not a call of a same-named function
+    return rf"(?<!\w){re.escape(col)}(?!\w)(?!\s*\()"
 
 
-def _schema_columns(schema: str) -> list[str]:
-    """The column definitions of a declared schema (``k BIGINT NOT NULL,
-    m MAP<STRING, INT>``), split at the commas outside quoted names and
-    the ``()``, ``<>`` and ``[]`` of their types."""
-    lits = Masked(schema)
-    cols, depth, start = [], 0, 0
-    for i, c in enumerate(lits.text):
-        depth += (c in "(<[") - (c in ")>]")
-        if c == "," and depth == 0:
-            cols.append(lits.text[start:i])
-            start = i + 1
-    return [lits.unmask(c).strip() for c in [*cols, lits.text[start:]]]
+def _check_renamable(td, col: str) -> None:
+    """ClickHouse refuses to rename a column a key reads: an ORDER BY or
+    PARTITION BY expression, the version or sign column, a summed
+    column. The check runs before any file or the list changes."""
+    keys = [*td.order_by, *td.partition_by, td.version or "", td.sign or "", *td.sum_columns]
+    if any(re.search(_ident(col), Masked(k).text) for k in keys):
+        raise ValueError(
+            f"ALTER_OF_COLUMN_IS_FORBIDDEN: column {col} is part of the key of {td.name}"
+        )
 
 
-def _edit_declared(td, col: str, *, renamed: str | None = None, retyped: str | None = None):
-    """Carry ALTER … DROP/RENAME/MODIFY COLUMN ``col`` into the declared
-    layout INSERT aligns to (``td.settings["schema"]``), as ADD COLUMN
-    does: ``col`` is renamed, given the Spark type ``retyped``, or
-    dropped when neither is given. Its DEFAULT, MATERIALIZED, ALIAS,
-    enum and aggregate-state entries move with a rename and go with a
-    drop; a new type keeps them, as ClickHouse keeps the DEFAULT."""
-    if td.settings.get("schema"):
-        cols = []
-        for c in _schema_columns(td.settings["schema"]):
-            name, spark_type = c.split(None, 1)
-            if name != col:
-                cols.append(c)
-            elif renamed or retyped:
-                cols.append(f"{renamed or name} {retyped or spark_type}")
-        td.settings["schema"] = ", ".join(cols)
-    if retyped:
-        return
-    for key in ("defaults", "materialized", "aliases", "enums", "agg_functions"):
-        entries = td.settings.get(key)
-        if not entries or col not in entries:
-            continue
-        if renamed:  # same place: ALIAS columns attach in this order
-            td.settings[key] = {renamed if k == col else k: v for k, v in entries.items()}
-        else:
-            del entries[col]
+def _rename_column(td, old: str, new: str) -> None:
+    """Rename ``old`` in ``td``'s list and in every expression that
+    reads it: the DEFAULT, MATERIALIZED and ALIAS expressions of the
+    columns, the TTL and the skip indexes, as ClickHouse rewrites them."""
+
+    def renamed(expr: str | None) -> str | None:
+        if expr is None:
+            return None
+        lits = Masked(expr)
+        return lits.unmask(re.sub(_ident(old), new, lits.text))
+
+    td.columns = tuple(
+        dataclasses.replace(c, name=new if c.name == old else c.name, expr=renamed(c.expr))
+        for c in td.columns
+    )
+    td.ttl = renamed(td.ttl)
+    td.skip_indexes = {n: (renamed(e), t) for n, (e, t) in td.skip_indexes.items()}
 
 
 def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> None:
@@ -330,13 +318,14 @@ def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> No
     without double-counting). The TTL-move pass itself persists only
     hot-tier content and passes ``keep_cold=True``.
 
-    ALIAS columns ride along in the source frame but are VIRTUAL —
-    persisting them would freeze their values (new inserts would read
-    null instead of recomputing), so they are dropped before the write
-    and re-attached by register_table.
+    The rows are written in the table's stored layout, without the
+    VIRTUAL ALIAS columns the source frame carries. The table records
+    whether they carry a lightweight DELETE's mask.
     """
     td = engine.tables[name]
-    df = df.drop(*td.settings.get("aliases", {}))
+    if td.columns is not None:
+        df = engine._conform(td, df, block=False)
+    td.masked = "_row_exists" in df.columns
     if not (td.path and os.path.exists(td.path)):
         # view-backed: cut lineage so the new view doesn't reference itself
         engine.register_table(td, df=df.localCheckpoint(eager=True))
@@ -348,20 +337,7 @@ def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> No
     if not keep_cold and td.settings.get("cold_volumes"):
         for cpath in td.settings.pop("cold_volumes").values():
             shutil.rmtree(cpath, ignore_errors=True)
-    if any(f.endswith(".parquet") for _r, _d, fs in os.walk(td.path) for f in fs):
-        engine.register_table(td)
-        return
-    # the mutation emptied the (hot tier of the) table: no parquet
-    # footer to re-read
-    shutil.rmtree(td.path, ignore_errors=True)
-    if td.settings.get("cold_volumes"):
-        # TTL moved EVERY row out: keep a real (0-row, with footer) hot
-        # path so read_table works and the registration unions the cold
-        # volumes back in
-        engine.local_frame([], df.schema).repartition(1).write.parquet(td.path)
-        engine.register_table(td)
-    else:
-        engine.register_table(td, df=engine.local_frame([], df.schema))
+    engine.register_table(td)
 
 
 def _partition_column(td) -> str:
@@ -752,8 +728,8 @@ def _try_route_inner(engine, s: str):
         assignments = {}
         for a in split_top(assigns):
             col, expr = a.split("=", 1)
-            assignments[col.strip()] = _expr(engine, expr.strip(), df)
-        _persist(engine, name, update(df, _expr(engine, pred, df), assignments))
+            assignments[col.strip()] = engine._fragment(expr.strip(), df)
+        _persist(engine, name, update(df, engine._fragment(pred, df), assignments))
         return {"mutated": name}
 
     m = _ALTER_DELETE_RE.match(s)
@@ -762,7 +738,7 @@ def _try_route_inner(engine, s: str):
 
         name, pred = m.groups()
         df = engine.stored(name)
-        _persist(engine, name, delete(df, _expr(engine, pred, df)))
+        _persist(engine, name, delete(df, engine._fragment(pred, df)))
         return {"mutated": name}
 
     m = _LW_DELETE_RE.match(s)
@@ -773,7 +749,7 @@ def _try_route_inner(engine, s: str):
         df = engine.stored(name)
         # raw rows stay on disk; register_table hides the masked ones
         # (lecture_16.md:196-202)
-        _persist(engine, name, lightweight_delete(df, _expr(engine, pred, df)))
+        _persist(engine, name, lightweight_delete(df, engine._fragment(pred, df)))
         return {"mutated": name}
 
     m = _DROP_PART_RE.match(s)
@@ -822,9 +798,9 @@ def _try_route_inner(engine, s: str):
         det = _detached_path(td, value)
         if not os.path.exists(det):
             raise FileNotFoundError(f"no detached partition {value!r} for {name}")
-        block = engine.spark.read.parquet(det).localCheckpoint(eager=True)
-        drop = [c for c in block.columns if c.startswith("_p_")]
-        engine.insert(name, block.drop(*drop) if drop else block)
+        # the detached rows are read with the stored columns of the list
+        block = engine.spark.read.schema(StructType(td.fields())).parquet(det)
+        engine.insert(name, block.localCheckpoint(eager=True))
         shutil.rmtree(det, ignore_errors=True)
         return {"attached_partition": value}
 
@@ -901,49 +877,34 @@ def _try_route_inner(engine, s: str):
     m = _ADD_COL_RE.match(s)
     if m:
         # ALTER ADD COLUMN [DEFAULT expr] [AFTER col] (D3; hw03.md:36-39,
-        # lecture_12.md:29-39: DEFAULT backfills existing rows on read)
-        from otus_clickhouse_spark.functions.ddl import alias_entry, ch_type_to_spark
+        # lecture_12.md:29-39: DEFAULT backfills existing rows)
+        from otus_clickhouse_spark.functions.ddl import column_def
 
-        name, col, ch_type, default, alias, after = m.groups()
-        spark_type, nullable = ch_type_to_spark(ch_type.strip())
-        if alias:
-            # ALIAS column (lecture_12.md:36-39): virtual, recomputed per
-            # query, never stored — record it so re-registration
-            # (inserts, restarts) re-attaches it, and refresh the view
-            td = engine.tables[name]
-            td.settings.setdefault("aliases", {})[col] = alias_entry(alias, ch_type)
-            engine.with_aliases(td, engine.table(name)).createOrReplaceTempView(name)
-            return {"added_column": col, "alias": True}
-        df = engine.stored(name)
-        value = (
-            _expr(engine, default, df).cast(spark_type) if default else F.lit(None).cast(spark_type)
-        )
-        df = df.withColumn(col, value)
-        if after:
-            order = [c for c in df.columns if c != col]
-            order.insert(order.index(after) + 1, col)
-            df = df.select(*order)
-        _persist(engine, name, df)
+        name, coldef, after = m.groups()
+        col = column_def(coldef)
         td = engine.tables[name]
-        if td.settings.get("schema"):
-            # the declared layout INSERT aligns to gains the column at
-            # its AFTER position, and an omitted value its DEFAULT
-            cols = _schema_columns(td.settings["schema"])
-            names = [c.split()[0] for c in cols]
-            at = names.index(after) + 1 if after in names else len(cols)
-            cols.insert(at, f"{col} {spark_type}{'' if nullable else ' NOT NULL'}")
-            td.settings["schema"] = ", ".join(cols)
-            if default:
-                td.settings.setdefault("defaults", {})[col] = default.strip()
-        return {"added_column": col}
+        names = [c.name for c in td.columns]
+        at = names.index(after) + 1 if after in names else len(names)
+        columns = (*td.columns[:at], col, *td.columns[at:])
+        if col.kind == "ALIAS":
+            # virtual (lecture_12.md:36-39): nothing to rewrite
+            td.columns = columns
+            view = _declared_order(td, engine.with_aliases(td, engine.table(name)))
+            view.createOrReplaceTempView(name)
+            return {"added_column": col.name, "alias": True}
+        # the rows are read before the list changes: the files lack the
+        # new column, which the rewrite then fills as an omitted one
+        df = engine.stored(name)
+        td.columns = columns
+        _persist(engine, name, df)
+        return {"added_column": col.name}
 
     m = _DROP_COL_RE.match(s)
     if m:
         name, col = m.groups()
-        # the declared entries change first: the rewrite drops and
-        # re-attaches ALIAS columns by the recorded names
-        df = engine.stored(name).drop(col)
-        _edit_declared(engine.tables[name], col)
+        td = engine.tables[name]
+        df = engine.stored(name)
+        td.columns = tuple(c for c in td.columns if c.name != col)
         _persist(engine, name, df)
         return {"dropped_column": col}
 
@@ -952,27 +913,40 @@ def _try_route_inner(engine, s: str):
         name, col, expr = m.groups()
         if name not in engine.tables:
             raise ValueError(f"unknown table {name!r}")
-        engine.tables[name].settings.setdefault("defaults", {})[col] = expr.strip()
+        td = engine.tables[name]
+        td.columns = tuple(
+            dataclasses.replace(c, kind="DEFAULT", expr=expr.strip()) if c.name == col else c
+            for c in td.columns
+        )
         return {"modified_default": col}
 
     m = _MODIFY_COL_RE.match(s)
     if m:
         from otus_clickhouse_spark.functions.ddl import ch_type_to_spark
 
+        # a new type keeps the column's DEFAULT, as ClickHouse does
         name, col, ch_type = m.groups()
         spark_type, nullable = ch_type_to_spark(ch_type.strip())
+        td = engine.tables[name]
         df = engine.stored(name)
-        _persist(engine, name, df.withColumn(col, F.col(col).cast(spark_type)))
-        _edit_declared(
-            engine.tables[name], col, retyped=f"{spark_type}{'' if nullable else ' NOT NULL'}"
+        td.columns = tuple(
+            dataclasses.replace(
+                c, ch_type=ch_type.strip(), spark_type=spark_type, nullable=nullable
+            )
+            if c.name == col
+            else c
+            for c in td.columns
         )
+        _persist(engine, name, df)
         return {"modified_column": col}
 
     m = _RENAME_COL_RE.match(s)
     if m:
         name, old, new = m.groups()
+        td = engine.tables[name]
+        _check_renamable(td, old)
         df = engine.stored(name).withColumnRenamed(old, new)
-        _edit_declared(engine.tables[name], old, renamed=new)
+        _rename_column(td, old, new)
         _persist(engine, name, df)
         return {"renamed_column": (old, new)}
 
@@ -1019,8 +993,8 @@ def _try_route_inner(engine, s: str):
 
             vol = action[1]
             cold = f"{td.path.rstrip('/')}__volume_{vol}"
-            main = read_table(engine.spark, td.path)
-            pred = _expr(engine, ttl, main)
+            main = read_table(engine.spark, td.path, td.read_schema())
+            pred = engine._fragment(ttl, main)
             expired = main.filter(pred)
             moved = expired.count()
             if moved:
@@ -1032,7 +1006,7 @@ def _try_route_inner(engine, s: str):
             return {"ttl_applied": name, "moved": moved, "to": action}
         df = engine.stored(name)
         before = df.count()
-        _persist(engine, name, ttl_expire(df, _expr(engine, ttl, df)))
+        _persist(engine, name, ttl_expire(df, engine._fragment(ttl, df)))
         return {"ttl_applied": name, "dropped": before - engine.stored(name).count()}
 
     m = _OPTIMIZE_RE.match(s)
@@ -1070,15 +1044,14 @@ def _try_route_inner(engine, s: str):
     if m:
         name = m.group(1)
         td = engine.tables[name]
-        schema = engine.table(name).schema
+        empty = None if td.columns else engine.local_frame([], engine.table(name).schema)
         if td.path and os.path.exists(td.path):
-            # an empty parquet write has no footer to re-read: drop the
-            # file set and re-register an empty frame instead
             shutil.rmtree(td.path, ignore_errors=True)
         # TRUNCATE removes every part, TTL-moved cold tiers included
         for cpath in td.settings.pop("cold_volumes", {}).values():
             shutil.rmtree(cpath, ignore_errors=True)
-        engine.register_table(td, df=engine.local_frame([], schema))
+        td.masked = False
+        engine.register_table(td, df=empty)
         return {"truncated": name}
 
     m = _RENAME_RE.match(s)
@@ -1156,7 +1129,6 @@ def _try_route_inner(engine, s: str):
         kind = m.group(1).upper()
         if kind == "PROCESSLIST":
             from pyspark.sql import Row
-            from pyspark.sql.types import StructType
 
             entry = CATALOG["processes"]
             shape = Row(*StructType.fromDDL(entry.schema).names)
@@ -1317,9 +1289,8 @@ def _s3_backup_dir(url: str) -> str:
 
 
 def _portable_settings(td) -> dict:
-    """JSON-clean subset of a TableDef's settings — declared-schema DDL,
-    DEFAULT exprs, enum maps, MATERIALIZED cols survive; live handles
-    (conf objects, paths) are dropped."""
+    """JSON-clean subset of a TableDef's settings: live handles (conf
+    objects) are dropped."""
     import json
 
     out = {}
@@ -1335,7 +1306,9 @@ def _portable_settings(td) -> dict:
 
 
 def _table_meta(td) -> dict:
-    """The restore-sufficient metadata sidecar for one table."""
+    """The restore-sufficient metadata sidecar for one table: the
+    column list carries the declared types, DEFAULT expressions, enum
+    maps and MATERIALIZED columns a restored table keeps."""
     return {
         "engine": td.engine,
         "order_by": list(td.order_by),
@@ -1344,8 +1317,33 @@ def _table_meta(td) -> dict:
         "sign": td.sign,
         "sum_columns": list(td.sum_columns),
         "ttl": td.ttl,
+        "columns": td.columns and [list(dataclasses.astuple(c)) for c in td.columns],
+        "masked": td.masked,
         "settings": _portable_settings(td),
     }
+
+
+def _restore_meta(engine, name: str, meta: dict):
+    """The TableDef of ``name`` with a sidecar's metadata applied."""
+    td = engine.tables.get(name) or TableDef(name=name)
+    td.engine = meta["engine"]
+    td.order_by = tuple(meta["order_by"])
+    td.partition_by = tuple(meta["partition_by"])
+    td.version = meta["version"]
+    td.sign = meta["sign"]
+    td.sum_columns = tuple(meta.get("sum_columns", ()))
+    td.ttl = meta.get("ttl")
+    cols = meta.get("columns")
+    td.columns = None if cols is None else tuple(Column(*c) for c in cols)
+    td.masked = meta.get("masked", False)
+    if meta.get("settings"):
+        # restored settings win over whatever a pre-existing alias
+        # carried; live handles were never persisted
+        td.settings = {**td.settings, **meta["settings"]}
+    td.path = td.path or os.path.join("spark-warehouse", name)
+    if os.path.exists(td.path):
+        shutil.rmtree(td.path) if os.path.isdir(td.path) else os.remove(td.path)
+    return td
 
 
 def backup_table(
@@ -1383,23 +1381,7 @@ def backup_table(
     else:
         shutil.copytree(td.path, dest)
         data_kind = "dir"
-    # settings carries the declared-schema DDL, DEFAULT exprs, enum maps,
-    # MATERIALIZED cols — without it RESTORE … AS y would produce a table
-    # that loses DEFAULT/enum semantics. Instance-specific handles
-    # (live conf objects, paths) are dropped; everything JSON-clean ships.
-    portable_settings = _portable_settings(td)
-    meta = {
-        "table": name,
-        "kind": data_kind,
-        "engine": td.engine,
-        "order_by": list(td.order_by),
-        "partition_by": list(td.partition_by),
-        "version": td.version,
-        "sign": td.sign,
-        "sum_columns": list(td.sum_columns),
-        "ttl": td.ttl,
-        "settings": portable_settings,
-    }
+    meta = {"table": name, "kind": data_kind, **_table_meta(td)}
     with open(dest + ".meta.json", "w") as f:
         json.dump(meta, f)
     bid = str(uuid.uuid4())
@@ -1427,8 +1409,6 @@ def restore_table(
     import uuid
     from datetime import datetime
 
-    from otus_clickhouse_spark.engine import TableDef
-
     if s3_url is not None:
         src = _s3_backup_dir(s3_url)
         shown = f"S3('{s3_url}')"
@@ -1438,21 +1418,7 @@ def restore_table(
     with open(src + ".meta.json") as f:
         meta = json.load(f)
     name = as_name or name
-    td = engine.tables.get(name) or TableDef(name=name)
-    td.engine = meta["engine"]
-    td.order_by = tuple(meta["order_by"])
-    td.partition_by = tuple(meta["partition_by"])
-    td.version = meta["version"]
-    td.sign = meta["sign"]
-    td.sum_columns = tuple(meta.get("sum_columns", ()))
-    td.ttl = meta.get("ttl")
-    if meta.get("settings"):
-        # restored DEFAULT/enum/materialized semantics win over whatever a
-        # pre-existing alias carried; live handles were never persisted
-        td.settings = {**td.settings, **meta["settings"]}
-    td.path = td.path or os.path.join("spark-warehouse", name)
-    if os.path.exists(td.path):
-        shutil.rmtree(td.path) if os.path.isdir(td.path) else os.remove(td.path)
+    td = _restore_meta(engine, name, meta)
     if meta["kind"] == "file":
         shutil.copy2(os.path.join(src, "data.parquet"), td.path)
     else:
@@ -1606,8 +1572,6 @@ def restore_database(engine, db: str, url: str) -> dict:
     import uuid
     from datetime import datetime
 
-    from otus_clickhouse_spark.engine import TableDef
-
     src = _url_backup_dir(url)
     man, resolved = _resolve_db_chain(src)
     db_l = db.lower()
@@ -1617,19 +1581,7 @@ def restore_database(engine, db: str, url: str) -> dict:
         meta = man["tables"][tname]["meta"]
         kind = man["tables"][tname]["kind"]
         flat = tname if db_l == "default" else f"{db_l}__{tname}"
-        td = engine.tables.get(flat) or TableDef(name=flat)
-        td.engine = meta["engine"]
-        td.order_by = tuple(meta["order_by"])
-        td.partition_by = tuple(meta["partition_by"])
-        td.version = meta["version"]
-        td.sign = meta["sign"]
-        td.sum_columns = tuple(meta.get("sum_columns", ()))
-        td.ttl = meta.get("ttl")
-        if meta.get("settings"):
-            td.settings = {**td.settings, **meta["settings"]}
-        td.path = td.path or os.path.join("spark-warehouse", flat)
-        if os.path.exists(td.path):
-            shutil.rmtree(td.path) if os.path.isdir(td.path) else os.remove(td.path)
+        td = _restore_meta(engine, flat, meta)
         if kind == "file":
             shutil.copy2(fmap["data.parquet"][2], td.path)
         else:

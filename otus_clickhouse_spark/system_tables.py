@@ -276,7 +276,8 @@ def _parts(engine):
     return rows
 
 
-# lecture_02.md:197-276: one row per column, with its DEFAULT/MATERIALIZED/ALIAS kind
+# lecture_02.md:197-276: one row per listed column, in declared order,
+# with its declared type and its DEFAULT/MATERIALIZED/ALIAS kind
 @_entry(
     "columns",
     "table string, name string, type string, default_kind string, default_expression string",
@@ -291,18 +292,14 @@ def _columns(engine):
             if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
                 raise
             continue
-        defaults = t.settings.get("defaults", {})
-        mat = t.settings.get("materialized", {})
-        aliases = t.settings.get("aliases", {})
-        for f in fields:
-            kind, expr = "", ""
-            if f.name in defaults:
-                kind, expr = "DEFAULT", defaults[f.name]
-            elif f.name in mat:
-                kind, expr = "MATERIALIZED", mat[f.name]
-            elif f.name in aliases:
-                kind, expr = "ALIAS", aliases[f.name][0]
-            rows.append((t.name, f.name, f.dataType.simpleString(), kind, expr))
+        if t.columns is None:
+            rows += [(t.name, f.name, f.dataType.simpleString(), "", "") for f in fields]
+            continue
+        # an ALIAS declared without a type has the type of its value
+        view = {f.name: f.dataType for f in fields}
+        for c in t.columns:
+            dtype = c.field.dataType if c.spark_type else view[c.name]
+            rows.append((t.name, c.name, dtype.simpleString(), c.kind, c.expr or ""))
     return rows
 
 

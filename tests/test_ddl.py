@@ -51,26 +51,28 @@ ORDER BY (pickup_datetime, trip_id)
 
 
 def test_parse_trips_shape():
-    td, schema = parse_create_table(TRIPS_DDL)
+    td = parse_create_table(TRIPS_DDL)
     assert td.name == "trips_ddl" and td.engine == "MergeTree"
     assert td.order_by == ("pickup_datetime", "trip_id")
     assert td.partition_by == ("toYYYYMM(pickup_datetime)",)
-    assert "tip_amount float" in schema and "NOT NULL" not in schema.split("tip_amount float")[1].split(",")[0]
-    assert "payment_type string NOT NULL" in schema
+    cols = {c.name: c for c in td.columns}
+    tip, payment = cols["tip_amount"], cols["payment_type"]
+    assert (tip.spark_type, tip.nullable) == ("float", True)
+    assert (payment.spark_type, payment.nullable) == ("string", False)
 
 
 def test_parse_engine_args_and_ttl():
-    td, _ = parse_create_table(
+    td = parse_create_table(
         "CREATE TABLE v (id UInt64, ver UInt32, val String) "
         "ENGINE = ReplacingMergeTree(ver) ORDER BY id TTL created + INTERVAL 30 DAY"
     )
     assert td.engine == "ReplacingMergeTree" and td.version == "ver"
     assert td.ttl == "created + INTERVAL 30 DAY"
-    td2, _ = parse_create_table(
+    td2 = parse_create_table(
         "CREATE TABLE c (id UInt64, sign Int8) ENGINE = CollapsingMergeTree(sign) ORDER BY id"
     )
     assert td2.sign == "sign"
-    td3, _ = parse_create_table(
+    td3 = parse_create_table(
         "CREATE TABLE r (id UInt64) ENGINE = ReplicatedMergeTree('/ch/t', '{replica}') ORDER BY id"
     )
     assert td3.engine == "MergeTree"  # replication = storage-layer no-op
@@ -130,9 +132,12 @@ def test_default_materialized_alias_columns(engine, tmp_path):
     )
     engine.tables["attrs_ddl"].path = str(tmp_path / "attrs_ddl")
     td = engine.tables["attrs_ddl"]
-    assert td.settings["defaults"] == {"status": "'new'"}
-    assert td.settings["materialized"] == {"val2": "val * 2"}
-    assert td.settings["aliases"] == {"val3": ("val + 1", None)}
+    kinds = {c.name: (c.kind, c.expr, c.spark_type) for c in td.columns if c.kind}
+    assert kinds == {
+        "status": ("DEFAULT", "'new'", "string"),
+        "val2": ("MATERIALIZED", "val * 2", "double"),
+        "val3": ("ALIAS", "val + 1", None),  # an untyped ALIAS is not cast
+    }
     # column-list insert: status omitted → DEFAULT; val2 computed
     engine.execute("INSERT INTO attrs_ddl (id, val) VALUES (1, 10.0)")
     engine.execute("INSERT INTO attrs_ddl (id, val, status) VALUES (2, 20.0, 'old')")

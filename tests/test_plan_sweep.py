@@ -39,12 +39,24 @@ PYTHON_EVAL_MARKS = (
 PYTHON_ALLOWED = {"x34_media_dedup": {"MapInPandas"}}
 
 
-def test_all_queries_plan_jvm_side(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_frames(spark, sf_dir):
+    """Every registry query's frame, built once for all the sweep checks.
+
+    Built with codegen fallback off, as the codegen check built them, so
+    a compile failure in a query's eager build work still raises."""
     from otus_clickhouse_spark.queries import all_queries
 
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        return {name: fn(spark, sf_dir) for name, fn in sorted(all_queries().items())}
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", "true")
+
+
+def test_all_queries_plan_jvm_side(registry_frames):
     offenders = {}
-    for name, fn in sorted(all_queries().items()):
-        df = fn(spark, sf_dir)
+    for name, df in registry_frames.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         marks = [m for m in PYTHON_EVAL_MARKS if m in plan]
         marks = [m for m in marks if m not in PYTHON_ALLOWED.get(name, set())]
@@ -53,16 +65,13 @@ def test_all_queries_plan_jvm_side(spark, sf_dir):
     assert not offenders, f"queries fell back to Python eval: {offenders}"
 
 
-def test_no_collect_list_in_global_agg(spark, sf_dir):
+def test_no_collect_list_in_global_agg(registry_frames):
     """No registry query may collect the whole input into one aggregation
     group: collect_list/collect_set inside a zero-key (global) aggregate
     is a driver-OOM at 100 TB. Keyed collect_list (bounded groups) is
     allowed."""
-    from otus_clickhouse_spark.queries import all_queries
-
     offenders = {}
-    for name, fn in sorted(all_queries().items()):
-        df = fn(spark, sf_dir)
+    for name, df in registry_frames.items():
         opt = df._jdf.queryExecution().optimizedPlan().toString()
         for line in opt.splitlines():
             stripped = line.strip()
@@ -77,18 +86,15 @@ def test_no_collect_list_in_global_agg(spark, sf_dir):
     assert not offenders, f"global-agg collect_list/set found: {offenders}"
 
 
-def test_no_complex_columns_in_registry_output(spark, sf_dir):
+def test_no_complex_columns_in_registry_output(registry_frames):
     """Driver-contract queries must emit only scalar columns: the
     correctness harness canonicalizes results via pandas hashing, which
     cannot hash list/struct/map cells (the round-1 q16 failure). Arrays
     are fine internally — join them to strings at the output boundary."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from otus_clickhouse_spark.queries import all_queries
-
     offenders = {}
-    for name, fn in sorted(all_queries().items()):
-        df = fn(spark, sf_dir)
+    for name, df in registry_frames.items():
         bad = [
             f.name
             for f in df.schema.fields
@@ -130,7 +136,7 @@ UNPARTITIONED_WINDOW_OK = {
 }
 
 
-def test_no_unpartitioned_window_over_unbounded_input(spark, sf_dir):
+def test_no_unpartitioned_window_over_unbounded_input(registry_frames):
     """The x25 regression class (r6 verdict ask #3): a Window with an
     empty partition spec moves ALL input rows to one task — fine over a
     constant-bounded input (post-LIMIT rank, a histogram, a strata
@@ -138,7 +144,6 @@ def test_no_unpartitioned_window_over_unbounded_input(spark, sf_dir):
     optimized plan is walked for unpartitioned Window operators; any
     query not on the justified allowlist fails, and allowlist entries
     that stop triggering fail too (the list can't go stale)."""
-    from otus_clickhouse_spark.queries import all_queries
 
     def iter_nodes(p):
         yield p
@@ -147,8 +152,7 @@ def test_no_unpartitioned_window_over_unbounded_input(spark, sf_dir):
             yield from iter_nodes(it.next())
 
     offenders, seen = {}, {}
-    for name, fn in sorted(all_queries().items()):
-        df = fn(spark, sf_dir)
+    for name, df in registry_frames.items():
         opt = df._jdf.queryExecution().optimizedPlan()
         n = sum(
             1
@@ -331,7 +335,7 @@ LOW_CARD_WINDOW_OK = {
 }
 
 
-def test_no_low_cardinality_window_over_unbounded_input(spark, sf_dir):
+def test_no_low_cardinality_window_over_unbounded_input(registry_frames):
     """r8 verdict ask #3 + r9 ask #2: walk every registry query's
     optimized plan for Window operators whose partition spec references
     ONLY low-cardinality columns — where the column set is DERIVED from
@@ -341,11 +345,9 @@ def test_no_low_cardinality_window_over_unbounded_input(spark, sf_dir):
     list. Any query off the justified-bounded allowlist fails, and
     allowlist entries that stop triggering fail too (the list can't go
     stale)."""
-    from otus_clickhouse_spark.queries import all_queries
-
     offenders, seen = {}, {}
-    for name, fn in sorted(all_queries().items()):
-        n = count_low_card_windows(fn(spark, sf_dir))
+    for name, df in registry_frames.items():
+        n = count_low_card_windows(df)
         if not n:
             continue
         seen[name] = n
@@ -484,12 +486,10 @@ def count_coalescible_selfjoins(df) -> int:
     return n
 
 
-def test_no_aqe_coalescible_pair_expansion_joins(spark, sf_dir):
-    from otus_clickhouse_spark.queries import all_queries
-
+def test_no_aqe_coalescible_pair_expansion_joins(registry_frames):
     offenders, seen = {}, {}
-    for name, fn in sorted(all_queries().items()):
-        n = count_coalescible_selfjoins(fn(spark, sf_dir))
+    for name, df in registry_frames.items():
+        n = count_coalescible_selfjoins(df)
         if not n:
             continue
         seen[name] = n
@@ -537,7 +537,7 @@ def test_aqe_collapse_guard_catches_synthetic_plan(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-def test_registry_codegen_compiles(spark, sf_dir):
+def test_registry_codegen_compiles(spark, registry_frames):
     """Codegen-health guard (r7 verdict ask #2): the PQ literal
     transport's registry plans FAILED whole-stage codegen (janino
     InternalCompilerException, 3.5–4.9 MiB task binaries) and silently
@@ -550,14 +550,12 @@ def test_registry_codegen_compiles(spark, sf_dir):
     ``spark.sql.codegen.hugeMethodLimit`` — downgrades before the
     compile step and cannot be trapped this way; janino errors are the
     observed failure class.)"""
-    from otus_clickhouse_spark.queries import all_queries
-
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
         failures = {}
-        for name, fn in sorted(all_queries().items()):
+        for name, df in registry_frames.items():
             try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                df.write.format("noop").mode("overwrite").save()
             except Exception as exc:  # noqa: BLE001 — report every offender
                 failures[name] = str(exc).splitlines()[0][:160]
             finally:

@@ -27,7 +27,7 @@ def test_hw02_script_ddl_and_enum_golden(engine, tmp_path):
     td = engine.tables["trips"]
     engine.tables["trips"].path = str(tmp_path / "trips")
     assert td.order_by == ("pickup_datetime", "dropoff_datetime")  # PRIMARY KEY fallback
-    assert td.settings["enums"]["payment_type"] == {
+    assert {c.name: c.enum for c in td.columns}["payment_type"] == {
         "CSH": 1, "CRE": 2, "NOC": 3, "DIS": 4, "UNK": 5,
     }
     # 2. the INSERT's SELECT column list is the reference's; only the

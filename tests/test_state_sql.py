@@ -16,7 +16,7 @@ from otus_clickhouse_spark.functions.dialect import translate
 
 
 def test_aggregate_function_types_parse():
-    td, schema = parse_create_table(
+    td = parse_create_table(
         "CREATE TABLE aggr (id UInt8, "
         "val_uniq AggregateFunction(uniq, UInt64), "
         "val_max AggregateFunction(maxIf, String, UInt8), "
@@ -25,12 +25,13 @@ def test_aggregate_function_types_parse():
         "val_sum SimpleAggregateFunction(sum, Float64)) "
         "ENGINE = AggregatingMergeTree ORDER BY id"
     )
-    assert "val_uniq binary" in schema
-    assert "val_avg struct<sum: double, count: bigint>" in schema
-    assert "val_max string" in schema
-    assert "val_arr array<string>" in schema
-    assert "val_sum double" in schema
-    assert td.settings["agg_functions"] == {
+    types = {c.name: c.spark_type for c in td.columns}
+    assert types["val_uniq"] == "binary"
+    assert types["val_avg"] == "struct<sum: double, count: bigint>"
+    assert types["val_max"] == "string"
+    assert types["val_arr"] == "array<string>"
+    assert types["val_sum"] == "double"
+    assert {c.name: c.agg_function for c in td.columns if c.agg_function} == {
         "val_uniq": "uniq",
         "val_max": "maxIf",
         "val_avg": "avg",

@@ -597,21 +597,34 @@ def test_max_result_rows_setting_and_quota(engine, tmp_path):
 def test_join_use_nulls_setting(engine, tmp_path):
     """J16 (lecture_10.md settings): with SET join_use_nulls = 0 (the CH
     default contract) non-matched outer-join rows carry type defaults
-    for NOT-NULL columns; the engine's baseline (=1) keeps SQL NULLs."""
+    for NOT-NULL columns, including types whose Spark name has a comma;
+    Nullable columns and the engine's baseline (=1) keep SQL NULLs."""
+    from decimal import Decimal
+
     engine.execute("CREATE TABLE jun_a (k UInt32, name String) ENGINE = Log")
     engine.tables["jun_a"].path = str(tmp_path / "jun_a")
-    engine.execute("CREATE TABLE jun_b (k UInt32, score UInt32) ENGINE = Log")
+    engine.execute(
+        "CREATE TABLE jun_b (k UInt32, score UInt32, big UInt64, dec Decimal(10,2), "
+        "m Map(String, UInt8), note Nullable(String)) ENGINE = Log"
+    )
     engine.tables["jun_b"].path = str(tmp_path / "jun_b")
     engine.execute("INSERT INTO jun_a VALUES (1, 'x'), (2, 'y')")
-    engine.execute("INSERT INTO jun_b VALUES (1, 10)")
-    q = "SELECT a.k AS k, b.score AS score FROM jun_a a LEFT JOIN jun_b b ON a.k = b.k"
+    engine.execute("INSERT INTO jun_b VALUES (1, 10, 5, 1.25, map('a', 1), 'n')")
+    q = (
+        "SELECT a.k AS k, b.score AS score, b.big AS big, b.dec AS dec, b.m AS m, "
+        "b.note AS note FROM jun_a a LEFT JOIN jun_b b ON a.k = b.k"
+    )
     # baseline: SQL-standard NULL for the non-matched row
-    rows = {r.k: r.score for r in engine.sql(q).collect()}
-    assert rows == {1: 10, 2: None}
+    rows = {r.k: tuple(r)[1:] for r in engine.sql(q).collect()}
+    assert rows == {1: (10, 5, Decimal("1.25"), {"a": 1}, "n"), 2: (None,) * 5}
     engine.execute("SET join_use_nulls = 0")
     try:
-        rows = {r.k: r.score for r in engine.sql(q).collect()}
-        assert rows == {1: 10, 2: 0}  # UInt32 default fills the miss
+        rows = {r.k: tuple(r)[1:] for r in engine.sql(q).collect()}
+        # each NOT NULL type's default fills the miss
+        assert rows == {
+            1: (10, 5, Decimal("1.25"), {"a": 1}, "n"),
+            2: (0, 0, Decimal("0.00"), {}, None),
+        }
     finally:
         engine.session_settings.pop("join_use_nulls", None)
         engine.execute("DROP TABLE jun_a")
@@ -1274,7 +1287,7 @@ def test_backup_restore_as_preserves_declared_semantics(engine, tmp_path):
         engine.execute("INSERT INTO bk_sem_restored (id, name) VALUES (2, 'b')")
         rows = {r.id: (r.name, r.score) for r in engine.table("bk_sem_restored").collect()}
         assert rows == {1: ("a", 7.5), 2: ("b", 7.5)}
-        assert engine.tables["bk_sem_restored"].settings.get("schema")
+        assert engine.tables["bk_sem_restored"].columns == engine.tables["bk_sem"].columns
     finally:
         engine.execute("DROP TABLE IF EXISTS bk_sem")
         engine.execute("DROP TABLE IF EXISTS bk_sem_restored")
