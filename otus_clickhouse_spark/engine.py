@@ -382,29 +382,49 @@ class Engine:
             )
         return self.local_frame(entry.rows(self), entry.schema, single_if_small=True)
 
-    def create_table(self, ddl: str, path: str | None = None) -> TableDef:
-        """Run a ClickHouse CREATE TABLE statement as-is (D2; DDL shapes
-        per hw02.sql:1-22, lecture_07.md:34-40). The table starts empty;
-        ``insert`` writes sorted/partitioned parquet under ``path``
-        (default: spark-warehouse/<name>)."""
+    def create_table(self, ddl: str, fill: bool = True, **params) -> TableDef:
+        """Run a ClickHouse CREATE TABLE statement as-is, in any of its
+        forms (D2; :func:`~otus_clickhouse_spark.functions.ddl.
+        parse_create_table`). The columns are the declared list, else
+        the source's: an ``AS table``'s list, a ``system.x`` schema or
+        the analyzed SELECT. ``AS table`` also copies every clause the
+        statement omits, never the source's data state. The table
+        starts empty under spark-warehouse/<name>; a CTAS then inserts
+        its SELECT, unless ``fill`` is off (an MV's inner table)."""
         from otus_clickhouse_spark.functions.ddl import parse_create_table
 
-        td = parse_create_table(ddl)
+        stmt = parse_create_table(ddl)
+        td, src, rows = stmt.td, stmt.source, None
         if td.name in self.tables:
             # CH semantics: plain CREATE on an existing name errors;
             # IF NOT EXISTS is a no-op preserving the current data
-            if re.search(r"\bIF\s+NOT\s+EXISTS\b", ddl, re.IGNORECASE):
+            if stmt.if_not_exists:
                 return self.tables[td.name]
             raise ValueError(f"table {td.name} already exists (use IF NOT EXISTS)")
-        if path is None:
-            # engine-managed location: CREATE means an EMPTY table, so any
-            # directory left by a previous engine instance is orphaned
-            # residue, never live data (a live registration errors above)
-            td.path = os.path.join("spark-warehouse", td.name)
-            if os.path.isdir(td.path):
-                shutil.rmtree(td.path, ignore_errors=True)
-        else:
-            td.path = path
+        if stmt.select:
+            # CTAS (hw03.md:123-166 denormalization pattern)
+            rows = self.sql(src, **params)
+            td.columns = td.columns or columns_of(rows.schema)
+        elif src and src.lower().startswith("system."):
+            # structure copy of a system view (hw14.md:30)
+            if src[7:] not in CATALOG:
+                raise KeyError(f"unknown system table {src}")
+            td.columns = td.columns or columns_of(StructType.fromDDL(CATALOG[src[7:]].schema))
+        elif src:
+            # schema copy (lecture_16.md:230): the clauses the statement
+            # names win, e.g. hw09.md:141-144's ReplicatedMergeTree
+            # conversion or hw10.md:41-45's `AS local ENGINE = Distributed`
+            if src not in self.tables:
+                raise KeyError(f"CREATE TABLE … AS {src}: unknown table")
+            td = stmt.over(self.tables[src])
+            td.columns = td.columns or columns_of(self.table(src).schema)
+            td.masked = False
+            td.settings.pop("cold_volumes", None)
+        # engine-managed location: CREATE means an EMPTY table, so any
+        # directory left by a previous engine instance is orphaned
+        # residue, never live data (a live registration errors above)
+        td.path = os.path.join("spark-warehouse", td.name)
+        shutil.rmtree(td.path, ignore_errors=True)
         self.tables[td.name] = td
         if td.engine == "Buffer":
             # Buffer(db, dest, layers, min/max time, min_rows, max_rows, …)
@@ -418,10 +438,9 @@ class Engine:
             self._buffers[td.name] = buf
             td.path = None  # nothing persisted under the buffer's own name
             buf.read().createOrReplaceTempView(td.name)
-            return td
-        if td.engine == "Distributed":
-            return self._register_distributed(td)
-        if td.engine in ("PostgreSQL", "MySQL", "JDBC"):
+        elif td.engine == "Distributed":
+            self._register_distributed(td)
+        elif td.engine in ("PostgreSQL", "MySQL", "JDBC"):
             # external-DB engines (S15/S16; hw19.md:63-81): the table is a
             # live JDBC proxy — no local storage, reads hit the server
             from otus_clickhouse_spark.sources.readers import (
@@ -437,16 +456,15 @@ class Engine:
             td.settings["external_conf"] = conf
             td.path = None
             external_table(self.spark, conf).createOrReplaceTempView(td.name)
-            return td
-        if td.engine == "Kafka":
+        elif td.engine == "Kafka":
             # Kafka engine DDL (lecture_09.md:891-918; ch_and_kafka/db/
             # init.sql:11-20 SETTINGS form, :62-65 positional form
             # Kafka(broker, topic, group, format)): capture broker/topic
             # settings. INSERT produces to the topic; kafka_poll consumes
             # and fires attached MVs (on a cluster: readStream via
             # streaming.mv.kafka_source / df.write.format("kafka")).
-            sm = re.findall(r"kafka_(\w+)\s*=\s*'?([\w:,./-]+)'?", ddl)
-            td.settings.update({f"kafka_{k}": v for k, v in sm})
+            table_settings = td.settings.get("table_settings", {})
+            td.settings.update({k: v for k, v in table_settings.items() if k.startswith("kafka_")})
             pos = [unquote(a) for a in td.settings.get("engine_args", [])]
             for key, val in zip(
                 ("kafka_broker_list", "kafka_topic_list", "kafka_group_name", "kafka_format"),
@@ -455,8 +473,7 @@ class Engine:
                 td.settings.setdefault(key, val)
             td.path = None
             self.local_frame([], td.read_schema()).createOrReplaceTempView(td.name)
-            return td
-        if td.engine == "Merge":
+        elif td.engine == "Merge":
             # Merge(db, 'regex') — lectures/lecture_09.md:589-651:
             # union of all registered tables matching the regex, with
             # the `_table` virtual column
@@ -467,8 +484,10 @@ class Engine:
             td.path = None
             candidates = [n for n in self.tables if n != td.name]
             merge_tables(self.spark, pattern, candidates).createOrReplaceTempView(td.name)
-            return td
-        self.register_table(td)
+        else:
+            self.register_table(td)
+        if rows is not None and fill:
+            self.insert(td.name, self._align_block(td.name, rows))
         return td
 
     # ------------------------------------------------------------------ RBAC
@@ -703,122 +722,8 @@ class Engine:
         if ocm and re.match(r"^\s*(CREATE|DROP|ALTER|RENAME|TRUNCATE|EXCHANGE)\b", s, re.IGNORECASE):
             self._clusters.setdefault(ocm.group(1), 1)
             s = self._ON_CLUSTER_RE.sub("", s)
-        ctas = re.match(
-            r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
-            r"((?:(?!\bAS\s+SELECT\b).)*?)\s*AS\s+(SELECT\b.*)$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if ctas:
-            # CTAS (D2; homeworks/hw03.md:123-166 denormalization pattern):
-            # run the SELECT, persist as a sorted/partitioned parquet table
-            name, attrs, select_sql = ctas.groups()
-            em = re.search(r"ENGINE\s*=\s*(\w+)", attrs, re.IGNORECASE)
-            om = re.search(r"ORDER\s+BY\s+\(?([\w, ]+?)\)?\s*(?:PARTITION|SETTINGS|$)", attrs, re.IGNORECASE)
-            td = TableDef(
-                name=name,
-                path=os.path.join("spark-warehouse", name),
-                engine=em.group(1) if em else "MergeTree",
-                order_by=tuple(c.strip() for c in om.group(1).split(",")) if om else (),
-            )
-            self.tables[name] = td
-            self.insert(name, self.sql(select_sql, **params), mode="overwrite")
-            return td
-        copym = re.match(
-            r"^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?:\w+\.)?(?P<name>\w+)\s+AS\s+"
-            r"(?:\w+\.)?(?P<src>\w+)\s*(?:ENGINE\s*=\s*(?P<eng>\w+)\s*(?:\((?P<eargs>[^)]*)\))?.*)?$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if copym and copym.group("src").upper() != "SELECT":
-            name, src = copym.group("name"), copym.group("src")
-            if name in self.tables:
-                # name collision: CH errors; IF NOT EXISTS keeps the
-                # existing table (and its data) untouched
-                if copym.group("ine"):
-                    return self.tables[name]
-                raise ValueError(f"table {name} already exists (use IF NOT EXISTS)")
-            eng = (copym.group("eng") or "").strip()
-            if eng.lower() == "distributed":
-                # CREATE TABLE d AS local ENGINE = Distributed(…) — the
-                # hw10.md:41-45 idiom: column config from the local table,
-                # storage proxied through the topology
-                td = TableDef(name=name, engine="Distributed")
-                td.settings["engine_args"] = [
-                    a for a in split_top(copym.group("eargs") or "") if a
-                ]
-                return self._register_distributed(td)
-            # CREATE TABLE a AS b (schema copy, D2; lecture_16.md:230):
-            # clone the source's TableDef/engine metadata, start empty
-            import copy as _copy
-
-            td = _copy.deepcopy(self.tables[src])
-            td.name = name
-            td.path = os.path.join("spark-warehouse", name)
-            if eng:
-                # CREATE TABLE new AS old ENGINE = X (hw09.md:141-144's
-                # MergeTree → ReplicatedMergeTree conversion): schema
-                # copies, the ENGINE clause wins. Replicated* records
-                # replication identity like functions/ddl.py does.
-                td.engine = re.sub(r"^Replicated", "", eng)
-                if eng.startswith("Replicated"):
-                    td.settings["replicated"] = True
-                    eargs_raw = (copym.group("eargs") or "").strip()
-                    td.settings["engine_full"] = f"{eng}({eargs_raw})" if eargs_raw else eng
-                else:
-                    td.settings.pop("replicated", None)
-                    td.settings["engine_full"] = eng
-            td.columns = td.columns or columns_of(self.table(src).schema)
-            td.masked = False
-            td.settings.pop("cold_volumes", None)
-            shutil.rmtree(td.path, ignore_errors=True)  # fresh table: no stale parts
-            self.register_table(td)
-            return td
-        copym3 = re.match(
-            # attrs-BEFORE-AS schema copy (hw14.md:30 `create table d
-            # engine=MergeTree order by tuple() as system.dashboards`):
-            # CH copies the source's structure only; system.* views are
-            # valid sources
-            r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>\w+)\s+"
-            r"(?P<attrs>ENGINE\s*=.*?)\s+AS\s+(?:(?P<srcdb>\w+)\.)?(?P<src>\w+)\s*$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if copym3 and copym3.group("src").upper() != "SELECT":
-            name = copym3.group("name")
-            srcdb, src = copym3.group("srcdb"), copym3.group("src")
-            attrs = copym3.group("attrs")
-            if srcdb and srcdb.lower() == "system":
-                if src not in CATALOG:
-                    raise KeyError(f"unknown system table system.{src}")
-                columns = columns_of(StructType.fromDDL(CATALOG[src].schema))
-            elif srcdb is None and src in self.tables:
-                columns = self.tables[src].columns or columns_of(self.table(src).schema)
-            else:
-                columns = None
-            if columns is not None:
-                em = re.search(r"ENGINE\s*=\s*(\w+)", attrs, re.IGNORECASE)
-                om = re.search(
-                    r"ORDER\s+BY\s+\(?([\w, ]+?)\)?\s*(?:PARTITION|SETTINGS|$)",
-                    attrs,
-                    re.IGNORECASE,
-                )
-                okey = tuple(
-                    c.strip() for c in (om.group(1).split(",") if om else [])
-                    if c.strip() and c.strip() != "tuple()"
-                )
-                td = TableDef(
-                    name=name,
-                    path=os.path.join("spark-warehouse", name),
-                    engine=em.group(1) if em else "MergeTree",
-                    order_by=okey,
-                    columns=columns,
-                )
-                shutil.rmtree(td.path, ignore_errors=True)  # fresh table: no stale parts
-                self.register_table(td)
-                return td
         if re.match(r"^\s*CREATE\s+TABLE\b", s, re.IGNORECASE):
-            return self.create_table(s)
+            return self.create_table(s, **params)
         dm = re.match(
             r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?:([\w]+)\.)?([\w]+)", s, re.IGNORECASE
         )
@@ -1784,8 +1689,8 @@ class Engine:
         self.check_access("INSERT", [name])
         td = self.tables[name]
         if td.engine != "Distributed":
-            # every block lands in the declared types; a CTAS or an MV's
-            # implicit target takes its list from its first block
+            # every block lands in the declared types; a table registered
+            # over a frame takes its list from its first block
             if td.columns is None:
                 td.columns = columns_of(df.schema)
             df = self._conform(td, df)
@@ -2306,10 +2211,6 @@ class Engine:
         import uuid as _uuid
 
         from otus_clickhouse_spark.streaming.mv import MaterializedView
-
-        if target not in self.tables:
-            td = TableDef(name=target, path=os.path.join("spark-warehouse", target))
-            self.tables[target] = td
 
         def transform(block: DataFrame) -> DataFrame:
             view = f"__mv_block_{_uuid.uuid4().hex[:8]}"

@@ -23,7 +23,9 @@ default-non-null contract).
 
 from __future__ import annotations
 
+import copy
 import re
+from dataclasses import dataclass
 
 from otus_clickhouse_spark.engine import Column, TableDef
 from otus_clickhouse_spark.functions.lexer import (
@@ -31,7 +33,6 @@ from otus_clickhouse_spark.functions.lexer import (
     Masked,
     close_paren,
     split_top,
-    strip_comments,
     unquote,
 )
 
@@ -180,13 +181,12 @@ def enum_mapping(t: str) -> dict[str, int] | None:
     return out
 
 
-_CREATE_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?:[\w]+\.)?(?P<name>[\w]+)\s*"
-    r"\((?P<cols>.*)\)\s*"
-    r"ENGINE\s*=?\s*(?P<engine>[\w]+)\s*(?:\((?P<engine_args>(?:[^()]|\([^()]*\))*)\))?"
-    r"(?P<rest>.*)$",
-    re.IGNORECASE | re.DOTALL,
+_HEAD_RE = re.compile(
+    r"^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?:\w+\.)?(?P<name>\w+)\s*",
+    re.IGNORECASE,
 )
+_ENGINE_RE = re.compile(r"\bENGINE\s*=?\s*(\w+)\s*", re.IGNORECASE)
+_AS_RE = re.compile(r"\bAS\b", re.IGNORECASE)
 # the clauses that can follow a key in a CREATE TABLE's tail
 _CLAUSE_RE = re.compile(
     r"\b(?:ORDER\s+BY|PARTITION\s+BY|PRIMARY\s+KEY|SAMPLE\s+BY|TTL|SETTINGS|COMMENT)\b",
@@ -233,8 +233,54 @@ def column_def(item: str) -> Column:
     return Column(lits.value(cm.group(1)), ch_type, spark_type, nullable, kind, expr)
 
 
-def parse_create_table(ddl: str) -> TableDef:
-    """Parse a CH CREATE TABLE into a TableDef with its column list.
+# the TableDef fields and settings keys each clause of a CREATE TABLE sets
+_CLAUSE_FIELDS = {
+    "columns": ("columns",),
+    "engine": ("engine", "version", "sign", "sum_columns", "engine_args", "replicated",
+               "engine_full", "zookeeper_path", "replica_macro"),
+    "order_by": ("order_by",),
+    "partition_by": ("partition_by",),
+    "ttl": ("ttl", "ttl_action"),
+    "settings": ("table_settings",),
+}
+
+
+@dataclass
+class CreateTable:
+    """A parsed CREATE TABLE: the table it defines, the source its
+    ``AS`` names (a SELECT, ``[db.]table`` or ``system.x``) and the
+    clauses it spells out (keys of ``_CLAUSE_FIELDS``)."""
+
+    td: TableDef
+    source: str | None = None
+    if_not_exists: bool = False
+    named: frozenset[str] = frozenset()
+
+    @property
+    def select(self) -> bool:
+        return bool(self.source and re.match(r"(?:SELECT|WITH)\b", self.source, re.IGNORECASE))
+
+    def over(self, base: TableDef) -> TableDef:
+        """A copy of ``base`` (an ``AS table`` source's definition) with
+        the clauses this statement names in place of the source's."""
+        td = copy.deepcopy(base)
+        td.name = self.td.name
+        for f in (f for clause in self.named for f in _CLAUSE_FIELDS[clause]):
+            if hasattr(td, f):
+                setattr(td, f, getattr(self.td, f))
+            elif f in self.td.settings:
+                td.settings[f] = self.td.settings[f]
+            else:
+                td.settings.pop(f, None)
+        return td
+
+
+def parse_create_table(ddl: str) -> CreateTable:
+    """Parse a CH CREATE TABLE in any of its forms (D2): an optional
+    column list, an optional ENGINE clause with its keys, TTL and
+    SETTINGS, and an optional source ``AS <SELECT…|WITH…|[db.]table|
+    system.x>`` before or after the engine clause (hw03.md:123-166,
+    lecture_16.md:230, hw09.md:141-144, hw14.md:30).
 
     Column attributes (lecture_12.md:14-47): ``DEFAULT expr`` fills the
     column when an INSERT omits it; ``MATERIALIZED expr`` is always
@@ -242,66 +288,91 @@ def parse_create_table(ddl: str) -> TableDef:
     excluded from the stored schema and recomputed per query by the
     engine's view registration.
     """
-    ddl = strip_comments(ddl)
-    m = _CREATE_RE.match(ddl.strip().rstrip(";"))
+    lits = Masked(ddl)
+    text = lits.text.strip().rstrip(";")
+    m = _HEAD_RE.match(text)
     if not m:
         raise ValueError("not a CREATE TABLE statement")
-    # secondary indexes/projections: D9/D10 handled elsewhere
-    other = re.compile(r"^(INDEX|PROJECTION|CONSTRAINT|PRIMARY\s+KEY)\b", re.IGNORECASE)
-    columns = tuple(
-        column_def(item) for item in split_top(m.group("cols")) if item and not other.match(item)
-    )
-    rest = m.group("rest") or ""
-    tail = Masked(rest)
+    named, rest, columns, source = set(), text[m.end() :], None, None
+    if rest.startswith("("):
+        end = close_paren(rest, 0)
+        # secondary indexes/projections: D9/D10 handled elsewhere
+        other = re.compile(r"^(INDEX|PROJECTION|CONSTRAINT|PRIMARY\s+KEY)\b", re.IGNORECASE)
+        columns = tuple(
+            column_def(lits.unmask(item))
+            for item in split_top(rest[1:end])
+            if item and not other.match(item)
+        )
+        named.add("columns")
+        rest = rest[end + 1 :]
+
+    def top(text: str, i: int) -> bool:
+        return text.count("(", 0, i) == text.count(")", 0, i)
+
+    am = next((a for a in _AS_RE.finditer(rest) if top(rest, a.start())), None)
+    if am:
+        body = rest[am.end() :].strip()
+        sm = re.match(r"(?:SELECT|WITH)\b|(?:\w+\.)?\w+", body, re.IGNORECASE)
+        if sm is None:
+            raise ValueError("CREATE TABLE … AS: expected a SELECT or a table")
+        if sm.group().upper() in ("SELECT", "WITH"):
+            source, rest = lits.unmask(body), rest[: am.start()]
+        else:
+            source, rest = sm.group(), rest[: am.start()] + " " + body[sm.end() :]
+    if columns is None and source is None:
+        raise ValueError("CREATE TABLE needs a column list or an AS source")
+
+    engine, raw_args = "MergeTree", ""
+    em = _ENGINE_RE.search(rest)
+    if em:
+        named.add("engine")
+        engine, after = em.group(1), em.end()
+        if rest.startswith("(", after):
+            end = close_paren(rest, after)
+            raw_args, after = lits.unmask(rest[after + 1 : end]).strip(), end + 1
+        rest = rest[: em.start()] + " " + rest[after:]
 
     def clause(kw: str) -> str | None:
-        # a key is the whole expression up to the next table clause
-        # outside parentheses: `PARTITION BY k % 2 ORDER BY k`
-        cm = re.search(rf"\b{kw}\s+", tail.text, re.IGNORECASE)
+        # a clause runs up to the next table clause outside parentheses:
+        # `PARTITION BY k % 2 ORDER BY k`
+        cm = re.search(rf"\b{kw}\s+", rest, re.IGNORECASE)
         if not cm:
             return None
-        body = tail.text[cm.end() :]
+        body = rest[cm.end() :]
         end = next(
-            (
-                e.start()
-                for e in _CLAUSE_RE.finditer(body)
-                if body.count("(", 0, e.start()) == body.count(")", 0, e.start())
-            ),
-            len(body),
+            (e.start() for e in _CLAUSE_RE.finditer(body) if top(body, e.start())), len(body)
         )
-        return tail.unmask(body[:end]).strip()
+        return body[:end].strip()
 
-    def key_tuple(raw: str | None) -> tuple[str, ...]:
-        if not raw or raw.lower() == "tuple()":
+    def key_tuple(body: str | None) -> tuple[str, ...]:
+        if not body or body.lower() == "tuple()":
             return ()
-        masked = Masked(raw).text
-        if masked.startswith("(") and close_paren(masked, 0) == len(masked) - 1:
-            raw = raw[1:-1]  # a tuple of keys, not `(a + b) * 2`
+        if body.startswith("(") and close_paren(body, 0) == len(body) - 1:
+            body = body[1:-1]  # a tuple of keys, not `(a + b) * 2`
         # columns or expression keys (e.g. toYYYYMM(dt), k % 2)
-        return tuple(k for k in split_top(raw) if k)
+        return tuple(lits.unmask(k) for k in split_top(body) if k)
 
-    engine = m.group("engine")
-    raw_args = m.group("engine_args") or ""
-    eargs = [a for a in split_top(raw_args) if a]
-    td = TableDef(  # engine args kept verbatim for Buffer/Kafka/Join engines
-
+    # PRIMARY KEY without ORDER BY (hw02.sql:22) defines the sort key
+    # (in CH the PK defaults to the sort key and vice versa)
+    order_by = clause("ORDER\\s+BY") or clause("PRIMARY\\s+KEY")
+    partition_by = clause("PARTITION\\s+BY")
+    named |= {k for k, v in (("order_by", order_by), ("partition_by", partition_by)) if v}
+    td = TableDef(
         name=m.group("name"),
         engine=re.sub(r"^Replicated", "", engine),  # replication = storage layer
-        # PRIMARY KEY without ORDER BY (hw02.sql:22) defines the sort key
-        # (in CH the PK defaults to the sort key and vice versa)
-        order_by=key_tuple(clause("ORDER\\s+BY") or clause("PRIMARY\\s+KEY")),
-        partition_by=key_tuple(clause("PARTITION\\s+BY")),
+        order_by=key_tuple(order_by),
+        partition_by=key_tuple(partition_by),
         columns=columns,
     )
+    # engine args kept verbatim for Buffer/Kafka/Join engines
+    eargs = [a for a in split_top(raw_args) if a]
     if engine.startswith("Replicated"):
         # ReplicatedXMergeTree('/zk/path', '{replica}'[, x-engine args…])
         # (hw09.md:318-319): record replication identity for
         # system.replicas / SHOW CREATE, then hand the REMAINING args to
         # the family-specific parsing below (ver/sign columns)
         td.settings["replicated"] = True
-        td.settings["engine_full"] = (
-            f"{engine}({raw_args.strip()})" if raw_args.strip() else engine
-        )
+        td.settings["engine_full"] = f"{engine}({raw_args})" if raw_args else engine
         if len(eargs) >= 2 and unquote(eargs[0]).startswith("/"):
             td.settings["zookeeper_path"] = unquote(eargs[0])
             td.settings["replica_macro"] = unquote(eargs[1])
@@ -315,23 +386,20 @@ def parse_create_table(ddl: str) -> TableDef:
         td.sign, td.version = eargs[0], eargs[1]
     elif base == "SummingMergeTree" and eargs:
         td.sum_columns = tuple(a.strip("()") for a in eargs)
-    tm = re.search(r"\bTTL\s+(.+?)(?=\bSETTINGS\b|$)", rest, re.IGNORECASE | re.DOTALL)
-    if tm:
-        td.ttl, action = split_ttl_action(tm.group(1).strip())
-        if action:
-            td.settings["ttl_action"] = action
-    sm = re.search(r"\bSETTINGS\s+(.+)$", rest, re.IGNORECASE | re.DOTALL)
-    if sm:
-        # SETTINGS k = v, … (hw02.sql:23 index_granularity; hw13.md table
-        # storage_policy): recorded verbatim — storage_policy ties the
-        # table to a system.storage_policies entry
-        tbl_settings = {}
-        for part in sm.group(1).split(","):
-            if "=" in part:
-                k, v = part.split("=", 1)
-                tbl_settings[k.strip()] = unquote(v)
-        if tbl_settings:
-            td.settings["table_settings"] = tbl_settings
     if eargs:
         td.settings["engine_args"] = eargs
-    return td
+    ttl = clause("TTL")
+    if ttl:
+        named.add("ttl")
+        td.ttl, action = split_ttl_action(lits.unmask(ttl))
+        if action:
+            td.settings["ttl_action"] = action
+    settings = clause("SETTINGS")
+    if settings:
+        # SETTINGS k = v, … (hw02.sql:23 index_granularity; hw13.md table
+        # storage_policy; the Kafka engine's kafka_*): recorded verbatim —
+        # storage_policy ties the table to a system.storage_policies entry
+        named.add("settings")
+        pairs = [p.split("=", 1) for p in split_top(settings) if "=" in p]
+        td.settings["table_settings"] = {k.strip(): lits.value(v) for k, v in pairs}
+    return CreateTable(td, source, bool(m.group("ine")), frozenset(named))

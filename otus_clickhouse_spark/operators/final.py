@@ -122,21 +122,28 @@ def aggregating_final(df: DataFrame, keys: list[str]) -> DataFrame:
 
 
 def final_view(df: DataFrame, td) -> DataFrame:
-    """Dispatch on TableDef.engine → the FINAL-collapsed DataFrame."""
-    keys = list(td.order_by)
+    """Dispatch on TableDef.engine → the FINAL-collapsed DataFrame. An
+    expression key (``ORDER BY (k, toDate(d))``) collapses on its value,
+    held in a hidden column for the collapse."""
+    from otus_clickhouse_spark.functions.clickhouse import frame_expr
+
+    keys, hidden = [], []
+    for i, key in enumerate(td.order_by):
+        if key not in df.columns:
+            df = df.withColumn(f"__key{i}", frame_expr(df, key))
+            key = f"__key{i}"
+            hidden.append(key)
+        keys.append(key)
     if td.engine == "ReplacingMergeTree":
-        return replacing_final(df, keys, td.version)
-    if td.engine == "SummingMergeTree":
-        return summing_final(df, keys, list(td.sum_columns) or None)
-    if td.engine == "CollapsingMergeTree":
-        return collapsing_final(df, keys, td.sign or "sign")
-    if td.engine == "VersionedCollapsingMergeTree":
-        return versioned_collapsing_final(df, keys, td.sign or "sign", td.version or "version")
-    if td.engine == "AggregatingMergeTree":
-        return aggregating_final(df, keys)
-    return df
-
-
-def optimize_deduplicate(df: DataFrame, by: list[str] | None = None) -> DataFrame:
-    """OPTIMIZE TABLE … DEDUPLICATE [BY cols] (lecture_07.md:362-377)."""
-    return df.dropDuplicates(by) if by else df.dropDuplicates()
+        out = replacing_final(df, keys, td.version)
+    elif td.engine == "SummingMergeTree":
+        out = summing_final(df, keys, list(td.sum_columns) or None)
+    elif td.engine == "CollapsingMergeTree":
+        out = collapsing_final(df, keys, td.sign or "sign")
+    elif td.engine == "VersionedCollapsingMergeTree":
+        out = versioned_collapsing_final(df, keys, td.sign or "sign", td.version or "version")
+    elif td.engine == "AggregatingMergeTree":
+        out = aggregating_final(df, keys)
+    else:
+        out = df
+    return out.drop(*hidden)

@@ -56,15 +56,6 @@ def drop_partition(df: DataFrame, partition_col: str, value) -> DataFrame:
     return df.filter(F.col(partition_col) != F.lit(value))
 
 
-def replace_partition(
-    target: DataFrame, source: DataFrame, partition_col: str, value
-) -> DataFrame:
-    """REPLACE PARTITION … FROM TABLE (lecture_16.md:211-327)."""
-    keep = target.filter(F.col(partition_col) != F.lit(value))
-    incoming = source.filter(F.col(partition_col) == F.lit(value))
-    return keep.unionByName(incoming)
-
-
 def ttl_expire(df: DataFrame, ttl_predicate: Column) -> DataFrame:
     """TTL delete (lecture_14.md:217-242): drop rows past their TTL."""
     return df.filter(~ttl_predicate)

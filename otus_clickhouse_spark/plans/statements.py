@@ -51,42 +51,40 @@ from otus_clickhouse_spark.functions.lexer import Masked, split_top, unquote
 from otus_clickhouse_spark.system_tables import CATALOG
 
 _UPDATE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+UPDATE\s+(.*?)\s+WHERE\s+(.*)$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+UPDATE\s+(.*?)\s+WHERE\s+(.*)$",
     re.IGNORECASE | re.DOTALL,
 )
 _ALTER_DELETE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+DELETE\s+WHERE\s+(.*)$", re.IGNORECASE | re.DOTALL
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+DELETE\s+WHERE\s+(.*)$", re.IGNORECASE | re.DOTALL
 )
 _LW_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?:default\.)?(\w+)\s+WHERE\s+(.*)$", re.IGNORECASE | re.DOTALL
+    r"^\s*DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.*)$", re.IGNORECASE | re.DOTALL
 )
 _DROP_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+DROP\s+PARTITION\s+(.+)$", re.IGNORECASE
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+PARTITION\s+(.+)$", re.IGNORECASE
 )
 _DETACH_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+DETACH\s+PARTITION\s+(.+)$", re.IGNORECASE
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+DETACH\s+PARTITION\s+(.+)$", re.IGNORECASE
 )
 _ATTACH_PART_FROM_RE = re.compile(
     # ATTACH PARTITION [ID] 'p' FROM src (hw09.md:161): COPY the
     # partition from the source table — the source keeps its data
     # (unlike MOVE) and the target's existing rows stay (unlike REPLACE)
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+ATTACH\s+PARTITION\s+(?:ID\s+)?(.+?)\s+"
-    r"FROM\s+(?:default\.)?(\w+)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ATTACH\s+PARTITION\s+(?:ID\s+)?(.+?)\s+FROM\s+(\w+)\s*$",
     re.IGNORECASE,
 )
 _ATTACH_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+ATTACH\s+PARTITION\s+(.+)$", re.IGNORECASE
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ATTACH\s+PARTITION\s+(.+)$", re.IGNORECASE
 )
 _FREEZE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+FREEZE(?:\s+PARTITION\s+(.+))?\s*$", re.IGNORECASE
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+FREEZE(?:\s+PARTITION\s+(.+))?\s*$", re.IGNORECASE
 )
 _REPLACE_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+REPLACE\s+PARTITION\s+(.+?)\s+FROM\s+(\w+)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+REPLACE\s+PARTITION\s+(.+?)\s+FROM\s+(\w+)\s*$",
     re.IGNORECASE,
 )
 _MOVE_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+MOVE\s+PARTITION\s+(.+?)\s+TO\s+TABLE\s+"
-    r"(?:default\.)?(\w+)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MOVE\s+PARTITION\s+(.+?)\s+TO\s+TABLE\s+(\w+)\s*$",
     re.IGNORECASE,
 )
 # advisory SYSTEM commands (D12; lecture_02.md:62-66, lecture_07.md:18-26):
@@ -99,7 +97,7 @@ _SYSTEM_NOOP_RE = re.compile(
     re.IGNORECASE,
 )
 _RELOAD_DICT_RE = re.compile(
-    r"^\s*SYSTEM\s+RELOAD\s+DICTIONAR(?:Y\s+(?:default\.)?(\w+)|IES)\s*$", re.IGNORECASE
+    r"^\s*SYSTEM\s+RELOAD\s+DICTIONAR(?:Y\s+(\w+)|IES)\s*$", re.IGNORECASE
 )
 # RBAC surface (D11; lecture_18.md:40-609, hw12.md:11-98): access control
 # belongs to the deployment (Ranger / Unity / table ACLs on a real
@@ -113,81 +111,81 @@ _RBAC_RE = re.compile(
     re.IGNORECASE,
 )
 _ADD_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?"
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?"
     r"(\w+\s+.+?)(?:\s+AFTER\s+(\w+))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _DROP_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
     re.IGNORECASE,
 )
 _MODIFY_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+MODIFY\s+COLUMN\s+(\w+)\s+([\w()',= ]+)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+COLUMN\s+(\w+)\s+([\w()',= ]+)\s*$",
     re.IGNORECASE,
 )
 # MODIFY COLUMN c DEFAULT expr — attribute-only change, no retype
 # (lecture_12-style `alter table t modify column d default today() - 20`)
 _MODIFY_COL_DEFAULT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+MODIFY\s+COLUMN\s+(\w+)\s+DEFAULT\s+(.+?)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+COLUMN\s+(\w+)\s+DEFAULT\s+(.+?)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _RENAME_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$",
     re.IGNORECASE,
 )
 _MODIFY_TTL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+MODIFY\s+TTL\s+(.+)$", re.IGNORECASE | re.DOTALL
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+TTL\s+(.+)$", re.IGNORECASE | re.DOTALL
 )
 # projections (D10; lectures/lecture_13.md:187-314, homeworks/hw08.md:38-49)
 _ADD_PROJ_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
     r"\(\s*SELECT\s+(.*?)(?:\s+GROUP\s+BY\s+(.*?))?\s*\)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _MAT_PROJ_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+MATERIALIZE\s+PROJECTION\s+(\w+)\s*$", re.IGNORECASE
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MATERIALIZE\s+PROJECTION\s+(\w+)\s*$", re.IGNORECASE
 )
 _DROP_PROJ_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+(?:DROP|CLEAR)\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+(?:DROP|CLEAR)\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
     re.IGNORECASE,
 )
 _PROJ_AGG_RE = re.compile(r"^(\w+)\s*\(\s*(\*|\w+)\s*\)(?:\s+AS\s+(\w+))?$", re.IGNORECASE)
 # data-skipping indexes (D9; lecture_08.md:99-240, homeworks/hw15.md)
 _ADD_INDEX_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+ADD\s+INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+(.+?)\s+"
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+(.+?)\s+"
     r"TYPE\s+(\w+(?:\([^)]*\))?)(?:\s+GRANULARITY\s+\d+)?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _DROP_INDEX_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+(?:DROP|CLEAR)\s+INDEX\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+(?:DROP|CLEAR)\s+INDEX\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
     re.IGNORECASE,
 )
 _MAT_INDEX_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+MATERIALIZE\s+INDEX\s+(\w+)\s*$", re.IGNORECASE
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MATERIALIZE\s+INDEX\s+(\w+)\s*$", re.IGNORECASE
 )
 _APPLY_TTL_RE = re.compile(
     r"^\s*SYSTEM\s+(?:START\s+TTL\s+MERGES|APPLY\s+TTL)\s+(\w+)\s*$", re.IGNORECASE
 )
 _OPTIMIZE_RE = re.compile(
-    r"^\s*OPTIMIZE\s+TABLE\s+(?:default\.)?(\w+)"
+    r"^\s*OPTIMIZE\s+TABLE\s+(\w+)"
     r"(?:\s+PARTITION\s+(\S+))?"
     r"(\s+FINAL)?"
     r"(?:\s+DEDUPLICATE(?:\s+BY\s+(.+))?)?\s*$",
     re.IGNORECASE,
 )
 _TRUNCATE_RE = re.compile(r"^\s*TRUNCATE\s+(?:TABLE\s+)?(\w+)\s*$", re.IGNORECASE)
-_RENAME_RE = re.compile(r"^\s*RENAME\s+TABLE\s+(?:default\.)?(\w+)\s+TO\s+(\w+)\s*$", re.IGNORECASE)
+_RENAME_RE = re.compile(r"^\s*RENAME\s+TABLE\s+(\w+)\s+TO\s+(\w+)\s*$", re.IGNORECASE)
 _EXCHANGE_RE = re.compile(
     r"^\s*EXCHANGE\s+TABLES\s+(\w+)\s+AND\s+(\w+)\s*$", re.IGNORECASE
 )
 # CH accepts `SHOW TABLE t` as shorthand for SHOW CREATE TABLE
 # (hw04.md:107 `show table transactions`)
 _SHOW_CREATE_RE = re.compile(
-    r"^\s*SHOW\s+(?:CREATE\s+(?:TABLE|VIEW)\s+|TABLE\s+)(?:default\.)?(\w+)\s*$",
+    r"^\s*SHOW\s+(?:CREATE\s+(?:TABLE|VIEW)\s+|TABLE\s+)(\w+)\s*$",
     re.IGNORECASE,
 )
 _SHOW_CREATE_DICT_RE = re.compile(
-    r"^\s*SHOW\s+CREATE\s+DICTIONARY\s+(?:default\.)?(\w+)\s*$", re.IGNORECASE
+    r"^\s*SHOW\s+CREATE\s+DICTIONARY\s+(\w+)\s*$", re.IGNORECASE
 )
 _SHOW_MISC_RE = re.compile(
     r"^\s*SHOW\s+(PROCESSLIST|DICTIONARIES|CLUSTERS|USERS|GRANTS|DATABASES)\s*$", re.IGNORECASE
@@ -241,11 +239,11 @@ _BACKUP_DEST = (
     r"|S3\s*\(\s*'([^']+)'(?:\s*,\s*'[^']*')*\s*\))"
 )
 _BACKUP_RE = re.compile(
-    r"^\s*BACKUP\s+TABLE\s+(?:default\.)?(\w+)\s+TO\s+" + _BACKUP_DEST + r"\s*$",
+    r"^\s*BACKUP\s+TABLE\s+(\w+)\s+TO\s+" + _BACKUP_DEST + r"\s*$",
     re.IGNORECASE,
 )
 _RESTORE_RE = re.compile(
-    r"^\s*RESTORE\s+TABLE\s+(?:default\.)?(\w+)(?:\s+AS\s+(\w+))?\s+FROM\s+"
+    r"^\s*RESTORE\s+TABLE\s+(\w+)(?:\s+AS\s+(\w+))?\s+FROM\s+"
     + _BACKUP_DEST
     + r"\s*$",
     re.IGNORECASE,
@@ -359,7 +357,7 @@ _KILL_RE = re.compile(
     r"^\s*KILL\s+QUERY\s+WHERE\s+query_id\s*=\s*'([^']+)'\s*$", re.IGNORECASE
 )
 _MODIFY_ORDER_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?:default\.)?(\w+)\s+MODIFY\s+ORDER\s+BY\s+\(?([\w, ]+?)\)?\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+ORDER\s+BY\s+\(?([\w, ]+?)\)?\s*$",
     re.IGNORECASE,
 )
 _ROW_POLICY_RE = re.compile(
@@ -526,7 +524,7 @@ def _apply_rbac(engine, s: str) -> None:
 # Only commas followed by an action keyword split — UPDATE/PROJECTION
 # bodies keep their internal commas.
 _MULTI_ALTER_RE = re.compile(
-    r"^\s*(ALTER\s+TABLE\s+(?:default\.)?\w+)\s+(.+)$", re.IGNORECASE | re.DOTALL
+    r"^\s*(ALTER\s+TABLE\s+\w+)\s+(.+)$", re.IGNORECASE | re.DOTALL
 )
 _ALTER_ACTION_SPLIT_RE = re.compile(
     r",\s*(?=(?:ADD|DROP|MODIFY|RENAME|CLEAR|MATERIALIZE|COMMENT|FREEZE|RESET)\b)",
@@ -559,7 +557,7 @@ def try_route(engine, s: str):
         # TRUNCATE keeps only the definition and retrains on insert.
         tm = re.search(
             r"(?:ALTER\s+TABLE|DELETE\s+FROM|OPTIMIZE\s+TABLE"
-            r"|TRUNCATE(?:\s+TABLE)?)\s+(?:default\.)?(\w+)",
+            r"|TRUNCATE(?:\s+TABLE)?)\s+(\w+)",
             s,
             re.IGNORECASE,
         )
@@ -1169,16 +1167,17 @@ def _try_route_inner(engine, s: str):
 
     m = _CREATE_MV_RE.match(s)
     if m:
-        name, target, _mid, populate, select_sql = m.groups()
+        name, target, mid, populate, select_sql = m.groups()
         fm = re.search(r"\bFROM\s+(\w+)", select_sql, re.IGNORECASE)
         if not fm:
             raise ValueError("CREATE MATERIALIZED VIEW: no FROM table in SELECT")
+        if not target:
+            # no TO: the MV's own name is its inner table, built from the
+            # MV's column list and engine clause over the SELECT's columns
+            target = name
+            engine.create_table(f"CREATE TABLE {name} {mid} AS {select_sql}", fill=False)
         return engine.create_materialized_view(
-            name,
-            target or name,  # no TO → the MV's own name is the landing table
-            select_sql,
-            source=fm.group(1),
-            populate=bool(populate),
+            name, target, select_sql, source=fm.group(1), populate=bool(populate)
         )
 
     m = _CREATE_VIEW_RE.match(s)

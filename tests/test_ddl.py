@@ -51,7 +51,7 @@ ORDER BY (pickup_datetime, trip_id)
 
 
 def test_parse_trips_shape():
-    td = parse_create_table(TRIPS_DDL)
+    td = parse_create_table(TRIPS_DDL).td
     assert td.name == "trips_ddl" and td.engine == "MergeTree"
     assert td.order_by == ("pickup_datetime", "trip_id")
     assert td.partition_by == ("toYYYYMM(pickup_datetime)",)
@@ -65,16 +65,16 @@ def test_parse_engine_args_and_ttl():
     td = parse_create_table(
         "CREATE TABLE v (id UInt64, ver UInt32, val String) "
         "ENGINE = ReplacingMergeTree(ver) ORDER BY id TTL created + INTERVAL 30 DAY"
-    )
+    ).td
     assert td.engine == "ReplacingMergeTree" and td.version == "ver"
     assert td.ttl == "created + INTERVAL 30 DAY"
     td2 = parse_create_table(
         "CREATE TABLE c (id UInt64, sign Int8) ENGINE = CollapsingMergeTree(sign) ORDER BY id"
-    )
+    ).td
     assert td2.sign == "sign"
     td3 = parse_create_table(
         "CREATE TABLE r (id UInt64) ENGINE = ReplicatedMergeTree('/ch/t', '{replica}') ORDER BY id"
-    )
+    ).td
     assert td3.engine == "MergeTree"  # replication = storage-layer no-op
 
 
@@ -162,3 +162,95 @@ def test_insert_column_list_zero_defaults(engine, tmp_path):
     r = engine.table("zerod").collect()[0]
     assert r.a == 7 and r.b == "" and r.c is None
     engine.execute("DROP TABLE zerod")
+
+
+@pytest.mark.parametrize(
+    "ddl,source,want",
+    [
+        (  # column list, no source
+            "CREATE TABLE IF NOT EXISTS kv (k UInt32, v String) ENGINE = MergeTree ORDER BY k",
+            None,
+            {"engine": "MergeTree", "order_by": ("k",), "columns": ["k", "v"], "ine": True},
+        ),
+        (  # CTAS, the engine clause before the SELECT (hw03.md:123-166)
+            "CREATE TABLE c1 ENGINE = ReplacingMergeTree(ver) PARTITION BY toYYYYMM(d) "
+            "ORDER BY (k, toDate(d)) AS SELECT k, d AS x, 'a AS b' AS s FROM src",
+            "SELECT k, d AS x, 'a AS b' AS s FROM src",
+            {
+                "engine": "ReplacingMergeTree",
+                "version": "ver",
+                "order_by": ("k", "toDate(d)"),
+                "partition_by": ("toYYYYMM(d)",),
+                "columns": None,
+            },
+        ),
+        (  # CTAS with a declared column list and a WITH query
+            "CREATE TABLE c2 (k UInt64, total UInt64) ENGINE = SummingMergeTree ORDER BY k "
+            "AS WITH t AS (SELECT 1 AS k) SELECT k, k AS total FROM t",
+            "WITH t AS (SELECT 1 AS k) SELECT k, k AS total FROM t",
+            {"engine": "SummingMergeTree", "order_by": ("k",), "columns": ["k", "total"]},
+        ),
+        (  # schema copy naming its own engine after the source (lecture_16.md:230)
+            "CREATE TABLE c5 AS db1.src ENGINE = ReplacingMergeTree(ver) ORDER BY (k, d)",
+            "db1.src",
+            {"engine": "ReplacingMergeTree", "version": "ver", "order_by": ("k", "d")},
+        ),
+        (  # bare schema copy: nothing named, everything copied
+            "CREATE TABLE a AS b",
+            "b",
+            {"engine": "MergeTree", "order_by": (), "columns": None},
+        ),
+        (  # the Replicated conversion (hw09.md:141-144)
+            "CREATE TABLE t2 AS t ENGINE=ReplicatedMergeTree('/ch/t2', '{replica}') "
+            "PRIMARY KEY (pickup_datetime)",
+            "t",
+            {"engine": "MergeTree", "order_by": ("pickup_datetime",), "replicated": True},
+        ),
+        (  # structure copy of a system view, the engine clause first (hw14.md:30)
+            "create table d\nengine=MergeTree\norder by tuple()\nas system.dashboards",
+            "system.dashboards",
+            {"engine": "MergeTree", "order_by": (), "columns": None},
+        ),
+    ],
+)
+def test_parse_every_create_table_form(ddl, source, want):
+    stmt = parse_create_table(ddl)
+    td = stmt.td
+    assert stmt.source == source
+    assert stmt.select == bool(source and source.startswith(("SELECT", "WITH")))
+    assert stmt.if_not_exists == want.get("ine", False)
+    assert td.engine == want["engine"] and td.order_by == want["order_by"]
+    assert td.version == want.get("version")
+    assert td.partition_by == want.get("partition_by", ())
+    if "columns" in want:
+        names = [c.name for c in td.columns] if td.columns else None
+        assert names == want["columns"]
+    assert td.settings.get("replicated", False) == want.get("replicated", False)
+
+
+def test_parse_named_clauses_overlay_a_copied_table():
+    """`AS src` keeps what the statement omits and takes what it names."""
+    src = parse_create_table(
+        "CREATE TABLE src (k UInt32, d Date, ver UInt32) ENGINE = ReplicatedReplacingMergeTree"
+        "('/ch/src', '{replica}', ver) PARTITION BY toYYYYMM(d) ORDER BY k "
+        "TTL d + INTERVAL 1 DAY SETTINGS index_granularity = 1024"
+    ).td
+    assert (src.engine, src.version, src.settings["replicated"]) == ("ReplacingMergeTree", "ver", True)
+    td = parse_create_table("CREATE TABLE c AS src ENGINE = MergeTree ORDER BY (k, d)").over(src)
+    assert (td.name, td.engine, td.version, td.order_by) == ("c", "MergeTree", None, ("k", "d"))
+    assert td.partition_by == ("toYYYYMM(d)",) and td.ttl == "d + INTERVAL 1 DAY"
+    assert td.settings == {"table_settings": {"index_granularity": "1024"}}
+    assert td.columns == src.columns
+
+
+def test_parse_settings_split_outside_literals():
+    td = parse_create_table(
+        "CREATE TABLE q (m String) ENGINE = Kafka SETTINGS "
+        "kafka_broker_list = 'k1:9092,k2:9092', kafka_topic_list = 't', "
+        "kafka_format = 'JSONEachRow' COMMENT 'queue, outbound'"
+    ).td
+    assert td.settings["table_settings"] == {
+        "kafka_broker_list": "k1:9092,k2:9092",
+        "kafka_topic_list": "t",
+        "kafka_format": "JSONEachRow",
+    }

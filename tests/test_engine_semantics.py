@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from otus_clickhouse_spark.operators.final import (
     collapsing_final,
-    optimize_deduplicate,
     replacing_final,
     summing_final,
     versioned_collapsing_final,
@@ -56,12 +55,6 @@ def test_versioned_collapsing_cancels_by_version(spark):
         (1, 2, 120.0, 1),
         (2, 1, 9.0, -1),
     ]
-
-
-def test_optimize_deduplicate(spark):
-    df = spark.createDataFrame([(1, "a"), (1, "a"), (1, "b")], "id int, v string")
-    assert optimize_deduplicate(df).count() == 2
-    assert optimize_deduplicate(df, ["id"]).count() == 1
 
 
 def test_final_via_engine_sql(spark, tmp_path):

@@ -64,11 +64,8 @@ def test_lightweight_delete_mask(spark):
 
 def test_partition_ops(spark):
     t1 = spark.createDataFrame([(202401, 1), (202402, 2)], "p int, v int")
-    t2 = spark.createDataFrame([(202402, 99)], "p int, v int")
     dropped = mutations.drop_partition(t1, "p", 202402)
     assert dropped.count() == 1
-    replaced = mutations.replace_partition(t1, t2, "p", 202402)
-    assert {r.v for r in replaced.collect()} == {1, 99}
 
 
 def test_ttl_expire(spark):

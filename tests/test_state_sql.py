@@ -24,7 +24,7 @@ def test_aggregate_function_types_parse():
         "val_arr AggregateFunction(groupArray, String), "
         "val_sum SimpleAggregateFunction(sum, Float64)) "
         "ENGINE = AggregatingMergeTree ORDER BY id"
-    )
+    ).td
     types = {c.name: c.spark_type for c in td.columns}
     assert types["val_uniq"] == "binary"
     assert types["val_avg"] == "struct<sum: double, count: bigint>"

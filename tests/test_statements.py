@@ -65,6 +65,9 @@ def test_optimize_deduplicate(engine, sales):
     )  # exact duplicate row
     engine.execute(f"OPTIMIZE TABLE {sales} DEDUPLICATE")
     assert engine.table(sales).count() == 4
+    # DEDUPLICATE BY keeps one row per listed-column value (lecture_07.md:362-377)
+    engine.execute(f"OPTIMIZE TABLE {sales} DEDUPLICATE BY id")
+    assert sorted(r.id for r in engine.table(sales).collect()) == [1, 2, 3]
 
 
 def test_truncate(engine, sales):
@@ -125,6 +128,13 @@ def test_create_materialized_view_per_block(engine, tmp_path):
         "SELECT k, sum(v) AS s FROM src_mv GROUP BY k"
     )
     assert engine.table("agg_mv").count() == 2  # POPULATE backfilled
+    # no TO: the MV's inner table takes the MV's engine clause
+    engine.execute(
+        "CREATE MATERIALIZED VIEW mv_inner ENGINE = SummingMergeTree ORDER BY k POPULATE AS "
+        "SELECT k, sum(v) AS s FROM src_mv GROUP BY k"
+    )
+    td = engine.tables["mv_inner"]
+    assert (td.engine, td.order_by) == ("SummingMergeTree", ("k",))
     # two separate inserts → per-block partial aggregates appended, NOT merged
     engine.execute("INSERT INTO src_mv VALUES (1, 10.0)")
     engine.execute("INSERT INTO src_mv VALUES (1, 100.0)")
@@ -132,6 +142,9 @@ def test_create_materialized_view_per_block(engine, tmp_path):
     # FINAL view merges on read (Summing semantics)
     merged = {r.k: r.s for r in engine.sql("SELECT k, s FROM agg_mv FINAL").collect()}
     assert merged[1] == 111.0
+    inner = {r.k: r.s for r in engine.sql("SELECT k, s FROM mv_inner FINAL").collect()}
+    assert inner == {1: 111.0, 2: 2.0}
+    engine.execute("DROP TABLE mv_inner")
     engine.execute("DROP TABLE src_mv")
     engine.execute("DROP TABLE agg_mv")
 
@@ -166,9 +179,81 @@ def test_ctas(engine):
         "SELECT count() AS n FROM orders WHERE o_totalprice > 100000"
     ).collect()[0].n
     assert got == want and got > 0
+    # an existing name: CH raises TABLE_ALREADY_EXISTS; IF NOT EXISTS
+    # neither replaces the table nor inserts
+    with pytest.raises(ValueError, match="already exists"):
+        engine.execute("CREATE TABLE big_orders ENGINE = Log AS SELECT 1 AS o_orderkey")
+    engine.execute(
+        "CREATE TABLE IF NOT EXISTS big_orders ENGINE = Log AS "
+        "SELECT o_orderkey, o_totalprice FROM orders"
+    )
+    assert engine.tables["big_orders"] is td and td.engine == "MergeTree"
+    assert engine.table("big_orders").count() == got
     path = td.path
     engine.execute("DROP TABLE big_orders")
     shutil.rmtree(path, ignore_errors=True)
+
+
+def test_ctas_takes_the_statement_clauses_and_column_list(engine, tmp_path):
+    """CTAS records the keys, version and column list it declares
+    (hw03.md:123-166), and runs a WITH query with its parameters."""
+    engine.execute(
+        "CREATE TABLE ctas_src (k UInt32, d DateTime, ver UInt32, v UInt32) "
+        "ENGINE = MergeTree ORDER BY k"
+    )
+    engine.tables["ctas_src"].path = str(tmp_path / "ctas_src")
+    engine.execute(
+        "INSERT INTO ctas_src VALUES (1, '2024-01-01 10:00:00', 1, 5), "
+        "(1, '2024-01-01 11:00:00', 2, 6), (2, '2024-02-01 10:00:00', 1, 7)"
+    )
+    engine.execute(
+        "CREATE TABLE ctas_r ENGINE = ReplacingMergeTree(ver) PARTITION BY toYYYYMM(d) "
+        "ORDER BY (k, toDate(d)) AS SELECT k, d, ver, v FROM ctas_src"
+    )
+    td = engine.tables["ctas_r"]
+    assert (td.order_by, td.partition_by, td.version) == (
+        ("k", "toDate(d)"),
+        ("toYYYYMM(d)",),
+        "ver",
+    )
+    final = engine.sql("SELECT k, v FROM ctas_r FINAL ORDER BY k").collect()
+    assert [(r.k, r.v) for r in final] == [(1, 6), (2, 7)]
+    engine.execute(
+        "CREATE TABLE ctas_s (k UInt64, total UInt64) ENGINE = SummingMergeTree ORDER BY k "
+        "AS WITH t AS (SELECT k, v FROM ctas_src WHERE v > {lo:UInt32}) "
+        "SELECT k, sum(v) AS s FROM t GROUP BY k",
+        lo=5,
+    )
+    td = engine.tables["ctas_s"]
+    assert [(c.name, c.ch_type, c.spark_type) for c in td.columns] == [
+        ("k", "UInt64", "decimal(20,0)"),
+        ("total", "UInt64", "decimal(20,0)"),
+    ]
+    assert engine.table("ctas_s").schema.simpleString() == "struct<k:decimal(20,0),total:decimal(20,0)>"
+    rows = engine.sql("SELECT k, total FROM ctas_s FINAL ORDER BY k").collect()
+    assert [(int(r.k), int(r.total)) for r in rows] == [(1, 6), (2, 7)]
+    for name in ("ctas_s", "ctas_r", "ctas_src"):
+        engine.execute(f"DROP TABLE {name}")
+
+
+def test_kafka_settings_keep_quoted_commas(engine):
+    engine.execute(
+        "CREATE TABLE kq_commas (m String) ENGINE = Kafka SETTINGS "
+        "kafka_broker_list = 'k1:9092,k2:9092', kafka_topic_list = 'kq', "
+        "kafka_group_name = 'g', kafka_format = 'JSONEachRow'"
+    )
+    td = engine.tables["kq_commas"]
+    want = {
+        "kafka_broker_list": "k1:9092,k2:9092",
+        "kafka_topic_list": "kq",
+        "kafka_group_name": "g",
+        "kafka_format": "JSONEachRow",
+    }
+    assert td.settings["table_settings"] == want
+    assert {k: td.settings[k] for k in want} == want
+    [ddl] = engine.execute("SHOW CREATE TABLE kq_commas")
+    assert "kafka_broker_list = k1:9092,k2:9092" in ddl
+    engine.execute("DROP TABLE kq_commas")
 
 
 def test_create_function_macro(engine):
@@ -980,6 +1065,13 @@ def test_create_table_as_schema_copy(engine, sales):
     assert engine.table("sales_copy").columns == engine.table(sales).columns
     engine.execute("INSERT INTO sales_copy VALUES (7, 202403, 70.0, 1)")
     assert engine.table("sales_copy").count() == 1
+    engine.execute("DROP TABLE sales_copy")
+    # the clauses the statement names win; the others are copied
+    engine.execute(f"CREATE TABLE sales_copy AS {sales} ENGINE = MergeTree ORDER BY (id, month)")
+    td = engine.tables["sales_copy"]
+    assert (td.engine, td.version, td.order_by) == ("MergeTree", None, ("id", "month"))
+    assert td.partition_by == engine.tables[sales].partition_by
+    assert td.columns == engine.tables[sales].columns
     engine.execute("DROP TABLE sales_copy")
 
 
