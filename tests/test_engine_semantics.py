@@ -57,6 +57,23 @@ def test_versioned_collapsing_cancels_by_version(spark):
     ]
 
 
+def test_optimize_deduplicate(spark, tmp_path):
+    """OPTIMIZE ... DEDUPLICATE drops whole-row duplicates; BY c keeps one
+    row per value of the listed columns (lecture_07.md:362-377)."""
+    from otus_clickhouse_spark.engine import Engine
+
+    eng = Engine(spark)
+    eng.execute("DROP TABLE IF EXISTS t_dedup")
+    eng.execute("CREATE TABLE t_dedup (id Int32, v String) ENGINE = MergeTree ORDER BY id")
+    eng.tables["t_dedup"].path = str(tmp_path / "t_dedup")
+    eng.execute("INSERT INTO t_dedup VALUES (1, 'a'), (1, 'a'), (1, 'b')")
+    eng.execute("OPTIMIZE TABLE t_dedup DEDUPLICATE")
+    assert eng.table("t_dedup").count() == 2
+    eng.execute("OPTIMIZE TABLE t_dedup DEDUPLICATE BY id")
+    assert eng.table("t_dedup").count() == 1
+    eng.execute("DROP TABLE t_dedup")
+
+
 def test_final_via_engine_sql(spark, tmp_path):
     """FROM t FINAL dialect → __final view through Engine.sql."""
     from otus_clickhouse_spark.engine import Engine, TableDef
