@@ -131,11 +131,57 @@ class TableDef:
     def read_schema(self) -> StructType | None:
         """The schema the table's files are read with: the stored
         columns, and the mask once a lightweight DELETE wrote it. Spark
-        adds the generated ``_p_*`` partition columns from the
+        adds the hidden partition columns (:meth:`keyed`) from the
         directory names. None (infer) for files that have no list yet."""
         if self.columns is None:
             return None
         return StructType(self.fields() + ([MASK] if self.masked else []))
+
+    def keys(self, role: str, columns) -> list[tuple[str, str]]:
+        """(expression, column) of each key of ``role``: "partition",
+        "order" or "sharding" (a Distributed table's sharding key). A
+        plain column of ``columns`` keeps its name; an expression is held
+        in the hidden column ``_p_<expr>`` (``toYYYYMM(d)`` →
+        ``_p_toYYYYMM_d``), which names its partition directories."""
+        sharding = self.settings.get("sharding_key")
+        exprs = {"partition": self.partition_by, "order": self.order_by,
+                 "sharding": (sharding,) if sharding else ()}[role]
+        return [(k, k if k in columns else "_p_" + re.sub(r"\W+", "_", k).strip("_")) for k in exprs]
+
+    def keyed(self, df: DataFrame, *roles: str) -> tuple[DataFrame, list[str], list[str]]:
+        """``df`` with a column for every key of ``roles``, the names of
+        those columns and the names of the hidden columns it added: the
+        one place a key expression becomes a column. A column ``df``
+        has is used as is (a plain key, or a hidden partition column a
+        stored frame reads from its directories), so it adds no plan."""
+        names, added = [], []
+        for role in roles:
+            for key, name in self.keys(role, df.columns):
+                if name not in df.columns:
+                    df = df.withColumn(name, frame_expr(df, key))
+                    added.append(name)
+                names.append(name)
+        return df, names, added
+
+    def in_partition(self, df: DataFrame, value: str):
+        """The predicate of partition ``value`` (``202401``, ``(1, 202401)``
+        or ``tuple(1, 202401)``) over ``df``: each value equals its
+        PARTITION BY key, cast to the key's type. A value list whose
+        length is not the key's is refused."""
+        from pyspark.sql import functions as F
+
+        from otus_clickhouse_spark.functions.ddl import key_tuple
+
+        values = key_tuple(value)
+        if len(values) != len(self.partition_by):
+            n = len(self.partition_by)
+            raise ValueError(f"PARTITION {value}: the partition key of {self.name} has {n} values")
+        cols = [F.col(n) if n in df.columns else frame_expr(df, k)
+                for k, n in self.keys("partition", df.columns)]
+        pred = F.lit(True)  # `tuple()` of an unpartitioned table: every row
+        for c, v, f in zip(cols, values, df.select(*cols).schema):
+            pred &= c.eqNullSafe(F.lit(unquote(v)).cast(f.dataType))
+        return pred
 
 
 class Engine:
@@ -253,9 +299,10 @@ class Engine:
     def register_table(self, td: TableDef, df: DataFrame | None = None) -> None:
         """Register a table: parquet-backed (``td.path``) or an explicit DataFrame.
 
-        The view lists the columns in declared order, then the generated
-        ``_p_*`` partition columns, so ``SELECT *``, ``system.columns``
-        and INSERT's positional mapping agree.
+        The view lists the declared columns in declared order and not
+        the hidden partition columns (:meth:`stored` keeps those), so
+        ``SELECT *``, ``DESCRIBE``, ``system.columns`` and INSERT's
+        positional mapping agree.
 
         Also materializes the ``<name>__final`` view when the engine type
         has FINAL collapse semantics (lecture_07.md:465-481, 551-790).
@@ -305,7 +352,8 @@ class Engine:
         return single_task(frame, size)
 
     def stored(self, name: str) -> DataFrame:
-        """Every stored row of ``name``: what a rewrite of its parts reads.
+        """Every stored row of ``name``: what a rewrite of its parts reads,
+        with the hidden partition columns its directories name.
 
         The registered view is filtered by the row policies, so a
         mutation built from it would delete the hidden rows. This reads
@@ -617,13 +665,12 @@ class Engine:
         td.settings["n_shards"] = n
         td.path = None
         self.tables[td.name] = td
-        frame = self.table(local)
-        key = td.settings.get("sharding_key")
+        frame, key, hidden = td.keyed(self.table(local), "sharding")
         if key and n > 1:
-            shard = (F.pmod(frame_expr(frame, key).cast("bigint"), F.lit(n)) + 1).cast("int")
+            shard = (F.pmod(F.col(key[0]).cast("bigint"), F.lit(n)) + 1).cast("int")
         else:
             shard = F.lit(1).cast("int")
-        frame.withColumn("_shard_num", shard).createOrReplaceTempView(td.name)
+        frame.withColumn("_shard_num", shard).drop(*hidden).createOrReplaceTempView(td.name)
         return td
 
     def add_storage_policy(self, policy: str, volume: str, disks: list[str]):
@@ -1677,9 +1724,9 @@ class Engine:
         MergeTree property that row-group min/max stats (≈ sparse PK
         index) are selective for ORDER-BY-key predicates. Expression
         partition keys (``PARTITION BY toYYYYMM(dt)``, SURVEY.md §7 hard
-        part 6) are written as generated ``_p_*`` columns, so directory
-        layout — and therefore partition pruning — matches the
-        ClickHouse partition key exactly.
+        part 6) name their directories by their hidden columns
+        (:meth:`TableDef.keyed`), so directory layout — and therefore
+        partition pruning — matches the ClickHouse partition key exactly.
         """
         from pyspark.sql import functions as F
 
@@ -1737,17 +1784,13 @@ class Engine:
             # count; repartition into one partition group per shard —
             # the Spark analogue of routing inserts to shard replicas —
             # then land in the local table
-            key = td.settings.get("sharding_key")
             n = td.settings.get("n_shards", 1)
+            # a repartition cannot call a SQL function: the key is a column
+            df, key, hidden = td.keyed(df, "sharding")
             if key:
-                # a repartition cannot call a SQL function: project the key first
-                df = df.withColumn("__shard", frame_expr(df, key))
-                shard = F.col("__shard")
-                if n > 1:
-                    df = df.repartition(n, F.pmod(shard.cast("bigint"), F.lit(n)))
-                else:
-                    df = df.repartition(shard)
-                df = df.drop("__shard")
+                shard = F.col(key[0])
+                by = (n, F.pmod(shard.cast("bigint"), F.lit(n))) if n > 1 else (shard,)
+                df = df.repartition(*by).drop(*hidden)
             self.insert(td.settings["local_table"], df, mode=mode)
             self._register_distributed(td)  # refresh proxy view + _shard_num
             for mv in self._mvs.get(name, []):
@@ -2492,14 +2535,14 @@ def _q(name: str) -> str:
 
 
 def _declared_order(td: TableDef, frame: DataFrame) -> DataFrame:
-    """``frame`` with ``td``'s listed columns first, in declared order.
-    A partitioned read appends the partition columns last."""
+    """``frame`` as its table's users see it: ``td``'s listed columns in
+    declared order, without the hidden partition columns a partitioned
+    read appends (:meth:`TableDef.keyed`)."""
     if td.columns is None:
         return frame
     have = frame.columns
     names = [c.name for c in td.columns if c.name in have]
-    order = names + [n for n in have if n not in names]
-    return frame if order == have else frame.select(*map(_q, order))
+    return frame if names == have else frame.select(*map(_q, names))
 
 
 def _open_cost(spark: SparkSession) -> int:

@@ -233,6 +233,20 @@ def column_def(item: str) -> Column:
     return Column(lits.value(cm.group(1)), ch_type, spark_type, nullable, kind, expr)
 
 
+def key_tuple(body: str) -> tuple[str, ...]:
+    """The items of a key or a partition value: ``tuple()`` is none;
+    ``(a, f(b))`` and ``tuple(a, f(b))`` are a tuple, not ``(a + b) * 2``;
+    anything else is one item (``toYYYYMM(dt)``, ``k % 2``). The keys of
+    ORDER BY, PRIMARY KEY and PARTITION BY, in CREATE TABLE and in
+    MODIFY ORDER BY, and the values of ``PARTITION <value>`` read so."""
+    lits = Masked(body)
+    text = lits.text.strip()
+    m = re.match(r"(?i)(?:tuple\s*)?\(", text)
+    if m and close_paren(text, m.end() - 1) == len(text) - 1:
+        text = text[m.end() : -1]
+    return tuple(lits.unmask(k) for k in split_top(text) if k)
+
+
 # the TableDef fields and settings keys each clause of a CREATE TABLE sets
 _CLAUSE_FIELDS = {
     "columns": ("columns",),
@@ -344,14 +358,6 @@ def parse_create_table(ddl: str) -> CreateTable:
         )
         return body[:end].strip()
 
-    def key_tuple(body: str | None) -> tuple[str, ...]:
-        if not body or body.lower() == "tuple()":
-            return ()
-        if body.startswith("(") and close_paren(body, 0) == len(body) - 1:
-            body = body[1:-1]  # a tuple of keys, not `(a + b) * 2`
-        # columns or expression keys (e.g. toYYYYMM(dt), k % 2)
-        return tuple(lits.unmask(k) for k in split_top(body) if k)
-
     # PRIMARY KEY without ORDER BY (hw02.sql:22) defines the sort key
     # (in CH the PK defaults to the sort key and vice versa)
     order_by = clause("ORDER\\s+BY") or clause("PRIMARY\\s+KEY")
@@ -360,8 +366,8 @@ def parse_create_table(ddl: str) -> CreateTable:
     td = TableDef(
         name=m.group("name"),
         engine=re.sub(r"^Replicated", "", engine),  # replication = storage layer
-        order_by=key_tuple(order_by),
-        partition_by=key_tuple(partition_by),
+        order_by=key_tuple(lits.unmask(order_by or "")),
+        partition_by=key_tuple(lits.unmask(partition_by or "")),
         columns=columns,
     )
     # engine args kept verbatim for Buffer/Kafka/Join engines

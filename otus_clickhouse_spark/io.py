@@ -12,7 +12,6 @@ how DuckDB/pyarrow truncate ns → µs, so oracle comparisons line up.
 
 from __future__ import annotations
 
-import re
 import shutil
 import uuid
 
@@ -20,8 +19,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from otus_clickhouse_spark.functions.clickhouse import frame_expr
 
 
 def _nanos_columns(path: str) -> list[str]:
@@ -54,26 +51,15 @@ def read_table(spark: SparkSession, path: str, schema: StructType | None = None)
     return df
 
 
-def partition_columns(td, columns) -> list[str]:
-    """The on-disk partition column of each PARTITION BY expression: a
-    plain column of the block keeps its name, any other expression is
-    written as a generated ``_p_*`` column (:func:`write_parts`)."""
-    return [
-        expr
-        if re.fullmatch(r"[A-Za-z_]\w*", expr) and expr in columns
-        else "_p_" + re.sub(r"[^\w]+", "_", expr).strip("_")
-        for expr in td.partition_by
-    ]
-
-
 def write_parts(df: DataFrame, td, path: str, mode: str = "append") -> None:
     """Write ``df`` under ``path`` as parts of table ``td`` (a ``TableDef``).
 
     This is the one part layout (lecture_02.md:107-196): the
-    ``PARTITION BY`` directories, with generated ``_p_*`` columns
-    recomputed from their expressions, and each file sorted by the
-    ``ORDER BY`` columns (after the partition columns, or Spark's own
-    sort for the partitioned write would replace the key sort).
+    ``PARTITION BY`` directories, an expression key's named by its
+    hidden column (``TableDef.keyed``), and each file sorted by the
+    ``ORDER BY`` keys (after the partition columns, or Spark's own
+    sort for the partitioned write would replace the key sort). An
+    expression sort key is computed for the sort and not stored.
 
     LZ4 block compression is ClickHouse's default codec and out-writes
     snappy on the insert probe. Page CRC32s are off: they cost ~15% of
@@ -89,13 +75,10 @@ def write_parts(df: DataFrame, td, path: str, mode: str = "append") -> None:
     candidate sizes that holds the column chunk's distinct values,
     instead of a fixed 1 MB filter per column per file.
     """
-    part_cols = partition_columns(td, df.columns)
-    for expr, col in zip(td.partition_by, part_cols):
-        if col != expr:
-            df = df.withColumn(col, frame_expr(df, expr))
-    keys = [k for k in td.order_by if k in df.columns]
+    df, part_cols, _ = td.keyed(df, "partition")
+    df, keys, sort_only = td.keyed(df, "order")
     if part_cols or keys:
-        df = df.sortWithinPartitions(*part_cols, *keys)
+        df = df.sortWithinPartitions(*part_cols, *keys).drop(*sort_only)
     writer = (
         df.write.mode(mode)
         .option("compression", "lz4")

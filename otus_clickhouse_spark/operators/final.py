@@ -124,16 +124,8 @@ def aggregating_final(df: DataFrame, keys: list[str]) -> DataFrame:
 def final_view(df: DataFrame, td) -> DataFrame:
     """Dispatch on TableDef.engine → the FINAL-collapsed DataFrame. An
     expression key (``ORDER BY (k, toDate(d))``) collapses on its value,
-    held in a hidden column for the collapse."""
-    from otus_clickhouse_spark.functions.clickhouse import frame_expr
-
-    keys, hidden = [], []
-    for i, key in enumerate(td.order_by):
-        if key not in df.columns:
-            df = df.withColumn(f"__key{i}", frame_expr(df, key))
-            key = f"__key{i}"
-            hidden.append(key)
-        keys.append(key)
+    held in a hidden column for the collapse (``TableDef.keyed``)."""
+    df, keys, hidden = td.keyed(df, "order")
     if td.engine == "ReplacingMergeTree":
         out = replacing_final(df, keys, td.version)
     elif td.engine == "SummingMergeTree":

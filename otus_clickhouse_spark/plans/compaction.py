@@ -19,7 +19,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from otus_clickhouse_spark.io import partition_columns, read_table, rewrite_parts
+from otus_clickhouse_spark.io import read_table, rewrite_parts
 
 
 def plan_compaction(path: str, target_bytes: int = 256 * 1024 * 1024, min_files: int = 2):
@@ -51,6 +51,6 @@ def compact_table(
     plan = plan_compaction(td.path, target_bytes)
     if plan is None:
         return None
-    df = read_table(spark, td.path, td.read_schema())
-    rewrite_parts(df.repartition(plan["n_target_files"], *partition_columns(td, df.columns)), td)
+    df, part_cols, _ = td.keyed(read_table(spark, td.path, td.read_schema()), "partition")
+    rewrite_parts(df.repartition(plan["n_target_files"], *part_cols), td)
     return plan

@@ -51,11 +51,6 @@ def read_with_mask(df: DataFrame) -> DataFrame:
     return df
 
 
-def drop_partition(df: DataFrame, partition_col: str, value) -> DataFrame:
-    """ALTER TABLE DROP PARTITION (lecture_16.md:114-152)."""
-    return df.filter(F.col(partition_col) != F.lit(value))
-
-
 def ttl_expire(df: DataFrame, ttl_predicate: Column) -> DataFrame:
     """TTL delete (lecture_14.md:217-242): drop rows past their TTL."""
     return df.filter(~ttl_predicate)

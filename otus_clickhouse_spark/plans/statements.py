@@ -42,11 +42,10 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from otus_clickhouse_spark.engine import Column, TableDef, _declared_order
-from otus_clickhouse_spark.io import partition_columns, rewrite_parts, write_parts
+from otus_clickhouse_spark.io import rewrite_parts, write_parts
 from otus_clickhouse_spark.functions.lexer import Masked, split_top, unquote
 from otus_clickhouse_spark.system_tables import CATALOG
 
@@ -338,13 +337,6 @@ def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> No
     engine.register_table(td)
 
 
-def _partition_column(td) -> str:
-    """The physical partition column for DROP PARTITION: either the raw
-    column or the materialized ``_p_*`` expression key (Engine.insert).
-    A plain identifier in PARTITION BY always names a table column."""
-    return partition_columns(td, td.partition_by)[0]
-
-
 def _detached_path(td, value) -> str:
     """Detached-partition store: ``<table_path>__detached/<value>``
     (≈ the detached/ directory of a MergeTree part, lecture_16.md:131)."""
@@ -357,7 +349,7 @@ _KILL_RE = re.compile(
     r"^\s*KILL\s+QUERY\s+WHERE\s+query_id\s*=\s*'([^']+)'\s*$", re.IGNORECASE
 )
 _MODIFY_ORDER_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+ORDER\s+BY\s+\(?([\w, ]+?)\)?\s*$",
+    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+ORDER\s+BY\s+(.+?)\s*$",
     re.IGNORECASE,
 )
 _ROW_POLICY_RE = re.compile(
@@ -593,11 +585,14 @@ def _try_route_inner(engine, s: str):
 
     m = _MODIFY_ORDER_RE.match(s)
     if m:
-        # MODIFY ORDER BY (D3; lecture_08.md:124-125): changes the sort
-        # key for FUTURE part writes, like CH (existing parts keep their
-        # order until OPTIMIZE/compaction rewrites them)
+        # MODIFY ORDER BY (D3; lecture_08.md:124-125): the sort key of
+        # FUTURE part writes, like CH (existing parts keep their order
+        # until OPTIMIZE/compaction rewrites them), and FINAL's at once
+        from otus_clickhouse_spark.functions.ddl import key_tuple
+
         td = engine.tables[m.group(1)]
-        td.order_by = tuple(c.strip() for c in m.group(2).split(","))
+        td.order_by = key_tuple(m.group(2))
+        engine.register_table(td)
         return {"order_by": td.order_by}
 
     m = _KILL_RE.match(s)
@@ -752,39 +747,30 @@ def _try_route_inner(engine, s: str):
 
     m = _DROP_PART_RE.match(s)
     if m:
-        from otus_clickhouse_spark.plans.mutations import drop_partition
-
-        name, value = m.group(1), unquote(m.group(2))
-        td = engine.tables[name]
-        pcol = _partition_column(td)
+        name, raw = m.groups()
         df = engine.stored(name)
-        typed = F.lit(value).cast(df.schema[pcol].dataType)
-        _persist(engine, name, df.filter(~F.col(pcol).eqNullSafe(typed)))
-        return {"dropped_partition": value}
+        _persist(engine, name, df.filter(~engine.tables[name].in_partition(df, raw)))
+        return {"dropped_partition": unquote(raw)}
 
     m = _DETACH_PART_RE.match(s)
     if m:
         # DETACH PARTITION (M3; lecture_16.md:114-152): move the
         # partition's rows to a detached store; readers stop seeing them
-        name, value = m.group(1), unquote(m.group(2))
-        td = engine.tables[name]
-        pcol = _partition_column(td)
+        name, raw = m.groups()
+        td, value = engine.tables[name], unquote(raw)
         df = engine.stored(name)
-        typed = F.lit(value).cast(df.schema[pcol].dataType)
-        det = _detached_path(td, value)
-        df.filter(F.col(pcol).eqNullSafe(typed)).write.mode("overwrite").parquet(det)
-        _persist(engine, name, df.filter(~F.col(pcol).eqNullSafe(typed)))
+        part = td.in_partition(df, raw)
+        df.filter(part).write.mode("overwrite").parquet(_detached_path(td, value))
+        _persist(engine, name, df.filter(~part))
         return {"detached_partition": value}
 
     m = _ATTACH_PART_FROM_RE.match(s)
     if m:
-        name, value, src = m.group(1), unquote(m.group(2)), m.group(3)
-        src_td = engine.tables[src]
+        name, raw, src = m.groups()
+        value, src_td = unquote(raw), engine.tables[src]
         incoming = engine.stored(src)
         if value != "all" and src_td.partition_by:
-            pcol = _partition_column(src_td)
-            typed = F.lit(value).cast(incoming.schema[pcol].dataType)
-            incoming = incoming.filter(F.col(pcol).eqNullSafe(typed))
+            incoming = incoming.filter(src_td.in_partition(incoming, raw))
         engine.insert(name, incoming.select(*engine.table(name).columns))
         return {"attached_partition": value, "from": src}
 
@@ -805,50 +791,40 @@ def _try_route_inner(engine, s: str):
     m = _REPLACE_PART_RE.match(s)
     if m:
         # REPLACE PARTITION … FROM other (M4; lecture_16.md:211-327):
-        # swap the partition's content for the source table's copy
-        name, value, src = m.group(1), unquote(m.group(2)), m.group(3)
+        # swap the partition's content for the source table's copy; the
+        # source's rows are chosen by this table's partition key
+        name, raw, src = m.groups()
         td = engine.tables[name]
-        pcol = _partition_column(td)
-        df = engine.stored(name)
-        typed = F.lit(value).cast(df.schema[pcol].dataType)
-        incoming = engine.stored(src)
-        inc_pcol = _partition_column(engine.tables[src]) if engine.tables[src].partition_by else pcol
-        incoming = incoming.filter(F.col(inc_pcol).eqNullSafe(typed)).select(*df.columns)
-        _persist(
-            engine, name, df.filter(~F.col(pcol).eqNullSafe(typed)).unionByName(incoming)
-        )
-        return {"replaced_partition": value}
+        df, incoming = engine.stored(name), engine.stored(src)
+        incoming = incoming.filter(td.in_partition(incoming, raw))
+        kept = df.filter(~td.in_partition(df, raw))
+        _persist(engine, name, kept.unionByName(incoming, allowMissingColumns=True))
+        return {"replaced_partition": unquote(raw)}
 
     m = _MOVE_PART_RE.match(s)
     if m:
         # MOVE PARTITION TO TABLE (M4; lecture_16.md:145): append the
         # partition's rows to the destination, remove them from the source
-        name, value, dst = m.group(1), unquote(m.group(2)), m.group(3)
-        td = engine.tables[name]
-        pcol = _partition_column(td)
+        name, raw, dst = m.groups()
         df = engine.stored(name)
-        typed = F.lit(value).cast(df.schema[pcol].dataType)
-        moving = df.filter(F.col(pcol).eqNullSafe(typed)).localCheckpoint(eager=True)
+        part = engine.tables[name].in_partition(df, raw)
+        moving = df.filter(part).localCheckpoint(eager=True)
         dst_cols = engine.table(dst).columns
         engine.insert(dst, moving.select(*[c for c in dst_cols if c in moving.columns]))
-        _persist(engine, name, df.filter(~F.col(pcol).eqNullSafe(typed)))
-        return {"moved_partition": value, "to": dst}
+        _persist(engine, name, df.filter(~part))
+        return {"moved_partition": unquote(raw), "to": dst}
 
     m = _FREEZE_RE.match(s)
     if m:
         # FREEZE (M5; lecture_16.md:154-160): snapshot the table's files
         # into a shadow directory (CH uses hardlinks; parquet files are
         # immutable here, so a copy preserves the same point-in-time view)
-        name, value = m.group(1), m.group(2)
+        name, raw = m.groups()
         td = engine.tables[name]
         snap = os.path.join("spark-warehouse", "_shadow", f"{name}_{uuid.uuid4().hex[:8]}")
-        if value is not None:
-            pcol = _partition_column(td)
-            v = unquote(value)
+        if raw is not None:
             df = engine.stored(name)
-            df.filter(
-                F.col(pcol).eqNullSafe(F.lit(v).cast(df.schema[pcol].dataType))
-            ).write.parquet(snap)
+            df.filter(td.in_partition(df, raw)).write.parquet(snap)
         else:
             shutil.copytree(td.path, snap)
         return {"frozen": snap}

@@ -260,6 +260,7 @@ def _parts(engine):
                          size, 1, removal))
             continue
         cold = [(cp, vol) for vol, cp in t.settings.get("cold_volumes", {}).items()]
+        keys = [n for _, n in t.keys("partition", [c.name for c in t.columns or ()])]
         for tier_path, disk in [(t.path, "default"), *cold]:
             if not os.path.isdir(tier_path):
                 continue
@@ -268,11 +269,13 @@ def _parts(engine):
                     if f.endswith(".parquet"):
                         p = os.path.join(root, f)
                         rel = os.path.relpath(p, tier_path)
-                        # the bare partition value, `col=` (or `_p_*=`) stripped
-                        part = re.sub(r"^[^=/]+=", "", os.path.dirname(rel) or "all")
-                        rows.append(
-                            (t.name, rel, part, part, disk, p, os.path.getsize(p), 1, removal)
-                        )
+                        # the value of each key's `<column>=<value>` directory:
+                        # `202401`, or `(1,202401)` with the id `1-202401`
+                        dirs = dict(d.split("=", 1) for d in rel.split(os.sep)[:-1] if "=" in d)
+                        values = [dirs.get(k, "") for k in keys] or ["all"]
+                        part = values[0] if len(values) == 1 else f"({','.join(values)})"
+                        rows.append((t.name, rel, part, "-".join(values), disk, p,
+                                     os.path.getsize(p), 1, removal))
     return rows
 
 

@@ -111,10 +111,19 @@ def test_expression_partition_key_materialized(engine, tmp_path, spark):
     # directory layout mirrors the CH partition key
     dirs = sorted(d for d in os.listdir(engine.tables["tr_part"].path) if d.startswith("_p_"))
     assert dirs == ["_p_toYYYYMM_dt=202401", "_p_toYYYYMM_dt=202402"]
-    # and pruning applies: partition filter appears in the physical plan
-    df = engine.table("tr_part").where(F.col("_p_toYYYYMM_dt") == 202402)
+    # and pruning applies to the stored frame, which keeps the hidden
+    # partition column: partition filter appears in the physical plan
+    df = engine.stored("tr_part").where(F.col("_p_toYYYYMM_dt") == 202402)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and df.count() == 2
+    # users see the declared columns only, so a CTAS copies just those
+    declared = ["trip_id", "dt", "fare"]
+    assert engine.table("tr_part").columns == declared
+    assert [r[0] for r in engine.run("DESCRIBE TABLE tr_part")] == declared
+    engine.execute("CREATE TABLE tr_copy ENGINE = MergeTree ORDER BY trip_id AS SELECT * FROM tr_part")
+    assert [c.name for c in engine.tables["tr_copy"].columns] == declared
+    assert engine.run("SELECT count() FROM tr_copy")[0][0] == 3
+    engine.execute("DROP TABLE tr_copy")
     engine.execute("DROP TABLE tr_part")
 
 

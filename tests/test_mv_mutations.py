@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from otus_clickhouse_spark.engine import TableDef
 from otus_clickhouse_spark.plans import mutations
 from otus_clickhouse_spark.plans.dictionary import Dictionary
 from otus_clickhouse_spark.plans.projections import Projection, ProjectionRegistry
@@ -63,9 +64,10 @@ def test_lightweight_delete_mask(spark):
 
 
 def test_partition_ops(spark):
+    # DROP PARTITION (lecture_16.md:114-152) keeps the rows outside it
     t1 = spark.createDataFrame([(202401, 1), (202402, 2)], "p int, v int")
-    dropped = mutations.drop_partition(t1, "p", 202402)
-    assert dropped.count() == 1
+    part = TableDef("t1", partition_by=("p",)).in_partition(t1, "202402")
+    assert t1.filter(~part).count() == 1
 
 
 def test_ttl_expire(spark):

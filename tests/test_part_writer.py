@@ -172,7 +172,9 @@ def test_rows_inserted_after_a_lightweight_delete_survive_a_mutation(engine, tmp
 
 def test_tuple_partition_key_with_a_call(engine, tmp_path):
     """``PARTITION BY (k, toYYYYMM(d))`` parses whole, and a mutation
-    rewrites both directory levels, so the next INSERT still lands."""
+    rewrites both directory levels, so the next INSERT still lands.
+    ``system.parts`` names a partition by both values, and a PARTITION
+    value must give one value per key."""
     _drop(engine, "tk")
     engine.execute(
         "CREATE TABLE tk (k UInt32, d Date, v UInt32) ENGINE = MergeTree "
@@ -185,16 +187,75 @@ def test_tuple_partition_key_with_a_call(engine, tmp_path):
         engine.execute("INSERT INTO tk VALUES (1, '2024-01-05', 1), (2, '2024-02-06', 2)")
         engine.execute("ALTER TABLE tk UPDATE v = v + 10 WHERE k = 1")
         engine.execute("INSERT INTO tk VALUES (1, '2024-03-07', 3)")
-        rows = engine.run("SELECT k, toString(d), v FROM tk ORDER BY v")
-        assert [tuple(r) for r in rows] == [
+        rows_sql = "SELECT k, toString(d), v FROM tk ORDER BY v"
+        assert [tuple(r) for r in engine.run(rows_sql)] == [
             (2, "2024-02-06", 2), (1, "2024-03-07", 3), (1, "2024-01-05", 11)
         ]
-        dirs = {os.path.relpath(os.path.dirname(f), td.path) for f in _files(td.path)}
+        files = _files(td.path)
+        dirs = {os.path.relpath(os.path.dirname(f), td.path) for f in files}
         assert dirs == {
             "k=1/_p_toYYYYMM_d=202401", "k=2/_p_toYYYYMM_d=202402", "k=1/_p_toYYYYMM_d=202403"
         }
+        parts = engine.run(
+            "SELECT partition, partition_id FROM system.parts WHERE table = 'tk' ORDER BY partition"
+        )
+        assert [tuple(r) for r in parts] == [
+            ("(1,202401)", "1-202401"), ("(1,202403)", "1-202403"), ("(2,202402)", "2-202402")
+        ]
+        # a value per key, or the statement is refused before any file changes
+        for value in ("1", "(1, 202401, 5)"):
+            with pytest.raises(ValueError, match="partition key of tk has 2 values"):
+                engine.execute(f"ALTER TABLE tk DROP PARTITION {value}")
+        assert _files(td.path) == files
+        engine.execute("ALTER TABLE tk DROP PARTITION (1, 202401)")
+        assert [tuple(r) for r in engine.run(rows_sql)] == [(2, "2024-02-06", 2), (1, "2024-03-07", 3)]
+        engine.execute("ALTER TABLE tk DROP PARTITION tuple(2, 202402)")
+        assert [tuple(r) for r in engine.run(rows_sql)] == [(1, "2024-03-07", 3)]
     finally:
         _drop(engine, "tk")
+
+
+@pytest.mark.parametrize("declared", ["create", "modify_order_by"])
+def test_expression_sort_key_orders_the_file(engine, tmp_path, declared):
+    """``ORDER BY (k, toDate(d))``, declared or set by MODIFY ORDER BY,
+    sorts each part by the key's value, computed for the sort and not
+    stored, on INSERT and on OPTIMIZE … FINAL; FINAL collapses on it."""
+    _drop(engine, "es")
+    order = "(k, toDate(d))" if declared == "create" else "k"
+    engine.execute(
+        "CREATE TABLE es (k UInt32, d DateTime, v UInt32) "
+        f"ENGINE = ReplacingMergeTree(v) ORDER BY {order}"
+    )
+    if declared == "modify_order_by":
+        res = engine.execute("ALTER TABLE es MODIFY ORDER BY (k, toDate(d))")
+        assert res == {"order_by": ("k", "toDate(d)")}
+    td = engine.tables["es"]
+    td.path = str(tmp_path / "es")
+
+    def days(f):
+        return [str(d)[:10] for d in pq.read_table(f).column("d").to_pylist()]
+
+    try:
+        # one task, so the block reaches the writer in this order
+        block = engine.spark.sql(
+            "SELECT * FROM VALUES (1, TIMESTAMP'2024-03-01 10:00:00', 1), "
+            "(1, TIMESTAMP'2024-01-01 10:00:00', 1), (1, TIMESTAMP'2024-02-01 10:00:00', 1) "
+            "AS t(k, d, v)"
+        ).coalesce(1)
+        engine.insert("es", block)
+        engine.execute("INSERT INTO es VALUES (1, '2024-03-01 20:00:00', 2)")
+        files = _files(td.path)
+        assert sorted(map(days, files)) == [["2024-01-01", "2024-02-01", "2024-03-01"], ["2024-03-01"]]
+        assert {tuple(pq.read_schema(f).names) for f in files} == {("k", "d", "v")}
+        final = "SELECT toString(d) AS d, v FROM es FINAL ORDER BY d"
+        want = [("2024-01-01 10:00:00", 1), ("2024-02-01 10:00:00", 1), ("2024-03-01 20:00:00", 2)]
+        assert [tuple(r) for r in engine.run(final)] == want
+        engine.execute("OPTIMIZE TABLE es FINAL")
+        (f,) = _files(td.path)
+        assert days(f) == ["2024-01-01", "2024-02-01", "2024-03-01"]
+        assert [tuple(r) for r in engine.run(final)] == want
+    finally:
+        _drop(engine, "es")
 
 
 def test_unparenthesized_expression_key_is_one_key(engine, tmp_path):

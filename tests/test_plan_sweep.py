@@ -11,17 +11,11 @@ becoming a row-at-a-time UDF) fails CI rather than surfacing as a 10×
 slowdown at 100 TB.
 """
 
-import pytest
-
-# registry-wide sweep: every queries() entry is built/printed -- the
-# bulk of the full suite's wall (r13); excluded from the driver's
-# default verify window, run at round close with -m ""
-pytestmark = pytest.mark.slow
-
 import functools
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 PYTHON_EVAL_MARKS = (

@@ -495,6 +495,16 @@ def test_distributed_engine(engine, tmp_path):
     engine.execute("INSERT INTO dist_t VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
     assert engine.table("local_shard").count() == 3
     assert engine.table("dist_t").count() == 3  # proxy view sees local data
+    # an expression key on two shards: shard = key mod 2, plus one
+    engine.define_cluster("two_shards", shards=2)
+    engine.execute(
+        "CREATE TABLE dist_e AS local_shard ENGINE = Distributed(two_shards, default, local_shard, k % 2)"
+    )
+    engine.execute("INSERT INTO dist_e VALUES (4, 4.0)")
+    rows = engine.run("SELECT k, _shard_num FROM dist_e ORDER BY k")
+    assert [tuple(r) for r in rows] == [(1, 2), (2, 1), (3, 2), (4, 1)]
+    assert engine.table("dist_e").columns == ["k", "v", "_shard_num"]
+    engine.execute("DROP TABLE dist_e")
     engine.execute("DROP TABLE dist_t")
     engine.execute("DROP TABLE local_shard")
 
@@ -947,6 +957,11 @@ def test_modify_order_by(engine, sales):
     res = engine.execute(f"ALTER TABLE {sales} MODIFY ORDER BY (month, id)")
     assert res == {"order_by": ("month", "id")}
     assert engine.tables[sales].order_by == ("month", "id")
+    # an expression key, which FINAL collapses on at once: id 1's two
+    # versions differ in amount, so both survive
+    res = engine.execute(f"ALTER TABLE {sales} MODIFY ORDER BY (id, toInt32(amount))")
+    assert res == {"order_by": ("id", "toInt32(amount)")}
+    assert engine.run(f"SELECT count() FROM {sales} FINAL")[0][0] == 4
 
 
 def test_detach_attach_partition(engine, sales):
