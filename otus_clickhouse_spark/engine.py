@@ -36,9 +36,9 @@ from otus_clickhouse_spark.functions.lexer import (
     Masked,
     call_args,
     close_paren,
+    split_data,
     split_statements,
     split_top,
-    strip_comments,
     unquote,
 )
 from otus_clickhouse_spark.plans.mutations import read_with_mask
@@ -631,8 +631,11 @@ class Engine:
                 )
 
     def _referenced_tables(self, text: str) -> list[str]:
-        names = re.findall(r"\b(?:FROM|JOIN)\s+`?(\w+)`?", text, re.IGNORECASE)
-        return [n for n in set(names) if n in self.tables]
+        """The registered tables ``text`` reads FROM or JOINs, never a
+        name inside a literal or comment."""
+        lits = Masked(text)
+        names = re.findall(rf"\b(?:FROM|JOIN)\s+(\w+|{LIT})", lits.text, re.IGNORECASE)
+        return [n for n in {lits.value(n) for n in names} if n in self.tables]
 
     def define_cluster(self, name: str, shards: int = 1) -> None:
         """Declare a cluster topology (lecture_15.md:40-67): the Spark
@@ -681,179 +684,45 @@ class Engine:
         self.storage_policies = [p for p in self.storage_policies if p[0] != policy]
         self.storage_policies.append((policy, volume, list(disks)))
 
-    _ON_CLUSTER_RE = re.compile(r"\s+ON\s+CLUSTER\s+'?(\w+)'?", re.IGNORECASE)
+    # ON CLUSTER <name> (lecture_15.md:84-99) of a DDL statement, and a
+    # CREATE whose name has a database qualifier, on masked text
+    _ON_CLUSTER_RE = re.compile(rf"\s+ON\s+CLUSTER\s+(\w+|{LIT})", re.IGNORECASE)
+    _DDL_RE = re.compile(r"(?:CREATE|DROP|ALTER|RENAME|TRUNCATE|EXCHANGE)\b", re.IGNORECASE)
+    _CREATE_IN_DB_RE = re.compile(
+        r"CREATE\s+(?:TABLE|DICTIONARY|(?:MATERIALIZED\s+)?VIEW)\s+"
+        r"(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\.\w",
+        re.IGNORECASE,
+    )
 
     def execute(self, text: str, **params):
-        """Statement router (EP1 entry point): DDL → catalog ops,
-        everything else → :meth:`run` (logged SELECT)."""
-        s = text.strip().rstrip(";")
-        if ("--" in s or "/*" in s) and not re.search(
-            r"\bFORMAT\s+\w+\s*\n", s, re.IGNORECASE
-        ):
-            # comments break the statement-shape regexes (lecture_19/20
-            # snippets end in trailing commentary). Inline FORMAT data
-            # blocks are never touched — data lines may legitimately
-            # contain `--`.
-            s = strip_comments(s).strip().rstrip(";")
-        dbm = re.match(
-            r"^\s*(CREATE|DROP)\s+DATABASE\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?(\w+)"
-            r"(?:\s+ON\s+CLUSTER\s+'?\w+'?)?\s*(?:ENGINE\s*=\s*(\w+)\s*(?:\([^)]*\))?\s*)?$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if dbm:
-            # D1 (hw03.md:7 `create database homework`): databases are
-            # namespaces over the flat catalog — CREATE registers the
-            # name so later `db.table` references resolve; DROP removes
-            # the name and the tables created under it stay (they live
-            # in the flat catalog; CH's DROP DATABASE CASCADE semantics
-            # are out of scope for the course surface). The engined form
-            # (hw19.md:85 `CREATE DATABASE pg ENGINE = PostgreSQL(…)`)
-            # records the engine for SHOW/system.databases; its tables
-            # proxy through the table-level JDBC path (S15/S16) when
-            # declared individually — remote auto-discovery needs a live
-            # server this sandbox doesn't have.
-            if dbm.group(1).upper() == "CREATE":
-                self._databases.add(dbm.group(2).lower())
-                if dbm.group(3):
-                    self._database_engines[dbm.group(2).lower()] = dbm.group(3)
-                return {"created_database": dbm.group(2)}
-            if dbm.group(2).lower() == "default":
-                # the engine's own namespace — dropping it would orphan
-                # the flat catalog (CH likewise refuses on its system DBs)
-                raise ValueError("cannot drop the default database")
-            db = dbm.group(2).lower()
-            # CH's Atomic DROP DATABASE drops the database's tables
-            # (lecture_02.md database model) — cascade over the mangled
-            # names registered under this namespace
-            for tname in [n for n in list(self.tables) if n.startswith(db + "__")]:
-                self.drop_table(tname)
-            # MVs owned by the database (by MV name or by source table)
-            # go with it — they are tables in CH's namespace too
-            pref = db + "__"
-            for src in list(self._mvs):
-                kept = [mv for mv in self._mvs[src] if not mv.name.startswith(pref)]
-                if src.startswith(pref) or not kept:
-                    self._mvs.pop(src, None)
-                else:
-                    self._mvs[src] = kept
-            self._databases.discard(db)
-            self._database_engines.pop(db, None)
-            if self.current_database == db:
-                self.current_database = "default"
-            return {"dropped_database": dbm.group(2)}
-        um = re.match(r"^\s*USE\s+(\w+)\s*$", s, re.IGNORECASE)
-        if um:
-            # USE db (D1): membership check + switch — subsequent
-            # unqualified names resolve in the current database first
-            # (CH errors on an unknown database too)
-            self._check_db_qualifier(um.group(1), "USE")
-            self.current_database = um.group(1).lower()
-            return {"using_database": um.group(1)}
-        cm = re.match(
-            r"^\s*CREATE\s+(?:TABLE|DICTIONARY|(?:MATERIALIZED\s+)?VIEW)\s+"
-            r"(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\.(\w+)",
-            s,
-            re.IGNORECASE,
-        )
-        if cm:
-            # a CREATE under a new qualifier implicitly declares the
-            # namespace (creation is benign; only destructive statements
-            # demand a previously-known database)
-            self._databases.add(cm.group(1).lower())
-        s = self._strip_known_db_prefixes(s)
-        # ON CLUSTER <name> (lecture_15.md:84-99): every node of the Spark
-        # "cluster" is the same session, so the clause reduces to declaring
-        # the topology (if new) and running the statement once.
-        ocm = self._ON_CLUSTER_RE.search(s)
-        if ocm and re.match(r"^\s*(CREATE|DROP|ALTER|RENAME|TRUNCATE|EXCHANGE)\b", s, re.IGNORECASE):
-            self._clusters.setdefault(ocm.group(1), 1)
+        """Run one ClickHouse statement (EP1 entry point) through the
+        route table of :mod:`otus_clickhouse_spark.plans.statements`; a
+        statement no route takes runs as a logged query (:meth:`run`).
+
+        An inline ``FORMAT`` data block is split off first and is never
+        masked or rewritten. The statement head is masked once: database
+        qualifiers resolve on the masked text, and ``ON CLUSTER`` drops
+        from a DDL statement, since every node of the Spark "cluster" is
+        this session; the clause declares the topology if it is new."""
+        from otus_clickhouse_spark.plans.statements import NO_ROUTE, route
+
+        head, data = split_data(text.strip().rstrip(";"))
+        lits = Masked(head)
+        s = lits.text.strip().rstrip(";").rstrip()
+        in_db = self._CREATE_IN_DB_RE.match(s)
+        if in_db:
+            # a CREATE under a new qualifier declares the namespace
+            # (creation is benign; destructive statements demand a known one)
+            self._databases.add(in_db.group(1).lower())
+        s = self._qualify_names(s)
+        if self._DDL_RE.match(s):
+            for cluster in self._ON_CLUSTER_RE.findall(s):
+                self._clusters.setdefault(lits.value(cluster), 1)
             s = self._ON_CLUSTER_RE.sub("", s)
-        if re.match(r"^\s*CREATE\s+TABLE\b", s, re.IGNORECASE):
-            return self.create_table(s, **params)
-        dm = re.match(
-            r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?:([\w]+)\.)?([\w]+)", s, re.IGNORECASE
-        )
-        if dm:
-            self._check_db_qualifier(dm.group(1), "DROP TABLE")
-            name = dm.group(2)
-            is_mv = any(mv.name == name for mvs in self._mvs.values() for mv in mvs)
-            if (
-                name not in self.tables
-                and not is_mv
-                and re.search(r"\bIF\s+EXISTS\b", s, re.IGNORECASE)
-            ):
-                return None  # DROP TABLE IF EXISTS on an absent table is a no-op
-            return self.drop_table(name)
-        fm = re.match(
-            # INSERT … FORMAT CSV\n<data> — the HTTP/CLI inline-data form
-            # (clusters/airflow_and_ch etl.py insert path over HTTP;
-            # lecture_03.md format-negotiated inserts)
-            r"^\s*INSERT\s+INTO\s+(?:([\w]+)\.)?([\w]+)\s*(?:\(([^)]*)\))?\s+"
-            r"FORMAT\s+(\w+)\s*\n(.*)$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if fm:
-            db, name, collist, fmt, data = fm.groups()
-            self._check_db_qualifier(db, "INSERT")
-            cols = [unquote(c) for c in collist.split(",")] if collist else None
-            if fmt.lower() == "values":
-                return self.insert(name, self._values_frame(name, "VALUES " + data, cols))
-            return self.insert(name, self._format_frame(name, fmt, data, cols))
-        im = re.match(
-            r"^\s*INSERT\s+INTO\s+(?:([\w]+)\.)?([\w]+)\s*(?:\(([^)]*)\))?\s+"
-            r"(SELECT\b.*|WITH\b.*|VALUES\b.*)",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if im:
-            self._check_db_qualifier(im.group(1), "INSERT")
-            name, collist, rest = im.group(2), im.group(3), im.group(4)
-            cols = [unquote(c) for c in collist.split(",")] if collist else None
-            if rest.upper().startswith(("SELECT", "WITH")):
-                return self.insert(name, self._align_block(name, self.sql(rest, **params), cols))
-            return self.insert(name, self._values_frame(name, rest, cols))
-        dfm = re.match(
-            r"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?format\s*\(\s*(\w+)\s*,\s*(.*)\)\s*$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if dfm:
-            # DESC format(Fmt, <inline data>) — the schema-inference
-            # probe (lecture_03.md:361-363 goldens): parse the literal
-            # through the same format map as file() and report the
-            # inferred columns
-            from pyspark.sql import Row
-
-            df = self.format_inline_table(dfm.group(1), dfm.group(2))
-            shape = Row("col_name", "data_type", "comment")
-            return [shape(f.name, f.dataType.simpleString(), None) for f in df.schema.fields]
-        xm = re.match(
-            r"^\s*EXPLAIN\s+(?:(AST|SYNTAX|PLAN|PIPELINE|ESTIMATE)\s+)?(SELECT\b.*|WITH\b.*)$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if xm:
-            # EXPLAIN [mode] (D7; lectures/lecture_21.md:399-452): CH modes
-            # map onto Spark's explain flavors — AST/SYNTAX ≈ parsed/
-            # analyzed (extended), PLAN ≈ formatted, PIPELINE ≈ physical
-            # with codegen, ESTIMATE ≈ cost
-            if (xm.group(1) or "").upper() == "ESTIMATE":
-                return self.explain_estimate(xm.group(2))
-            mode = {
-                "AST": "extended",
-                "SYNTAX": "extended",
-                "PLAN": "formatted",
-                "PIPELINE": "codegen",
-            }.get((xm.group(1) or "PLAN").upper(), "formatted")
-            return [self.explain(xm.group(2), mode=mode)]
-        from otus_clickhouse_spark.plans.statements import try_route
-
-        routed = try_route(self, s)
-        if routed is not None:
-            return routed
-        return self.run(s, **params)
+        if data:
+            s += "\n" + lits.keep(data)
+        out = route(self, lits, s, params)
+        return self.run(lits.unmask(s), **params) if out is NO_ROUTE else out
 
     def _check_db_qualifier(self, db: str | None, stmt: str) -> None:
         """The engine's namespace is flat; only KNOWN database prefixes
@@ -882,8 +751,7 @@ class Engine:
         resolution error, never silently acting on the flat table.
         Inline FORMAT-data blocks are never rewritten (only the
         statement head before the data newline is scanned)."""
-        fm = re.search(r"\bFORMAT\s+\w+\s*\n", s, re.IGNORECASE)
-        head, data = (s[: fm.end()], s[fm.end() :]) if fm else (s, "")
+        head, data = split_data(s)
         lits = Masked(head)
         return lits.unmask(self._qualify_names(lits.text)) + data
 
@@ -933,6 +801,10 @@ class Engine:
                         r"\s*EXCHANGE\b", m.string, re.IGNORECASE
                     ):
                         return m.group(0)  # boolean AND, not EXCHANGE's 2nd operand
+                    if kw == "EXISTS" and re.match(
+                        r"\s*(?:CREATE|DROP)\s+DATABASE\b", m.string, re.IGNORECASE
+                    ):
+                        return m.group(0)  # a database name, not a table
                     return m.group(0)[: -len(m.group(2))] + f"{cur}__{m.group(2)}"
 
                 head = re.sub(
@@ -1688,9 +1560,10 @@ class Engine:
         import time
 
         now = _dt.datetime.now()
+        masked = Masked(text).text
         touched = sorted(
             name for name in self.tables
-            if re.search(rf"\b{re.escape(name)}\b", text)
+            if re.search(rf"\b{re.escape(name)}\b", masked)
         )
         return (
             text,
@@ -2255,13 +2128,14 @@ class Engine:
 
         from otus_clickhouse_spark.streaming.mv import MaterializedView
 
+        lits = Masked(select_sql)
+        from_source = re.compile(rf"\bFROM\s+{source}\b", re.IGNORECASE)
+
         def transform(block: DataFrame) -> DataFrame:
             view = f"__mv_block_{_uuid.uuid4().hex[:8]}"
             block.createOrReplaceTempView(view)
             try:
-                out = self.sql(
-                    re.sub(rf"\bFROM\s+{source}\b", f"FROM {view}", select_sql, flags=re.IGNORECASE)
-                )
+                out = self.sql(lits.unmask(from_source.sub(f"FROM {view}", lits.text)))
             finally:
                 # the analyzed plan has resolved the view already
                 self.spark.catalog.dropTempView(view)

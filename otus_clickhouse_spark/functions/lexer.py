@@ -17,6 +17,7 @@ escapes and doubled quotes, plus ``$$…$$`` heredocs. Comments are
 from __future__ import annotations
 
 import re
+from itertools import chain
 
 # placeholders are single characters from the supplementary private use
 # planes: no regex class a pass uses (\w, \s, \d, brackets, quotes)
@@ -64,6 +65,11 @@ class Masked:
         tok = m.group("lit")
         if tok is None:  # a comment: a block comment still separates words
             return " " if m.group().startswith("/") else ""
+        return self.keep(tok)
+
+    def keep(self, tok: str) -> str:
+        """The placeholder that unmasks to ``tok`` verbatim: a literal,
+        or an inline data block, which is never masked."""
         ch = self._chars.get(tok)
         if ch is None:
             code = self._first + len(self._tokens)
@@ -107,10 +113,21 @@ def unquote(token: str) -> str:
     return re.sub(r"\\([\\'\"`])|" + re.escape(q * 2), lambda e: e.group(1) or q, body)
 
 
-def strip_comments(sql: str) -> str:
-    """``sql`` without its comments; literals are kept as written."""
-    m = Masked(sql)
-    return m.unmask(m.text)
+_DATA_RE = re.compile(r"\bFORMAT\s+\w+\s*\n", re.IGNORECASE)
+
+
+def split_data(sql: str) -> tuple[str, str]:
+    """``sql`` split after its first ``FORMAT <name>`` line break outside
+    a literal or comment: the statement head, and the inline data block
+    that follows it (``INSERT … FORMAT CSV\\n<rows>``), "" when none."""
+    start = 0
+    for tok in chain(_TOKEN_RE.finditer(sql), [None]):
+        m = _DATA_RE.search(sql, start, tok.start() if tok else len(sql))
+        if m:
+            return sql[: m.end()], sql[m.end() :]
+        if tok is None:
+            return sql, ""
+        start = tok.end()
 
 
 _OPEN, _CLOSE = "([", ")]"

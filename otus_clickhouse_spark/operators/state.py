@@ -15,9 +15,8 @@ contract as CH ``uniq``.
 For the merge-idempotent aggregates (sum/count/min/max —
 ``SimpleAggregateFunction``) no sketch is needed: the partial IS the
 state; re-aggregate with the matching merge function
-(sum→sum, count→sum, min→min, max→max), as
-:func:`otus_clickhouse_spark.operators.skew.salted_agg` and the
-Summing-engine view already do.
+(sum→sum, count→sum, min→min, max→max), as the Summing-engine
+view already does.
 
 This is what makes the MV → AggregatingMergeTree pattern work at
 100 TB: each inserted block appends O(groups) sketch rows, never

@@ -1,36 +1,37 @@
-"""Mutation / maintenance statement router (SURVEY.md §2.11-2.12).
+"""The statement router: one ordered table of the ClickHouse statements
+``Engine.execute`` runs (SURVEY.md §2.11-2.12).
 
-Extends ``Engine.execute`` beyond CREATE/DROP/INSERT with the
-statements the reference course actually issues against tables:
+Each :class:`Route` has a kind, a pattern, a handler and a mutation
+flag. ``Engine.execute`` masks the statement once
+(:class:`~otus_clickhouse_spark.functions.lexer.Masked`: every literal
+is one placeholder, comments are gone) and :func:`route` runs the first
+route whose pattern matches the whole masked text. The handler receives
+the pattern's groups unmasked, and the query parameters. No pattern can
+match inside a literal, so a keyword in a string never reroutes or
+splits a statement; a route that takes a literal matches ``LIT`` and
+reads its content with ``unquote``. A statement no route matches runs
+as a query. Order matters where one form is a prefix of another:
+MODIFY COLUMN … DEFAULT before MODIFY COLUMN, ATTACH PARTITION … FROM
+before ATTACH PARTITION, a privilege GRANT before a role GRANT.
 
-- ``ALTER TABLE t UPDATE a = expr[, …] WHERE pred``  (homeworks/hw11.md:95-130)
-- ``ALTER TABLE t DELETE WHERE pred``                (lectures/lecture_16.md:176-194)
-- ``DELETE FROM t WHERE pred``  — lightweight, via the ``_row_exists``
-  mask (lectures/lecture_16.md:196-202)
-- ``ALTER TABLE t DROP PARTITION v``                 (lecture_16.md:114-152)
-- ``OPTIMIZE TABLE t [FINAL] [DEDUPLICATE [BY c,…]]`` (lecture_07.md:362-377)
-- ``TRUNCATE TABLE t``                               (lecture_18.md:228)
-- ``RENAME TABLE a TO b`` / ``EXCHANGE TABLES a AND b`` (lecture_12.md:239,
-  homeworks/hw09.md:178-179)
-- ``SHOW CREATE TABLE t``                            (lecture_16.md:330-334)
-- ``CREATE MATERIALIZED VIEW mv [TO tgt] [POPULATE] AS SELECT``
-  (lectures/lecture_09.md:668-744) — per-block INSERT trigger
-- ``CREATE DICTIONARY d (…) PRIMARY KEY k SOURCE(… TABLE 'src' …)``
-  (lectures/lecture_11.md:1-130) — broadcast lookup + SQL dictGet
+The table covers the DDL (databases, tables, views, materialized views
+as INSERT triggers — lecture_09.md:668-744 — dictionaries, functions,
+named collections), INSERT, EXPLAIN, SET, the SHOW family, access
+control (lecture_18.md:40-609), backups (hw13.md:40-159) and the ALTER
+family: columns, indexes, projections, partitions and the mutations
+``ALTER TABLE t UPDATE … WHERE …`` (hw11.md:95-130), ``ALTER TABLE t
+DELETE WHERE …`` and the lightweight ``DELETE FROM t WHERE …``
+(lecture_16.md:176-202).
 
-ClickHouse mutations rewrite whole parts in place; the parquet-table
-analogue reads every stored row (``Engine.stored``), transforms it and
-writes the table back through :func:`otus_clickhouse_spark.io.rewrite_parts`,
-the write-then-swap compaction and INSERT's layout share, so concurrent
-readers of the old file listing are never half-served. Expression predicates
-pass through the dialect translator, so ClickHouse function names
+A mutation route's success is recorded for ``system.mutations``
+(lecture_16.md:60-98). ClickHouse mutations rewrite whole parts in
+place; the parquet-table analogue reads every stored row
+(``Engine.stored``), transforms it and writes the table back through
+:func:`otus_clickhouse_spark.io.rewrite_parts`, the write-then-swap
+compaction and INSERT's layout share, so concurrent readers of the old
+file listing are never half-served. Expression predicates pass through
+the dialect translator, so ClickHouse function names
 (``toYYYYMM(dt) = 202407`` …) work inside WHERE/assignments.
-
-At scale these are partition-scoped rewrites: a WHERE that only hits
-one partition directory still rereads just the table's parquet (Spark
-prunes the scan via pushdown) and rewrites the full table only when
-the mutation touches it; DROP PARTITION on a materialized partition
-key removes whole directories without reading data.
 """
 
 from __future__ import annotations
@@ -39,232 +40,65 @@ import dataclasses
 import os
 import re
 import shutil
+import time
 import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 from otus_clickhouse_spark.engine import Column, TableDef, _declared_order
 from otus_clickhouse_spark.io import rewrite_parts, write_parts
-from otus_clickhouse_spark.functions.lexer import Masked, split_top, unquote
+from otus_clickhouse_spark.functions.lexer import LIT, Masked, split_top, unquote
 from otus_clickhouse_spark.system_tables import CATALOG
 
-_UPDATE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+UPDATE\s+(.*?)\s+WHERE\s+(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ALTER_DELETE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+DELETE\s+WHERE\s+(.*)$", re.IGNORECASE | re.DOTALL
-)
-_LW_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.*)$", re.IGNORECASE | re.DOTALL
-)
-_DROP_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+PARTITION\s+(.+)$", re.IGNORECASE
-)
-_DETACH_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+DETACH\s+PARTITION\s+(.+)$", re.IGNORECASE
-)
-_ATTACH_PART_FROM_RE = re.compile(
-    # ATTACH PARTITION [ID] 'p' FROM src (hw09.md:161): COPY the
-    # partition from the source table — the source keeps its data
-    # (unlike MOVE) and the target's existing rows stay (unlike REPLACE)
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ATTACH\s+PARTITION\s+(?:ID\s+)?(.+?)\s+FROM\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-_ATTACH_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ATTACH\s+PARTITION\s+(.+)$", re.IGNORECASE
-)
-_FREEZE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+FREEZE(?:\s+PARTITION\s+(.+))?\s*$", re.IGNORECASE
-)
-_REPLACE_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+REPLACE\s+PARTITION\s+(.+?)\s+FROM\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-_MOVE_PART_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MOVE\s+PARTITION\s+(.+?)\s+TO\s+TABLE\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-# advisory SYSTEM commands (D12; lecture_02.md:62-66, lecture_07.md:18-26):
-# merges/moves are background jobs the engine does not run continuously,
-# so STOP/START are recorded no-ops; FLUSH LOGS / DROP SCHEMA CACHE /
-# RELOAD CONFIG have no deferred state here
-_SYSTEM_NOOP_RE = re.compile(
-    r"^\s*SYSTEM\s+((?:STOP|START)\s+(?:MERGES|TTL\s+MERGES|MOVES|FETCHES|REPLICATION\s+QUEUES)"
-    r"|FLUSH\s+LOGS|DROP\s+SCHEMA\s+CACHE|RELOAD\s+CONFIG)(?:\s+\w+)?\s*$",
-    re.IGNORECASE,
-)
-_RELOAD_DICT_RE = re.compile(
-    r"^\s*SYSTEM\s+RELOAD\s+DICTIONAR(?:Y\s+(\w+)|IES)\s*$", re.IGNORECASE
-)
-# RBAC surface (D11; lecture_18.md:40-609, hw12.md:11-98): access control
-# belongs to the deployment (Ranger / Unity / table ACLs on a real
-# cluster), not the query engine — statements are accepted and recorded
-# (queryable via system.grants) so course scripts run; enforcement is a
-# row-policy view concern (P7), which IS implemented.
-_RBAC_RE = re.compile(
-    r"^\s*(GRANT|REVOKE|CREATE\s+(?:USER|ROLE|QUOTA|SETTINGS\s+PROFILE)"
-    r"|DROP\s+(?:USER|ROLE|QUOTA|SETTINGS\s+PROFILE)|SET\s+(?:DEFAULT\s+)?ROLE"
-    r"|ALTER\s+USER)\b",
-    re.IGNORECASE,
-)
-_ADD_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(\w+\s+.+?)(?:\s+AFTER\s+(\w+))?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
-    re.IGNORECASE,
-)
-_MODIFY_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+COLUMN\s+(\w+)\s+([\w()',= ]+)\s*$",
-    re.IGNORECASE,
-)
-# MODIFY COLUMN c DEFAULT expr — attribute-only change, no retype
-# (lecture_12-style `alter table t modify column d default today() - 20`)
-_MODIFY_COL_DEFAULT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+COLUMN\s+(\w+)\s+DEFAULT\s+(.+?)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_RENAME_COL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$",
-    re.IGNORECASE,
-)
-_MODIFY_TTL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+TTL\s+(.+)$", re.IGNORECASE | re.DOTALL
-)
-# projections (D10; lectures/lecture_13.md:187-314, homeworks/hw08.md:38-49)
-_ADD_PROJ_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
-    r"\(\s*SELECT\s+(.*?)(?:\s+GROUP\s+BY\s+(.*?))?\s*\)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MAT_PROJ_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MATERIALIZE\s+PROJECTION\s+(\w+)\s*$", re.IGNORECASE
-)
-_DROP_PROJ_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+(?:DROP|CLEAR)\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
-    re.IGNORECASE,
-)
-_PROJ_AGG_RE = re.compile(r"^(\w+)\s*\(\s*(\*|\w+)\s*\)(?:\s+AS\s+(\w+))?$", re.IGNORECASE)
-# data-skipping indexes (D9; lecture_08.md:99-240, homeworks/hw15.md)
-_ADD_INDEX_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+(.+?)\s+"
-    r"TYPE\s+(\w+(?:\([^)]*\))?)(?:\s+GRANULARITY\s+\d+)?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_INDEX_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+(?:DROP|CLEAR)\s+INDEX\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
-    re.IGNORECASE,
-)
-_MAT_INDEX_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MATERIALIZE\s+INDEX\s+(\w+)\s*$", re.IGNORECASE
-)
-_APPLY_TTL_RE = re.compile(
-    r"^\s*SYSTEM\s+(?:START\s+TTL\s+MERGES|APPLY\s+TTL)\s+(\w+)\s*$", re.IGNORECASE
-)
-_OPTIMIZE_RE = re.compile(
-    r"^\s*OPTIMIZE\s+TABLE\s+(\w+)"
-    r"(?:\s+PARTITION\s+(\S+))?"
-    r"(\s+FINAL)?"
-    r"(?:\s+DEDUPLICATE(?:\s+BY\s+(.+))?)?\s*$",
-    re.IGNORECASE,
-)
-_TRUNCATE_RE = re.compile(r"^\s*TRUNCATE\s+(?:TABLE\s+)?(\w+)\s*$", re.IGNORECASE)
-_RENAME_RE = re.compile(r"^\s*RENAME\s+TABLE\s+(\w+)\s+TO\s+(\w+)\s*$", re.IGNORECASE)
-_EXCHANGE_RE = re.compile(
-    r"^\s*EXCHANGE\s+TABLES\s+(\w+)\s+AND\s+(\w+)\s*$", re.IGNORECASE
-)
-# CH accepts `SHOW TABLE t` as shorthand for SHOW CREATE TABLE
-# (hw04.md:107 `show table transactions`)
-_SHOW_CREATE_RE = re.compile(
-    r"^\s*SHOW\s+(?:CREATE\s+(?:TABLE|VIEW)\s+|TABLE\s+)(\w+)\s*$",
-    re.IGNORECASE,
-)
-_SHOW_CREATE_DICT_RE = re.compile(
-    r"^\s*SHOW\s+CREATE\s+DICTIONARY\s+(\w+)\s*$", re.IGNORECASE
-)
-_SHOW_MISC_RE = re.compile(
-    r"^\s*SHOW\s+(PROCESSLIST|DICTIONARIES|CLUSTERS|USERS|GRANTS|DATABASES)\s*$", re.IGNORECASE
-)
-# named collections (D14; hw19.md:37-48, lecture_18.md:294-334 grants)
-_CREATE_NC_RE = re.compile(
-    r"^\s*CREATE\s+NAMED\s+COLLECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+AS\s+(.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_NC_RE = re.compile(
-    r"^\s*DROP\s+NAMED\s+COLLECTION\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$", re.IGNORECASE
-)
-_SHOW_NC_RE = re.compile(r"^\s*SHOW\s+NAMED\s+COLLECTIONS\s*$", re.IGNORECASE)
-# SHOW TABLES [FROM db] [LIKE '%pat%'] (D5; lecture_16.md:330): the FROM
-# clause validates against the known-database set (all share the flat
-# catalog); LIKE filters with CH's %/_ wildcards
-_SHOW_TABLES_RE = re.compile(
-    r"^\s*SHOW\s+TABLES(?:\s+FROM\s+(\w+))?(?:\s+LIKE\s+'([^']*)')?\s*$", re.IGNORECASE
-)
-_ALTER_NC_RE = re.compile(
-    r"^\s*ALTER\s+NAMED\s+COLLECTION\s+(\w+)\s+SET\s+(.+)$", re.IGNORECASE | re.DOTALL
-)
-_SHOW_INDEXES_RE = re.compile(
-    r"^\s*SHOW\s+(?:INDEX(?:ES)?|KEYS)\s+(?:FROM|IN)\s+(\w+)\s*$", re.IGNORECASE
-)
-_CREATE_MV_RE = re.compile(
-    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)"
-    r"(?:\s+TO\s+(\w+))?"
-    r"(.*?)(\bPOPULATE\b)?\s+AS\s+(SELECT\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-# plain (non-materialized) view: recomputed per query, like CH's
-# CREATE VIEW (lecture_18.md:339, lecture_20.md:536-545 Prometheus views)
-_CREATE_VIEW_RE = re.compile(
-    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+AS\s+(SELECT\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_VIEW_RE = re.compile(
-    r"^\s*DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*$", re.IGNORECASE
-)
-_CREATE_FN_RE = re.compile(
-    r"^\s*CREATE\s+FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+AS\s*"
-    r"\(\s*([\w\s,]*)\)\s*->\s*(.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_FN_RE = re.compile(r"^\s*DROP\s+FUNCTION\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$", re.IGNORECASE)
-# destination: Disk('name', 'label') or the S3('url'[, key, secret])
-# table-function form (homeworks/hw13.md:120,146)
-_BACKUP_DEST = (
-    r"(?:Disk\s*\(\s*'(\w+)'\s*,\s*'([\w.\-]+)'\s*\)"
-    r"|S3\s*\(\s*'([^']+)'(?:\s*,\s*'[^']*')*\s*\))"
-)
-_BACKUP_RE = re.compile(
-    r"^\s*BACKUP\s+TABLE\s+(\w+)\s+TO\s+" + _BACKUP_DEST + r"\s*$",
-    re.IGNORECASE,
-)
-_RESTORE_RE = re.compile(
-    r"^\s*RESTORE\s+TABLE\s+(\w+)(?:\s+AS\s+(\w+))?\s+FROM\s+"
-    + _BACKUP_DEST
-    + r"\s*$",
-    re.IGNORECASE,
-)
-# whole-database form with URL destination + incremental/differential
-# chaining (lectures/lecture_19.md:136-158)
-_BACKUP_DB_RE = re.compile(
-    r"^\s*BACKUP\s+DATABASE\s+(\w+)\s+TO\s+'([^']+)'"
-    r"(?:\s+WITH\s+(increment|differential))?\s*$",
-    re.IGNORECASE,
-)
-_RESTORE_DB_RE = re.compile(
-    r"^\s*RESTORE\s+DATABASE\s+(\w+)\s+FROM\s+'([^']+)'\s*$", re.IGNORECASE
-)
-_CREATE_DICT_RE = re.compile(
-    r"^\s*CREATE\s+DICTIONARY\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*\((.*?)\)\s*"
-    r"PRIMARY\s+KEY\s+(\w+).*?TABLE\s+'?(\w+)'?",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_DICT_RE = re.compile(
-    r"^\s*DROP\s+DICTIONARY\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$", re.IGNORECASE
-)
+
+class Route(NamedTuple):
+    """One statement form. ``pattern`` must match the whole masked
+    statement; ``handler(engine, *groups, **params)`` gets its groups
+    unmasked. A ``mutation``'s first group is its table."""
+
+    kind: str
+    pattern: re.Pattern
+    handler: Callable
+    mutation: bool = False
+
+
+def _route(kind: str, pattern: str, handler: Callable, mutation: bool = False) -> Route:
+    return Route(kind, re.compile(pattern, re.IGNORECASE | re.DOTALL), handler, mutation)
+
+
+NO_ROUTE = object()  # what route() returns for a statement no route matches
+
+
+def find_route(text: str) -> tuple[Route, re.Match] | None:
+    """The first route whose pattern matches all of masked ``text``."""
+    for r in ROUTES:
+        m = r.pattern.fullmatch(text)
+        if m:
+            return r, m
+    return None
+
+
+def route(engine, lits: Masked, text: str, params: dict):
+    """Run masked ``text``, a statement of ``lits``, through its route:
+    the handler's result, or NO_ROUTE. A mutation is recorded for
+    system.mutations, and the table's vector indexes are rebuilt from
+    the surviving rows with their stored centroids, as ClickHouse
+    rebuilds skip indexes on a mutation; TRUNCATE keeps only their
+    definition, and the next insert retrains them."""
+    found = find_route(text)
+    if found is None:
+        return NO_ROUTE
+    r, m = found
+    groups = [g if g is None else lits.unmask(g) for g in m.groups()]
+    out = r.handler(engine, *groups, **params)
+    if r.mutation:
+        engine._mutations_log.append((lits.unmask(text), time.time(), "done"))
+        if groups[0] in engine.vector_indexes:
+            mode = "truncate" if r.kind == "truncate" else "rebuild"
+            engine.refresh_vector_indexes(groups[0], mode)
+    return out
 
 
 def _ident(col: str) -> str:
@@ -272,34 +106,21 @@ def _ident(col: str) -> str:
     return rf"(?<!\w){re.escape(col)}(?!\w)(?!\s*\()"
 
 
+def _reads(expr: str, col: str) -> bool:
+    """Whether ``expr`` names ``col``, bare or backquoted."""
+    lits = Masked(expr)
+    return bool(re.search(_ident(col), lits.text)) or lits.mask(f"`{col}`") in lits.text
+
+
 def _check_renamable(td, col: str) -> None:
     """ClickHouse refuses to rename a column a key reads: an ORDER BY or
     PARTITION BY expression, the version or sign column, a summed
     column. The check runs before any file or the list changes."""
     keys = [*td.order_by, *td.partition_by, td.version or "", td.sign or "", *td.sum_columns]
-    if any(re.search(_ident(col), Masked(k).text) for k in keys):
+    if any(_reads(k, col) for k in keys):
         raise ValueError(
             f"ALTER_OF_COLUMN_IS_FORBIDDEN: column {col} is part of the key of {td.name}"
         )
-
-
-def _rename_column(td, old: str, new: str) -> None:
-    """Rename ``old`` in ``td``'s list and in every expression that
-    reads it: the DEFAULT, MATERIALIZED and ALIAS expressions of the
-    columns, the TTL and the skip indexes, as ClickHouse rewrites them."""
-
-    def renamed(expr: str | None) -> str | None:
-        if expr is None:
-            return None
-        lits = Masked(expr)
-        return lits.unmask(re.sub(_ident(old), new, lits.text))
-
-    td.columns = tuple(
-        dataclasses.replace(c, name=new if c.name == old else c.name, expr=renamed(c.expr))
-        for c in td.columns
-    )
-    td.ttl = renamed(td.ttl)
-    td.skip_indexes = {n: (renamed(e), t) for n, (e, t) in td.skip_indexes.items()}
 
 
 def _persist(engine, name: str, df: DataFrame, *, keep_cold: bool = False) -> None:
@@ -344,905 +165,1174 @@ def _detached_path(td, value) -> str:
     return os.path.join(f"{td.path.rstrip('/')}__detached", safe)
 
 
-_SET_RE = re.compile(r"^\s*SET\s+(\w+)\s*=\s*(.+?)\s*$", re.IGNORECASE)
-_KILL_RE = re.compile(
-    r"^\s*KILL\s+QUERY\s+WHERE\s+query_id\s*=\s*'([^']+)'\s*$", re.IGNORECASE
-)
-_MODIFY_ORDER_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+ORDER\s+BY\s+(.+?)\s*$",
-    re.IGNORECASE,
-)
-_ROW_POLICY_RE = re.compile(
-    r"^\s*CREATE\s+ROW\s+POLICY\s+(\w+)\s+ON\s+(\w+)\s+USING\s+(.+?)(?:\s+TO\s+.+)?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_POLICY_RE = re.compile(
-    r"^\s*DROP\s+ROW\s+POLICY\s+(\w+)\s+ON\s+(\w+)\s*$", re.IGNORECASE
-)
+def _names(text: str | None) -> list[str] | None:
+    """The names of a comma list, each unquoted; None for no list."""
+    return [unquote(n) for n in split_top(text) if n] if text else None
 
 
-_MUTATION_SHAPE_RE = re.compile(
-    r"^\s*(ALTER\s+TABLE\s+\S+\s+(UPDATE|DELETE|DROP\s+PARTITION|DETACH|ATTACH"
-    r"|REPLACE\s+PARTITION|MOVE\s+PARTITION|MODIFY\s+TTL)"
-    r"|DELETE\s+FROM|OPTIMIZE\s+TABLE|TRUNCATE)\b",
-    re.IGNORECASE,
-)
+# --------------------------------------------------------------- databases
 
+
+def _create_database(engine, name, db_engine, **_):
+    # D1 (hw03.md:7): databases are namespaces over the flat catalog, so
+    # CREATE registers the name for later `db.table` references. The
+    # engined form (hw19.md:85 `ENGINE = PostgreSQL(…)`) records the
+    # engine for system.databases; its tables proxy through the
+    # table-level JDBC path (S15/S16) when declared one by one.
+    engine._databases.add(name.lower())
+    if db_engine:
+        engine._database_engines[name.lower()] = db_engine
+    return {"created_database": name}
+
+
+def _drop_database(engine, name, **_):
+    db = name.lower()
+    if db == "default":
+        # the engine's own namespace — dropping it would orphan the
+        # flat catalog (CH likewise refuses on its system DBs)
+        raise ValueError("cannot drop the default database")
+    # CH's Atomic DROP DATABASE drops the database's tables and the MVs
+    # it owns by name or by source (lecture_02.md database model)
+    pref = db + "__"
+    for tname in [n for n in engine.tables if n.startswith(pref)]:
+        engine.drop_table(tname)
+    for src in list(engine._mvs):
+        kept = [mv for mv in engine._mvs[src] if not mv.name.startswith(pref)]
+        if src.startswith(pref) or not kept:
+            engine._mvs.pop(src, None)
+        else:
+            engine._mvs[src] = kept
+    engine._databases.discard(db)
+    engine._database_engines.pop(db, None)
+    if engine.current_database == db:
+        engine.current_database = "default"
+    return {"dropped_database": name}
+
+
+def _use(engine, name, **_):
+    # unqualified names then resolve in this database first (CH errors
+    # on an unknown database too)
+    engine._check_db_qualifier(name, "USE")
+    engine.current_database = name.lower()
+    return {"using_database": name}
+
+
+# ------------------------------------------------------------- tables, rows
+
+
+def _create_table(engine, ddl, **params):
+    return engine.create_table(ddl, **params)
+
+
+def _drop_table(engine, if_exists, db, name, **_):
+    engine._check_db_qualifier(db, "DROP TABLE")
+    is_mv = any(mv.name == name for mvs in engine._mvs.values() for mv in mvs)
+    if if_exists and name not in engine.tables and not is_mv:
+        return None  # DROP TABLE IF EXISTS on an absent table is a no-op
+    return engine.drop_table(name)
+
+
+def _insert_format(engine, db, name, collist, fmt, data, **_):
+    # the HTTP/CLI inline-data form (lecture_03.md format-negotiated
+    # inserts; clusters/airflow_and_ch etl.py)
+    engine._check_db_qualifier(db, "INSERT")
+    if fmt.lower() == "values":
+        return engine.insert(name, engine._values_frame(name, "VALUES " + data, _names(collist)))
+    return engine.insert(name, engine._format_frame(name, fmt, data, _names(collist)))
+
+
+def _insert(engine, db, name, collist, rest, **params):
+    engine._check_db_qualifier(db, "INSERT")
+    if rest[:6].upper() == "VALUES":
+        return engine.insert(name, engine._values_frame(name, rest, _names(collist)))
+    block = engine._align_block(name, engine.sql(rest, **params), _names(collist))
+    return engine.insert(name, block)
+
+
+def _describe_format(engine, fmt, raw, **_):
+    # the schema-inference probe (lecture_03.md:361-363 goldens): the
+    # literal parses through the same format map as file()
+    from pyspark.sql import Row
+
+    shape = Row("col_name", "data_type", "comment")
+    fields = engine.format_inline_table(fmt, raw).schema.fields
+    return [shape(f.name, f.dataType.simpleString(), None) for f in fields]
+
+
+# CH's EXPLAIN modes (D7; lecture_21.md:399-452) as Spark's explain flavors
+_EXPLAIN_MODES = {
+    "AST": "extended", "SYNTAX": "extended", "PLAN": "formatted", "PIPELINE": "codegen"
+}
+
+
+def _explain(engine, mode, query, **_):
+    mode = (mode or "PLAN").upper()
+    if mode == "ESTIMATE":
+        return engine.explain_estimate(query)
+    return [engine.explain(query, mode=_EXPLAIN_MODES[mode])]
+
+
+# multi-action ALTER (`ALTER TABLE t ADD COLUMN x, MODIFY ORDER BY (…)`):
+# only a comma before an action keyword splits, so UPDATE and projection
+# bodies keep theirs; a keyword followed by `=` is an assigned column
+_ALTER_ACTIONS = r"(?:ADD|DROP|MODIFY|RENAME|CLEAR|MATERIALIZE|COMMENT|FREEZE|RESET)\b(?!\s*=)"
+
+
+def _alter_actions(engine, head, actions, **params):
+    """Run each action as its own single-action statement."""
+    lits = Masked(actions)
+    for act in re.split(rf",\s*(?={_ALTER_ACTIONS})", lits.text, flags=re.IGNORECASE):
+        out = route(engine, lits, f"{head} {act.strip()}", params)
+        if out is NO_ROUTE:
+            raise ValueError(f"unsupported ALTER action: {lits.unmask(act).strip()[:60]!r}")
+    return out
+
+
+def _create_row_policy(engine, pname, tname, pred, **_):
+    # a mandatory read prefilter (P7/D11; lecture_18.md:561-609); the
+    # TO <role> part is recorded only
+    engine._row_policies.setdefault(tname, []).append(pred.strip())
+    engine.register_table(engine.tables[tname])
+    return {"row_policy": (pname, tname)}
+
+
+def _drop_row_policy(engine, pname, tname, **_):
+    engine._row_policies.pop(tname, None)
+    engine.register_table(engine.tables[tname])
+    return {"dropped_row_policy": pname}
+
+
+def _modify_order_by(engine, name, keys, **_):
+    # D3 (lecture_08.md:124-125): the sort key of FUTURE part writes,
+    # like CH (existing parts keep their order until OPTIMIZE rewrites
+    # them), and FINAL's at once
+    from otus_clickhouse_spark.functions.ddl import key_tuple
+
+    td = engine.tables[name]
+    td.order_by = key_tuple(keys)
+    engine.register_table(td)
+    return {"order_by": td.order_by}
+
+
+def _kill_query(engine, query_id, **_):
+    # M7 (lecture_16.md:328-336): cancel the query's Spark job group —
+    # takes effect from any thread
+    return {"killed": engine.kill_query(unquote(query_id))}
+
+
+def _set(engine, key, value, **_):
+    # session settings ≈ system.settings (lecture_12.md:62-212): spark.*
+    # keys pass through to the session conf, CH-named keys are recorded
+    # (mostly advisory — Catalyst/AQE already does what most tune)
+    value = unquote(value)
+    if key.startswith("spark."):
+        engine.spark.conf.set(key, value)
+    engine.session_settings[key] = value
+    return {"set": (key, value)}
+
+
+# ------------------------------------------------- skip indexes, projections
+
+
+def _add_index(engine, table, iname, expr, itype, **_):
+    # D9 (lecture_08.md:99-240): bloom-family types on plain columns
+    # become parquet bloom filters on future writes; minmax/set are
+    # already covered by row-group min/max stats
+    engine.tables[table].skip_indexes[iname] = (expr.strip(), itype.strip())
+    if itype.split("(")[0].strip().lower() == "vector_similarity":
+        # CH's experimental vector index as a STORED derived table: the
+        # IVF coarse quantizer is trained over the current rows, and the
+        # centroids and covering inverted lists persist next to the
+        # table; engine.insert appends new rows incrementally (the
+        # MergeTree-part analogy, lecture_13.md:187-257).
+        # Args: vector_similarity(k, iters).
+        args = re.findall(r"\d+", itype)
+        td = engine.tables[table]
+        if not td.order_by:
+            raise ValueError(
+                "vector_similarity index needs the table to declare "
+                "ORDER BY (its first key is the row id the index stores)"
+            )
+        engine.vector_indexes.setdefault(table, {})[iname] = {
+            "expr": expr.strip(),
+            "k": int(args[0]) if args else 16,
+            "iters": int(args[1]) if len(args) > 1 else 5,
+            "id_col": td.order_by[0],
+            "path": (td.path.rstrip("/") + f".__ivf_{iname}") if td.path else None,
+            "built": False,
+        }
+        engine._maybe_build_vector_index(table, iname)
+    return {"index_added": iname}
+
+
+def _materialize_index(engine, table, iname, **_):
+    # rewrite the existing parts so they carry the bloom filter too (CH
+    # rewrites old parts the same way)
+    td = engine.tables[table]
+    if iname not in td.skip_indexes:
+        raise ValueError(f"unknown index {iname}")
+    if td.path and os.path.exists(td.path):  # no files, no parts to rewrite
+        _persist(engine, table, engine.stored(table))
+    return {"index_materialized": iname}
+
+
+def _drop_index(engine, table, iname, **_):
+    engine.tables[table].skip_indexes.pop(iname, None)
+    meta = engine.vector_indexes.get(table, {}).pop(iname, None)
+    if meta and meta.get("path") and os.path.exists(meta["path"]):
+        shutil.rmtree(meta["path"], ignore_errors=True)
+    return {"index_dropped": iname}
+
+
+_PROJ_AGG_RE = re.compile(r"^(\w+)\s*\(\s*(\*|\w+)\s*\)(?:\s+AS\s+(\w+))?$", re.IGNORECASE)
+
+
+def _add_projection(engine, table, pname, select_list, group_by, **_):
+    # D10 (lecture_13.md:187-314, hw08.md:38-49): build and register the
+    # pre-aggregate; Engine.sql serves matching aggregations from it
+    keys = split_top(group_by) if group_by else []
+    aggs: dict[str, tuple[str, str]] = {}
+    for item in split_top(select_list):
+        am = _PROJ_AGG_RE.match(item)
+        if am:
+            fn, col, alias = am.group(1).lower(), am.group(2), am.group(3)
+            aggs[alias or f"{fn}_{col.strip('*') or 'all'}"] = (fn, col)
+        elif item not in keys:
+            keys.append(item)
+    engine.add_projection(pname, table, keys, aggs)
+    return {"projection_added": pname}
+
+
+def _materialize_projection(engine, table, pname, **_):
+    # re-build from the current base (ADD already materialized; CH
+    # splits the two because old parts need rewriting)
+    proj = engine.projections.projections.get(pname)
+    if proj is None:
+        raise ValueError(f"unknown projection {pname}")
+    engine.add_projection(pname, proj.table, list(proj.group_keys), dict(proj.aggs))
+    return {"projection_materialized": pname}
+
+
+def _drop_projection(engine, table, pname, **_):
+    proj = engine.projections.projections.pop(pname, None)
+    if proj is not None and proj.df is not None:
+        proj.df.unpersist()
+    return {"projection_dropped": pname}
+
+
+# ---------------------------------------------------------------- mutations
+
+
+def _update(engine, name, assigns, pred, **_):
+    from otus_clickhouse_spark.plans.mutations import update
+
+    df = engine.stored(name)
+    assignments = {}
+    for a in split_top(assigns):
+        col, expr = a.split("=", 1)
+        assignments[col.strip()] = engine._fragment(expr.strip(), df)
+    _persist(engine, name, update(df, engine._fragment(pred, df), assignments))
+    return {"mutated": name}
+
+
+def _alter_delete(engine, name, pred, **_):
+    from otus_clickhouse_spark.plans.mutations import delete
+
+    df = engine.stored(name)
+    _persist(engine, name, delete(df, engine._fragment(pred, df)))
+    return {"mutated": name}
+
+
+def _lightweight_delete(engine, name, pred, **_):
+    # raw rows stay on disk; register_table hides the masked ones
+    # (lecture_16.md:196-202)
+    from otus_clickhouse_spark.plans.mutations import lightweight_delete
+
+    df = engine.stored(name)
+    _persist(engine, name, lightweight_delete(df, engine._fragment(pred, df)))
+    return {"mutated": name}
+
+
+# ---------------------------------------------- partitions (lecture_16.md)
+
+
+def _drop_partition(engine, name, raw, **_):
+    df = engine.stored(name)
+    _persist(engine, name, df.filter(~engine.tables[name].in_partition(df, raw)))
+    return {"dropped_partition": unquote(raw)}
+
+
+def _detach_partition(engine, name, raw, **_):
+    # M3 (:114-152): move the partition's rows to a detached store;
+    # readers stop seeing them
+    td, value = engine.tables[name], unquote(raw)
+    df = engine.stored(name)
+    part = td.in_partition(df, raw)
+    df.filter(part).write.mode("overwrite").parquet(_detached_path(td, value))
+    _persist(engine, name, df.filter(~part))
+    return {"detached_partition": value}
+
+
+def _attach_partition_from(engine, name, raw, src, **_):
+    # hw09.md:161: COPY the partition from the source table — the source
+    # keeps its data (unlike MOVE) and the target's rows stay (unlike
+    # REPLACE)
+    value, src_td = unquote(raw), engine.tables[src]
+    incoming = engine.stored(src)
+    if value != "all" and src_td.partition_by:
+        incoming = incoming.filter(src_td.in_partition(incoming, raw))
+    engine.insert(name, incoming.select(*engine.table(name).columns))
+    return {"attached_partition": value, "from": src}
+
+
+def _attach_partition(engine, name, raw, **_):
+    # append the detached rows back, drop the store
+    value, td = unquote(raw), engine.tables[name]
+    det = _detached_path(td, value)
+    if not os.path.exists(det):
+        raise FileNotFoundError(f"no detached partition {value!r} for {name}")
+    # the detached rows are read with the stored columns of the list
+    block = engine.spark.read.schema(StructType(td.fields())).parquet(det)
+    engine.insert(name, block.localCheckpoint(eager=True))
+    shutil.rmtree(det, ignore_errors=True)
+    return {"attached_partition": value}
+
+
+def _replace_partition(engine, name, raw, src, **_):
+    # M4 (:211-327): swap the partition's content for the source table's
+    # copy; the source's rows are chosen by this table's partition key
+    td = engine.tables[name]
+    df, incoming = engine.stored(name), engine.stored(src)
+    incoming = incoming.filter(td.in_partition(incoming, raw))
+    kept = df.filter(~td.in_partition(df, raw))
+    _persist(engine, name, kept.unionByName(incoming, allowMissingColumns=True))
+    return {"replaced_partition": unquote(raw)}
+
+
+def _move_partition(engine, name, raw, dst, **_):
+    # M4 (:145): append the partition's rows to the destination, remove
+    # them from the source
+    df = engine.stored(name)
+    part = engine.tables[name].in_partition(df, raw)
+    moving = df.filter(part).localCheckpoint(eager=True)
+    dst_cols = engine.table(dst).columns
+    engine.insert(dst, moving.select(*[c for c in dst_cols if c in moving.columns]))
+    _persist(engine, name, df.filter(~part))
+    return {"moved_partition": unquote(raw), "to": dst}
+
+
+def _freeze(engine, name, raw, **_):
+    # M5 (:154-160): snapshot the table's files into a shadow directory
+    # (CH uses hardlinks; parquet files are immutable here, so a copy
+    # preserves the same point-in-time view)
+    td = engine.tables[name]
+    snap = os.path.join("spark-warehouse", "_shadow", f"{name}_{uuid.uuid4().hex[:8]}")
+    if raw is not None:
+        df = engine.stored(name)
+        df.filter(td.in_partition(df, raw)).write.parquet(snap)
+    else:
+        shutil.copytree(td.path, snap)
+    return {"frozen": snap}
+
+
+def _system_noop(engine, command, **_):
+    # D12 (lecture_02.md:62-66, lecture_07.md:18-26): merges and moves
+    # are background jobs the engine does not run continuously, so
+    # STOP/START are recorded no-ops; FLUSH LOGS / DROP SCHEMA CACHE /
+    # RELOAD CONFIG have no deferred state here
+    return {"system": re.sub(r"\s+", " ", command.upper()), "noop": True}
+
+
+# ----------------------------------------- access control (lecture_18.md)
 
 _QUOTA_UNITS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800}
 
 
-def _apply_rbac(engine, s: str) -> None:
-    """Parse one RBAC statement into the enforcement registries
-    (GRANT syntax per lecture_18.md:204; role activation per :170;
-    quota/profile shapes per :459-533)."""
-    qm = re.match(
-        r"^\s*CREATE\s+QUOTA\s+(?:IF\s+NOT\s+EXISTS\s+|OR\s+REPLACE\s+)?(\w+)"
-        r"(?:\s+KEYED\s+BY\s+[\w,\s]+?)?"
-        r"\s+FOR\s+(?:RANDOMIZED\s+)?INTERVAL\s+(\d+)\s+(\w+?)s?\s+"
-        r"MAX\s+(.+?)\s+TO\s+([\w,\s]+?)\s*$",
-        s,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if qm:
-        name, n, unit, maxes, to = qm.groups()
-        limits = {
-            lm.group(1).lower(): int(lm.group(2))
-            for item in maxes.split(",")
-            if (lm := re.match(r"^\s*(\w+)\s*=\s*(\d+)\s*$", item))
-        }
-        engine._quotas[name] = {
-            "interval_s": int(n) * _QUOTA_UNITS.get(unit.lower(), 1),
-            "max": limits,
-            "to": {g.strip() for g in to.split(",")},
-        }
-        return
-    dm = re.match(r"^\s*DROP\s+QUOTA\s+(?:IF\s+EXISTS\s+)?(\w+)", s, re.IGNORECASE)
-    if dm:
-        engine._quotas.pop(dm.group(1), None)
-        return
-    pm = re.match(
-        r"^\s*CREATE\s+SETTINGS\s+PROFILE\s+(?:IF\s+NOT\s+EXISTS\s+|OR\s+REPLACE\s+)?(\w+)"
-        r"\s+SETTINGS\s+(.+?)(?:\s+TO\s+([\w,\s]+?))?\s*$",
-        s,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if pm:
-        name, body, to = pm.groups()
-        settings = {
-            sm.group(1): unquote(sm.group(2))
-            for item in body.split(",")
-            if (sm := re.match(r"^\s*(\w+)\s*=?\s*(\S+)\s*$", item))
-        }
-        engine._profiles[name] = {
-            "settings": settings,
-            "to": {g.strip() for g in (to or "").split(",") if g.strip()},
-        }
-        return
-    dm = re.match(r"^\s*DROP\s+SETTINGS\s+PROFILE\s+(?:IF\s+EXISTS\s+)?(\w+)", s, re.IGNORECASE)
-    if dm:
-        engine._profiles.pop(dm.group(1), None)
-        return
-    um = re.match(r"^\s*CREATE\s+USER\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)", s, re.IGNORECASE)
-    if um:
-        engine._users.add(um.group(1))
-        # IDENTIFIED WITH sha256_password BY '…' (hw12.md:14) — the
-        # auth METHOD is metadata (surfaced in system.users); the
-        # password itself is never stored, like CH stores only hashes
-        am = re.search(r"\bIDENTIFIED\s+(?:WITH\s+(\w+)|BY\b)", s, re.IGNORECASE)
-        engine._user_auth[um.group(1)] = (
-            (am.group(1) or "sha256_password") if am else "no_password"
-        )
-        return
-    um = re.match(r"^\s*DROP\s+USER\s+(?:IF\s+EXISTS\s+)?(\w+)", s, re.IGNORECASE)
-    if um:
-        engine._users.discard(um.group(1))
-        engine._user_auth.pop(um.group(1), None)
-        return
-    rm = re.match(r"^\s*CREATE\s+ROLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)", s, re.IGNORECASE)
-    if rm:
-        engine._roles.add(rm.group(1))
-        return
-    rm = re.match(r"^\s*DROP\s+ROLE\s+(?:IF\s+EXISTS\s+)?(\w+)", s, re.IGNORECASE)
-    if rm:
-        engine._roles.discard(rm.group(1))
-        return
-    # GRANT priv[, …] ON [db.]obj TO grantee[, …]
-    gm = re.match(
-        r"^\s*GRANT\s+([\w,\s]+?)\s+ON\s+(?:(\w+|\*)\.)?(\w+|\*)\s+TO\s+([\w,\s]+?)"
-        r"(?:\s+WITH\s+.*)?$",
-        s,
-        re.IGNORECASE,
-    )
-    if gm:
-        privs = [p.strip().upper() for p in gm.group(1).split(",")]
-        db = gm.group(2) or "*"
-        tbl = gm.group(3)
-        for grantee in (g.strip() for g in gm.group(4).split(",")):
-            for p in privs:
-                engine._grants.append((p, db, tbl, grantee))
-        return
-    # GRANT role[, …] TO user[, …] (no ON clause)
-    gm = re.match(r"^\s*GRANT\s+([\w,\s]+?)\s+TO\s+([\w,\s]+?)\s*$", s, re.IGNORECASE)
-    if gm:
-        roles = [r.strip() for r in gm.group(1).split(",")]
-        for user in (u.strip() for u in gm.group(2).split(",")):
-            engine._role_grants.setdefault(user, set()).update(
-                r for r in roles if r in engine._roles
-            )
-        return
-    # REVOKE priv ON obj FROM grantee
-    vm = re.match(
-        r"^\s*REVOKE\s+([\w,\s]+?)\s+ON\s+(?:(\w+|\*)\.)?(\w+|\*)\s+FROM\s+([\w,\s]+?)\s*$",
-        s,
-        re.IGNORECASE,
-    )
-    if vm:
-        privs = {p.strip().upper() for p in vm.group(1).split(",")}
-        tbl = vm.group(3)
-        victims = {g.strip() for g in vm.group(4).split(",")}
-        engine._grants = [
-            g
-            for g in engine._grants
-            if not (g[0] in privs and g[2] == tbl and g[3] in victims)
-        ]
-        return
-    # REVOKE role FROM user
-    vm = re.match(r"^\s*REVOKE\s+([\w,\s]+?)\s+FROM\s+([\w,\s]+?)\s*$", s, re.IGNORECASE)
-    if vm:
-        roles = {r.strip() for r in vm.group(1).split(",")}
-        for user in (u.strip() for u in vm.group(2).split(",")):
-            engine._role_grants.get(user, set()).difference_update(roles)
-            engine._active_roles.get(user, set()).difference_update(roles)
-        return
-    # SET ROLE name|DEFAULT|NONE — activates roles for the SESSION user
-    sm = re.match(r"^\s*SET\s+(?:DEFAULT\s+)?ROLE\s+(\w+)\s*$", s, re.IGNORECASE)
-    if sm:
-        user = engine.current_user
-        which = sm.group(1)
-        granted = engine._role_grants.get(user, set())
-        if which.upper() == "NONE":
-            engine._active_roles[user] = set()
-        elif which.upper() == "DEFAULT":
-            engine._active_roles[user] = set(granted)
-        elif which in granted:
-            engine._active_roles.setdefault(user, set()).add(which)
-        else:
-            raise PermissionError(f"role {which} not granted to {user}")
+def _access(kind: str, pattern: str, apply: Callable | None = None) -> Route:
+    """The route of an access-control statement (D11; lecture_18.md:
+    26,170,204). The statement is recorded for SHOW GRANTS with its
+    ``BY '<password>'`` hidden, as ClickHouse never shows a password;
+    ``apply`` parses it into the registries the query and insert
+    boundary enforce."""
+
+    def handler(engine, statement, *groups, **_):
+        lits = Masked(statement)
+        hidden = re.sub(rf"\bBY\s+{LIT}", "BY '[HIDDEN]'", lits.text, flags=re.IGNORECASE)
+        engine._rbac_log.append(lits.unmask(hidden))
+        if apply:
+            apply(engine, *groups)
+        return {"rbac": kind.upper(), "recorded": True}
+
+    return _route(kind, f"({pattern})", handler)
 
 
-# multi-action ALTER: `ALTER TABLE t ADD COLUMN x, MODIFY ORDER BY (…)`
-# (lecture_13-style) splits into sequential single-action statements.
-# Only commas followed by an action keyword split — UPDATE/PROJECTION
-# bodies keep their internal commas.
-_MULTI_ALTER_RE = re.compile(
-    r"^\s*(ALTER\s+TABLE\s+\w+)\s+(.+)$", re.IGNORECASE | re.DOTALL
-)
-_ALTER_ACTION_SPLIT_RE = re.compile(
-    r",\s*(?=(?:ADD|DROP|MODIFY|RENAME|CLEAR|MATERIALIZE|COMMENT|FREEZE|RESET)\b)",
-    re.IGNORECASE,
-)
+def _create_quota(engine, name, n, unit, maxes, to):
+    # quota shapes per lecture_18.md:498-533
+    limits = {
+        lm.group(1).lower(): int(lm.group(2))
+        for item in maxes.split(",")
+        if (lm := re.fullmatch(r"\s*(\w+)\s*=\s*(\d+)\s*", item))
+    }
+    engine._quotas[name] = {
+        "interval_s": int(n) * _QUOTA_UNITS.get(unit.lower(), 1),
+        "max": limits,
+        "to": set(_names(to) or ()),
+    }
 
 
-def try_route(engine, s: str):
-    """Route ``s``; successful mutations are recorded for
-    ``system.mutations`` (D8; lecture_16.md:60-98)."""
-    mm = _MULTI_ALTER_RE.match(s)
-    if mm:
-        actions = _ALTER_ACTION_SPLIT_RE.split(mm.group(2))
-        if len(actions) > 1:
-            out = None
-            for act in actions:
-                out = try_route(engine, f"{mm.group(1)} {act.strip()}")
-                if out is None:
-                    raise ValueError(f"unsupported ALTER action: {act.strip()[:60]!r}")
-            return out
-    out = _try_route_inner(engine, s)
-    if out is not None and _MUTATION_SHAPE_RE.match(s):
-        import time as _time
-
-        engine._mutations_log.append((s, _time.time(), "done"))
-        # vector_similarity index maintenance (verdict r11 #3): any
-        # statement that changed the row set invalidates the stored
-        # inverted lists — rebuild them from the surviving rows with
-        # the stored centroids (CH rebuilds skip indexes on mutation);
-        # TRUNCATE keeps only the definition and retrains on insert.
-        tm = re.search(
-            r"(?:ALTER\s+TABLE|DELETE\s+FROM|OPTIMIZE\s+TABLE"
-            r"|TRUNCATE(?:\s+TABLE)?)\s+(\w+)",
-            s,
-            re.IGNORECASE,
-        )
-        if tm and tm.group(1) in engine.vector_indexes:
-            is_trunc = re.match(r"^\s*TRUNCATE\b", s, re.IGNORECASE)
-            engine.refresh_vector_indexes(
-                tm.group(1), "truncate" if is_trunc else "rebuild"
-            )
-    return out
+def _create_profile(engine, name, body, to):
+    # lecture_18.md:459-465
+    settings = {
+        sm.group(1): unquote(sm.group(2))
+        for item in split_top(body)
+        if (sm := re.fullmatch(r"(\w+)\s*=?\s*(\S+)", item))
+    }
+    engine._profiles[name] = {"settings": settings, "to": set(_names(to) or ())}
 
 
-def _try_route_inner(engine, s: str):
-    """Handle ``s`` if it is a mutation/maintenance statement.
+def _create_user(engine, name, identified, method):
+    # IDENTIFIED WITH sha256_password BY '…' (hw12.md:14): the auth
+    # METHOD is metadata for system.users; the password is never stored
+    engine._users.add(name)
+    engine._user_auth[name] = (method or "sha256_password") if identified else "no_password"
 
-    Returns ``None`` when the statement is not ours (caller falls back
-    to the SELECT path); otherwise returns the statement's result
-    (row list for SHOW, dict/None for maintenance ops).
-    """
-    m = _ROW_POLICY_RE.match(s)
-    if m:
-        # row policy = mandatory read prefilter (P7/D11;
-        # lecture_18.md:561-609); the TO <role> part is recorded only
-        pname, tname, pred = m.group(1), m.group(2), m.group(3).strip()
-        engine._row_policies.setdefault(tname, []).append(pred)
-        engine.register_table(engine.tables[tname])
-        return {"row_policy": (pname, tname)}
 
-    m = _DROP_POLICY_RE.match(s)
-    if m:
-        engine._row_policies.pop(m.group(2), None)
-        engine.register_table(engine.tables[m.group(2)])
-        return {"dropped_row_policy": m.group(1)}
+def _drop_user(engine, name):
+    engine._users.discard(name)
+    engine._user_auth.pop(name, None)
 
-    m = _MODIFY_ORDER_RE.match(s)
-    if m:
-        # MODIFY ORDER BY (D3; lecture_08.md:124-125): the sort key of
-        # FUTURE part writes, like CH (existing parts keep their order
-        # until OPTIMIZE/compaction rewrites them), and FINAL's at once
-        from otus_clickhouse_spark.functions.ddl import key_tuple
 
-        td = engine.tables[m.group(1)]
-        td.order_by = key_tuple(m.group(2))
-        engine.register_table(td)
-        return {"order_by": td.order_by}
+def _grant(engine, privs, db, table, grantees):
+    # GRANT priv[, …] ON [db.]obj TO grantee[, …] (lecture_18.md:204)
+    for grantee in _names(grantees):
+        for p in _names(privs):
+            engine._grants.append((p.upper(), db or "*", table, grantee))
 
-    m = _KILL_RE.match(s)
-    if m:
-        # KILL QUERY (M7; lecture_16.md:328-336): cancel the query's
-        # Spark job group — takes effect from any thread
-        return {"killed": engine.kill_query(m.group(1))}
 
-    m = _SET_RE.match(s)
-    if m:
-        # SET name = value (lecture_12.md:62-212): session settings map
-        # ≈ system.settings; spark.* keys pass through to the session
-        # conf, CH-named keys are recorded (queryable, mostly advisory —
-        # Catalyst/AQE already does what most of them tune by hand)
-        key, val = m.group(1), unquote(m.group(2))
-        if key.startswith("spark."):
-            engine.spark.conf.set(key, val)
-        engine.session_settings[key] = val
-        return {"set": (key, val)}
+def _grant_role(engine, roles, users):
+    granted = {r for r in _names(roles) if r in engine._roles}
+    for user in _names(users):
+        engine._role_grants.setdefault(user, set()).update(granted)
 
-    m = _ADD_INDEX_RE.match(s)
-    if m:
-        # ADD INDEX name expr TYPE t [GRANULARITY g]: bloom-family types
-        # on plain columns become parquet bloom filters on future writes;
-        # minmax/set are already covered by row-group min/max stats
-        table, iname, expr, itype = m.groups()
-        engine.tables[table].skip_indexes[iname] = (expr.strip(), itype.strip())
-        if itype.split("(")[0].strip().lower() == "vector_similarity":
-            # CH's experimental vector index as a STORED derived table
-            # (r10 verdict ask #4 "CREATE-able index table"): train the
-            # IVF coarse quantizer over the current rows and persist
-            # centroids + covering inverted lists next to the table;
-            # engine.insert appends new rows incrementally (stored
-            # centroids, O(sliver) — the MergeTree-part analogy,
-            # lecture_13.md:187-257). Args: vector_similarity(k, iters).
-            args = re.findall(r"\d+", itype)
-            k = int(args[0]) if args else 16
-            iters = int(args[1]) if len(args) > 1 else 5
-            td = engine.tables[table]
-            id_col = td.order_by[0] if td.order_by else None
-            if id_col is None:
-                raise ValueError(
-                    "vector_similarity index needs the table to declare "
-                    "ORDER BY (its first key is the row id the index stores)"
-                )
-            vec = engine.vector_indexes.setdefault(table, {})
-            vec[iname] = {
-                "expr": expr.strip(), "k": k, "iters": iters,
-                "id_col": id_col,
-                "path": (td.path.rstrip("/") + f".__ivf_{iname}") if td.path else None,
-                "built": False,
-            }
-            engine._maybe_build_vector_index(table, iname)
-        return {"index_added": iname}
 
-    m = _MAT_INDEX_RE.match(s)
-    if m:
-        # MATERIALIZE INDEX: rewrite the existing parts so they carry the
-        # bloom filter too (CH rewrites old parts the same way)
-        table, iname = m.groups()
-        td = engine.tables[table]
-        if iname not in td.skip_indexes:
-            raise ValueError(f"unknown index {iname}")
-        if td.path and os.path.exists(td.path):  # no files, no parts to rewrite
-            _persist(engine, table, engine.stored(table))
-        return {"index_materialized": iname}
+def _revoke(engine, privs, _db, table, grantees):
+    privs, victims = {p.upper() for p in _names(privs)}, set(_names(grantees))
+    engine._grants = [
+        g for g in engine._grants if not (g[0] in privs and g[2] == table and g[3] in victims)
+    ]
 
-    m = _DROP_INDEX_RE.match(s)
-    if m:
-        engine.tables[m.group(1)].skip_indexes.pop(m.group(2), None)
-        vec = engine.vector_indexes.get(m.group(1), {})
-        meta = vec.pop(m.group(2), None)
-        if meta and meta.get("path") and os.path.exists(meta["path"]):
-            shutil.rmtree(meta["path"], ignore_errors=True)
-        return {"index_dropped": m.group(2)}
 
-    m = _ADD_PROJ_RE.match(s)
-    if m:
-        # ALTER TABLE … ADD PROJECTION p (SELECT keys…, aggs… GROUP BY keys)
-        # → build + register the pre-aggregate; Engine.sql silently serves
-        # matching aggregations from it (lecture_13.md:243-314)
-        table, pname, select_list, group_by = m.groups()
-        keys = (
-            [k.strip() for k in split_top(group_by)]
-            if group_by
-            else []
-        )
-        aggs: dict[str, tuple[str, str]] = {}
-        for item in split_top(select_list):
-            item = item.strip()
-            am = _PROJ_AGG_RE.match(item)
-            if am:
-                fn, col, alias = am.group(1).lower(), am.group(2), am.group(3)
-                if fn == "count" and col == "*":
-                    col = "*"
-                aggs[alias or f"{fn}_{col.strip('*') or 'all'}"] = (fn, col)
-            elif item not in keys:
-                keys.append(item)
-        engine.add_projection(pname, table, keys, aggs)
-        return {"projection_added": pname}
+def _revoke_role(engine, roles, users):
+    roles = set(_names(roles))
+    for user in _names(users):
+        engine._role_grants.get(user, set()).difference_update(roles)
+        engine._active_roles.get(user, set()).difference_update(roles)
 
-    m = _MAT_PROJ_RE.match(s)
-    if m:
-        # MATERIALIZE re-builds from the current base (our ADD already
-        # materialized; CH splits the two because old parts need rewriting)
-        table, pname = m.groups()
-        proj = engine.projections.projections.get(pname)
-        if proj is None:
-            raise ValueError(f"unknown projection {pname}")
-        engine.add_projection(pname, proj.table, list(proj.group_keys), dict(proj.aggs))
-        return {"projection_materialized": pname}
 
-    m = _DROP_PROJ_RE.match(s)
-    if m:
-        proj = engine.projections.projections.pop(m.group(2), None)
-        if proj is not None and proj.df is not None:
-            proj.df.unpersist()
-        return {"projection_dropped": m.group(2)}
+def _set_role(engine, which):
+    # activates roles for the SESSION user (lecture_18.md:170)
+    user = engine.current_user
+    granted = engine._role_grants.get(user, set())
+    if which.upper() == "NONE":
+        engine._active_roles[user] = set()
+    elif which.upper() == "DEFAULT":
+        engine._active_roles[user] = set(granted)
+    elif which in granted:
+        engine._active_roles.setdefault(user, set()).add(which)
+    else:
+        raise PermissionError(f"role {which} not granted to {user}")
 
-    m = _UPDATE_RE.match(s)
-    if m:
-        from otus_clickhouse_spark.plans.mutations import update
 
-        name, assigns, pred = m.groups()
-        df = engine.stored(name)
-        assignments = {}
-        for a in split_top(assigns):
-            col, expr = a.split("=", 1)
-            assignments[col.strip()] = engine._fragment(expr.strip(), df)
-        _persist(engine, name, update(df, engine._fragment(pred, df), assignments))
-        return {"mutated": name}
+def _reload_dictionary(engine, name, **_):
+    names = [name] if name else list(engine._dictionaries)
+    return {"reloaded": [n for n in names if engine.reload_dictionary(n)]}
 
-    m = _ALTER_DELETE_RE.match(s)
-    if m:
-        from otus_clickhouse_spark.plans.mutations import delete
 
-        name, pred = m.groups()
-        df = engine.stored(name)
-        _persist(engine, name, delete(df, engine._fragment(pred, df)))
-        return {"mutated": name}
+# ------------------------------------------------------------------ columns
 
-    m = _LW_DELETE_RE.match(s)
-    if m:
-        from otus_clickhouse_spark.plans.mutations import lightweight_delete
 
-        name, pred = m.groups()
-        df = engine.stored(name)
-        # raw rows stay on disk; register_table hides the masked ones
-        # (lecture_16.md:196-202)
-        _persist(engine, name, lightweight_delete(df, engine._fragment(pred, df)))
-        return {"mutated": name}
+def _add_column(engine, name, coldef, after, **_):
+    # D3 (hw03.md:36-39, lecture_12.md:29-39): DEFAULT backfills
+    # existing rows
+    from otus_clickhouse_spark.functions.ddl import column_def
 
-    m = _DROP_PART_RE.match(s)
-    if m:
-        name, raw = m.groups()
-        df = engine.stored(name)
-        _persist(engine, name, df.filter(~engine.tables[name].in_partition(df, raw)))
-        return {"dropped_partition": unquote(raw)}
-
-    m = _DETACH_PART_RE.match(s)
-    if m:
-        # DETACH PARTITION (M3; lecture_16.md:114-152): move the
-        # partition's rows to a detached store; readers stop seeing them
-        name, raw = m.groups()
-        td, value = engine.tables[name], unquote(raw)
-        df = engine.stored(name)
-        part = td.in_partition(df, raw)
-        df.filter(part).write.mode("overwrite").parquet(_detached_path(td, value))
-        _persist(engine, name, df.filter(~part))
-        return {"detached_partition": value}
-
-    m = _ATTACH_PART_FROM_RE.match(s)
-    if m:
-        name, raw, src = m.groups()
-        value, src_td = unquote(raw), engine.tables[src]
-        incoming = engine.stored(src)
-        if value != "all" and src_td.partition_by:
-            incoming = incoming.filter(src_td.in_partition(incoming, raw))
-        engine.insert(name, incoming.select(*engine.table(name).columns))
-        return {"attached_partition": value, "from": src}
-
-    m = _ATTACH_PART_RE.match(s)
-    if m:
-        # ATTACH PARTITION: append the detached rows back, drop the store
-        name, value = m.group(1), unquote(m.group(2))
-        td = engine.tables[name]
-        det = _detached_path(td, value)
-        if not os.path.exists(det):
-            raise FileNotFoundError(f"no detached partition {value!r} for {name}")
-        # the detached rows are read with the stored columns of the list
-        block = engine.spark.read.schema(StructType(td.fields())).parquet(det)
-        engine.insert(name, block.localCheckpoint(eager=True))
-        shutil.rmtree(det, ignore_errors=True)
-        return {"attached_partition": value}
-
-    m = _REPLACE_PART_RE.match(s)
-    if m:
-        # REPLACE PARTITION … FROM other (M4; lecture_16.md:211-327):
-        # swap the partition's content for the source table's copy; the
-        # source's rows are chosen by this table's partition key
-        name, raw, src = m.groups()
-        td = engine.tables[name]
-        df, incoming = engine.stored(name), engine.stored(src)
-        incoming = incoming.filter(td.in_partition(incoming, raw))
-        kept = df.filter(~td.in_partition(df, raw))
-        _persist(engine, name, kept.unionByName(incoming, allowMissingColumns=True))
-        return {"replaced_partition": unquote(raw)}
-
-    m = _MOVE_PART_RE.match(s)
-    if m:
-        # MOVE PARTITION TO TABLE (M4; lecture_16.md:145): append the
-        # partition's rows to the destination, remove them from the source
-        name, raw, dst = m.groups()
-        df = engine.stored(name)
-        part = engine.tables[name].in_partition(df, raw)
-        moving = df.filter(part).localCheckpoint(eager=True)
-        dst_cols = engine.table(dst).columns
-        engine.insert(dst, moving.select(*[c for c in dst_cols if c in moving.columns]))
-        _persist(engine, name, df.filter(~part))
-        return {"moved_partition": unquote(raw), "to": dst}
-
-    m = _FREEZE_RE.match(s)
-    if m:
-        # FREEZE (M5; lecture_16.md:154-160): snapshot the table's files
-        # into a shadow directory (CH uses hardlinks; parquet files are
-        # immutable here, so a copy preserves the same point-in-time view)
-        name, raw = m.groups()
-        td = engine.tables[name]
-        snap = os.path.join("spark-warehouse", "_shadow", f"{name}_{uuid.uuid4().hex[:8]}")
-        if raw is not None:
-            df = engine.stored(name)
-            df.filter(td.in_partition(df, raw)).write.parquet(snap)
-        else:
-            shutil.copytree(td.path, snap)
-        return {"frozen": snap}
-
-    m = _SYSTEM_NOOP_RE.match(s)
-    if m:
-        return {"system": re.sub(r"\s+", " ", m.group(1).upper()), "noop": True}
-
-    m = _RBAC_RE.match(s)
-    if m:
-        # recorded for system.grants AND parsed into the enforced
-        # registries (D11; lecture_18.md:26,170,204): users/roles,
-        # privilege grants with objects, role grants, SET ROLE activation
-        engine._rbac_log.append(s)
-        _apply_rbac(engine, s)
-        return {"rbac": re.sub(r"\s+", " ", m.group(1).upper()), "recorded": True}
-
-    m = _RELOAD_DICT_RE.match(s)
-    if m:
-        names = [m.group(1)] if m.group(1) else list(engine._dictionaries)
-        reloaded = [n for n in names if engine.reload_dictionary(n)]
-        return {"reloaded": reloaded}
-
-    m = _ADD_COL_RE.match(s)
-    if m:
-        # ALTER ADD COLUMN [DEFAULT expr] [AFTER col] (D3; hw03.md:36-39,
-        # lecture_12.md:29-39: DEFAULT backfills existing rows)
-        from otus_clickhouse_spark.functions.ddl import column_def
-
-        name, coldef, after = m.groups()
-        col = column_def(coldef)
-        td = engine.tables[name]
-        names = [c.name for c in td.columns]
-        at = names.index(after) + 1 if after in names else len(names)
-        columns = (*td.columns[:at], col, *td.columns[at:])
-        if col.kind == "ALIAS":
-            # virtual (lecture_12.md:36-39): nothing to rewrite
-            td.columns = columns
-            view = _declared_order(td, engine.with_aliases(td, engine.table(name)))
-            view.createOrReplaceTempView(name)
-            return {"added_column": col.name, "alias": True}
-        # the rows are read before the list changes: the files lack the
-        # new column, which the rewrite then fills as an omitted one
-        df = engine.stored(name)
+    col = column_def(coldef)
+    td = engine.tables[name]
+    names = [c.name for c in td.columns]
+    at = names.index(after) + 1 if after in names else len(names)
+    columns = (*td.columns[:at], col, *td.columns[at:])
+    if col.kind == "ALIAS":
+        # virtual (lecture_12.md:36-39): nothing to rewrite
         td.columns = columns
-        _persist(engine, name, df)
-        return {"added_column": col.name}
+        view = _declared_order(td, engine.with_aliases(td, engine.table(name)))
+        view.createOrReplaceTempView(name)
+        return {"added_column": col.name, "alias": True}
+    # the rows are read before the list changes: the files lack the new
+    # column, which the rewrite then fills as an omitted one
+    df = engine.stored(name)
+    td.columns = columns
+    _persist(engine, name, df)
+    return {"added_column": col.name}
 
-    m = _DROP_COL_RE.match(s)
-    if m:
-        name, col = m.groups()
-        td = engine.tables[name]
+
+def _drop_column(engine, name, col, **_):
+    td = engine.tables[name]
+    df = engine.stored(name)
+    td.columns = tuple(c for c in td.columns if c.name != col)
+    _persist(engine, name, df)
+    return {"dropped_column": col}
+
+
+def _modify_column_default(engine, name, col, expr, **_):
+    # an attribute-only change, no retype (lecture_12-style `alter table
+    # t modify column d default today() - 20`)
+    if name not in engine.tables:
+        raise ValueError(f"unknown table {name!r}")
+    td = engine.tables[name]
+    td.columns = tuple(
+        dataclasses.replace(c, kind="DEFAULT", expr=expr.strip()) if c.name == col else c
+        for c in td.columns
+    )
+    return {"modified_default": col}
+
+
+def _modify_column(engine, name, col, ch_type, **_):
+    # a new type keeps the column's DEFAULT, as ClickHouse does
+    from otus_clickhouse_spark.functions.ddl import ch_type_to_spark
+
+    ch_type = ch_type.strip()
+    spark_type, nullable = ch_type_to_spark(ch_type)
+    td = engine.tables[name]
+    df = engine.stored(name)
+    td.columns = tuple(
+        dataclasses.replace(c, ch_type=ch_type, spark_type=spark_type, nullable=nullable)
+        if c.name == col
+        else c
+        for c in td.columns
+    )
+    _persist(engine, name, df)
+    return {"modified_column": col}
+
+
+def _rename_column(engine, name, old, new, **_):
+    # renames ``old`` in the list and in every expression that reads it,
+    # bare or backquoted: the DEFAULT, MATERIALIZED and ALIAS expressions
+    # of the columns, the TTL and the skip indexes, as ClickHouse does
+    td = engine.tables[name]
+    _check_renamable(td, old)
+    df = engine.stored(name).withColumnRenamed(old, new)
+
+    def renamed(expr: str | None) -> str | None:
+        if expr is None:
+            return None
+        lits = Masked(expr)
+        text = re.sub(_ident(old), new, lits.text).replace(lits.mask(f"`{old}`"), f"`{new}`")
+        return lits.unmask(text)
+
+    td.columns = tuple(
+        dataclasses.replace(c, name=new if c.name == old else c.name, expr=renamed(c.expr))
+        for c in td.columns
+    )
+    td.ttl = renamed(td.ttl)
+    td.skip_indexes = {n: (renamed(e), t) for n, (e, t) in td.skip_indexes.items()}
+    _persist(engine, name, df)
+    return {"renamed_column": (old, new)}
+
+
+# ------------------------------------------------------------- TTL, merges
+
+
+def _modify_ttl(engine, name, ttl, **_):
+    # ALTER TABLE … MODIFY TTL expr [TO VOLUME 'v' | TO DISK 'd']
+    # (lecture_14.md:217-236); SYSTEM APPLY TTL applies it
+    from otus_clickhouse_spark.functions.ddl import split_ttl_action
+
+    expr, action = split_ttl_action(ttl.strip())
+    td = engine.tables[name]
+    td.ttl = expr
+    if action:
+        td.settings["ttl_action"] = action
+    else:
+        td.settings.pop("ttl_action", None)
+    return {"ttl": expr, "ttl_action": action}
+
+
+def _apply_ttl(engine, name, **_):
+    # the retention pass, run now
+    from otus_clickhouse_spark.plans.mutations import ttl_expire
+
+    td = engine.tables[name]
+    if not td.ttl:
+        return {"ttl_applied": name, "dropped": 0}
+    # CH TTL is a timestamp expression (`dt + INTERVAL 1 MONTH`,
+    # lecture_14.md:223-229): a row expires once it passes now(). A
+    # boolean expression is accepted as the predicate directly.
+    ttl = td.ttl
+    if not re.search(r"[<>=]", ttl):
+        ttl = f"({ttl}) < current_timestamp()"
+    action = td.settings.get("ttl_action")
+    if action and td.path and os.path.exists(td.path):
+        # TTL … TO VOLUME/DISK (lecture_14.md:233): expired rows MOVE to
+        # the cold tier instead of being deleted — the table view keeps
+        # serving them (register_table unions the volumes), so reads are
+        # unchanged while the hot path shrinks. Only the MAIN path is
+        # scanned: already-moved rows are at their target volume.
+        from otus_clickhouse_spark.io import read_table
+
+        vol = action[1]
+        cold = f"{td.path.rstrip('/')}__volume_{vol}"
+        main = read_table(engine.spark, td.path, td.read_schema())
+        pred = engine._fragment(ttl, main)
+        expired = main.filter(pred)
+        moved = expired.count()
+        if moved:
+            write_parts(expired, td, cold)
+            td.settings.setdefault("cold_volumes", {})[vol] = cold
+            # hot-tier-only content: the cold volume just written must
+            # survive this rewrite
+            _persist(engine, name, main.filter(~pred), keep_cold=True)
+        return {"ttl_applied": name, "moved": moved, "to": action}
+    df = engine.stored(name)
+    before = df.count()
+    _persist(engine, name, ttl_expire(df, engine._fragment(ttl, df)))
+    return {"ttl_applied": name, "dropped": before - engine.stored(name).count()}
+
+
+_COLLAPSING = (
+    "ReplacingMergeTree",
+    "SummingMergeTree",
+    "CollapsingMergeTree",
+    "VersionedCollapsingMergeTree",
+    "AggregatingMergeTree",
+)
+
+
+def _optimize(engine, name, _part, final, dedup, dedup_by, **_):
+    # OPTIMIZE TABLE t [FINAL] [DEDUPLICATE [BY c, …]] (lecture_07.md:362-377)
+    td = engine.tables[name]
+    if dedup:
+        cols = [c.strip() for c in dedup_by.split(",")] if dedup_by else None
         df = engine.stored(name)
-        td.columns = tuple(c for c in td.columns if c.name != col)
-        _persist(engine, name, df)
-        return {"dropped_column": col}
+        _persist(engine, name, df.dropDuplicates(cols) if cols else df.dropDuplicates())
+        return {"optimized": name, "deduplicate": True}
+    if final and td.engine in _COLLAPSING:
+        # materialize the collapse, like a forced final merge
+        from otus_clickhouse_spark.operators.final import final_view
 
-    m = _MODIFY_COL_DEFAULT_RE.match(s)
-    if m:
-        name, col, expr = m.groups()
-        if name not in engine.tables:
-            raise ValueError(f"unknown table {name!r}")
-        td = engine.tables[name]
-        td.columns = tuple(
-            dataclasses.replace(c, kind="DEFAULT", expr=expr.strip()) if c.name == col else c
-            for c in td.columns
-        )
-        return {"modified_default": col}
+        _persist(engine, name, final_view(engine.stored(name), td))
+        return {"optimized": name, "final": True}
+    from otus_clickhouse_spark.plans.compaction import compact_table
 
-    m = _MODIFY_COL_RE.match(s)
-    if m:
-        from otus_clickhouse_spark.functions.ddl import ch_type_to_spark
+    stats = None
+    if td.path and os.path.exists(td.path):
+        stats = compact_table(engine.spark, td)
+        engine.register_table(td)
+    return {"optimized": name, "compaction": stats}
 
-        # a new type keeps the column's DEFAULT, as ClickHouse does
-        name, col, ch_type = m.groups()
-        spark_type, nullable = ch_type_to_spark(ch_type.strip())
-        td = engine.tables[name]
-        df = engine.stored(name)
-        td.columns = tuple(
-            dataclasses.replace(
-                c, ch_type=ch_type.strip(), spark_type=spark_type, nullable=nullable
-            )
-            if c.name == col
-            else c
-            for c in td.columns
-        )
-        _persist(engine, name, df)
-        return {"modified_column": col}
 
-    m = _RENAME_COL_RE.match(s)
-    if m:
-        name, old, new = m.groups()
-        td = engine.tables[name]
-        _check_renamable(td, old)
-        df = engine.stored(name).withColumnRenamed(old, new)
-        _rename_column(td, old, new)
-        _persist(engine, name, df)
-        return {"renamed_column": (old, new)}
+def _truncate(engine, name, **_):
+    # TRUNCATE (lecture_18.md:228) removes every part, TTL-moved cold
+    # tiers included
+    td = engine.tables[name]
+    empty = None if td.columns else engine.local_frame([], engine.table(name).schema)
+    if td.path and os.path.exists(td.path):
+        shutil.rmtree(td.path, ignore_errors=True)
+    for cpath in td.settings.pop("cold_volumes", {}).values():
+        shutil.rmtree(cpath, ignore_errors=True)
+    td.masked = False
+    engine.register_table(td, df=empty)
+    return {"truncated": name}
 
-    m = _MODIFY_TTL_RE.match(s)
-    if m:
-        # ALTER TABLE … MODIFY TTL expr [TO VOLUME 'v' | TO DISK 'd']
-        # (lecture_14.md:217-236); the retention job applies it via
-        # apply_ttl
-        from otus_clickhouse_spark.functions.ddl import split_ttl_action
 
-        name, ttl = m.groups()
-        expr, action = split_ttl_action(ttl.strip())
-        engine.tables[name].ttl = expr
-        if action:
-            engine.tables[name].settings["ttl_action"] = action
-        else:
-            engine.tables[name].settings.pop("ttl_action", None)
-        return {"ttl": expr, "ttl_action": action}
+def _rename_table(engine, old, new, **_):
+    # lecture_12.md:239
+    td = engine.tables.pop(old)
+    td.name = new
+    engine.table(old).createOrReplaceTempView(new)
+    engine.spark.catalog.dropTempView(old)
+    engine.tables[new] = td
+    return {"renamed": (old, new)}
 
-    m = _APPLY_TTL_RE.match(s)
-    if m:
-        # SYSTEM START TTL MERGES analogue: run the retention pass now
-        from otus_clickhouse_spark.plans.mutations import ttl_expire
 
-        name = m.group(1)
-        td = engine.tables[name]
-        if not td.ttl:
-            return {"ttl_applied": name, "dropped": 0}
-        # CH TTL is a timestamp expression (`dt + INTERVAL 1 MONTH`,
-        # lecture_14.md:223-229): a row expires once it passes now().
-        # A boolean expression is accepted as the predicate directly.
-        ttl = td.ttl
-        if not re.search(r"[<>=]", ttl):
-            ttl = f"({ttl}) < current_timestamp()"
-        action = td.settings.get("ttl_action")
-        if action and td.path and os.path.exists(td.path):
-            # TTL … TO VOLUME/DISK (lecture_14.md:233): expired rows MOVE
-            # to the cold tier instead of being deleted — the table view
-            # keeps serving them (register_table unions the volumes), so
-            # reads are unchanged while the hot path shrinks. Only the
-            # MAIN path is scanned here: already-moved rows are at their
-            # target volume and must not be re-appended.
-            from otus_clickhouse_spark.io import read_table
+def _exchange_tables(engine, a, b, **_):
+    # hw09.md:178-179
+    df_a, df_b = engine.table(a), engine.table(b)
+    td_a, td_b = engine.tables[a], engine.tables[b]
+    td_a.name, td_b.name = b, a
+    engine.tables[a], engine.tables[b] = td_b, td_a
+    df_a.createOrReplaceTempView(b)
+    df_b.createOrReplaceTempView(a)
+    return {"exchanged": (a, b)}
 
-            vol = action[1]
-            cold = f"{td.path.rstrip('/')}__volume_{vol}"
-            main = read_table(engine.spark, td.path, td.read_schema())
-            pred = engine._fragment(ttl, main)
-            expired = main.filter(pred)
-            moved = expired.count()
-            if moved:
-                write_parts(expired, td, cold)
-                td.settings.setdefault("cold_volumes", {})[vol] = cold
-                # hot-tier-only content: the cold volume we just wrote
-                # must survive this rewrite
-                _persist(engine, name, main.filter(~pred), keep_cold=True)
-            return {"ttl_applied": name, "moved": moved, "to": action}
-        df = engine.stored(name)
-        before = df.count()
-        _persist(engine, name, ttl_expire(df, engine._fragment(ttl, df)))
-        return {"ttl_applied": name, "dropped": before - engine.stored(name).count()}
 
-    m = _OPTIMIZE_RE.match(s)
-    if m:
-        name, _part, final, dedup_by = m.group(1), m.group(2), m.group(3), m.group(4)
-        td = engine.tables[name]
-        if "DEDUPLICATE" in s.upper():
-            cols = [c.strip() for c in dedup_by.split(",")] if dedup_by else None
-            df = engine.stored(name)
-            df = df.dropDuplicates(cols) if cols else df.dropDuplicates()
-            _persist(engine, name, df)
-            return {"optimized": name, "deduplicate": True}
-        if final and td.engine in (
-            "ReplacingMergeTree",
-            "SummingMergeTree",
-            "CollapsingMergeTree",
-            "VersionedCollapsingMergeTree",
-            "AggregatingMergeTree",
-        ):
-            # materialize the collapse (merge-to-completion), like a
-            # forced final merge (lecture_07.md:362-377)
-            from otus_clickhouse_spark.operators.final import final_view
+# ------------------------------------- named collections (D14; hw19.md)
 
-            _persist(engine, name, final_view(engine.stored(name), td))
-            return {"optimized": name, "final": True}
-        from otus_clickhouse_spark.plans.compaction import compact_table
 
-        stats = None
-        if td.path and os.path.exists(td.path):
-            stats = compact_table(engine.spark, td)
-            engine.register_table(td)
-        return {"optimized": name, "compaction": stats}
+def _settings_of(body: str) -> dict:
+    """``key = value, …`` with each value unquoted and keys lowercased."""
+    return {
+        km.group(1).lower(): unquote(km.group(2))
+        for item in split_top(body)
+        if (km := re.fullmatch(r"(\w+)\s*=\s*(.+?)", item, re.DOTALL))
+    }
 
-    m = _TRUNCATE_RE.match(s)
-    if m:
-        name = m.group(1)
-        td = engine.tables[name]
-        empty = None if td.columns else engine.local_frame([], engine.table(name).schema)
-        if td.path and os.path.exists(td.path):
-            shutil.rmtree(td.path, ignore_errors=True)
-        # TRUNCATE removes every part, TTL-moved cold tiers included
-        for cpath in td.settings.pop("cold_volumes", {}).values():
-            shutil.rmtree(cpath, ignore_errors=True)
-        td.masked = False
-        engine.register_table(td, df=empty)
-        return {"truncated": name}
 
-    m = _RENAME_RE.match(s)
-    if m:
-        old, new = m.groups()
-        td = engine.tables.pop(old)
-        td.name = new
-        engine.table(old).createOrReplaceTempView(new)
-        engine.spark.catalog.dropTempView(old)
-        engine.tables[new] = td
-        return {"renamed": (old, new)}
+def _create_named_collection(engine, name, body, **_):
+    # CREATE NAMED COLLECTION mypg AS host = 'postgres', port = 5432, …
+    # (hw19.md:37-43): a key→value dict that external table functions
+    # and engines resolve by name
+    engine._named_collections[name] = _settings_of(body)
+    return {"created_named_collection": name}
 
-    m = _EXCHANGE_RE.match(s)
-    if m:
-        a, b = m.groups()
-        df_a, df_b = engine.table(a), engine.table(b)
-        td_a, td_b = engine.tables[a], engine.tables[b]
-        td_a.name, td_b.name = b, a
-        engine.tables[a], engine.tables[b] = td_b, td_a
-        df_a.createOrReplaceTempView(b)
-        df_b.createOrReplaceTempView(a)
-        return {"exchanged": (a, b)}
 
-    m = _CREATE_NC_RE.match(s)
-    if m:
-        # CREATE NAMED COLLECTION mypg AS host = 'postgres', port = 5432, …
-        # (D14; hw19.md:37-43): parsed into a plain key→value dict that
-        # external table functions/engines resolve by name
-        name, body = m.groups()
-        kv = {
-            km.group(1).lower(): unquote(km.group(2))
-            for item in split_top(body)
-            if (km := re.match(r"^\s*(\w+)\s*=\s*(.+?)\s*$", item, re.DOTALL))
-        }
-        engine._named_collections[name] = kv
-        return {"created_named_collection": name}
+def _alter_named_collection(engine, name, body, **_):
+    engine._named_collections[name].update(_settings_of(body))
+    return {"altered_named_collection": name}
 
-    m = _ALTER_NC_RE.match(s)
-    if m:
-        name, body = m.groups()
-        coll = engine._named_collections[name]
-        for item in split_top(body):
-            km = re.match(r"^\s*(\w+)\s*=\s*(.+?)\s*$", item, re.DOTALL)
-            if km:
-                coll[km.group(1).lower()] = unquote(km.group(2))
-        return {"altered_named_collection": name}
 
-    m = _DROP_NC_RE.match(s)
-    if m:
-        engine._named_collections.pop(m.group(1), None)
-        return {"dropped_named_collection": m.group(1)}
+def _drop_named_collection(engine, name, **_):
+    engine._named_collections.pop(name, None)
+    return {"dropped_named_collection": name}
 
-    if _SHOW_NC_RE.match(s):
-        return sorted(engine._named_collections)
 
-    m = _SHOW_TABLES_RE.match(s)
-    if m and (m.group(1) or m.group(2)):
-        # bare SHOW TABLES stays with Spark (it lists the temp views);
-        # the FROM/LIKE forms resolve against the engine registry
-        engine._check_db_qualifier(m.group(1), "SHOW TABLES")
-        names = engine.tables_in_database(m.group(1) or engine.current_database)
-        if m.group(2):
-            pat = re.compile(
-                "^" + re.escape(m.group(2)).replace("%", ".*").replace("_", ".") + "$",
-                re.IGNORECASE,
-            )
-            names = [n for n in names if pat.match(n)]
-        return names
+def _show_named_collections(engine, **_):
+    return sorted(engine._named_collections)
 
-    m = _SHOW_MISC_RE.match(s)
-    if m:
-        # D5 SHOW family (lecture_16.md:330-334, hw19.md:88-118):
-        # PROCESSLIST/DICTIONARIES/CLUSTERS/USERS/GRANTS over the
-        # engine's registries (Spark handles SHOW TABLES/DATABASES itself)
-        kind = m.group(1).upper()
-        if kind == "PROCESSLIST":
-            from pyspark.sql import Row
 
-            entry = CATALOG["processes"]
-            shape = Row(*StructType.fromDDL(entry.schema).names)
-            return [shape(*r) for r in entry.rows(engine)]
-        if kind == "DICTIONARIES":
-            return sorted(engine._dictionaries)
-        if kind == "CLUSTERS":
-            # declared topologies (lecture_15.md:74-83; hw10.md:14-24)
-            return sorted(engine._clusters)
-        if kind == "GRANTS":
-            return list(engine._rbac_log)
-        if kind == "DATABASES":
-            # CH lists its built-ins, both INFORMATION_SCHEMA spellings
-            # included (hw19.md:88-95 golden)
-            return sorted(
-                engine._databases
-                | {"system", "INFORMATION_SCHEMA", "information_schema"}
-            )
-        users = [
-            rm.group(1)
-            for stmt in engine._rbac_log
-            if (rm := re.match(r"CREATE\s+USER\s+(\w+)", stmt, re.IGNORECASE))
-        ]
-        return users
+# --------------------------------------------------------------------- SHOW
 
-    m = _SHOW_CREATE_RE.match(s)
-    if m:
-        return [show_create_table(engine, m.group(1))]
 
-    m = _SHOW_INDEXES_RE.match(s)
-    if m:
-        # SHOW INDEXES FROM t (D5; lecture_08.md:225): the table's ORDER BY
-        # (≈ sparse PK) plus registered skipping indexes
-        td = engine.tables[m.group(1)]
-        rows = [("PRIMARY", ",".join(td.order_by), "minmax(sorted parquet)")]
-        rows += [(n, expr, itype) for n, (expr, itype) in td.skip_indexes.items()]
-        return rows
+def _show_tables(engine, db, like, **_):
+    # D5 (lecture_16.md:330): FROM validates against the known databases
+    # (all share the flat catalog); LIKE filters with CH's %/_ wildcards.
+    # A bare SHOW TABLES has no route: Spark lists the temp views.
+    engine._check_db_qualifier(db, "SHOW TABLES")
+    names = engine.tables_in_database(db or engine.current_database)
+    if like:
+        pat = "^" + re.escape(unquote(like)).replace("%", ".*").replace("_", ".") + "$"
+        names = [n for n in names if re.match(pat, n, re.IGNORECASE)]
+    return names
 
-    m = _CREATE_MV_RE.match(s)
-    if m:
-        name, target, mid, populate, select_sql = m.groups()
-        fm = re.search(r"\bFROM\s+(\w+)", select_sql, re.IGNORECASE)
-        if not fm:
-            raise ValueError("CREATE MATERIALIZED VIEW: no FROM table in SELECT")
-        if not target:
-            # no TO: the MV's own name is its inner table, built from the
-            # MV's column list and engine clause over the SELECT's columns
-            target = name
-            engine.create_table(f"CREATE TABLE {name} {mid} AS {select_sql}", fill=False)
-        return engine.create_materialized_view(
-            name, target, select_sql, source=fm.group(1), populate=bool(populate)
-        )
 
-    m = _CREATE_VIEW_RE.match(s)
-    if m:
-        name, select_sql = m.groups()
-        if "." in name:
-            # known-db qualifiers were already resolved to mangled flat
-            # names upstream; anything left is an unknown database
-            engine._check_db_qualifier(name.split(".")[0], "CREATE VIEW")
-            name = name.split(".")[-1]
-        engine.sql(select_sql).createOrReplaceTempView(name)
-        # recorded for SHOW CREATE TABLE/VIEW (Spark refuses temp views)
-        engine._view_ddl[name] = select_sql.strip()
-        return {"created_view": name}
+def _show(engine, what, **_):
+    # D5 (lecture_16.md:330-334, hw19.md:88-118) over the engine's
+    # registries
+    what = what.upper()
+    if what == "PROCESSLIST":
+        from pyspark.sql import Row
 
-    m = _DROP_VIEW_RE.match(s)
-    if m:
-        name = m.group(1)
-        if "." in name:
-            engine._check_db_qualifier(name.split(".")[0], "DROP VIEW")
-            name = name.split(".")[-1]
+        entry = CATALOG["processes"]
+        shape = Row(*StructType.fromDDL(entry.schema).names)
+        return [shape(*r) for r in entry.rows(engine)]
+    if what == "DICTIONARIES":
+        return sorted(engine._dictionaries)
+    if what == "CLUSTERS":
+        # declared topologies (lecture_15.md:74-83; hw10.md:14-24)
+        return sorted(engine._clusters)
+    if what == "GRANTS":
+        return list(engine._rbac_log)
+    if what == "DATABASES":
+        # CH lists its built-ins, both INFORMATION_SCHEMA spellings
+        # included (hw19.md:88-95 golden)
+        return sorted(engine._databases | {"system", "INFORMATION_SCHEMA", "information_schema"})
+    return sorted(engine._users)  # the users that exist, `default` among them
+
+
+def _show_create_table(engine, name, **_):
+    return [show_create_table(engine, name)]
+
+
+def _show_indexes(engine, name, **_):
+    # D5 (lecture_08.md:225): the ORDER BY (≈ sparse PK) plus the
+    # registered skipping indexes
+    td = engine.tables[name]
+    rows = [("PRIMARY", ",".join(td.order_by), "minmax(sorted parquet)")]
+    return rows + [(n, expr, itype) for n, (expr, itype) in td.skip_indexes.items()]
+
+
+# ------------------------------------------------------------ views, UDFs
+
+
+def _create_materialized_view(engine, name, target, mid, populate, select_sql, source, **_):
+    if source is None:
+        raise ValueError("CREATE MATERIALIZED VIEW: no FROM table in SELECT")
+    if not target:
+        # no TO: the MV's own name is its inner table, built from the
+        # MV's column list and engine clause over the SELECT's columns
+        target = name
+        engine.create_table(f"CREATE TABLE {name} {mid} AS {select_sql}", fill=False)
+    return engine.create_materialized_view(
+        name, target, select_sql, source=source, populate=bool(populate)
+    )
+
+
+def _qualified(engine, name: str, stmt: str) -> str:
+    """A view's name without its database: known qualifiers were already
+    resolved to mangled flat names, so any left is unknown."""
+    if "." in name:
+        engine._check_db_qualifier(name.split(".")[0], stmt)
+    return name.split(".")[-1]
+
+
+def _create_view(engine, name, select_sql, **_):
+    # a plain view is recomputed per query, like CH's CREATE VIEW
+    # (lecture_18.md:339, lecture_20.md:536-545)
+    name = _qualified(engine, name, "CREATE VIEW")
+    engine.sql(select_sql).createOrReplaceTempView(name)
+    # recorded for SHOW CREATE TABLE/VIEW (Spark refuses temp views)
+    engine._view_ddl[name] = select_sql.strip()
+    return {"created_view": name}
+
+
+def _drop_view(engine, name, **_):
+    engine.spark.catalog.dropTempView(_qualified(engine, name, "DROP VIEW"))
+    return {"dropped_view": name}
+
+
+def _create_function(engine, name, params_s, body, **_):
+    # SQL lambda UDF (F1; hw04.md:76-103): a macro the dialect translator
+    # inlines at query time
+    engine._sql_macros[name] = (_names(params_s) or [], body.strip())
+    return {"created_function": name}
+
+
+def _drop_function(engine, name, **_):
+    engine._sql_macros.pop(name, None)
+    return {"dropped_function": name}
+
+
+# ------------------------------------------------ backups (hw13.md:40-159)
+
+
+def _backup_table(engine, name, disk, label, s3_url, **_):
+    return backup_table(engine, name, *_destination(disk, label, s3_url))
+
+
+def _restore_table(engine, name, alias, disk, label, s3_url, **_):
+    return restore_table(engine, name, *_destination(disk, label, s3_url), as_name=alias)
+
+
+def _backup_database(engine, db, url, mode, **_):
+    return backup_database(engine, db, unquote(url), mode=mode)
+
+
+def _restore_database(engine, db, url, **_):
+    return restore_database(engine, db, unquote(url))
+
+
+# ------------------------------------------- dictionaries (lecture_11.md)
+
+
+def _create_dictionary(engine, ddl, name, cols_ddl, key, src, **_):
+    # CREATE DICTIONARY d (…) PRIMARY KEY k SOURCE(… TABLE 'src' …):
+    # broadcast lookup + SQL dictGet (lecture_11.md:1-130)
+    src = unquote(src)
+    cols = [c.split()[0] for c in split_top(cols_ddl) if c]
+    engine.create_dictionary(name, engine.table(src).select(*cols), key)
+    engine._dict_sources[name] = (src, cols)  # for SYSTEM RELOAD DICTIONARY
+    engine._dict_ddl[name] = ddl  # for SHOW CREATE DICTIONARY
+    return engine.dictionary(name)
+
+
+def _show_create_dictionary(engine, name, **_):
+    # lecture_11.md:313-318,392
+    if name not in engine._dictionaries:
+        raise KeyError(f"dictionary {name} does not exist")
+    return [engine._dict_ddl.get(name, f"CREATE DICTIONARY {name}")]
+
+
+def _drop_dictionary(engine, if_exists, name, **_):
+    existed = name in engine._dictionaries
+    if not existed and not if_exists:
+        raise KeyError(f"dictionary {name} does not exist")
+    engine._dictionaries.pop(name, None)
+    engine._dict_sources.pop(name, None)
+    engine._dict_ddl.pop(name, None)
+    if existed:
+        engine.spark.catalog.dropTempView(f"dict_{name}")
         engine.spark.catalog.dropTempView(name)
-        return {"dropped_view": m.group(1)}
+    return [("drop dictionary", name, existed)]
 
-    m = _CREATE_FN_RE.match(s)
-    if m:
-        # SQL lambda UDF (F1; hw04.md:76-103): stored as a macro and
-        # inlined by the dialect translator at query time
-        name, params_s, body = m.groups()
-        params = [p.strip() for p in params_s.split(",") if p.strip()]
-        engine._sql_macros[name] = (params, body.strip())
-        return {"created_function": name}
 
-    m = _DROP_FN_RE.match(s)
-    if m:
-        engine._sql_macros.pop(m.group(1), None)
-        return {"dropped_function": m.group(1)}
+# ---------------------------------------------------------- the route table
 
-    m = _BACKUP_RE.match(s)
-    if m:
-        name, disk, label, s3_url = m.groups()
-        return backup_table(engine, name, disk, label, s3_url=s3_url)
+_IFNE = r"(?:IF\s+NOT\s+EXISTS\s+)?"
+_IFE = r"(?:IF\s+EXISTS\s+)?"
+_ALTER = r"ALTER\s+TABLE\s+(\w+)\s+"
+_NAMES = r"([\w,\s]+?)"  # a comma list of names
+_PART = r"PARTITION\s+(.+?)"  # a partition value followed by a clause
+# Disk('name', 'label'), or the S3('url'[, key, secret]) table-function
+# form (hw13.md:120,146)
+_DEST = rf"(?:Disk\s*\(\s*({LIT})\s*,\s*({LIT})\s*\)|S3\s*\(\s*({LIT})(?:\s*,\s*{LIT})*\s*\))"
 
-    m = _RESTORE_RE.match(s)
-    if m:
-        name, alias, disk, label, s3_url = m.groups()
-        return restore_table(engine, name, disk, label, as_name=alias, s3_url=s3_url)
-
-    m = _BACKUP_DB_RE.match(s)
-    if m:
-        return backup_database(engine, m.group(1), m.group(2), mode=m.group(3))
-
-    m = _RESTORE_DB_RE.match(s)
-    if m:
-        return restore_database(engine, m.group(1), m.group(2))
-
-    m = _CREATE_DICT_RE.match(s)
-    if m:
-        name, cols_ddl, key, src = m.groups()
-        cols = [c.strip().split()[0] for c in split_top(cols_ddl) if c.strip()]
-        engine.create_dictionary(name, engine.table(src).select(*cols), key)
-        engine._dict_sources[name] = (src, cols)  # for SYSTEM RELOAD DICTIONARY
-        engine._dict_ddl[name] = s  # for SHOW CREATE DICTIONARY
-        return engine.dictionary(name)
-
-    m = _SHOW_CREATE_DICT_RE.match(s)
-    if m:
-        # SHOW CREATE DICTIONARY d (lecture_11.md:313-318,392)
-        name = m.group(1)
-        if name not in engine._dictionaries:
-            raise KeyError(f"dictionary {name} does not exist")
-        return [engine._dict_ddl.get(name, f"CREATE DICTIONARY {name}")]
-
-    m = _DROP_DICT_RE.match(s)
-    if m:
-        # DROP DICTIONARY [IF EXISTS] d (lecture_11.md DDL family)
-        name = m.group(1)
-        existed = name in engine._dictionaries
-        if not existed and "IF EXISTS" not in s.upper():
-            raise KeyError(f"dictionary {name} does not exist")
-        engine._dictionaries.pop(name, None)
-        engine._dict_sources.pop(name, None)
-        engine._dict_ddl.pop(name, None)
-        if existed:
-            engine.spark.catalog.dropTempView(f"dict_{name}")
-            engine.spark.catalog.dropTempView(name)
-        return [("drop dictionary", name, existed)]
-
-    return None
+ROUTES: tuple[Route, ...] = (
+    _route(
+        "create database",
+        rf"CREATE\s+DATABASE\s+{_IFNE}(\w+)(?:\s+ENGINE\s*=\s*(\w+)\s*(?:\(.*\))?)?",
+        _create_database,
+    ),
+    _route("drop database", rf"DROP\s+DATABASE\s+{_IFE}(\w+)", _drop_database),
+    _route("use", r"USE\s+(\w+)", _use),
+    _route("create table", r"(CREATE\s+TABLE\b.*)", _create_table),
+    _route("drop table", r"DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(?:(\w+)\.)?(\w+)\b.*", _drop_table),
+    _route(
+        "insert format",
+        rf"INSERT\s+INTO\s+(?:(\w+)\.)?(\w+)\s*(?:\(([^)]*)\))?\s+FORMAT\s+(\w+)\n({LIT})",
+        _insert_format,
+    ),
+    _route(
+        "insert",
+        r"INSERT\s+INTO\s+(?:(\w+)\.)?(\w+)\s*(?:\(([^)]*)\))?\s+((?:SELECT|WITH|VALUES)\b.*)",
+        _insert,
+    ),
+    _route(
+        "describe format",
+        r"DESC(?:RIBE)?\s+(?:TABLE\s+)?format\s*\(\s*(\w+)\s*,\s*(.*)\)",
+        _describe_format,
+    ),
+    _route(
+        "explain",
+        r"EXPLAIN\s+(?:(AST|SYNTAX|PLAN|PIPELINE|ESTIMATE)\s+)?((?:SELECT|WITH)\b.*)",
+        _explain,
+    ),
+    _route(
+        "alter actions",
+        rf"(ALTER\s+TABLE\s+\w+)\s+(.+?,\s*{_ALTER_ACTIONS}.*)",
+        _alter_actions,
+    ),
+    _route(
+        "create row policy",
+        r"CREATE\s+ROW\s+POLICY\s+(\w+)\s+ON\s+(\w+)\s+USING\s+(.+?)(?:\s+TO\s+.+)?",
+        _create_row_policy,
+    ),
+    _route("drop row policy", r"DROP\s+ROW\s+POLICY\s+(\w+)\s+ON\s+(\w+)", _drop_row_policy),
+    _route("modify order by", rf"{_ALTER}MODIFY\s+ORDER\s+BY\s+(.+)", _modify_order_by),
+    _route("kill query", rf"KILL\s+QUERY\s+WHERE\s+query_id\s*=\s*({LIT})", _kill_query),
+    _route("set", r"SET\s+(\w+)\s*=\s*(.+)", _set),
+    _route(
+        "add index",
+        rf"{_ALTER}ADD\s+INDEX\s+{_IFNE}(\w+)\s+(.+?)\s+TYPE\s+(\w+(?:\([^)]*\))?)"
+        r"(?:\s+GRANULARITY\s+\d+)?",
+        _add_index,
+    ),
+    _route("materialize index", rf"{_ALTER}MATERIALIZE\s+INDEX\s+(\w+)", _materialize_index),
+    _route("drop index", rf"{_ALTER}(?:DROP|CLEAR)\s+INDEX\s+{_IFE}(\w+)", _drop_index),
+    _route(
+        "add projection",
+        rf"{_ALTER}ADD\s+PROJECTION\s+{_IFNE}(\w+)"
+        r"\s*\(\s*SELECT\s+(.*?)(?:\s+GROUP\s+BY\s+(.*?))?\s*\)",
+        _add_projection,
+    ),
+    _route(
+        "materialize projection",
+        rf"{_ALTER}MATERIALIZE\s+PROJECTION\s+(\w+)",
+        _materialize_projection,
+    ),
+    _route(
+        "drop projection",
+        rf"{_ALTER}(?:DROP|CLEAR)\s+PROJECTION\s+{_IFE}(\w+)",
+        _drop_projection,
+    ),
+    _route("update", rf"{_ALTER}UPDATE\s+(.+?)\s+WHERE\s+(.+)", _update, mutation=True),
+    _route("alter delete", rf"{_ALTER}DELETE\s+WHERE\s+(.+)", _alter_delete, mutation=True),
+    _route(
+        "lightweight delete",
+        r"DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.+)",
+        _lightweight_delete,
+        mutation=True,
+    ),
+    _route("drop partition", rf"{_ALTER}DROP\s+PARTITION\s+(.+)", _drop_partition, mutation=True),
+    _route(
+        "detach partition",
+        rf"{_ALTER}DETACH\s+PARTITION\s+(.+)",
+        _detach_partition,
+        mutation=True,
+    ),
+    _route(
+        "attach partition from",
+        rf"{_ALTER}ATTACH\s+PARTITION\s+(?:ID\s+)?(.+?)\s+FROM\s+(\w+)",
+        _attach_partition_from,
+        mutation=True,
+    ),
+    _route(
+        "attach partition",
+        rf"{_ALTER}ATTACH\s+PARTITION\s+(.+)",
+        _attach_partition,
+        mutation=True,
+    ),
+    _route(
+        "replace partition",
+        rf"{_ALTER}REPLACE\s+{_PART}\s+FROM\s+(\w+)",
+        _replace_partition,
+        mutation=True,
+    ),
+    _route(
+        "move partition",
+        rf"{_ALTER}MOVE\s+{_PART}\s+TO\s+TABLE\s+(\w+)",
+        _move_partition,
+        mutation=True,
+    ),
+    _route("freeze", rf"{_ALTER}FREEZE(?:\s+PARTITION\s+(.+))?", _freeze),
+    _route(
+        "system noop",
+        r"SYSTEM\s+((?:STOP|START)\s+(?:MERGES|TTL\s+MERGES|MOVES|FETCHES|REPLICATION\s+QUEUES)"
+        r"|FLUSH\s+LOGS|DROP\s+SCHEMA\s+CACHE|RELOAD\s+CONFIG)(?:\s+\w+)?",
+        _system_noop,
+    ),
+    _access(
+        "create quota",
+        r"CREATE\s+QUOTA\s+(?:IF\s+NOT\s+EXISTS\s+|OR\s+REPLACE\s+)?(\w+)"
+        r"(?:\s+KEYED\s+BY\s+[\w,\s]+?)?"
+        rf"\s+FOR\s+(?:RANDOMIZED\s+)?INTERVAL\s+(\d+)\s+(\w+?)s?\s+MAX\s+(.+?)\s+TO\s+{_NAMES}",
+        _create_quota,
+    ),
+    _access("drop quota", rf"DROP\s+QUOTA\s+{_IFE}(\w+).*", lambda e, n: e._quotas.pop(n, None)),
+    _access(
+        "create settings profile",
+        r"CREATE\s+SETTINGS\s+PROFILE\s+(?:IF\s+NOT\s+EXISTS\s+|OR\s+REPLACE\s+)?(\w+)"
+        rf"\s+SETTINGS\s+(.+?)(?:\s+TO\s+{_NAMES})?",
+        _create_profile,
+    ),
+    _access(
+        "drop settings profile",
+        rf"DROP\s+SETTINGS\s+PROFILE\s+{_IFE}(\w+).*",
+        lambda e, n: e._profiles.pop(n, None),
+    ),
+    _access(
+        "create user",
+        rf"CREATE\s+USER\s+{_IFNE}(\w+)(\s+IDENTIFIED\s+(?:WITH\s+(\w+))?)?.*",
+        _create_user,
+    ),
+    _access("drop user", rf"DROP\s+USER\s+{_IFE}(\w+).*", _drop_user),
+    _access("create role", rf"CREATE\s+ROLE\s+{_IFNE}(\w+).*", lambda e, n: e._roles.add(n)),
+    _access("drop role", rf"DROP\s+ROLE\s+{_IFE}(\w+).*", lambda e, n: e._roles.discard(n)),
+    _access(
+        "grant",
+        rf"GRANT\s+{_NAMES}\s+ON\s+(?:(\w+|\*)\.)?(\w+|\*)\s+TO\s+{_NAMES}(?:\s+WITH\s+.*)?",
+        _grant,
+    ),
+    _access("grant role", rf"GRANT\s+{_NAMES}\s+TO\s+{_NAMES}", _grant_role),
+    _access(
+        "revoke",
+        rf"REVOKE\s+{_NAMES}\s+ON\s+(?:(\w+|\*)\.)?(\w+|\*)\s+FROM\s+{_NAMES}",
+        _revoke,
+    ),
+    _access("revoke role", rf"REVOKE\s+{_NAMES}\s+FROM\s+{_NAMES}", _revoke_role),
+    _access("set role", r"SET\s+(?:DEFAULT\s+)?ROLE\s+(\w+)", _set_role),
+    # the other access forms (ALTER USER, column grants, …) are recorded only
+    _access(
+        "access control",
+        r"(?:GRANT|REVOKE|ALTER\s+USER|SET\s+(?:DEFAULT\s+)?ROLE"
+        r"|(?:CREATE|DROP)\s+(?:USER|ROLE|QUOTA|SETTINGS\s+PROFILE))\b.*",
+    ),
+    _route(
+        "reload dictionary",
+        r"SYSTEM\s+RELOAD\s+DICTIONAR(?:Y\s+(\w+)|IES)",
+        _reload_dictionary,
+    ),
+    _route(
+        "add column",
+        rf"{_ALTER}ADD\s+COLUMN\s+{_IFNE}(\w+\s+.+?)(?:\s+AFTER\s+(\w+))?",
+        _add_column,
+    ),
+    _route("drop column", rf"{_ALTER}DROP\s+COLUMN\s+{_IFE}(\w+)", _drop_column),
+    _route(
+        "modify column default",
+        rf"{_ALTER}MODIFY\s+COLUMN\s+(\w+)\s+DEFAULT\s+(.+)",
+        _modify_column_default,
+    ),
+    _route(
+        "modify column",
+        rf"{_ALTER}MODIFY\s+COLUMN\s+(\w+)\s+((?:[\w(),= ]|{LIT})+)",
+        _modify_column,
+    ),
+    _route("rename column", rf"{_ALTER}RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)", _rename_column),
+    _route("modify ttl", rf"{_ALTER}MODIFY\s+TTL\s+(.+)", _modify_ttl, mutation=True),
+    _route("apply ttl", r"SYSTEM\s+APPLY\s+TTL\s+(\w+)", _apply_ttl),
+    _route(
+        "optimize",
+        r"OPTIMIZE\s+TABLE\s+(\w+)(?:\s+PARTITION\s+(\S+))?(\s+FINAL)?"
+        r"(\s+DEDUPLICATE(?:\s+BY\s+(.+))?)?",
+        _optimize,
+        mutation=True,
+    ),
+    _route("truncate", r"TRUNCATE\s+(?:TABLE\s+)?(\w+)", _truncate, mutation=True),
+    _route("rename table", r"RENAME\s+TABLE\s+(\w+)\s+TO\s+(\w+)", _rename_table),
+    _route("exchange tables", r"EXCHANGE\s+TABLES\s+(\w+)\s+AND\s+(\w+)", _exchange_tables),
+    _route(
+        "create named collection",
+        rf"CREATE\s+NAMED\s+COLLECTION\s+{_IFNE}(\w+)\s+AS\s+(.+)",
+        _create_named_collection,
+    ),
+    _route(
+        "alter named collection",
+        r"ALTER\s+NAMED\s+COLLECTION\s+(\w+)\s+SET\s+(.+)",
+        _alter_named_collection,
+    ),
+    _route(
+        "drop named collection",
+        rf"DROP\s+NAMED\s+COLLECTION\s+{_IFE}(\w+)",
+        _drop_named_collection,
+    ),
+    _route("show named collections", r"SHOW\s+NAMED\s+COLLECTIONS", _show_named_collections),
+    _route(
+        "show tables",
+        rf"SHOW\s+TABLES(?=\s)(?:\s+FROM\s+(\w+))?(?:\s+LIKE\s+({LIT}))?",
+        _show_tables,
+    ),
+    _route("show", r"SHOW\s+(PROCESSLIST|DICTIONARIES|CLUSTERS|USERS|GRANTS|DATABASES)", _show),
+    # CH takes `SHOW TABLE t` for SHOW CREATE TABLE (hw04.md:107)
+    _route(
+        "show create table",
+        r"SHOW\s+(?:CREATE\s+(?:TABLE|VIEW)\s+|TABLE\s+)(\w+)",
+        _show_create_table,
+    ),
+    _route("show indexes", r"SHOW\s+(?:INDEX(?:ES)?|KEYS)\s+(?:FROM|IN)\s+(\w+)", _show_indexes),
+    _route(
+        "create materialized view",
+        rf"CREATE\s+MATERIALIZED\s+VIEW\s+{_IFNE}(\w+)(?:\s+TO\s+(\w+))?(.*?)(\bPOPULATE\b)?"
+        r"\s+AS\s+(SELECT\b(?:.*?\bFROM\s+(\w+))?.*)",
+        _create_materialized_view,
+    ),
+    _route(
+        "create view",
+        rf"CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+{_IFNE}([\w.]+)\s+AS\s+(SELECT\b.*)",
+        _create_view,
+    ),
+    _route("drop view", rf"DROP\s+VIEW\s+{_IFE}([\w.]+)", _drop_view),
+    _route(
+        "create function",
+        rf"CREATE\s+FUNCTION\s+{_IFNE}(\w+)\s+AS\s*\(\s*([\w\s,]*)\)\s*->\s*(.+)",
+        _create_function,
+    ),
+    _route("drop function", rf"DROP\s+FUNCTION\s+{_IFE}(\w+)", _drop_function),
+    _route("backup table", rf"BACKUP\s+TABLE\s+(\w+)\s+TO\s+{_DEST}", _backup_table),
+    _route(
+        "restore table",
+        rf"RESTORE\s+TABLE\s+(\w+)(?:\s+AS\s+(\w+))?\s+FROM\s+{_DEST}",
+        _restore_table,
+    ),
+    # the whole-database form with a URL and incremental or
+    # differential chaining (lecture_19.md:136-158)
+    _route(
+        "backup database",
+        rf"BACKUP\s+DATABASE\s+(\w+)\s+TO\s+({LIT})(?:\s+WITH\s+(increment|differential))?",
+        _backup_database,
+    ),
+    _route("restore database", rf"RESTORE\s+DATABASE\s+(\w+)\s+FROM\s+({LIT})", _restore_database),
+    _route(
+        "create dictionary",
+        rf"(CREATE\s+DICTIONARY\s+{_IFNE}(\w+)\s*\((.*?)\)"
+        rf"\s*PRIMARY\s+KEY\s+(\w+).*?TABLE\s+(\w+|{LIT}).*)",
+        _create_dictionary,
+    ),
+    _route(
+        "show create dictionary",
+        r"SHOW\s+CREATE\s+DICTIONARY\s+(\w+)",
+        _show_create_dictionary,
+    ),
+    _route("drop dictionary", r"DROP\s+DICTIONARY\s+(IF\s+EXISTS\s+)?(\w+)", _drop_dictionary),
+)
 
 
 def _backup_root(disk: str) -> str:
@@ -1321,9 +1411,20 @@ def _restore_meta(engine, name: str, meta: dict):
     return td
 
 
-def backup_table(
-    engine, name: str, disk: str | None, label: str | None, s3_url: str | None = None
-) -> dict:
+def _destination(disk: str | None, label: str | None, s3_url: str | None) -> tuple[str, str]:
+    """The local directory of a backup destination and how system.backups
+    shows it: ``Disk('name', 'label')`` or ``S3('url')``, each argument a
+    raw literal."""
+    if s3_url is not None:
+        url = unquote(s3_url)
+        return _s3_backup_dir(url), f"S3('{url}')"
+    disk, label = unquote(disk), unquote(label)
+    if not (re.fullmatch(r"\w+", disk) and re.fullmatch(r"[\w.\-]+", label)):
+        raise ValueError(f"backup destination Disk('{disk}', '{label}'): a name and a label")
+    return os.path.join(_backup_root(disk), label), f"Disk('{disk}', '{label}')"
+
+
+def backup_table(engine, name: str, dest: str, shown: str) -> dict:
     """BACKUP TABLE … TO Disk('backups', 'label') | TO S3('url'[,key,secret])
     (S17; homeworks/hw13.md:40-159, lectures/lecture_19.md:131-159).
 
@@ -1334,16 +1435,9 @@ def backup_table(
     system.backups (hw13.md:123 golden).
     """
     import json
-    import uuid
     from datetime import datetime
 
     td = engine.tables[name]
-    if s3_url is not None:
-        dest = _s3_backup_dir(s3_url)
-        shown = f"S3('{s3_url}')"
-    else:
-        dest = os.path.join(_backup_root(disk), label)
-        shown = f"Disk('{disk}', '{label}')"
     if os.path.exists(dest):
         raise FileExistsError(f"backup already exists: {dest}")  # CH errors too
     os.makedirs(os.path.dirname(dest), exist_ok=True)
@@ -1366,14 +1460,7 @@ def backup_table(
     return {"id": bid, "status": "BACKUP_CREATED", "backed_up": name, "to": dest}
 
 
-def restore_table(
-    engine,
-    name: str,
-    disk: str | None,
-    label: str | None,
-    as_name: str | None = None,
-    s3_url: str | None = None,
-) -> dict:
+def restore_table(engine, name: str, src: str, shown: str, as_name: str | None = None) -> dict:
     """RESTORE TABLE x [AS y] FROM Disk('backups','label') | FROM S3(url,…)
     — the round-trip check of hw13.md:43-159: recreate table metadata,
     copy data back, re-register. ``AS y`` restores under the alias,
@@ -1381,15 +1468,8 @@ def restore_table(
     hw13.md:63 ``RESTORE TABLE test AS test_restored`` flow. Logs a
     RESTORED row into system.backups (hw13.md:78)."""
     import json
-    import uuid
     from datetime import datetime
 
-    if s3_url is not None:
-        src = _s3_backup_dir(s3_url)
-        shown = f"S3('{s3_url}')"
-    else:
-        src = os.path.join(_backup_root(disk), label)
-        shown = f"Disk('{disk}', '{label}')"
     with open(src + ".meta.json") as f:
         meta = json.load(f)
     name = as_name or name
@@ -1457,7 +1537,6 @@ def backup_database(engine, db: str, url: str, mode: str | None = None) -> dict:
     The chain link is a sidecar field (``base`` in .manifest.json) —
     the base-label-linked record the r6 verdict asked for."""
     import json
-    import uuid
     from datetime import datetime
 
     db_l = db.lower()
@@ -1544,7 +1623,6 @@ def restore_database(engine, db: str, url: str) -> dict:
     identically for full, incremental, and differential backups — the
     chain walk reconstructs the complete state either way."""
     import json
-    import uuid
     from datetime import datetime
 
     src = _url_backup_dir(url)

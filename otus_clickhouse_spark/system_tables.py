@@ -19,6 +19,7 @@ import uuid
 from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass
+from urllib.parse import unquote as unescape_path
 
 from pyspark.errors import AnalysisException
 from pyspark.sql.types import TimestampType
@@ -260,7 +261,8 @@ def _parts(engine):
                          size, 1, removal))
             continue
         cold = [(cp, vol) for vol, cp in t.settings.get("cold_volumes", {}).items()]
-        keys = [n for _, n in t.keys("partition", [c.name for c in t.columns or ()])]
+        types = {c.name: c.spark_type for c in t.columns or ()}
+        keys = [n for _, n in t.keys("partition", types)]
         for tier_path, disk in [(t.path, "default"), *cold]:
             if not os.path.isdir(tier_path):
                 continue
@@ -269,14 +271,23 @@ def _parts(engine):
                     if f.endswith(".parquet"):
                         p = os.path.join(root, f)
                         rel = os.path.relpath(p, tier_path)
-                        # the value of each key's `<column>=<value>` directory:
-                        # `202401`, or `(1,202401)` with the id `1-202401`
+                        # the value of each key's `<column>=<value>` directory,
+                        # unescaped: `202401`, or `(1,'a b/c')` with the id `1-a b/c`
                         dirs = dict(d.split("=", 1) for d in rel.split(os.sep)[:-1] if "=" in d)
-                        values = [dirs.get(k, "") for k in keys] or ["all"]
-                        part = values[0] if len(values) == 1 else f"({','.join(values)})"
+                        values = [unescape_path(dirs.get(k, "")) for k in keys] or ["all"]
+                        shown = [_tuple_item(v, types.get(k)) for k, v in zip(keys, values)]
+                        part = values[0] if len(values) == 1 else f"({','.join(shown)})"
                         rows.append((t.name, rel, part, "-".join(values), disk, p,
                                      os.path.getsize(p), 1, removal))
     return rows
+
+
+def _tuple_item(value: str, spark_type: str | None) -> str:
+    """A partition value as ClickHouse prints it in a tuple: a number
+    bare, anything else (a string, a date, a time) quoted."""
+    if spark_type != "string" and re.fullmatch(r"-?\d+(?:\.\d+)?", value):
+        return value
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 # lecture_02.md:197-276: one row per listed column, in declared order,

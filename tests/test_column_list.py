@@ -167,6 +167,26 @@ def test_rename_rewrites_the_expressions_that_name_the_column(engine, tmp_path):
         _drop(engine, "ra")
 
 
+def test_rename_rewrites_a_backquoted_reference(engine, tmp_path):
+    """An ALIAS that names the column backquoted (`` length(`s`) ``) is
+    renamed too, so the later INSERT and SELECT still run."""
+    _drop(engine, "ra")
+    engine.execute(
+        "CREATE TABLE ra (k UInt32, s String, n UInt64 ALIAS length(`s`)) "
+        "ENGINE = MergeTree ORDER BY k"
+    )
+    engine.tables["ra"].path = str(tmp_path / "ra")
+    try:
+        engine.execute("INSERT INTO ra (k, s) VALUES (1, 'ab')")
+        engine.execute("ALTER TABLE ra RENAME COLUMN s TO t")
+        assert engine.tables["ra"].columns[2].expr == "length(`t`)"
+        engine.execute("INSERT INTO ra (k, t) VALUES (2, 'xyz')")
+        rows = engine.run("SELECT k, t, n FROM ra ORDER BY k")
+        assert [tuple(r) for r in rows] == [(1, "ab", 2), (2, "xyz", 3)]
+    finally:
+        _drop(engine, "ra")
+
+
 @pytest.mark.parametrize(
     "engine_clause, col",
     [

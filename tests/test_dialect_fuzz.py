@@ -46,6 +46,7 @@ N_FILLS = 60            # ORDER BY … WITH FILL grids
 N_JOINS = 130           # 2-table joins USING/ON + IN-subqueries
 N_LITERALS = 120        # string literals carrying quotes/comments/keywords
 N_POLY = 50             # statements of 1-12 polymorphic call sites
+N_STATEMENT_LITS = 30   # rounds of statements carrying keyword literals
 BATCH = 12              # expressions per SELECT (amortize Spark jobs)
 SEED = 1107
 
@@ -649,6 +650,51 @@ def test_fuzz_string_literals(fuzz_env, n):
     exprs = [gen_str(rng, rng.randint(1, 3), lits=True) for _ in range(n)]
     for i in range(0, len(exprs), BATCH):
         _run_batch(fuzz_env, exprs[i : i + BATCH])
+
+
+# statement keywords a router or splitter could stop at
+_STATEMENT_PIECES = _LIT_PIECES + [
+    " WHERE ", ", DROP ", " ON CLUSTER c ", " FROM t", " FORMAT CSV\n", "--",
+]
+
+
+def _statement_lit(rng: random.Random, tag: str) -> tuple[str, str]:
+    """A literal of ``_STATEMENT_PIECES`` ending in the unique ``tag``,
+    and its content."""
+    content = "".join(rng.choice(_STATEMENT_PIECES) for _ in range(rng.randint(1, 4))) + tag
+    return "'" + content.replace("\\", "\\\\").replace("'", "\\'") + "'", content
+
+
+@_sizes(N_STATEMENT_LITS, 2)
+def test_fuzz_statement_literals(fuzz_env, tmp_path, n):
+    """Statements through ``Engine.execute`` whose literals carry
+    statement keywords: ALTER … UPDATE, INSERT … VALUES and an MV's
+    SELECT store the literal's content, and DELETE FROM removes exactly
+    the row holding it, since no route reads inside a literal."""
+    eng, _ = fuzz_env
+    rng = random.Random(SEED + 8)
+    tables = {"lit_t": "k UInt32, s String", "lit_src": "k UInt32", "lit_tgt": "k UInt32, tag String"}
+    for name, cols in tables.items():
+        eng.execute(f"CREATE TABLE {name} ({cols}) ENGINE = MergeTree ORDER BY k")
+        eng.tables[name].path = str(tmp_path / name)
+    try:
+        kept, tags = {}, {}
+        for i in range(n):
+            lit, new, gone, tag = (_statement_lit(rng, f"#{i}{part}") for part in "abcd")
+            kept[i], tags[i] = new[1], tag[1]
+            eng.execute(f"INSERT INTO lit_t VALUES ({i}, {lit[0]}), ({i + 1000}, {gone[0]})")
+            eng.execute(f"ALTER TABLE lit_t UPDATE s = {new[0]} WHERE k = {i}")
+            eng.execute(f"DELETE FROM lit_t WHERE s = {gone[0]}")
+            eng.execute(
+                f"CREATE MATERIALIZED VIEW lit_mv TO lit_tgt AS SELECT k, {tag[0]} AS tag FROM lit_src"
+            )
+            eng.execute(f"INSERT INTO lit_src VALUES ({i})")
+            eng.execute("DROP TABLE lit_mv")
+        assert {r.k: r.s for r in eng.run("SELECT k, s FROM lit_t")} == kept
+        assert {r.k: r.tag for r in eng.run("SELECT k, tag FROM lit_tgt")} == tags
+    finally:
+        for name in ("lit_mv", *tables):
+            eng.execute(f"DROP TABLE IF EXISTS {name}")
 
 
 def _spell(rng: random.Random, name: str, case: bool = False) -> str:

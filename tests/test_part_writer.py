@@ -215,6 +215,35 @@ def test_tuple_partition_key_with_a_call(engine, tmp_path):
         _drop(engine, "tk")
 
 
+def test_parts_shows_partition_values_unescaped(engine, tmp_path):
+    """``system.parts`` shows a partition value as it was, not as the
+    directory name escapes it: a tuple key quotes its strings and times,
+    as ClickHouse prints it, and a numeric key stays bare."""
+    _drop(engine, "tp", "tm")
+    engine.execute(
+        "CREATE TABLE tp (ts DateTime, s String) ENGINE = MergeTree "
+        "PARTITION BY (toStartOfHour(ts), s) ORDER BY ts"
+    )
+    engine.execute(
+        "CREATE TABLE tm (d Date, k UInt32) ENGINE = MergeTree PARTITION BY toYYYYMM(d) ORDER BY k"
+    )
+    engine.tables["tp"].path = str(tmp_path / "tp")
+    engine.tables["tm"].path = str(tmp_path / "tm")
+    try:
+        engine.execute("INSERT INTO tp VALUES ('2024-01-01 10:20:00', 'a b/c')")
+        engine.execute("INSERT INTO tm VALUES ('2024-01-05', 1)")
+        parts = engine.run(
+            "SELECT table, partition, partition_id FROM system.parts "
+            "WHERE table IN ('tp', 'tm') ORDER BY table"
+        )
+        assert [tuple(r) for r in parts] == [
+            ("tm", "202401", "202401"),
+            ("tp", "('2024-01-01 10:00:00','a b/c')", "2024-01-01 10:00:00-a b/c"),
+        ]
+    finally:
+        _drop(engine, "tp", "tm")
+
+
 @pytest.mark.parametrize("declared", ["create", "modify_order_by"])
 def test_expression_sort_key_orders_the_file(engine, tmp_path, declared):
     """``ORDER BY (k, toDate(d))``, declared or set by MODIFY ORDER BY,

@@ -1,4 +1,4 @@
-"""Scale-path operators: skew salting, compaction, query log, stateful
+"""Scale-path operators: compaction, query log, stateful
 streaming. Correctness here; the scale rationale lives in each module's
 docstring."""
 
@@ -9,48 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from otus_clickhouse_spark.engine import TableDef
-from otus_clickhouse_spark.operators import skew
 from otus_clickhouse_spark.plans import compaction
-
-
-def test_salted_join_matches_plain_join(spark):
-    # hot key: 90% of fact rows share key 1
-    fact = spark.range(1000).select(
-        F.when(F.col("id") < 900, 1).otherwise(F.col("id")).alias("k"),
-        (F.col("id") * 2).alias("v"),
-    )
-    dim = spark.createDataFrame([(1, "hot"), (950, "cold")], "k long, name string")
-    plain = fact.join(dim, on=["k"]).groupBy("k", "name").agg(F.sum("v").alias("s"))
-    salted = skew.salted_join(fact, dim, on=["k"], salt=8).groupBy("k", "name").agg(
-        F.sum("v").alias("s")
-    )
-    assert sorted(plain.collect()) == sorted(salted.collect())
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    fact = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    dim = spark.createDataFrame([(1, "a")], "k long, name string")
-    out = {r.k: r.name for r in skew.salted_join(fact, dim, on=["k"], salt=4, how="left").collect()}
-    assert out == {1: "a", 2: None}
-
-
-def test_salted_agg_matches_plain(spark):
-    df = spark.range(5000).select(
-        (F.col("id") % 3).alias("g"), F.col("id").alias("v")
-    )
-    plain = {
-        (r.g): (r.n, r.s, r.mx)
-        for r in df.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"), F.max("v").alias("mx"))
-        .collect()
-    }
-    salted = {
-        (r.g): (r.n, r.s, r.mx)
-        for r in skew.salted_agg(
-            df, ["g"], {"n": ("count", "v"), "s": ("sum", "v"), "mx": ("max", "v")}
-        ).collect()
-    }
-    assert plain == salted
 
 
 def test_compaction_merges_small_files(spark, tmp_path):

@@ -1101,7 +1101,12 @@ def test_move_partition_to_table(engine, sales, tmp_path):
 
 def test_show_family(engine):
     engine.execute("CREATE USER show_user IDENTIFIED WITH no_password")
-    assert "show_user" in engine.execute("SHOW USERS")
+    engine.execute("CREATE USER IF NOT EXISTS show_user")
+    engine.execute("CREATE USER gone_user")
+    engine.execute("DROP USER gone_user")
+    users = engine.execute("SHOW USERS")
+    assert "show_user" in users and "default" in users
+    assert users.count("show_user") == 1 and not {"IF", "gone_user"} & set(users)
     assert engine.execute("SHOW PROCESSLIST") == []
     assert isinstance(engine.execute("SHOW DICTIONARIES"), list)
     assert "default" in engine.execute("SHOW CLUSTERS")
@@ -1417,6 +1422,10 @@ def test_database_namespace_semantics(engine, tmp_path):
     # string literals carrying a db-qualified name stay untouched
     engine.execute("INSERT INTO hw.menu VALUES (2, 'hw.menu')")
     assert engine.execute("SELECT name FROM hw.menu WHERE id = 2")[0].name == "hw.menu"
+    # under USE hw, a database named like one of hw's tables is that database
+    engine.execute("CREATE DATABASE IF NOT EXISTS menu")
+    assert engine.execute("DROP DATABASE IF EXISTS menu") == {"dropped_database": "menu"}
+    assert "menu" not in engine._databases and "hw__menu" not in engine._databases
     with _pytest.raises(Exception):
         engine.execute("USE nosuchdb")
     with _pytest.raises(Exception):
@@ -1834,3 +1843,186 @@ def test_vector_index_maintained_under_mutations(engine, tmp_path):
     finally:
         engine.vector_indexes.pop("vm_t", None)
         engine.execute("DROP TABLE IF EXISTS vm_t")
+
+
+# (statement, the kind of route it reaches); None: no route, Spark runs it
+_ROUTED = [
+    ("CREATE DATABASE IF NOT EXISTS pg ENGINE = PostgreSQL('h:5432', 'db', 'u', 'p')", "create database"),
+    ("DROP DATABASE IF EXISTS pg", "drop database"),
+    ("USE pg", "use"),
+    ("CREATE TABLE t (k UInt32, s String) ENGINE = MergeTree ORDER BY k", "create table"),
+    ("DROP TABLE IF EXISTS db.t", "drop table"),
+    ("INSERT INTO t (k, s) FORMAT CSV\n1,'x'\n2,-- y", "insert format"),
+    ("INSERT INTO t VALUES (1, ' FORMAT CSV\n')", "insert"),
+    ("INSERT INTO t SELECT number, 'x' FROM numbers(3)", "insert"),
+    ("DESC format(CSV, '1,2\n3,4')", "describe format"),
+    ("EXPLAIN PIPELINE SELECT 1", "explain"),
+    ("ALTER TABLE t ADD COLUMN x UInt8, MODIFY ORDER BY (k, x)", "alter actions"),
+    ("CREATE ROW POLICY p ON t USING k > 1 TO r", "create row policy"),
+    ("DROP ROW POLICY p ON t", "drop row policy"),
+    ("ALTER TABLE t MODIFY ORDER BY (k, toDate(d))", "modify order by"),
+    ("KILL QUERY WHERE query_id = 'ab12'", "kill query"),
+    ("SET max_result_rows = 10", "set"),
+    ("ALTER TABLE t ADD INDEX i s TYPE ngrambf_v1(3, 256, 2, 0) GRANULARITY 1", "add index"),
+    ("ALTER TABLE t MATERIALIZE INDEX i", "materialize index"),
+    ("ALTER TABLE t DROP INDEX IF EXISTS i", "drop index"),
+    ("ALTER TABLE t ADD PROJECTION p (SELECT k, sum(v) GROUP BY k)", "add projection"),
+    ("ALTER TABLE t MATERIALIZE PROJECTION p", "materialize projection"),
+    ("ALTER TABLE t DROP PROJECTION p", "drop projection"),
+    ("ALTER TABLE t UPDATE s = 'x WHERE y', v = 'p, DROP q' WHERE k = 1", "update"),
+    ("ALTER TABLE t UPDATE v = 1, comment = 'x' WHERE k = 1", "update"),
+    ("ALTER TABLE t DELETE WHERE s = 'a'", "alter delete"),
+    ("DELETE FROM t WHERE s = ' ON CLUSTER c '", "lightweight delete"),
+    ("ALTER TABLE t DROP PARTITION (1, '2024-01-01')", "drop partition"),
+    ("ALTER TABLE t DETACH PARTITION 202401", "detach partition"),
+    ("ALTER TABLE t ATTACH PARTITION ID '202401' FROM src", "attach partition from"),
+    ("ALTER TABLE t ATTACH PARTITION 202401", "attach partition"),
+    ("ALTER TABLE t REPLACE PARTITION 202401 FROM src", "replace partition"),
+    ("ALTER TABLE t MOVE PARTITION 202401 TO TABLE dst", "move partition"),
+    ("ALTER TABLE t FREEZE", "freeze"),
+    ("SYSTEM STOP MERGES t", "system noop"),
+    ("CREATE QUOTA q FOR INTERVAL 1 hour MAX queries = 10 TO u", "create quota"),
+    ("DROP QUOTA IF EXISTS q", "drop quota"),
+    ("CREATE SETTINGS PROFILE p SETTINGS max_memory_usage = 100 TO u", "create settings profile"),
+    ("DROP SETTINGS PROFILE p", "drop settings profile"),
+    ("CREATE USER u IDENTIFIED WITH sha256_password BY 'pw'", "create user"),
+    ("DROP USER IF EXISTS u", "drop user"),
+    ("CREATE ROLE r", "create role"),
+    ("DROP ROLE r", "drop role"),
+    ("GRANT SELECT, INSERT ON db.* TO r WITH GRANT OPTION", "grant"),
+    ("GRANT r TO u", "grant role"),
+    ("REVOKE SELECT ON t FROM r", "revoke"),
+    ("REVOKE r FROM u", "revoke role"),
+    ("SET ROLE r", "set role"),
+    ("SET DEFAULT ROLE r", "set role"),
+    ("ALTER USER u IDENTIFIED BY 'pw'", "access control"),
+    ("SYSTEM RELOAD DICTIONARIES", "reload dictionary"),
+    ("ALTER TABLE t ADD COLUMN IF NOT EXISTS c String DEFAULT ' AFTER k' AFTER k", "add column"),
+    ("ALTER TABLE t DROP COLUMN c", "drop column"),
+    ("ALTER TABLE t MODIFY COLUMN c DEFAULT 5", "modify column default"),
+    ("ALTER TABLE t MODIFY COLUMN c Enum8('a' = 1, 'b' = 2)", "modify column"),
+    ("ALTER TABLE t RENAME COLUMN c TO d", "rename column"),
+    ("ALTER TABLE t MODIFY TTL d + INTERVAL 1 DAY TO VOLUME 'cold'", "modify ttl"),
+    ("SYSTEM APPLY TTL t", "apply ttl"),
+    ("OPTIMIZE TABLE t FINAL DEDUPLICATE BY k, s", "optimize"),
+    ("TRUNCATE TABLE t", "truncate"),
+    ("RENAME TABLE t TO u", "rename table"),
+    ("EXCHANGE TABLES t AND u", "exchange tables"),
+    ("CREATE NAMED COLLECTION nc AS host = 'h', port = 5432", "create named collection"),
+    ("ALTER NAMED COLLECTION nc SET port = 5433", "alter named collection"),
+    ("DROP NAMED COLLECTION IF EXISTS nc", "drop named collection"),
+    ("SHOW NAMED COLLECTIONS", "show named collections"),
+    ("SHOW TABLES FROM db LIKE 'a%'", "show tables"),
+    ("SHOW TABLES", None),
+    ("SHOW GRANTS", "show"),
+    ("SHOW TABLE t", "show create table"),
+    ("SHOW INDEXES FROM t", "show indexes"),
+    ("CREATE MATERIALIZED VIEW mv TO tgt AS SELECT k, 'from u' AS tag FROM src", "create materialized view"),
+    ("CREATE VIEW v AS SELECT 1", "create view"),
+    ("DROP VIEW v", "drop view"),
+    ("CREATE FUNCTION f AS (x, y) -> x + y", "create function"),
+    ("DROP FUNCTION f", "drop function"),
+    ("BACKUP TABLE t TO Disk('backups', 't.1')", "backup table"),
+    ("RESTORE TABLE t AS u FROM S3('http://m/b/', 'key', 'secret')", "restore table"),
+    ("BACKUP DATABASE db TO 'file:///b/db' WITH increment", "backup database"),
+    ("RESTORE DATABASE db FROM 'file:///b/db'", "restore database"),
+    ("CREATE DICTIONARY d (k UInt64, v String) PRIMARY KEY k SOURCE(CLICKHOUSE(TABLE 'src')) "
+     "LAYOUT(HASHED()) LIFETIME(300)", "create dictionary"),
+    ("SHOW CREATE DICTIONARY d", "show create dictionary"),
+    ("DROP DICTIONARY IF EXISTS d", "drop dictionary"),
+    ("SELECT 'ALTER TABLE t DELETE WHERE 1' AS s", None),
+]
+
+
+def test_route_table():
+    """Each statement reaches the route of its kind, on masked text, and
+    every route is reached: the order-sensitive pairs (MODIFY COLUMN …
+    DEFAULT and MODIFY COLUMN, ATTACH PARTITION … FROM and ATTACH
+    PARTITION, SET x = v and SET ROLE, a privilege and a role GRANT,
+    CREATE MATERIALIZED VIEW and CREATE VIEW, bare SHOW TABLES to Spark)
+    stay pinned."""
+    from otus_clickhouse_spark.functions.lexer import Masked, split_data
+    from otus_clickhouse_spark.plans.statements import ROUTES, find_route
+
+    for stmt, kind in _ROUTED:
+        head, data = split_data(stmt)  # as Engine.execute masks it
+        lits = Masked(head)
+        found = find_route(lits.text.strip() + ("\n" + lits.keep(data) if data else ""))
+        assert (found and found[0].kind) == kind, stmt
+    assert {k for _, k in _ROUTED} - {None} == {r.kind for r in ROUTES}
+    mutations = {r.kind for r in ROUTES if r.mutation}
+    assert mutations == {
+        "update", "alter delete", "lightweight delete", "drop partition", "detach partition",
+        "attach partition from", "attach partition", "replace partition", "move partition",
+        "modify ttl", "optimize", "truncate",
+    }
+
+
+@pytest.mark.parametrize(
+    "value", ["x WHERE y", "p, DROP q", "x ON CLUSTER c1 y", "from lit_u"]
+)
+def test_keywords_in_literals_keep_their_statement(engine, tmp_path, value):
+    """A statement keyword inside a literal neither splits nor reroutes
+    its statement: an UPDATE stores the literal as written and declares
+    no cluster, and an MV attaches to its real FROM table."""
+    tables = {"lit_u": "k UInt32, s String", "lit_src": "k UInt32", "lit_tgt": "k UInt32, tag String"}
+    for name, cols in tables.items():
+        engine.execute(f"CREATE TABLE {name} ({cols}) ENGINE = MergeTree ORDER BY k")
+        engine.tables[name].path = str(tmp_path / name)
+    try:
+        engine.execute("INSERT INTO lit_u VALUES (1, 'a'), (2, 'b')")
+        engine.execute(f"ALTER TABLE lit_u UPDATE s = '{value}' WHERE k = 2")
+        assert [tuple(r) for r in engine.run("SELECT k, s FROM lit_u ORDER BY k")] == [
+            (1, "a"), (2, value)
+        ]
+        assert "c1" not in engine._clusters
+        engine.execute(
+            f"CREATE MATERIALIZED VIEW lit_mv TO lit_tgt AS SELECT k, '{value}' AS tag FROM lit_src"
+        )
+        engine.execute("INSERT INTO lit_src VALUES (7)")
+        assert [tuple(r) for r in engine.run("SELECT k, tag FROM lit_tgt")] == [(7, value)]
+    finally:
+        for name in ("lit_mv", *tables):
+            engine.execute(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_show_grants_hides_passwords(engine):
+    """SHOW GRANTS, and the CLI and HTTP output of it, shows a CREATE
+    USER with its password hidden, as ClickHouse does."""
+    from otus_clickhouse_spark.__main__ import execute_render
+
+    engine.execute("CREATE USER john_pw IDENTIFIED WITH sha256_password BY 'qwerty'")
+    try:
+        grants = engine.execute("SHOW GRANTS")
+        assert "CREATE USER john_pw IDENTIFIED WITH sha256_password BY '[HIDDEN]'" in grants
+        assert not any("qwerty" in g for g in grants)
+        assert "qwerty" not in execute_render(engine, "SHOW GRANTS")
+        assert "john_pw" in engine.execute("SHOW USERS")
+    finally:
+        engine.execute("DROP USER john_pw")
+
+
+def test_access_check_and_query_log_skip_literals(engine, tmp_path):
+    """A table name inside a literal or comment is not a table the query
+    reads: the access check lets it through and query_log's tables
+    leave it out."""
+    engine.execute("DROP TABLE IF EXISTS acl_u")
+    engine.execute("CREATE TABLE acl_u (x UInt32) ENGINE = Log")
+    engine.tables["acl_u"].path = str(tmp_path / "acl_u")
+    engine.execute("CREATE USER lit_reader IDENTIFIED WITH no_password")
+    try:
+        assert engine._referenced_tables("SELECT 'from acl_u' AS x -- join acl_u") == []
+        assert engine._referenced_tables("SELECT * FROM `acl_u`") == ["acl_u"]
+        engine.set_user("lit_reader")
+        assert engine.run("SELECT 'from acl_u' AS x")[0].x == "from acl_u"
+        with pytest.raises(PermissionError, match="ACCESS_DENIED"):
+            engine.run("SELECT * FROM acl_u")
+        engine.set_user("default")
+        engine.run("SELECT 'acl_u' AS x")
+        assert engine._query_log[-1][-1] == []
+        engine.run("SELECT count() FROM acl_u")
+        assert engine._query_log[-1][-1] == ["acl_u"]
+    finally:
+        engine.set_user("default")
+        engine.execute("DROP USER lit_reader")
+        engine.execute("DROP TABLE acl_u")
